@@ -157,11 +157,16 @@ def _estimated_scan_splits(spark: SparkSession, df: DataFrame) -> int:
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test table lazily and register temp views."""
+    """Load every table lazily and register temp views. Raises
+    ``FileNotFoundError`` naming the tables ``sf_dir`` lacks, before any
+    is loaded."""
+    missing = [n for n in TABLES if not os.path.exists(table_path(sf_dir, n))]
+    if missing:
+        raise FileNotFoundError(
+            f"{sf_dir} lacks table(s): {', '.join(missing)}"
+        )
     out: dict[str, DataFrame] = {}
     for name in TABLES:
-        if not os.path.exists(table_path(sf_dir, name)):
-            continue
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df

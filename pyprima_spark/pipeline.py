@@ -2,16 +2,49 @@
 reference's ``runme.py`` (reference: runme.py:6-32), which chains
 clean-raw-data → generate-intermediate-files → generate-model-files.
 
-Each stage materializes its outputs as parquet (partitioned where a
-downstream consumer would prune on the key), and the final model export
-also lands in the reference's European CSV convention. Stages read the
-catalog lazily, so a stage's unused inputs are never scanned.
+``run_pipeline`` writes 20 outputs: one parquet directory per stage key
+of the three phases below, plus the demand matrix in the reference's
+European CSV convention. Stages read the catalog lazily, so a stage's
+unused inputs are never scanned.
+
+**Concurrent stages.** Every output is a few small, latency-bound Spark
+jobs; written one after another they leave the task slots mostly idle.
+The stage plans are independent and lazy (building one runs no Spark
+job), so all 20 writes go to one thread pool at once. PySpark's
+pinned-thread mode gives each Python thread its own JVM thread, so the
+plans build and their jobs run side by side. The pool has
+``defaultParallelism`` workers, one per task slot: fewer leave slots
+idle, and more only queue more concurrent jobs in the JVM, whose heap
+grows with them while the slots they wait for stay the same.
+
+**Atomic commit.** The outputs are written into a fresh sibling
+directory, ``<out_dir>.staging-<uuid>``, which replaces ``out_dir``
+only after every output has been written: an existing ``out_dir`` is
+renamed aside, the staging directory renamed into its place, and the
+old copy removed. On the first failed output, the outputs not yet
+started are cancelled, the running ones awaited, the staging directory
+deleted, and ``PipelineStageError`` raised with the failing output's
+name; an earlier ``out_dir`` stays exactly as it was.
+
+**Manifest.** The last file written to the staging directory, and so
+committed with the outputs, is ``_manifest.json``: rows, bytes, data
+files and submit-to-done seconds of every output. Parquet row counts
+come from the file footers, not from a Spark job. The leading ``_``
+marks it as metadata, like Spark's ``_SUCCESS``, so tools that size the
+data files skip it.
 """
 
 from __future__ import annotations
 
+import csv
+import json
 import os
+import shutil
+import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 # Stage membership mirrors runme.py's three phases.
@@ -40,30 +73,124 @@ MODEL = (
     "export_demand_matrix",
     "unpivot_long",
 )
+# Model files additionally ship in the reference's CSV convention
+# (to_csv(sep=';', decimal=',') throughout generate_models.py).
+CSV_OUTPUT = "demand_matrix_csv"
+MANIFEST = "_manifest.json"
+
+
+class PipelineStageError(RuntimeError):
+    """A ``run_pipeline`` output failed to build or write; ``stage`` is
+    its name and the original error is chained as ``__cause__``."""
+
+    def __init__(self, stage: str) -> None:
+        super().__init__(f"pipeline stage {stage!r} failed")
+        self.stage = stage
 
 
 def run_pipeline(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, str]:
-    """Run all three stages; returns {output name: path} manifest."""
+    """Write all 20 outputs concurrently and commit them to ``out_dir``
+    as a whole; returns {output name: path}. Raises
+    ``PipelineStageError`` naming the first output that failed, leaving
+    any earlier ``out_dir`` untouched."""
     from pyprima_spark.plans.queries import QUERIES
-    from pyprima_spark.sources.readers import write_european_csv
+    from pyprima_spark.sources import readers
 
-    manifest: dict[str, str] = {}
-    for stage in (CLEANING, INTERMEDIATE, MODEL):
-        for name in stage:
-            path = os.path.join(out_dir, name)
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").parquet(path)
-            manifest[name] = path
+    out_dir = os.path.abspath(out_dir)
+    os.makedirs(os.path.dirname(out_dir), exist_ok=True)
+    token = uuid.uuid4().hex
+    staging = f"{out_dir}.staging-{token}"
+    os.mkdir(staging)
 
-    # Model files additionally ship in the reference's CSV convention
-    # (to_csv(sep=';', decimal=',') throughout generate_models.py).
-    csv_path = os.path.join(out_dir, "demand_matrix_csv")
-    write_european_csv(
-        QUERIES["export_demand_matrix"](spark, sf_dir), csv_path
-    )
-    manifest["demand_matrix_csv"] = csv_path
-    return manifest
+    def write(name: str, submitted: float) -> dict[str, dict]:
+        df = QUERIES[name](spark, sf_dir)
+        path = os.path.join(staging, name)
+        df.write.parquet(path)
+        written = {name: _describe(path, submitted)}
+        if name == "export_demand_matrix":
+            # The CSV re-reads the staged parquet instead of planning and
+            # running the pivot again; the known schema skips inference.
+            staged = spark.read.schema(df.schema).parquet(path).orderBy("t")
+            csv_path = os.path.join(staging, CSV_OUTPUT)
+            readers.write_european_csv(staged, csv_path)
+            written[CSV_OUTPUT] = _describe(csv_path, submitted)
+        return written
+
+    stages = CLEANING + INTERMEDIATE + MODEL
+    manifest: dict[str, dict] = {}
+    try:
+        with ThreadPoolExecutor(
+            max_workers=spark.sparkContext.defaultParallelism,
+            thread_name_prefix="run_pipeline",
+        ) as pool:
+            futures = {
+                pool.submit(write, name, time.perf_counter()): name
+                for name in stages
+            }
+            try:
+                for future in as_completed(futures):
+                    try:
+                        manifest.update(future.result())
+                    except Exception as exc:
+                        raise PipelineStageError(futures[future]) from exc
+            except BaseException:
+                pool.shutdown(wait=True, cancel_futures=True)
+                raise
+        outputs = stages + (CSV_OUTPUT,)
+        with open(os.path.join(staging, MANIFEST), "w") as fh:
+            json.dump({name: manifest[name] for name in outputs}, fh, indent=1)
+        _replace_dir(staging, out_dir, f"{out_dir}.previous-{token}")
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    return {name: os.path.join(out_dir, name) for name in outputs}
+
+
+def _describe(path: str, submitted: float) -> dict:
+    """Rows, bytes and data files of one written output directory, and
+    the seconds since its write was submitted. ``_``- and ``.``-prefixed
+    files (``_SUCCESS``, checksums) are not data. Parquet rows come from
+    the footers; a CSV part file's rows are its records after the
+    header."""
+    rows = size = files = 0
+    for root, _dirs, names in os.walk(path):
+        for name in names:
+            if name.startswith(("_", ".")):
+                continue
+            file = os.path.join(root, name)
+            size += os.path.getsize(file)
+            files += 1
+            if name.endswith(".parquet"):
+                rows += pq.read_metadata(file).num_rows
+            else:
+                with open(file, newline="") as fh:
+                    records = sum(1 for _ in csv.reader(fh, delimiter=";"))
+                rows += max(0, records - 1)
+    return {
+        "rows": rows,
+        "bytes": size,
+        "files": files,
+        "seconds": round(time.perf_counter() - submitted, 3),
+    }
+
+
+def _replace_dir(new: str, target: str, aside: str) -> None:
+    """Rename ``new`` to ``target``. An existing ``target`` is first
+    renamed to ``aside``, put back if the swap fails, and removed once
+    it succeeded."""
+    had_target = os.path.lexists(target)
+    if had_target:
+        os.replace(target, aside)
+    try:
+        os.replace(new, target)
+    except OSError:
+        if had_target:
+            os.replace(aside, target)
+        raise
+    if had_target:
+        shutil.rmtree(aside)
 
 
 def run_curation(

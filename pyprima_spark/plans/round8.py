@@ -965,11 +965,16 @@ def binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: codes are built map-side in one projection (no
     shuffle); the query side is a bounded broadcast (vec_id % 25 = 3);
-    both rankings are query-partitioned WindowGroupLimit elections
-    over ONE scored pass (dot and hamming computed together);
-    at 100 TB the same plan holds because the candidate side never
-    shuffles and the per-query state is the top-k heap.  Hamming
-    ties are pinned by vec_id on both engines. Growth law (STRESS
+    both rankings are full row_number windows partitioned by query_id
+    over ONE scored pass (dot and hamming computed together), sharing
+    one exchange, and a groupBy on that partitioning folds the top-k
+    overlap and radius. There is no rank<=K filter before the
+    aggregate, so no WindowGroupLimit pruning applies: every scored
+    pair flows through both windows, and per-query state is that
+    query's whole candidate list, not a top-k heap. The corpus side
+    never shuffles (the query side is broadcast); the one exchange
+    carries the scored pairs, keyed by query_id.  Hamming ties are
+    pinned by vec_id on both engines. Growth law (STRESS
     r10): scored-pair mass = |queries| × |corpus|; the mod-25 query
     set grows WITH the corpus here, so N× replication measures ~N² —
     the deployment contract is a FIXED query set, under which the

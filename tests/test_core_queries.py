@@ -30,6 +30,20 @@ def test_catalog_and_oracles_cover_same_keys():
     )
 
 
+def test_load_tables_names_missing_tables(spark, sf_dir, tmp_path):
+    """A scale-factor directory that lacks a table is refused when the
+    catalog loads, naming the table, not deep inside a stage plan."""
+    import os
+
+    from pyprima_spark.catalog import TABLES, load_tables, table_path
+
+    for name in TABLES:
+        if name != "events":
+            os.symlink(table_path(sf_dir, name), table_path(str(tmp_path), name))
+    with pytest.raises(FileNotFoundError, match="events"):
+        load_tables(spark, str(tmp_path))
+
+
 def test_every_query_documents_itself():
     """Every catalog operator must carry a real docstring (the scale
     rationale and reference citations live there — an undocumented

@@ -82,20 +82,87 @@ def test_european_csv_roundtrip(spark, tmp_path):
     assert lit.collect()[0].v == 1234.56
 
 
-def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
-    """runme.py-equivalent: all three stages materialize readable,
-    non-empty parquet outputs plus the European CSV model export."""
+@pytest.fixture(scope="module")
+def pipeline_run(spark, sf_dir, tmp_path_factory):
+    """One successful run_pipeline: (out_dir, {output name: path})."""
     from pyprima_spark.pipeline import run_pipeline
-    from pyprima_spark.sources.readers import read_european_csv
 
-    manifest = run_pipeline(spark, sf_dir, str(tmp_path / "out"))
-    assert len(manifest) == 20
-    for name, path in manifest.items():
-        if name.endswith("_csv"):
-            back = read_european_csv(spark, path)
-        else:
-            back = spark.read.parquet(path)
-        assert back.count() > 0, f"{name} wrote no rows"
+    out_dir = str(tmp_path_factory.mktemp("pipeline") / "out")
+    return out_dir, run_pipeline(spark, sf_dir, out_dir)
+
+
+def _tree_bytes(root):
+    """{relative path: contents} of every file under ``root``."""
+    out = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_pipeline_end_to_end(spark, sf_dir, pipeline_run):
+    """runme.py-equivalent: every parquet output of the concurrent run
+    matches its own stage's DuckDB oracle (so no output lands under
+    another stage's name), and the European CSV model export carries
+    every row of the demand matrix."""
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.sources.readers import read_european_csv
+    from tests.oracle_utils import assert_matches_oracle, run_oracle
+
+    _, paths = pipeline_run
+    assert len(paths) == 20
+    for name, path in paths.items():
+        if name != "demand_matrix_csv":
+            assert_matches_oracle(spark.read.parquet(path), ORACLES[name], sf_dir)
+    want = run_oracle(ORACLES["export_demand_matrix"], sf_dir)
+    csv_rows = read_european_csv(spark, paths["demand_matrix_csv"]).count()
+    assert csv_rows == len(want) > 0
+
+
+def test_pipeline_manifest_lists_every_output(spark, pipeline_run):
+    """_manifest.json is committed with the outputs; its footer row
+    counts equal the rows read back."""
+    import json
+
+    out_dir, paths = pipeline_run
+    with open(os.path.join(out_dir, "_manifest.json")) as fh:
+        manifest = json.load(fh)
+    assert set(manifest) == set(paths)
+    for name, rec in manifest.items():
+        assert rec["files"] > 0 and rec["bytes"] > 0 and rec["seconds"] > 0
+        if name != "demand_matrix_csv":
+            assert rec["rows"] == spark.read.parquet(paths[name]).count(), name
+    csv_rows = manifest["demand_matrix_csv"]["rows"]
+    assert csv_rows == manifest["export_demand_matrix"]["rows"] > 0
+
+
+def test_failed_stage_leaves_no_partial_output(
+    spark, sf_dir, pipeline_run, tmp_path, monkeypatch
+):
+    """A stage that raises names itself in PipelineStageError; an
+    earlier run's out_dir stays byte-for-byte as it was, a fresh
+    out_dir is never created, and no staging directory survives."""
+    from pyprima_spark.pipeline import PipelineStageError, run_pipeline
+    from pyprima_spark.plans.queries import QUERIES
+
+    def fail(spark, sf_dir):
+        raise ValueError("stage failed on purpose")
+
+    monkeypatch.setitem(QUERIES, "shares_normalize", fail)
+    out_dir, _ = pipeline_run
+    before = _tree_bytes(out_dir)
+    fresh_dir = str(tmp_path / "fresh")
+    for target in (out_dir, fresh_dir):
+        with pytest.raises(PipelineStageError) as err:
+            run_pipeline(spark, sf_dir, target)
+        assert err.value.stage == "shares_normalize"
+        assert isinstance(err.value.__cause__, ValueError)
+    assert _tree_bytes(out_dir) == before
+    # No staging or set-aside sibling is left next to either target.
+    assert os.listdir(os.path.dirname(out_dir)) == ["out"]
+    assert os.listdir(tmp_path) == []
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
