@@ -223,15 +223,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, bits
 
 
-def _encode_block(writer, block, quant, dc_codes, ac_codes, prev_dc) -> int:
-    """Encode one level-shifted 8x8 float block; returns the new DC
-    predictor."""
-    coef = _DCT @ block @ _DCT.T
-    q = np.round(coef / quant).astype(np.int64)
-    zz = q.flatten()[_ZIGZAG].tolist()
-    return _encode_block_zz(writer, zz, dc_codes, ac_codes, prev_dc)
-
-
 def _batch_zz(blocks: np.ndarray, quant: np.ndarray) -> list:
     """Forward-DCT + quantize a (b, 8, 8) block stack in one batched
     matmul (r11, guide §4.2 — numpy dispatches the stack to the same
@@ -586,15 +577,6 @@ def _extend(bits: int, size: int) -> int:
     if size == 0:
         return 0
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
-
-
-def _decode_block(reader, dc_table, ac_table, quant, prev_dc):
-    """Decode one entropy-coded block; returns (8x8 float block,
-    new DC predictor)."""
-    out = np.empty(64, dtype=np.int64)
-    prev_dc = _decode_block_coefs(reader, dc_table, ac_table, prev_dc, out)
-    coef = out.reshape(8, 8) * quant
-    return _DCT.T @ coef @ _DCT, prev_dc
 
 
 def _decode_block_coefs(reader, dc_table, ac_table, prev_dc, out) -> int:

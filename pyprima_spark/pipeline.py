@@ -236,9 +236,10 @@ def ingest_warc(spark: SparkSession, warc_glob: str):
     JVM-side on top of the verifying WARC reader: doc_id is the 60-bit
     md5 of the record id (stable across re-crawls of the same archive),
     source is the URI host via parse_url, lang is left null for the
-    downstream language-ID operator, n_chars is computed after header
-    stripping.  UTF-8 decode replaces malformed bytes (crawl reality)
-    rather than failing the scan — enforced here via the session's
+    downstream language-ID operator, n_chars (long, as the ``documents``
+    contract declares) is computed after header stripping.  UTF-8
+    decode replaces malformed bytes (crawl reality) rather than
+    failing the scan — enforced here via the session's
     codingErrorAction so driver-built sessions behave like
     build_session's.
     """
@@ -284,7 +285,7 @@ def ingest_warc(spark: SparkSession, warc_glob: str):
                 F.expr("parse_url(target_uri, 'HOST')"),
                 F.lit("unknown"),
             ).alias("source"),
-            F.length("text").alias("n_chars"),
+            F.length("text").cast("long").alias("n_chars"),
         )
     )
 

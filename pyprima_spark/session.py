@@ -22,8 +22,8 @@ def build_session(app_name: str = "pyprima_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet stores TIMESTAMP(NANOS); Spark reads them as
-        # long nanos (catalog.load_tables converts back to timestamps).
+        # A TIMESTAMP(NANOS) parquet column is readable only as long
+        # nanos (catalog.read_declared converts back to timestamps).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

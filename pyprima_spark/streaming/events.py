@@ -34,33 +34,21 @@ def hourly_event_stats(events: DataFrame, watermark: str = "2 hours") -> DataFra
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet directory (nanos → timestamp,
-    same conversion as the batch catalog)."""
-    import os
+    """readStream over the events parquet, under the catalog's declared
+    and footer-checked schema (same contract and nanos conversion as the
+    batch catalog)."""
+    from pyprima_spark.catalog import read_declared
 
-    from pyspark.sql import types as T
-
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
     # FileStreamSource wants a directory: stream the sf dir, filtered to
     # the events file (works whether events.parquet is a file or a dir).
-    stream = (
-        spark.readStream.schema(schema)
+    return read_declared(
+        spark,
+        sf_dir,
+        "events",
+        lambda schema: spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # withWatermark / window() require TIMESTAMP; parquet micros with
-    # isAdjustedToUTC=false infer as TIMESTAMP_NTZ. Session tz is pinned
-    # UTC by the batch catalog, so the cast is a wall-clock identity.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for field in stream.schema.fields:
-        if isinstance(field.dataType, T.TimestampNTZType):
-            stream = stream.withColumn(
-                field.name, F.col(field.name).cast(T.TimestampType())
-            )
-    return stream
 
 
 def run_hourly_stats_stream(

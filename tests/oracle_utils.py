@@ -7,7 +7,22 @@ import os
 import duckdb
 import pandas as pd
 
-from pyprima_spark.catalog import TABLES
+from pyprima_spark.catalog import TABLE_SCHEMAS, TABLES
+
+
+def contract_table(name: str, **columns):
+    """A pyarrow table with every column ``catalog.TABLE_SCHEMAS`` declares
+    for ``name``: the given columns, all others null. Edge-case fixtures
+    use it so the catalog's footer check accepts them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(TABLE_SCHEMAS[name], timestamp_utc=False)
+    n = len(next(iter(columns.values())))
+    return pa.table(
+        [pa.array(columns.get(f.name, [None] * n), f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

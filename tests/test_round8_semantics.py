@@ -486,9 +486,11 @@ def test_source_selection_refuses_wide_catalog(spark, tmp_path):
 
     import pytest
 
+    from pyprima_spark.catalog import TABLE_SCHEMAS
+
     docs = spark.createDataFrame(
-        [(i, f"src{i:03d}", "the of and to a word") for i in range(61)],
-        "doc_id long, source string, text string",
+        [(i, "the of and to a word", None, f"src{i:03d}", 20) for i in range(61)],
+        TABLE_SCHEMAS["documents"],
     )
     d = str(tmp_path / "wide")
     docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
@@ -515,9 +517,8 @@ def test_pca_empty_embeddings_publishes_null_rows(spark, tmp_path):
     import os
 
     from pyprima_spark.plans.round8 import ROUND8_ORACLES, pca_power_iteration
-    from tests.oracle_utils import assert_matches_oracle
+    from tests.oracle_utils import assert_matches_oracle, contract_table
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     d = str(tmp_path / "empty_emb")
@@ -525,12 +526,7 @@ def test_pca_empty_embeddings_publishes_null_rows(spark, tmp_path):
     # single-FILE parquet, like the driver's testdata layout (a Spark
     # directory write is unreadable to the oracle's read_parquet glob)
     pq.write_table(
-        pa.table(
-            {"vec_id": [], "embedding": []},
-            schema=pa.schema(
-                [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]
-            ),
-        ),
+        contract_table("embeddings", vec_id=[], embedding=[]),
         os.path.join(d, "embeddings.parquet"),
     )
     df = pca_power_iteration(spark, d)
@@ -548,9 +544,8 @@ def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
         ROUND8_ORACLES,
         bradley_terry_strength,
     )
-    from tests.oracle_utils import assert_matches_oracle
+    from tests.oracle_utils import assert_matches_oracle, contract_table
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     rows = []
@@ -563,18 +558,18 @@ def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
     d = str(tmp_path / "bt_zero")
     os.makedirs(d)
     pq.write_table(
-        pa.table({
-            "p_partkey": pa.array([1, 2, 3], pa.int64()),
-            "p_brand": ["BRAND#X", "BRAND#Y", "BRAND#Z"],
-        }),
+        contract_table(
+            "part", p_partkey=[1, 2, 3], p_brand=["BRAND#X", "BRAND#Y", "BRAND#Z"]
+        ),
         os.path.join(d, "part.parquet"),
     )
     pq.write_table(
-        pa.table({
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_discount": pa.array([r[2] for r in rows], pa.float64()),
-        }),
+        contract_table(
+            "lineitem",
+            l_orderkey=[r[0] for r in rows],
+            l_partkey=[r[1] for r in rows],
+            l_discount=[r[2] for r in rows],
+        ),
         os.path.join(d, "lineitem.parquet"),
     )
     df = bradley_terry_strength(spark, d)
@@ -595,19 +590,19 @@ def test_source_selection_stops_at_exhausted_coverage(spark, tmp_path):
         ROUND8_ORACLES,
         source_selection_greedy,
     )
-    from tests.oracle_utils import assert_matches_oracle
+    from tests.oracle_utils import assert_matches_oracle, contract_table
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     def _docs(path, triples):
         os.makedirs(path)
         pq.write_table(
-            pa.table({
-                "doc_id": pa.array([t[0] for t in triples], pa.int64()),
-                "source": [t[1] for t in triples],
-                "text": [t[2] for t in triples],
-            }),
+            contract_table(
+                "documents",
+                doc_id=[t[0] for t in triples],
+                source=[t[1] for t in triples],
+                text=[t[2] for t in triples],
+            ),
             os.path.join(path, "documents.parquet"),
         )
 
