@@ -74,9 +74,6 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 
 TABLES = tuple(TABLE_SCHEMAS)
 
-# Dimension tables small enough to broadcast at any scale factor.
-DIM_TABLES = frozenset({"region", "nation"})
-
 # Tables whose consumers do heavy per-row compute (regex normalization,
 # md5 shingling, vector math) — worth a widening shuffle when the scan
 # is degenerate. Relational tables skip it: their first shuffle (join /

@@ -11,8 +11,8 @@ The per-element double→decimal cast is safe at scale 6: the inputs are
 prices/values with ~2 decimal digits of real precision, so element
 values sit ~1e-10 away from any 5e-7 rounding boundary.
 
-The DuckDB-side mirror of this helper is ``dec_sum_sql`` in
-:mod:`pyprima_spark.plans.oracles`.
+The DuckDB oracles (each plan module's ``ORACLES``) spell the same sum
+inline as ``sum(CAST(x AS DECIMAL(27,6)))``.
 """
 
 from __future__ import annotations

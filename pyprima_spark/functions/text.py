@@ -12,7 +12,7 @@ integer — the only 64-bit-ish hash both engines compute identically.
 
 from __future__ import annotations
 
-MAX_LONG = 9223372036854775807
+from pyprima_spark.plans.constants import MINHASH_A, MINHASH_B, MINHASH_MASK, MINHASH_P
 
 
 # -- tokenization -----------------------------------------------------------
@@ -63,15 +63,11 @@ def shingles_duck(tokens: str, k: int = 3) -> str:
 
 
 def base_hashes_duck(shingles: str) -> str:
-    from pyprima_spark.plans.constants import MINHASH_MASK
-
     h = hash64_duck("s")
     return f"list_transform({shingles}, s -> {h} & {MINHASH_MASK})"
 
 
 def minhashes_duck(base_hashes: str) -> str:
-    from pyprima_spark.plans.constants import MINHASH_A, MINHASH_B, MINHASH_P
-
     parts = ", ".join(
         f"list_min(list_transform({base_hashes}, h -> ({a} * h + {b}) % {MINHASH_P}))"
         for a, b in zip(MINHASH_A, MINHASH_B)

@@ -42,11 +42,6 @@ def norm_duck(a: str, dim: int) -> str:
     return f"sqrt(list_sum(list_transform(generate_series(1, {dim}), i -> ({a})[i] * ({a})[i])))"
 
 
-def cosine_spark(a: str, b: str) -> str:
-    d, na, nb = dot_spark(a, b), norm_spark(a), norm_spark(b)
-    return f"CASE WHEN {na} = 0 OR {nb} = 0 THEN 0D ELSE {d} / ({na} * {nb}) END"
-
-
 def cosine_duck(a: str, b: str, dim: int) -> str:
     d, na, nb = dot_duck(a, b, dim), norm_duck(a, dim), norm_duck(b, dim)
     return f"CASE WHEN {na} = 0 OR {nb} = 0 THEN 0 ELSE {d} / ({na} * {nb}) END"

@@ -13,7 +13,3 @@ from pyspark.sql import functions as F
 
 def cohort_of(year: Column, width: int) -> Column:
     return (F.floor(year / width) * width).cast("int")
-
-
-def cohort_of_sql(year_sql: str, width: int) -> str:
-    return f"cast(floor(({year_sql}) / {width}) * {width} AS int)"

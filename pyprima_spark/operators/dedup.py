@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 
 from pyprima_spark.functions import text as X
 from pyprima_spark.operators.checkpointing import materialize
-from pyprima_spark.plans.constants import MINHASH_BANDS, MINHASH_N
+from pyprima_spark.plans.constants import (
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_BANDS,
+    MINHASH_MASK,
+    MINHASH_N,
+    MINHASH_P,
+)
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -69,12 +76,6 @@ def minhash_band_table(
     hash function and per band (projection collapse inlines expressions
     into every lambda) — measured ~10× slower.
     """
-    from pyprima_spark.plans.constants import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_MASK,
-        MINHASH_P,
-    )
 
     toks = X.tokens_spark(text_col)
     # Shingles: build the (distinct) shingle ARRAY with one transform,

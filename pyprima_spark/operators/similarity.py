@@ -37,12 +37,6 @@ def with_vec_norm(df: DataFrame, col: str = "embedding") -> DataFrame:
     )
 
 
-def cosine_col() -> F.Column:
-    """cos(q.vec, c.vec) for a joined (query, candidate) row — rounded
-    to 4 dp so both engines agree bit-for-bit after ranking."""
-    return F.round(F.expr(V.cosine_spark("qvec", "cvec")), 4)
-
-
 def cosine_prenorm_col() -> F.Column:
     """Cosine from carried qvec/cvec + precomputed qn/cn norms."""
     dot = V.dot_spark("qvec", "cvec")

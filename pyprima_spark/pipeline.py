@@ -199,11 +199,12 @@ def run_curation(
     """Materialize the LLM training-data curation pipeline: the curated
     corpus lands as parquet partitioned by source (downstream per-source
     sampling prunes on the partition key), alongside the funnel-count
-    manifest table. Stage semantics are `queries.corpus_curation`'s —
+    manifest table. Stage semantics are `core.corpus_curation`'s —
     both read the same flag frame, so the written corpus always agrees
     with the oracled funnel counts.
     """
-    from pyprima_spark.plans.queries import QUERIES, curation_flags
+    from pyprima_spark.plans.core import curation_flags
+    from pyprima_spark.plans.queries import QUERIES
 
     d, keptn = curation_flags(spark, sf_dir)
     corpus_path = os.path.join(out_dir, "curated_docs")
@@ -299,7 +300,7 @@ def export_curated_tfrecord(
     job actually consumes.  Sharding is hash-of-doc_id (data-derived,
     byte-identical reruns; sources/tfrecord.py); returns the per-shard
     manifest DataFrame."""
-    from pyprima_spark.plans.queries import curation_flags
+    from pyprima_spark.plans.core import curation_flags
     from pyprima_spark.sources.tfrecord import write_tfrecord_shards
 
     d, keptn = curation_flags(spark, sf_dir)

@@ -58,7 +58,6 @@ MINHASH_B: list[int] = [_coef("b", j, 0) for j in range(MINHASH_N)]
 
 NGRAM_LEN_BAND = 50   # candidate length-band width for ngram jaccard
 NGRAM_DF_MAX = 200    # drop grams appearing in more docs than this per bucket
-SIMHASH_MAX_HAMMING = 6
 NGRAM_JACCARD_TAU = 0.8
 EMB_DEDUP_TAU = 0.3   # cosine near-dup threshold (synthetic vectors max ~0.5)
 ANN_K = 10

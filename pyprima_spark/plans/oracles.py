@@ -1,2010 +1,12 @@
-"""DuckDB oracle SQL for every oracle-able query in the catalog.
+"""DuckDB oracle SQL per catalog key, merged from the plan modules'
+``ORACLES`` in :data:`pyprima_spark.plans.queries.PLAN_MODULES` order.
 
-Column aliases must match the Spark plans in
-:mod:`pyprima_spark.plans.queries` exactly — the driver sorts columns by
-name and hashes values. Floats passing through arithmetic are rounded
-identically on both sides.
+Column aliases match the key's Spark plan exactly — the correctness
+check sorts columns by name and hashes values.
 """
 
 from __future__ import annotations
 
-ORACLES: dict[str, str] = {}
+from pyprima_spark.plans.queries import PLAN_MODULES, merge
 
-ORACLES["q1_pricing_summary"] = """
-SELECT
-  l_returnflag,
-  l_linestatus,
-  round(sum(CAST(l_quantity AS DECIMAL(27,6))), 2)::DOUBLE                                        AS sum_qty,
-  round(sum(CAST(l_extendedprice AS DECIMAL(27,6))), 2)::DOUBLE                                   AS sum_base_price,
-  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE                AS sum_disc_price,
-  round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(27,6))), 2)::DOUBLE  AS sum_charge,
-  round(sum(CAST(l_quantity AS DECIMAL(27,6)))::DOUBLE / count(l_quantity), 4)                                        AS avg_qty,
-  round(sum(CAST(l_extendedprice AS DECIMAL(27,6)))::DOUBLE / count(l_extendedprice), 4)                                   AS avg_price,
-  round(sum(CAST(l_discount AS DECIMAL(27,6)))::DOUBLE / count(l_discount), 4)                                        AS avg_disc,
-  count(*)                                                         AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-ORACLES["q3_shipping_priority"] = """
-SELECT
-  l_orderkey,
-  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue,
-  strftime(o_orderdate, '%Y-%m-%d')                 AS o_orderdate,
-  o_orderpriority
-FROM customer
-JOIN orders   ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-  AND l_shipdate  > TIMESTAMP '1997-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-from pyprima_spark.functions.binning import interval_bin_sql
-from pyprima_spark.functions.calendar import daytype_sql, season_sql
-from pyprima_spark.functions.strings import clean_name_sql
-from pyprima_spark.operators.gapfill import trend_fill_sql
-from pyprima_spark.operators.recode import mapping_values_sql
-from pyprima_spark.plans.constants import (
-    NATION_RECODE,
-    SIZE_BINS,
-    SIZE_DEFAULT,
-)
-
-ORACLES["recode_group"] = f"""
-SELECT
-  coalesce(__recode_val, n_name) AS country,
-  count(*)                       AS n_orders,
-  round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE    AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-LEFT JOIN {mapping_values_sql(NATION_RECODE)} ON n_name = __recode_key
-GROUP BY 1
-ORDER BY 1
-"""
-
-ORACLES["shares_normalize"] = """
-WITH grouped AS (
-  SELECT c_mktsegment, o_orderpriority, sum(o_totalprice) AS val
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1, 2
-)
-SELECT
-  c_mktsegment,
-  o_orderpriority,
-  round(
-    CASE WHEN sum(val) OVER (PARTITION BY c_mktsegment) = 0 THEN 0
-         ELSE val / sum(val) OVER (PARTITION BY c_mktsegment) END, 6
-  ) AS share
-FROM grouped
-"""
-
-ORACLES["pivot_wide"] = """
-SELECT
-  c_mktsegment,
-  round(coalesce(sum(o_totalprice) FILTER (o_orderpriority = '1-URGENT'), 0), 2)        AS prio_1,
-  round(coalesce(sum(o_totalprice) FILTER (o_orderpriority = '2-HIGH'), 0), 2)          AS prio_2,
-  round(coalesce(sum(o_totalprice) FILTER (o_orderpriority = '3-MEDIUM'), 0), 2)        AS prio_3,
-  round(coalesce(sum(o_totalprice) FILTER (o_orderpriority = '4-NOT SPECIFIED'), 0), 2) AS prio_4,
-  round(coalesce(sum(o_totalprice) FILTER (o_orderpriority = '5-LOW'), 0), 2)           AS prio_5
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-"""
-
-ORACLES["unpivot_long"] = """
-WITH long AS (
-  SELECT l_returnflag, 'l_quantity' AS metric, l_quantity AS val FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_extendedprice', l_extendedprice FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem
-)
-SELECT l_returnflag, metric, round(sum(CAST(val AS DECIMAL(27,6))), 2)::DOUBLE AS total
-FROM long GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["expand_multivalue"] = """
-WITH words AS (
-  SELECT unnest(string_split(p_name, ' ')) AS word, p_size FROM part
-)
-SELECT word, count(*) AS n_parts, round(sum(CAST(p_size AS DECIMAL(27,6)))::DOUBLE / count(p_size), 4) AS avg_size
-FROM words GROUP BY word ORDER BY word
-"""
-
-ORACLES["dedup_names"] = """
-SELECT
-  p_partkey,
-  p_brand,
-  p_brand || CASE WHEN rn = 1 THEN '' ELSE cast(rn - 1 AS varchar) END AS name_dedup
-FROM (
-  SELECT p_partkey, p_brand,
-         row_number() OVER (PARTITION BY p_brand ORDER BY p_partkey) AS rn
-  FROM part
-)
-"""
-
-ORACLES["interval_binning"] = f"""
-SELECT
-  {interval_bin_sql('p_size', SIZE_BINS, SIZE_DEFAULT)} AS size_class,
-  count(*) AS n,
-  round(sum(CAST(p_retailprice AS DECIMAL(27,6)))::DOUBLE / count(p_retailprice), 4) AS avg_price
-FROM part
-GROUP BY 1 ORDER BY 1
-"""
-
-ORACLES["mode_impute"] = """
-WITH ks AS (
-  SELECT event_type,
-         cast(regexp_extract(props, '(\\d+)', 1) AS int) AS k
-  FROM events
-),
-mode AS (
-  SELECT k AS mode_k FROM ks WHERE event_type <> 'error'
-  GROUP BY k ORDER BY count(*) DESC, k ASC LIMIT 1
-)
-SELECT
-  CASE WHEN event_type = 'error' THEN mode_k ELSE k END AS k_filled,
-  count(*) AS cnt
-FROM ks, mode
-GROUP BY 1 ORDER BY 1
-"""
-
-ORACLES["ffill_impute"] = """
-SELECT
-  o_orderkey,
-  o_custkey,
-  coalesce(
-    last_value(CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_orderpriority END
-               IGNORE NULLS)
-      OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    'NONE'
-  ) AS filled_priority
-FROM orders
-"""
-
-_GAP_FILL_EXPR = trend_fill_sql("v", "event_type", "h")
-ORACLES["gap_fill_trend"] = f"""
-WITH ev AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, value FROM events
-),
-bounds AS (SELECT min(h) AS hmin, max(h) AS hmax FROM ev),
-hours AS (
-  SELECT unnest(generate_series(hmin, hmax, INTERVAL 1 hour)) AS h FROM bounds
-),
-types AS (SELECT DISTINCT event_type FROM events),
-sums AS (
-  SELECT h, event_type, round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS v FROM ev GROUP BY 1, 2
-),
-dense AS (
-  SELECT hours.h, types.event_type, coalesce(sums.v, 0) AS v
-  FROM hours CROSS JOIN types
-  LEFT JOIN sums ON sums.h = hours.h AND sums.event_type = types.event_type
-)
-SELECT
-  strftime(h, '%Y-%m-%d %H:%M:%S') AS h,
-  event_type,
-  {_GAP_FILL_EXPR} AS filled
-FROM dense
-"""
-
-ORACLES["clean_names_ascii"] = f"""
-SELECT
-  doc_id,
-  {clean_name_sql('text')} AS name_clean,
-  length({clean_name_sql('text')}) AS n_ascii
-FROM documents
-"""
-
-ORACLES["flh_pivot"] = """
-WITH agg AS (
-  SELECT
-    user_id,
-    round(coalesce(sum(value) FILTER (event_type = 'purchase'), 0), 2) AS purchase_value,
-    count(*) FILTER (event_type = 'view') AS view_count
-  FROM events GROUP BY user_id
-)
-SELECT user_id, purchase_value, view_count,
-       CASE WHEN purchase_value = 0 THEN 0
-            ELSE round(view_count / purchase_value, 4) END AS flh
-FROM agg ORDER BY user_id
-"""
-
-ORACLES["calendar_enrich"] = f"""
-SELECT
-  {season_sql('o_orderdate')} AS season,
-  {daytype_sql('o_orderdate')} AS daytype,
-  count(*) AS n_orders,
-  round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
-FROM orders
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["profile_normalize"] = """
-SELECT
-  event_id,
-  user_id,
-  round(
-    CASE WHEN sum(value) OVER (PARTITION BY user_id) = 0 THEN 0
-         ELSE value / sum(value) OVER (PARTITION BY user_id) END, 6
-  ) AS share
-FROM events
-"""
-
-ORACLES["resample_hourly"] = """
-SELECT
-  strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS h,
-  event_type,
-  count(*) AS n,
-  round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total
-FROM events
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["weighted_disaggregate"] = """
-WITH totals AS (
-  SELECT c_nationkey, sum(o_totalprice) AS nation_total
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1
-),
-alloc AS (
-  SELECT
-    c.c_mktsegment,
-    CASE WHEN sum(abs(c.c_acctbal)) OVER (PARTITION BY c.c_nationkey) = 0
-         THEN 0
-         ELSE abs(c.c_acctbal)
-              / sum(abs(c.c_acctbal)) OVER (PARTITION BY c.c_nationkey)
-    END * t.nation_total AS allocated
-  FROM customer c JOIN totals t ON c.c_nationkey = t.c_nationkey
-)
-SELECT c_mktsegment, round(sum(CAST(allocated AS DECIMAL(27,6))), 2)::DOUBLE AS alloc_revenue
-FROM alloc GROUP BY 1 ORDER BY 1
-"""
-
-_EDGE_AGG_CTE = """
-pairs AS (
-  SELECT
-    least(c_nationkey, s_nationkey)    AS edge_a,
-    greatest(c_nationkey, s_nationkey) AS edge_b,
-    l_extendedprice * (1 - l_discount) AS rev
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  WHERE c_nationkey <> s_nationkey
-),
-edges AS MATERIALIZED (
-  SELECT edge_a, edge_b, count(*) AS n_lines, round(sum(CAST(rev AS DECIMAL(27,6))), 2)::DOUBLE AS cap
-  FROM pairs GROUP BY 1, 2
-)
-"""
-# MATERIALIZED: edges is a <=625-row nation-pair census over the
-# lineitem 4-way join; pagerank's unrolled rounds (and any other
-# multi-reference consumer) must not re-inline that join per
-# reference — the graph_modularity oracle lesson (SURVEY §6 r10 d).
-
-ORACLES["canonical_edges"] = f"""
-WITH {_EDGE_AGG_CTE}
-SELECT edge_a, edge_b, n_lines, cap FROM edges ORDER BY edge_a, edge_b
-"""
-
-ORACLES["neighbor_expansion"] = f"""
-WITH {_EDGE_AGG_CTE},
-nbrs AS (
-  SELECT r_name, n1.n_nationkey AS edge_a, n2.n_nationkey AS edge_b
-  FROM nation n1
-  JOIN nation n2 ON n1.n_regionkey = n2.n_regionkey
-                AND n1.n_nationkey < n2.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey
-)
-SELECT r_name, edge_a, edge_b, coalesce(cap, 0) AS cap
-FROM nbrs LEFT JOIN edges USING (edge_a, edge_b)
-ORDER BY r_name, edge_a, edge_b
-"""
-
-from pyprima_spark.functions.geo import (
-    SYNTH_LAT_SQL,
-    SYNTH_LON_SQL,
-    haversine_km_sql,
-)
-from pyprima_spark.plans.constants import (
-    COHORT_WIDTH,
-    EFF_PER_1000KM,
-    INV_COST_FIX,
-    INV_COST_LENGTH,
-    LENGTH_BINS,
-    LENGTH_DEFAULT,
-)
-
-_HAVERSINE = haversine_km_sql(
-    SYNTH_LAT_SQL.format(k="edge_a"),
-    SYNTH_LON_SQL.format(k="edge_a"),
-    SYNTH_LAT_SQL.format(k="edge_b"),
-    SYNTH_LON_SQL.format(k="edge_b"),
-)
-
-ORACLES["transmission_attrs"] = f"""
-WITH {_EDGE_AGG_CTE},
-with_len AS (
-  SELECT edge_a, edge_b, round({_HAVERSINE}, 2) AS length_km FROM edges
-)
-SELECT
-  edge_a,
-  edge_b,
-  length_km,
-  {interval_bin_sql('length_km', LENGTH_BINS, LENGTH_DEFAULT)} AS length_class,
-  round(pow({EFF_PER_1000KM}, length_km / 1000), 6) AS eff,
-  round({INV_COST_LENGTH} * length_km + {INV_COST_FIX}, 2) AS inv_cost
-FROM with_len ORDER BY edge_a, edge_b
-"""
-
-ORACLES["cohort_rollup"] = f"""
-SELECT
-  cast(floor(year(o_orderdate) / {COHORT_WIDTH}) * {COHORT_WIDTH} AS int) AS cohort,
-  o_orderstatus,
-  count(*) AS n_orders,
-  round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
-FROM orders GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["expansion_grid"] = """
-WITH existing AS (
-  SELECT n_name, o_orderpriority, round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS inst_cap
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation   ON c_nationkey = n_nationkey
-  GROUP BY 1, 2
-),
-grid AS (
-  SELECT n_name, o_orderpriority
-  FROM (SELECT n_name FROM nation)
-  CROSS JOIN (SELECT DISTINCT o_orderpriority FROM orders)
-)
-SELECT g.n_name, g.o_orderpriority, coalesce(e.inst_cap, 0) AS inst_cap
-FROM grid g LEFT JOIN existing e
-  ON g.n_name = e.n_name AND g.o_orderpriority = e.o_orderpriority
-ORDER BY 1, 2
-"""
-
-ORACLES["export_demand_matrix"] = """
-WITH labelled AS (
-  SELECT hour(ts) AS t, r_name, value
-  FROM events JOIN region ON (user_id % 5) = r_regionkey
-)
-SELECT
-  t,
-  round(coalesce(sum(value) FILTER (r_name = 'AFRICA'), 0), 2)      AS AFRICA,
-  round(coalesce(sum(value) FILTER (r_name = 'AMERICA'), 0), 2)     AS AMERICA,
-  round(coalesce(sum(value) FILTER (r_name = 'ASIA'), 0), 2)        AS ASIA,
-  round(coalesce(sum(value) FILTER (r_name = 'EUROPE'), 0), 2)      AS EUROPE,
-  round(coalesce(sum(value) FILTER (r_name = 'MIDDLE EAST'), 0), 2) AS MIDDLE_EAST
-FROM labelled
-GROUP BY t ORDER BY t
-"""
-
-from pyprima_spark.functions import text as X
-from pyprima_spark.functions import vectors as V
-from pyprima_spark.plans.constants import (
-    ANN_K,
-    ANN_N_QUERIES,
-    EMB_DEDUP_TAU,
-    IVF_CENTROID_IDS,
-    IVF_N_PROBE,
-    MINHASH_BANDS,
-    MINHASH_N,
-    NGRAM_JACCARD_TAU,
-    STOPWORDS,
-)
-
-ORACLES["dedup_exact"] = """
-SELECT md5(text) AS text_hash, min(doc_id) AS kept_doc, count(*) AS n_dups
-FROM documents GROUP BY 1
-"""
-
-ORACLES["dedup_fingerprint"] = """
-SELECT
-  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                          '\\s+', ' ', 'g'))) AS fingerprint,
-  min(doc_id) AS kept_doc,
-  count(*)    AS n_dups
-FROM documents GROUP BY 1
-"""
-
-def _minhash_bands_cte(rel: str) -> str:
-    """MinHash band-table CTE over an arbitrary (doc_id, text) relation
-    — `documents` for the standalone dedup oracles, a filtered survivor
-    CTE for the curation-pipeline oracle."""
-    return f"""sigs AS (
-  SELECT doc_id AS doc,
-         {X.bands_duck(X.minhashes_duck('bh'), MINHASH_BANDS)} AS bands
-  FROM (
-    SELECT doc_id, {X.base_hashes_duck('shingles')} AS bh
-    FROM (
-      SELECT doc_id, {X.shingles_duck(X.tokens_duck('text'))} AS shingles
-      FROM {rel}
-    )
-    WHERE len(shingles) > 0
-  )
-),
-bands AS (
-  SELECT doc, unnest(bands) AS band_sig,
-         unnest(generate_series(1, len(bands))) AS band_idx
-  FROM sigs
-)"""
-
-
-_MINHASH_BANDS_CTE = _minhash_bands_cte("documents")
-
-ORACLES["dedup_minhash_lsh"] = f"""
-WITH {_MINHASH_BANDS_CTE}
-SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-FROM bands a JOIN bands b
-  ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-ORDER BY doc_a, doc_b
-"""
-
-_SIMHASH_CTE = f"""
-sims AS (
-  SELECT doc_id AS doc, {X.simhash_duck('hashes')} AS simhash
-  FROM (
-    SELECT doc_id, {X.token_hashes_duck('tokens')} AS hashes
-    FROM (SELECT doc_id, {X.tokens_duck('text')} AS tokens FROM documents)
-    WHERE len(tokens) > 0
-  )
-),
-chunks AS (
-  SELECT doc, simhash, c, (simhash >> (c * 15)) & 32767 AS chunk
-  FROM sims, (SELECT unnest(generate_series(0, 3)) AS c)
-)
-"""
-
-ORACLES["dedup_simhash"] = f"""
-WITH {_SIMHASH_CTE}
-SELECT doc_a, doc_b, bit_count(xor(sim_a, sim_b)) AS hamming
-FROM (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b,
-                  a.simhash AS sim_a, b.simhash AS sim_b
-  FROM chunks a JOIN chunks b
-    ON a.c = b.c AND a.chunk = b.chunk AND a.doc < b.doc
-)
-ORDER BY doc_a, doc_b
-"""
-
-from pyprima_spark.plans.constants import NGRAM_DF_MAX, NGRAM_LEN_BAND
-
-ORACLES["ngram_jaccard"] = f"""
-WITH docs AS (
-  SELECT doc_id, source,
-         cast(floor(length(text) / {NGRAM_LEN_BAND}) AS bigint) AS len_band,
-         {X.char_ngrams_duck(X.normtext_duck('text'))} AS grams
-  FROM documents
-),
-exploded AS (
-  SELECT doc_id AS doc, source, len_band, unnest(grams) AS gram
-  FROM docs WHERE len(grams) > 0
-),
-kept AS (
-  -- stop-gram cutoff: same per-bucket document-frequency guard as the
-  -- Spark plan (grams in > NGRAM_DF_MAX docs of a bucket are dropped)
-  SELECT doc, source, len_band, gram FROM (
-    SELECT *, count(*) OVER (PARTITION BY source, len_band, gram) AS df
-    FROM exploded
-  ) WHERE df <= {NGRAM_DF_MAX}
-),
-grams AS (
-  SELECT *, count(*) OVER (PARTITION BY doc) AS gset_size FROM kept
-),
-shared AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, a.gset_size AS size_a,
-         b.gset_size AS size_b, count(*) AS shared
-  FROM grams a JOIN grams b
-    ON a.source = b.source AND a.len_band = b.len_band
-   AND a.gram = b.gram AND a.doc < b.doc
-  GROUP BY 1, 2, 3, 4
-)
-SELECT doc_a, doc_b,
-       round(shared / (size_a + size_b - shared), 4) AS jacc
-FROM shared
-WHERE round(shared / (size_a + size_b - shared), 4) >= {NGRAM_JACCARD_TAU}
-ORDER BY doc_a, doc_b
-"""
-
-_COS = V.cosine_duck("qvec", "cvec", V.EMB_DIM)
-
-ORACLES["ann_topk"] = f"""
-WITH base AS (
-  SELECT vec_id, {V.to_double_duck('embedding')} AS vec FROM embeddings
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         round({_COS}, 4) AS cos
-  FROM (SELECT vec_id, vec AS qvec FROM base WHERE vec_id < {ANN_N_QUERIES}) q
-  CROSS JOIN (SELECT vec_id, vec AS cvec FROM base) c
-  WHERE c.vec_id <> q.vec_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos, rank FROM ranked WHERE rank <= {ANN_K}
-ORDER BY query_id, rank
-"""
-
-ORACLES["ann_lsh"] = f"""
-WITH base AS (
-  SELECT vec_id, vec, {V.lsh_bucket_duck('vec')} AS bucket
-  FROM (SELECT vec_id, {V.to_double_duck('embedding')} AS vec FROM embeddings)
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         round({_COS}, 4) AS cos
-  FROM (SELECT vec_id, vec AS qvec, bucket FROM base WHERE vec_id < {ANN_N_QUERIES}) q
-  JOIN (SELECT vec_id, vec AS cvec, bucket FROM base) c USING (bucket)
-  WHERE c.vec_id <> q.vec_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos, rank FROM ranked WHERE rank <= {ANN_K}
-ORDER BY query_id, rank
-"""
-
-_BAND_SIG_SELECTS = "\n  UNION ALL\n".join(
-    f"  SELECT vec_id, {b} AS band, {V.band_bucket_duck('vec', b)} AS bucket FROM base"
-    for b in range(V.LSH_BANDS)
-)
-
-ORACLES["embedding_dedup"] = f"""
-WITH base AS (
-  SELECT vec_id, {V.to_double_duck('embedding')} AS vec FROM embeddings
-),
-sig AS (
-{_BAND_SIG_SELECTS}
-),
-pairs AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM sig a JOIN sig b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, cos FROM (
-  SELECT vec_a, vec_b,
-         round({V.cosine_duck('x.vec', 'y.vec', V.EMB_DIM)}, 4) AS cos
-  FROM pairs
-  JOIN base x ON x.vec_id = vec_a
-  JOIN base y ON y.vec_id = vec_b
-)
-WHERE cos >= {EMB_DEDUP_TAU}
-ORDER BY vec_a, vec_b
-"""
-
-_IVF_CELLS = ", ".join(
-    f"({i}, {cid})" for i, cid in enumerate(IVF_CENTROID_IDS)
-)
-
-ORACLES["ann_ivf"] = f"""
-WITH base AS (
-  SELECT vec_id, {V.to_double_duck('embedding')} AS vec FROM embeddings
-),
-cents AS (
-  SELECT c.cell, b.vec AS centroid
-  FROM (VALUES {_IVF_CELLS}) AS c(cell, cid)
-  JOIN base b ON b.vec_id = c.cid
-),
-assigned AS (
-  SELECT vec_id, cvec, cell FROM (
-    SELECT d.vec_id, d.cvec, d.cell,
-           row_number() OVER (PARTITION BY d.vec_id
-                              ORDER BY d.d2 ASC, d.cell ASC) AS pr
-    FROM (
-      SELECT b.vec_id, b.vec AS cvec, c.cell,
-             {V.l2sq_duck('b.vec', 'c.centroid', V.EMB_DIM)} AS d2
-      FROM base b CROSS JOIN cents c
-    ) d
-  ) WHERE pr = 1
-),
-probes AS (
-  SELECT query_id, qvec, cell FROM (
-    SELECT d.query_id, d.qvec, d.cell,
-           row_number() OVER (PARTITION BY d.query_id
-                              ORDER BY d.d2 ASC, d.cell ASC) AS pr
-    FROM (
-      SELECT q.vec_id AS query_id, q.vec AS qvec, c.cell,
-             {V.l2sq_duck('q.vec', 'c.centroid', V.EMB_DIM)} AS d2
-      FROM base q CROSS JOIN cents c
-      WHERE q.vec_id < {ANN_N_QUERIES}
-    ) d
-  ) WHERE pr <= {IVF_N_PROBE}
-),
-scored AS (
-  SELECT p.query_id, a.vec_id,
-         round({V.cosine_duck('p.qvec', 'a.cvec', V.EMB_DIM)}, 4) AS cos
-  FROM assigned a JOIN probes p USING (cell)
-  WHERE a.vec_id <> p.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos, rank FROM ranked WHERE rank <= {ANN_K}
-ORDER BY query_id, rank
-"""
-
-
-def _lang_scores_duck() -> str:
-    cols = []
-    for lang, words in STOPWORDS.items():
-        cols.append(f"{X.stopword_count_duck('tokens', words)} AS s_{lang}")
-    cols.append(f"{X.cjk_count_duck('text')} AS s_zh")
-    return ", ".join(cols)
-
-
-ORACLES["lang_id"] = f"""
-WITH scored AS (
-  SELECT lang, {_lang_scores_duck()}
-  FROM (SELECT lang, text, {X.tokens_duck('text')} AS tokens FROM documents)
-),
-pred AS (
-  SELECT lang,
-    CASE WHEN s_zh > 0 THEN 'zh'
-         WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'unknown'
-         WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-         WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-         WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-         ELSE 'fr' END AS pred_lang
-  FROM scored
-)
-SELECT lang, pred_lang, count(*) AS n_docs
-FROM pred GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["quality_score"] = f"""
-WITH d AS (
-  SELECT
-    doc_id,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, text, {X.tokens_duck('text')} AS tokens FROM documents)
-)
--- Each value rounds half-away-from-zero in exact integer space over
--- its rational's own denominator (mirror of the Spark side's `rnd`;
--- round(double, 4) diverged between engines near .00005 boundaries).
-SELECT doc_id, n_tok,
-  CASE WHEN n_tok = 0 THEN 0.0 ELSE
-    ((20000 * stop_cnt + n_tok) // (2 * n_tok)) / 10000.0 END AS stop_ratio,
-  CASE WHEN n_ch = 0 THEN 0.0 ELSE
-    ((20000 * punct_cnt + n_ch) // (2 * n_ch)) / 10000.0 END AS punct_ratio,
-  CASE WHEN n_tok = 0 THEN 0.0 ELSE
-    ((20000 * word_chars + n_tok) // (2 * n_tok)) / 10000.0 END
-    AS mean_word_len,
-  CASE WHEN 100 * n_tok * n_ch = 0 THEN 0.0 ELSE
-    ((20000 * (2 * stop_cnt * 100 * n_ch - 3 * punct_cnt * 100 * n_tok
-               + least(n_tok, 100) * n_tok * n_ch
-               - 10 * abs(word_chars - 5 * n_tok) * n_ch)
-      + (CASE WHEN (2 * stop_cnt * 100 * n_ch - 3 * punct_cnt * 100 * n_tok
-                    + least(n_tok, 100) * n_tok * n_ch
-                    - 10 * abs(word_chars - 5 * n_tok) * n_ch) >= 0
-              THEN 100 * n_tok * n_ch ELSE -(100 * n_tok * n_ch) END))
-     // (2 * 100 * n_tok * n_ch)) / 10000.0 END AS score
-FROM d
-"""
-
-ORACLES["token_count"] = f"""
-WITH d AS (
-  SELECT source, len(tokens) AS n_tok, len(list_distinct(tokens)) AS n_distinct
-  FROM (SELECT source, {X.tokens_duck('text')} AS tokens FROM documents)
-)
-SELECT source, count(*) AS n_docs, cast(sum(n_tok) AS BIGINT) AS total_tokens,
-       round(sum(CAST(n_tok AS DECIMAL(27,6)))::DOUBLE / count(n_tok), 4) AS avg_tokens,
-       cast(sum(n_distinct) AS BIGINT) AS total_distinct
-FROM d GROUP BY source ORDER BY source
-"""
-
-ORACLES["streaming_hourly_stats"] = """
-SELECT
-  strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-  event_type,
-  count(*) AS n,
-  round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total
-FROM events
-GROUP BY 1, 2
-"""
-
-ORACLES["multimodal_decode"] = """
-WITH m AS (
-  SELECT doc_id,
-         octet_length(encode(text)) AS n_bytes,
-         md5(text) AS fp,
-         16 + cast('0x' || substring(md5(text), 1, 4) AS int) % 2048 AS width,
-         16 + cast('0x' || substring(md5(text), 5, 4) AS int) % 2048 AS height
-  FROM documents
-),
-r AS (
-  SELECT *, least(1.0, 256.0 / greatest(width, height)) AS scale FROM m
-)
-SELECT doc_id, n_bytes, width, height,
-       greatest(cast(floor(width * scale) AS int), 1)  AS out_width,
-       greatest(cast(floor(height * scale) AS int), 1) AS out_height,
-       fp AS fingerprint
-FROM r
-"""
-
-ORACLES["q5_local_supplier"] = """
-SELECT
-  n_name,
-  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey
-  AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey
-  AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey
-  AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC
-"""
-
-
-ORACLES["asof_join"] = """
-WITH p AS (
-  SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'
-),
-c AS (
-  -- dedup ties at identical (user_id, ts) with the same greatest-value
-  -- rule the Spark operator uses, so ASOF picks a deterministic row
-  SELECT user_id, ts, value FROM (
-    SELECT user_id, ts, value,
-           row_number() OVER (PARTITION BY user_id, ts
-                              ORDER BY value DESC) AS rn
-    FROM events WHERE event_type = 'click'
-  ) WHERE rn = 1
-)
-SELECT p.event_id, p.user_id,
-       strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-       round(p.value, 2) AS value,
-       round(c.value, 2) AS click_value,
-       round((epoch_us(p.ts) - epoch_us(c.ts)) / 1000000.0, 3) AS lag_sec
-FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
-ORDER BY p.event_id
-"""
-
-_SESSIONIZE_SQL = """
-WITH gaps AS (
-  SELECT user_id, ts, value,
-         CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
-                (PARTITION BY user_id ORDER BY ts)) >= 14400000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-),
-sess AS (
-  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS UNBOUNDED PRECEDING) AS sid
-  FROM gaps
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       strftime(max(ts) + INTERVAL 4 HOUR, '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-       count(*) AS n_events,
-       round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total_value
-FROM sess
-GROUP BY user_id, sid
-ORDER BY user_id, session_start
-"""
-
-ORACLES["sessionize"] = _SESSIONIZE_SQL
-ORACLES["streaming_sessions"] = _SESSIONIZE_SQL
-
-
-ORACLES["multimodal_frames"] = """
-WITH m AS (
-  SELECT doc_id, md5(text) AS base,
-         8 + cast('0x' || substring(md5(text), 1, 2) AS INT) % 56 AS n_frames
-  FROM documents
-)
-SELECT doc_id, n_frames,
-       cast(floor(j * (n_frames - 1) / 3.0) AS INT) AS frame_idx,
-       md5(base || ':' || cast(floor(j * (n_frames - 1) / 3.0) AS INT)) AS frame_fp
-FROM m CROSS JOIN generate_series(0, 3) AS t(j)
-ORDER BY doc_id, frame_idx
-"""
-
-ORACLES["multimodal_audio"] = """
-SELECT doc_id,
-       round(1 + (2 * cast('0x' || substring(md5(text), 1, 4) AS BIGINT) + 1)
-             / 131.072, 3) AS duration_s,
-       round((2 * cast('0x' || substring(md5(text), 5, 4) AS BIGINT) + 1)
-             / 131072.0, 6) AS rms,
-       round((2 * cast('0x' || substring(md5(text), 9, 4) AS BIGINT) + 1)
-             / 131072.0, 6) AS peak
-FROM documents
-ORDER BY doc_id
-"""
-
-
-ORACLES["rolling_user_stats"] = """
-SELECT event_id, user_id,
-       strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-       count(*) OVER w AS n_1h,
-       round(sum(CAST(value AS DECIMAL(27,6))) OVER w, 2)::DOUBLE AS sum_1h
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts
-             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-ORDER BY event_id
-"""
-
-
-ORACLES["streaming_sliding_counts"] = """
-WITH expanded AS (
-  SELECT time_bucket(INTERVAL 15 MINUTE, ts) - k * INTERVAL 15 MINUTE AS win_start,
-         event_type, value
-  FROM events CROSS JOIN generate_series(0, 3) AS t(k)
-)
-SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
-       count(*) AS n, round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total
-FROM expanded
-GROUP BY win_start, event_type
-ORDER BY win_start, event_type
-"""
-
-
-_WINNOW_CTE = f"""
-pos AS (
-  SELECT doc_id, norm, unnest(generate_series(0, length(norm) - 5)) AS i
-  FROM (
-    SELECT doc_id, {X.normtext_duck('text')} AS norm FROM documents
-  )
-  WHERE length(norm) >= 12
-),
-hashes AS (
-  SELECT doc_id, i, {X.hash64_duck("substring(norm, i + 1, 5)")} AS h
-  FROM pos
-),
-wins AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS win_min,
-         max(i) OVER (PARTITION BY doc_id) AS max_i
-  FROM hashes
-),
-fps AS (
-  SELECT DISTINCT doc_id, win_min AS fingerprint
-  FROM wins
-  WHERE i <= max_i - 7
-)
-"""
-
-ORACLES["winnow_fingerprints"] = f"""
-WITH {_WINNOW_CTE}
-SELECT doc_id, fingerprint FROM fps
-ORDER BY doc_id, fingerprint
-"""
-
-ORACLES["cross_source_overlap"] = f"""
-WITH {_WINNOW_CTE},
-fsrc AS (
-  SELECT DISTINCT d.source, f.fingerprint
-  FROM fps f JOIN documents d USING (doc_id)
-)
-SELECT a.source AS source_a, b.source AS source_b, count(*) AS shared_fps
-FROM fsrc a JOIN fsrc b
-  ON a.fingerprint = b.fingerprint AND a.source < b.source
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-ORACLES["zonal_stats"] = """
-WITH pix AS (
-  SELECT (cast(id // 360 AS INT) - 80 + 0.5) AS lat,
-         (cast(id % 360 AS INT) - 180 + 0.5) AS lon,
-         (cast(id // 360 AS INT) * 7 + cast(id % 360 AS INT) * 13) % 100 AS pixval
-  FROM (SELECT unnest(range(57600)) AS id)
-), boxes AS (
-  SELECT n_name,
-         (n_nationkey * 7 % 32) * 5 - 80 AS lat_min,
-         (n_nationkey * 7 % 32) * 5 - 80 + 40 AS lat_max,
-         (n_nationkey * 11 % 60) * 6 - 180 AS lon_min,
-         (n_nationkey * 11 % 60) * 6 - 180 + 72 AS lon_max
-  FROM nation
-)
-SELECT n_name,
-       count(*) AS n_cells,
-       cast(sum(pixval) AS BIGINT) AS total,
-       round(sum(CAST(pixval AS DECIMAL(27,6)))::DOUBLE / count(pixval), 4) AS mean_val,
-       max(pixval) AS max_val
-FROM pix JOIN boxes
-  ON lat >= lat_min AND lat < lat_max AND lon >= lon_min AND lon < lon_max
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
-from pyprima_spark.functions.geo import haversine_km_sql as _hav
-
-ORACLES["nearest_site"] = f"""
-WITH pts AS (
-  SELECT c_custkey,
-         (c_custkey * 7919 % 160) - 80 + 0.5 AS lat,
-         (c_custkey * 104729 % 360) - 180 + 0.5 AS lon
-  FROM customer
-), sites AS (
-  SELECT n_name,
-         cast((n_nationkey * 13 % 140) - 70 AS DOUBLE) AS slat,
-         cast((n_nationkey * 29 % 340) - 170 AS DOUBLE) AS slon
-  FROM nation
-), scored AS (
-  SELECT c_custkey, n_name,
-         round({_hav('lat', 'lon', 'slat', 'slon')}, 6) AS dist
-  FROM pts CROSS JOIN sites
-), best AS (
-  SELECT c_custkey, n_name, dist
-  FROM scored
-  QUALIFY row_number() OVER (PARTITION BY c_custkey
-                             ORDER BY dist ASC, n_name ASC) = 1
-)
-SELECT n_name, count(*) AS n_assigned, round(sum(CAST(dist AS DECIMAL(27,6)))::DOUBLE / count(dist), 4) AS avg_dist_km
-FROM best
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
-ORACLES["grid_downsample"] = """
-WITH pix AS (
-  SELECT cast(id // 360 AS INT) AS latidx,
-         cast(id % 360 AS INT) AS lonidx,
-         (cast(id // 360 AS INT) * 7 + cast(id % 360 AS INT) * 13) % 100 AS pixval
-  FROM (SELECT unnest(range(57600)) AS id)
-)
-SELECT cast(latidx // 4 AS INT) AS block_lat,
-       cast(lonidx // 4 AS INT) AS block_lon,
-       count(*) AS n_cells,
-       round(sum(CAST(pixval AS DECIMAL(27,6)))::DOUBLE / count(pixval), 4) AS mean_val
-FROM pix
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
-ORACLES["incremental_new_docs"] = """
-WITH fp AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                                 '\\s+', ' ', 'g'))) AS fingerprint
-  FROM documents
-)
-SELECT doc_id, fingerprint
-FROM fp
-WHERE doc_id % 3 <> 0
-  AND NOT EXISTS (SELECT 1 FROM fp s
-                  WHERE s.doc_id % 3 = 0 AND s.fingerprint = fp.fingerprint)
-ORDER BY doc_id
-"""
-
-ORACLES["quality_topk_per_source"] = f"""
-WITH d AS (
-  SELECT
-    doc_id, source,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM documents)
-),
-scored AS (
-  SELECT doc_id, source,
-    round(2.0 * (CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END)
-          - 3.0 * (CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END)
-          + least(n_tok, 100) / 100.0
-          - abs((CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END) - 5.0) / 10.0,
-          4) AS score
-  FROM d
-),
-ranked AS (
-  SELECT source, doc_id, score,
-         row_number() OVER (PARTITION BY source ORDER BY score DESC, doc_id) AS rnk
-  FROM scored
-)
-SELECT source, rnk, doc_id, score
-FROM ranked WHERE rnk <= 10
-ORDER BY source, rnk
-"""
-
-ORACLES["deterministic_sample"] = f"""
-SELECT doc_id, source,
-       5 + (cast(substring(source, 4) AS INT) % 4) * 15 AS rate
-FROM documents
-WHERE {X.hash64_duck("cast(doc_id AS VARCHAR)")} % 100
-      < 5 + (cast(substring(source, 4) AS INT) % 4) * 15
-ORDER BY doc_id
-"""
-
-
-ORACLES["json_props_stats"] = """
-SELECT cast(floor(cast(json_extract(props, '$.k') AS INT) / 10.0) AS INT) AS k_bucket,
-       count(*) AS n,
-       round(sum(CAST(value AS DECIMAL(27,6)))::DOUBLE / count(value), 4) AS avg_value,
-       max(cast(json_extract(props, '$.k') AS INT)) AS max_k
-FROM events
-GROUP BY 1
-ORDER BY 1
-"""
-
-
-ORACLES["latest_snapshot"] = """
-SELECT user_id, event_type, event_id AS last_event_id,
-       round(value, 2) AS last_value,
-       strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts
-FROM events
-QUALIFY row_number() OVER (
-  PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) = 1
-ORDER BY user_id, event_type
-"""
-
-
-ORACLES["label_centroids"] = """
-SELECT label, i AS dim, round(sum(CAST(embedding[i + 1] AS DECIMAL(27,6)))::DOUBLE / count(embedding[i + 1]), 5) AS centroid
-FROM embeddings, (SELECT unnest(range(64)) AS i) dims
-GROUP BY label, i
-ORDER BY label, dim
-"""
-
-
-ORACLES["dedup_clusters"] = f"""
-WITH RECURSIVE {_MINHASH_BANDS_CTE},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-)
-SELECT node AS doc_id, min(lbl) AS cluster_id
-FROM reach GROUP BY node ORDER BY doc_id
-"""
-
-
-ORACLES["rollup_sales"] = """
-SELECT coalesce(n_name, 'ALL') AS nation,
-       coalesce(cast(year(o_orderdate) AS INT), -1) AS o_year,
-       count(*) AS n_orders,
-       round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS total_price
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY ROLLUP (n_name, year(o_orderdate))
-ORDER BY 1, 2
-"""
-
-
-ORACLES["cube_sales"] = """
-SELECT coalesce(c_mktsegment, 'ALL') AS segment,
-       coalesce(o_orderpriority, 'ALL') AS priority,
-       count(*) AS n_orders,
-       round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS total_price
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY CUBE (c_mktsegment, o_orderpriority)
-ORDER BY 1, 2
-"""
-
-
-ORACLES["value_percentiles"] = """
-SELECT event_type,
-       round(quantile_cont(value, 0.25), 4) AS p25,
-       round(quantile_cont(value, 0.5), 4) AS p50,
-       round(quantile_cont(value, 0.75), 4) AS p75,
-       round(sum(CAST(value AS DECIMAL(27,6)))::DOUBLE / count(value), 4) AS mean_value
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
-ORACLES["point_in_region"] = """
-WITH pts AS (
-  SELECT c_custkey, c_acctbal,
-         (c_custkey * 7919 % 160) - 80 + 0.5 AS lat,
-         (c_custkey * 104729 % 360) - 180 + 0.5 AS lon
-  FROM customer
-), boxes AS (
-  SELECT n_name,
-         (n_nationkey * 7 % 32) * 5 - 80 AS lat_min,
-         (n_nationkey * 7 % 32) * 5 - 80 + 40 AS lat_max,
-         (n_nationkey * 11 % 60) * 6 - 180 AS lon_min,
-         (n_nationkey * 11 % 60) * 6 - 180 + 72 AS lon_max
-  FROM nation
-)
-SELECT n_name,
-       count(*) AS n_points,
-       -- dec_avg_exact mirror: half-away-from-zero in exact integers,
-       -- no double round (the sf0.001 half-ulp tie fix, round 9)
-       ((CASE WHEN CAST(sum(CAST(c_acctbal AS DECIMAL(27,6)) * 1000000)
-                   AS HUGEINT) < 0 THEN -1 ELSE 1 END)
-        * ((2 * abs(CAST(sum(CAST(c_acctbal AS DECIMAL(27,6)) * 1000000)
-                         AS HUGEINT)) + 100 * count(c_acctbal))
-           // (200 * count(c_acctbal))))::DOUBLE / 10000.0 AS avg_bal
-FROM pts JOIN boxes
-  ON lat >= lat_min AND lat < lat_max AND lon >= lon_min AND lon < lon_max
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
-ORACLES["supply_ts_assembly"] = """
-WITH ts AS (
-  SELECT date_trunc('day', ts) AS d, event_type AS tech, user_id % 5 AS rk,
-         round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS ts_val
-  FROM events GROUP BY 1, 2, 3
-),
-share AS (
-  SELECT n_name, n_regionkey AS rk,
-         (n_nationkey % 7 + 1)::DOUBLE /
-         (sum(n_nationkey % 7 + 1) OVER (PARTITION BY n_regionkey))::DOUBLE
-           AS cap_share
-  FROM nation
-),
-bounds AS (
-  SELECT date_trunc('day', min(ts)) AS dmin,
-         date_trunc('day', max(ts)) AS dmax
-  FROM events
-),
-days AS (
-  SELECT unnest(generate_series(dmin, dmax, INTERVAL 1 day)) AS d FROM bounds
-),
-techs AS (SELECT DISTINCT event_type AS tech FROM events),
-grid AS (
-  SELECT d, tech, n_name, rk, cap_share
-  FROM days CROSS JOIN techs CROSS JOIN share
-)
-SELECT strftime(g.d, '%Y-%m-%d') AS day, g.tech AS tech, g.n_name,
-       coalesce(ts_val * cap_share, 0)::DOUBLE AS supply
-FROM grid g
-LEFT JOIN ts ON ts.d = g.d AND ts.tech = g.tech AND ts.rk = g.rk
-ORDER BY day, g.tech, g.n_name
-"""
-
-ORACLES["region_overlap_disaggregate"] = """
-WITH sub AS (
-  SELECT n_name AS name,
-         (n_nationkey * 7 % 32) * 5 - 80 AS lat_min,
-         (n_nationkey * 7 % 32) * 5 - 80 + 40 AS lat_max,
-         (n_nationkey * 11 % 60) * 6 - 180 AS lon_min,
-         (n_nationkey * 11 % 60) * 6 - 180 + 72 AS lon_max
-  FROM nation
-),
-country AS (
-  SELECT r_regionkey AS rkey, r_name AS name,
-         (r_regionkey * 13 % 8) * 20 - 80 AS lat_min,
-         (r_regionkey * 13 % 8) * 20 - 80 + 60 AS lat_max,
-         (r_regionkey * 17 % 10) * 36 - 180 AS lon_min,
-         (r_regionkey * 17 % 10) * 36 - 180 + 108 AS lon_max
-  FROM region
-),
-pieces AS (
-  SELECT s.name || '_' || c.name AS piece,
-         s.name AS subregion, c.name AS country, c.rkey,
-         (least(s.lat_max, c.lat_max) - greatest(s.lat_min, c.lat_min)) *
-         (least(s.lon_max, c.lon_max) - greatest(s.lon_min, c.lon_min)) AS area,
-         CAST(round((least(s.lon_max, c.lon_max)
-                     - greatest(s.lon_min, c.lon_min))
-                    * (sin(radians(least(s.lat_max, c.lat_max)))
-                       - sin(radians(greatest(s.lat_min, c.lat_min))))
-                    * 1000000) AS BIGINT) AS area_ea
-  FROM sub s JOIN country c
-    ON s.lat_min < c.lat_max AND c.lat_min < s.lat_max
-   AND s.lon_min < c.lon_max AND c.lon_min < s.lon_max
-),
-totals AS (
-  SELECT n_regionkey AS rkey,
-         sum(CAST(o_totalprice AS DECIMAL(27,6)))::DOUBLE AS region_total
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation   ON c_nationkey = n_nationkey
-  GROUP BY 1
-),
-shared AS (
-  SELECT piece, subregion, country, area, area_ea, region_total,
-         area_ea::DOUBLE / (sum(area_ea) OVER (PARTITION BY p.rkey))::DOUBLE
-           AS share_raw
-  FROM pieces p JOIN totals USING (rkey)
-)
-SELECT piece, subregion, country, area, area_ea,
-       round(share_raw, 6) AS share,
-       round(region_total * share_raw, 4) AS allocated
-FROM shared
-ORDER BY piece
-"""
-
-ORACLES["grid_upsample"] = """
-WITH pix AS (
-  SELECT (s.k // 90) AS i, (s.k % 90) AS j,
-         ((s.k // 90) * 7 + (s.k % 90) * 13) % 100 AS val
-  FROM generate_series(0, 3599) s(k)
-)
-SELECT i * 4 + a AS row_idx, j * 4 + b AS col_idx, val
-FROM pix
-CROSS JOIN generate_series(0, 3) t(a)
-CROSS JOIN generate_series(0, 3) u(b)
-ORDER BY row_idx, col_idx
-"""
-
-
-def _capped_round(prev: str, nxt: str) -> str:
-    """One unrolled water-filling round (mirrors operators/allocate.py)."""
-    return f"""
-{nxt} AS (
-  SELECT c_custkey, c_nationkey, w, cap, total,
-         alloc + CASE WHEN cap - alloc > 1e-09 AND sumw > 0 AND rem > 1e-09
-                      THEN least(rem * w / sumw, cap - alloc)
-                      ELSE 0.0 END AS alloc
-  FROM (
-    SELECT *,
-           (sum(CASE WHEN cap - alloc > 1e-09 THEN w ELSE 0 END)
-              OVER (PARTITION BY c_nationkey))::DOUBLE AS sumw,
-           total - (sum(CAST(alloc AS DECIMAL(27,6)))
-              OVER (PARTITION BY c_nationkey))::DOUBLE AS rem
-    FROM {prev}
-  ) t
-)"""
-
-
-_CAPPED_ROUNDS = ",".join(
-    _capped_round(f"r{i}", f"r{i + 1}") for i in range(4)
-)
-
-ORACLES["capped_distribution"] = f"""
-WITH sites AS (
-  SELECT c_custkey, c_nationkey,
-         c_custkey % 19 + 1 AS w,
-         c_custkey % 50 + 10 AS cap
-  FROM customer
-),
-tot AS (
-  SELECT c_nationkey, sum(cap)::DOUBLE * 0.6::DOUBLE AS total
-  FROM sites GROUP BY 1
-),
-r0 AS (
-  SELECT s.c_custkey, s.c_nationkey, s.w, s.cap, t.total, 0.0::DOUBLE AS alloc
-  FROM sites s JOIN tot t USING (c_nationkey)
-),{_CAPPED_ROUNDS}
-SELECT c_custkey, c_nationkey, w, cap, round(alloc, 4) AS alloc
-FROM r4
-ORDER BY c_custkey
-"""
-
-
-ORACLES["purchase_click_attribution"] = """
-SELECT p.event_id AS purchase_id, p.user_id,
-       strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS p_ts,
-       strftime(c.ts, '%Y-%m-%d %H:%M:%S.%f') AS c_ts,
-       round(c.value, 2) AS click_value
-FROM events p
-JOIN events c
-  ON p.user_id = c.user_id
- AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
-WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-ORDER BY purchase_id, c_ts
-"""
-
-ORACLES["salted_skew_join"] = """
-WITH fact AS (
-  SELECT o_orderkey, o_totalprice,
-         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM') THEN 0
-              ELSE substring(o_orderpriority, 1, 1)::INT END AS hot_key
-  FROM orders
-),
-dim AS (
-  SELECT * FROM (VALUES (0, 'compressed'), (4, 'deferred'), (5, 'background'))
-    d(hot_key, tier)
-)
-SELECT hot_key, tier, count(*) AS n_orders,
-       round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
-FROM fact JOIN dim USING (hot_key)
-GROUP BY 1, 2 ORDER BY 1
-"""
-
-# Bloom pre-filter must not change the anti-join result.
-ORACLES["incremental_new_docs_bloom"] = ORACLES["incremental_new_docs"]
-
-# The bucketed interval join must equal the plain range join.
-ORACLES["incident_window_join"] = """
-WITH incidents AS (
-  SELECT event_id AS incident_id, ts AS w_start,
-         ts + INTERVAL 10 MINUTE AS w_end
-  FROM events WHERE event_type = 'error' AND value > 195
-)
-SELECT incident_id, count(*) AS n_events,
-       count(DISTINCT e.user_id) AS n_users,
-       round(sum(CAST(e.value AS DECIMAL(27,6))), 2)::DOUBLE AS sum_value
-FROM incidents i JOIN events e ON e.ts >= i.w_start AND e.ts < i.w_end
-GROUP BY 1 ORDER BY 1
-"""
-
-ORACLES["time_weighted_avg"] = """
-WITH spans AS (
-  SELECT user_id, value,
-         lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           - epoch_us(ts) AS dwell
-  FROM events
-)
-SELECT user_id, count(*) AS n_spans,
-       round(sum(CAST(value * dwell AS DECIMAL(27,6)))::DOUBLE
-             / sum(dwell)::DOUBLE, 6) AS twa_value
-FROM spans WHERE dwell IS NOT NULL
-GROUP BY user_id ORDER BY user_id
-"""
-
-ORACLES["scd2_snapshot"] = """
-WITH runs AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-),
-starts AS (
-  SELECT user_id, event_type, ts, event_id FROM runs
-  WHERE prev IS NULL OR prev <> event_type
-)
-SELECT user_id, event_type,
-       row_number() OVER w AS version,
-       strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-       coalesce(strftime(lead(ts) OVER w, '%Y-%m-%d %H:%M:%S.%f'),
-                '9999-12-31 00:00:00.000000') AS valid_to
-FROM starts
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-ORDER BY user_id, version
-"""
-
-from pyprima_spark.functions.text import tokens_duck as _tokens_duck
-
-ORACLES["tfidf_top_terms"] = f"""
-WITH toks AS (
-  SELECT doc_id, source, unnest({_tokens_duck('text')}) AS term FROM documents
-),
-tf AS (SELECT source, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-scored AS (
-  SELECT source, term, tf, df,
-         round(tf * ln((SELECT count(*) FROM documents)::DOUBLE / df), 4) AS tfidf
-  FROM tf JOIN df USING (term)
-)
-SELECT source,
-       row_number() OVER (PARTITION BY source ORDER BY tfidf DESC, term) AS rnk,
-       term, tf, df, tfidf
-FROM scored
-QUALIFY rnk <= 5
-ORDER BY source, rnk
-"""
-
-
-ORACLES["region_mask_raster"] = """
-WITH pop AS (
-  SELECT n_regionkey, count(*) AS pop
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY 1
-),
-boxes AS (
-  SELECT r_regionkey, pop,
-         (r_regionkey * 37) % 120 AS la0,
-         (r_regionkey * 53) % 288 AS lo0
-  FROM region JOIN pop ON r_regionkey = n_regionkey
-),
-cells AS (
-  SELECT pop, la.latidx, lo.lonidx
-  FROM boxes,
-       unnest(generate_series(la0, la0 + 39)) la(latidx),
-       unnest(generate_series(lo0, lo0 + 71)) lo(lonidx)
-)
-SELECT latidx, lonidx, count(*) AS n_regions,
-       round(sum(CAST(pop / 2880.0::DOUBLE AS DECIMAL(27,6))), 6)::DOUBLE AS pop_alloc
-FROM cells GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-ORACLES["funnel_conversion"] = """
-WITH staged AS (
-  SELECT user_id, ts, event_type,
-    min(CASE WHEN event_type = 'signup' THEN ts END)
-      OVER (PARTITION BY user_id) AS t1
-  FROM events
-),
-staged2 AS (
-  SELECT *,
-    min(CASE WHEN event_type = 'click' AND ts >= t1 THEN ts END)
-      OVER (PARTITION BY user_id) AS t2
-  FROM staged
-),
-staged3 AS (
-  SELECT *,
-    min(CASE WHEN event_type = 'purchase' AND ts >= t2 THEN ts END)
-      OVER (PARTITION BY user_id) AS t3
-  FROM staged2
-),
-users AS (
-  SELECT user_id, min(t1) AS t1, min(t2) AS t2, min(t3) AS t3
-  FROM staged3 GROUP BY user_id
-)
-SELECT strftime(t1, '%Y-%m-%d') AS signup_date,
-       count(*) AS n_signed_up,
-       count(t2) AS n_clicked,
-       count(t3) AS n_purchased
-FROM users WHERE t1 IS NOT NULL
-GROUP BY 1 ORDER BY 1
-"""
-
-ORACLES["retention_cohorts"] = """
-WITH d AS (
-  SELECT user_id, cast(ts AS DATE) AS day,
-         min(cast(ts AS DATE)) OVER (PARTITION BY user_id) AS cohort_day
-  FROM events
-)
-SELECT strftime(cohort_day, '%Y-%m-%d') AS cohort_day,
-       day - cohort_day AS offset_days,
-       count(DISTINCT user_id) AS n_active
-FROM d WHERE day - cohort_day <= 7
-GROUP BY cohort_day, day - cohort_day
-ORDER BY 1, 2
-"""
-
-ORACLES["token_entropy"] = f"""
-WITH terms AS (
-  SELECT source, unnest({_tokens_duck('text')}) AS term FROM documents
-),
-tf AS (SELECT source, term, count(*) AS tf FROM terms GROUP BY 1, 2),
-probs AS (
-  SELECT source, tf / sum(tf) OVER (PARTITION BY source) AS p FROM tf
-)
-SELECT source, count(*) AS n_terms,
-       round(-sum(CAST(p * ln(p) AS DECIMAL(18,12)))::DOUBLE, 4) AS entropy
-FROM probs GROUP BY source ORDER BY source
-"""
-
-ORACLES["price_histogram"] = """
-SELECT cast(floor(l_extendedprice / 5000.0::DOUBLE) AS INT) AS bucket,
-       cast(floor(l_extendedprice / 5000.0::DOUBLE) AS INT) * 5000.0::DOUBLE AS lo,
-       count(*) AS n,
-       round(sum(CAST(l_extendedprice AS DECIMAL(27,6))), 2)::DOUBLE AS sum_price
-FROM lineitem
-GROUP BY 1 ORDER BY 1
-"""
-
-# Both medians are exact interpolated percentiles — DuckDB median() and
-# Spark percentile(…, 0.5) share the same definition on doubles, and
-# the inner median's double is bit-identical input to the outer one.
-ORACLES["outlier_mad"] = """
-WITH w1 AS (
-  SELECT event_type, value,
-         median(value) OVER (PARTITION BY event_type) AS m
-  FROM events
-),
-w2 AS (
-  SELECT event_type, value, m,
-         median(abs(value - m)) OVER (PARTITION BY event_type) AS mad
-  FROM w1
-)
-SELECT event_type, count(*) AS n,
-       count(CASE WHEN abs(value - m) > 3 * mad THEN 1 END) AS n_outliers,
-       round(min(m), 4) AS median_value,
-       round(min(mad), 4) AS mad
-FROM w2 GROUP BY event_type ORDER BY event_type
-"""
-
-
-# Curation funnel: quality gate -> exact dedup -> minhash-cluster dedup.
-# The quality CTE mirrors ORACLES["quality_score"]'s expressions
-# verbatim (bit-identical rational arithmetic); the gate compares the
-# RAW score — rounding first could hit exact-.5 dyadic ties where the
-# engines' rounding modes differ. All outputs are integer counts.
-# Parameterized over the docs relation so the round-9 pipeline oracle
-# (corpus_pipeline_manifest) can run the IDENTICAL funnel over the
-# WARC-remapped document ids; `documents` here reproduces the original
-# corpus_curation CTE chain verbatim (perdoc additionally exposes
-# doc_id for the pipeline oracle's id checksum).
-
-
-def curation_funnel_ctes(docs_rel: str) -> str:
-    """The full curation-funnel CTE chain (quality gate → exact dedup →
-    minhash-cluster dedup) ending at ``perdoc``; callers append their
-    own final SELECT."""
-    return f"""WITH RECURSIVE qd AS (
-  SELECT
-    doc_id, source, text,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM {docs_rel})
-),
-ratios AS (
-  SELECT doc_id, source, text, n_tok,
-    CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END AS stop_ratio,
-    CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END AS punct_ratio,
-    CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END AS mean_wl
-  FROM qd
-),
-flagged AS (
-  SELECT doc_id, source, text, n_tok,
-    (2.0 * stop_ratio - 3.0 * punct_ratio + least(n_tok, 100) / 100.0
-     - abs(mean_wl - 5.0) / 10.0) > 0.35::DOUBLE AS passq,
-    md5(text) AS h
-  FROM ratios
-),
-flag2 AS (
-  SELECT *,
-    passq AND doc_id = min(CASE WHEN passq THEN doc_id END)
-                         OVER (PARTITION BY h) AS keptx
-  FROM flagged
-),
-kept2 AS (SELECT doc_id, text FROM flag2 WHERE keptx),
-{_minhash_bands_cte('kept2')},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-cedges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT DISTINCT a, a FROM cedges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
-),
-clusters AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-perdoc AS (
-  SELECT f.doc_id, f.source, f.passq, f.keptx, f.n_tok,
-         f.keptx AND (c.component IS NULL OR f.doc_id = c.component) AS keptn
-  FROM flag2 f LEFT JOIN clusters c ON f.doc_id = c.node
-)"""
-
-
-ORACLES["corpus_curation"] = f"""
-{curation_funnel_ctes('documents')}
-SELECT source,
-  count(*) AS n_raw,
-  count(CASE WHEN passq THEN 1 END) AS n_quality,
-  count(CASE WHEN keptx THEN 1 END) AS n_exact,
-  count(CASE WHEN keptn THEN 1 END) AS n_final,
-  cast(coalesce(sum(CASE WHEN keptn THEN n_tok END), 0) AS BIGINT) AS tokens_final
-FROM perdoc GROUP BY source ORDER BY source
-"""
-
-
-def _pr_round(prev: str, nxt: str) -> str:
-    """One unrolled synchronous PageRank round (mirror of
-    operators/graph.py: decimal contribution sum, double update).
-    Float literals are ::DOUBLE so DuckDB does not read them as
-    DECIMAL; `base` is injected as the exact repr of the Python double
-    Spark uses, so both engines start from identical bits."""
-    base = repr((1.0 - 0.85) / 25.0)
-    return f"""{nxt} AS (
-  SELECT n.node,
-         {base}::DOUBLE + 0.85::DOUBLE * coalesce(s.csum, 0)::DOUBLE AS rank
-  FROM pr_nodes n LEFT JOIN (
-    SELECT d.dst AS node,
-           sum(CAST(r.rank / g.outdeg AS DECIMAL(18,12))) AS csum
-    FROM pr_dir d
-    JOIN {prev} r ON d.src = r.node
-    JOIN pr_deg g ON d.src = g.src
-    GROUP BY 1
-  ) s ON n.node = s.node
-)"""
-
-
-_PR_ROUNDS = ",\n".join(_pr_round(f"pr_r{i}", f"pr_r{i + 1}") for i in range(3))
-
-# 25 nations all trade cross-nation, so the symmetric graph has all 25
-# nodes and 1/N = 1/25 (asserted by the Spark side's nodes.count()).
-ORACLES["pagerank_nations"] = f"""
-WITH {_EDGE_AGG_CTE},
-pr_dir AS MATERIALIZED (
-  SELECT edge_a AS src, edge_b AS dst FROM edges
-  UNION ALL
-  SELECT edge_b AS src, edge_a AS dst FROM edges
-),
-pr_deg AS MATERIALIZED (
-  SELECT src, count(*) AS outdeg FROM pr_dir GROUP BY 1
-),
-pr_nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM pr_dir),
-pr_r0 AS (SELECT node, {repr(1.0 / 25.0)}::DOUBLE AS rank FROM pr_nodes),
-{_PR_ROUNDS}
-SELECT node AS nationkey, round(rank, 8) AS rank
-FROM pr_r3 ORDER BY nationkey
-"""
-
-# Same semantics as point_in_region — the grid variant must produce the
-# identical result through the cell-bucketed candidate join.
-ORACLES["point_in_region_grid"] = ORACLES["point_in_region"]
-
-from pyprima_spark.plans.tpch_extra import EXTRA_ORACLES as _EXTRA_ORACLES
-
-ORACLES.update(_EXTRA_ORACLES)
-
-from pyprima_spark.plans.round3 import ROUND3_ORACLES as _ROUND3_ORACLES
-
-ORACLES.update(_ROUND3_ORACLES)
-
-from pyprima_spark.plans.round4 import ROUND4_ORACLES as _ROUND4_ORACLES
-
-ORACLES.update(_ROUND4_ORACLES)
-
-# Round-4 late key whose oracle reuses the shared minhash band CTE (the
-# round4 module cannot import this one without a cycle).
-ORACLES["incremental_minhash_index"] = f"""
-WITH {_MINHASH_BANDS_CTE},
-flagged AS (
-  SELECT DISTINCT i.doc
-  FROM bands i JOIN bands s
-    ON i.band_idx = s.band_idx AND i.band_sig = s.band_sig
-  WHERE i.doc % 5 >= 3 AND s.doc % 5 < 3
-)
-SELECT source,
-       count(*) AS n_incoming,
-       CAST(sum(CASE WHEN flagged.doc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_neardup,
-       CAST(sum(CASE WHEN flagged.doc IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_clean
-FROM documents LEFT JOIN flagged ON documents.doc_id = flagged.doc
-WHERE doc_id % 5 >= 3
-GROUP BY source ORDER BY source
-"""
-
-from pyprima_spark.plans.round5 import ROUND5_ORACLES as _ROUND5_ORACLES
-
-ORACLES.update(_ROUND5_ORACLES)
-
-from pyprima_spark.plans.round6 import ROUND6_ORACLES as _ROUND6_ORACLES
-
-ORACLES.update(_ROUND6_ORACLES)
-
-# Round-5 key whose oracle reuses the shared minhash band CTE and the
-# quality-score expressions (the round5 module cannot import this one
-# without a cycle).
-ORACLES["cluster_representatives"] = f"""
-WITH RECURSIVE {_MINHASH_BANDS_CTE},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-cedges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT DISTINCT a, a FROM cedges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
-),
-clusters AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-qd AS (
-  SELECT
-    doc_id,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, text, {X.tokens_duck('text')} AS tokens FROM documents)
-),
-scored AS (
-  -- exact integer-rational score over D = 100*n_tok*n_ch (the double
-  -- chain's round(..,4) straddles decimal boundaries differently per
-  -- engine; one NUM/D division is bit-identical everywhere)
-  SELECT doc_id,
-    CAST(2 * stop_cnt * 100 * n_ch
-         - 3 * punct_cnt * 100 * n_tok
-         + least(n_tok, 100) * n_tok * n_ch
-         - 10 * abs(word_chars - 5 * n_tok) * n_ch AS BIGINT) AS num,
-    CAST(100 * n_tok * n_ch AS BIGINT) AS den
-  FROM qd
-),
-members AS (
-  SELECT c.cluster_id, c.node AS doc_id, s.num, s.den,
-         count(*) OVER (PARTITION BY c.cluster_id) AS n_members,
-         row_number() OVER (PARTITION BY c.cluster_id
-                            ORDER BY s.num / s.den DESC, c.node ASC) AS rn
-  FROM clusters c JOIN scored s ON s.doc_id = c.node
-)
-SELECT cluster_id, doc_id AS rep_doc_id, n_members,
-       ((20000 * num + CASE WHEN num >= 0 THEN den ELSE -den END)
-        // (2 * den)) / 10000.0 AS rep_score
-FROM members WHERE rn = 1
-ORDER BY cluster_id
-"""
-
-# Round-5 key sharing the minhash band CTE (cycle rule as above).
-_SPLIT_EXPR = (
-    "CASE WHEN "
-    + X.hash64_duck("cast(doc_id as varchar) || ':split'")
-    + " % 100 < 80 THEN 'train' WHEN "
-    + X.hash64_duck("cast(doc_id as varchar) || ':split'")
-    + " % 100 < 90 THEN 'val' ELSE 'test' END"
-)
-
-ORACLES["holdout_contamination"] = f"""
-WITH {_MINHASH_BANDS_CTE},
-split AS (
-  SELECT doc_id, source, {_SPLIT_EXPR} AS split FROM documents
-),
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-sided AS (
-  SELECT p.doc_a, p.doc_b, sa.split AS split_a, sb.split AS split_b
-  FROM pairs p
-  JOIN split sa ON sa.doc_id = p.doc_a
-  JOIN split sb ON sb.doc_id = p.doc_b
-),
-contaminated AS (
-  SELECT DISTINCT doc_id FROM (
-    SELECT doc_b AS doc_id FROM sided
-    WHERE split_a = 'train' AND split_b <> 'train'
-    UNION ALL
-    SELECT doc_a FROM sided
-    WHERE split_b = 'train' AND split_a <> 'train'
-  )
-)
-SELECT s.source,
-       count(*) AS n_eval_docs,
-       CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_contaminated,
-       CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END) * 10000
-            // count(*) AS INT) AS contaminated_bp
-FROM split s LEFT JOIN contaminated c ON c.doc_id = s.doc_id
-WHERE s.split <> 'train'
-GROUP BY s.source
-ORDER BY s.source
-"""
-
-# Round-5 key composing the two ANN oracle queries (cycle rule again:
-# round5 cannot import this module).
-from pyprima_spark.plans.constants import ANN_K as _ANN_K  # noqa: E402
-
-ORACLES["ann_recall_eval"] = f"""
-WITH exact AS ({ORACLES['ann_topk']}),
-approx AS ({ORACLES['ann_lsh']})
-SELECT e.query_id, count(*) AS k,
-       CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000
-            // {_ANN_K} AS INT) AS recall_bp
-FROM exact e LEFT JOIN approx a
-  ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-GROUP BY e.query_id
-ORDER BY e.query_id
-"""
-
-# Round-5 key sharing the minhash band CTE (cycle rule as above); the
-# shingle CTE mirrors minhash_band_table's distinct word-3-shingles.
-ORACLES["lsh_precision_eval"] = f"""
-WITH {_MINHASH_BANDS_CTE},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-sh AS (
-  SELECT doc, unnest(shingles) AS s FROM (
-    SELECT doc_id AS doc, {X.shingles_duck(X.tokens_duck('text'))} AS shingles
-    FROM documents
-    WHERE len({X.tokens_duck('text')}) >= 3
-  )
-),
-sizes AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-inter AS (
-  SELECT p.doc_a, p.doc_b, count(*) AS i
-  FROM pairs p
-  JOIN sh a ON a.doc = p.doc_a
-  JOIN sh b ON b.doc = p.doc_b AND b.s = a.s
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT coalesce(i.i, 0) AS i,
-         sa.sz + sb.sz - coalesce(i.i, 0) AS u
-  FROM pairs p
-  LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-  JOIN sizes sa ON sa.doc = p.doc_a
-  JOIN sizes sb ON sb.doc = p.doc_b
-)
-SELECT count(*) AS n_candidates,
-       CAST(sum(CASE WHEN i * 2 >= u THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_verified,
-       CAST(sum(CASE WHEN i * 2 >= u THEN 1 ELSE 0 END) * 10000 // count(*)
-            AS INT) AS precision_bp
-FROM verified
-"""
-
-# Round-5 capstone sharing the curation CTE chain + minhash bands
-# (cycle rule as above): curate -> hash split -> shard manifest.
-from pyprima_spark.plans.round5 import _PACK_BUDGET as _R5_PACK_BUDGET  # noqa: E402
-
-ORACLES["training_manifest"] = f"""
-WITH RECURSIVE qd AS (
-  SELECT
-    doc_id, source, text,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM documents)
-),
-ratios AS (
-  SELECT doc_id, source, text, n_tok,
-    CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END AS stop_ratio,
-    CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END AS punct_ratio,
-    CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END AS mean_wl
-  FROM qd
-),
-flagged AS (
-  SELECT doc_id, source, text, n_tok,
-    (2.0 * stop_ratio - 3.0 * punct_ratio + least(n_tok, 100) / 100.0
-     - abs(mean_wl - 5.0) / 10.0) > 0.35::DOUBLE AS passq,
-    md5(text) AS h
-  FROM ratios
-),
-flag2 AS (
-  SELECT *,
-    passq AND doc_id = min(CASE WHEN passq THEN doc_id END)
-                         OVER (PARTITION BY h) AS keptx
-  FROM flagged
-),
-kept2 AS (SELECT doc_id, text FROM flag2 WHERE keptx),
-{_minhash_bands_cte('kept2')},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-cedges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT DISTINCT a, a FROM cedges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
-),
-clusters AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-survivors AS (
-  SELECT f.doc_id, f.source, f.n_tok
-  FROM flag2 f LEFT JOIN clusters c ON f.doc_id = c.node
-  WHERE f.keptx AND (c.component IS NULL OR f.doc_id = c.component)
-),
-split AS (
-  SELECT CASE WHEN {X.hash64_duck("cast(doc_id as varchar) || ':split'")} % 100 < 80 THEN 'train'
-              WHEN {X.hash64_duck("cast(doc_id as varchar) || ':split'")} % 100 < 90 THEN 'val'
-              ELSE 'test' END AS split,
-         source, n_tok
-  FROM survivors
-)
-SELECT split, source, count(*) AS n_docs,
-       CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-       CAST((sum(n_tok) + {_R5_PACK_BUDGET} - 1) // {_R5_PACK_BUDGET} AS INT)
-         AS est_chunks
-FROM split
-GROUP BY split, source
-ORDER BY split, source
-"""
-
-# Round-5 key sharing the curation CTE chain (cycle rule as above).
-ORACLES["dedup_savings"] = f"""
-WITH RECURSIVE qd AS (
-  SELECT
-    doc_id, source, text,
-    len(tokens) AS n_tok,
-    length(text) AS n_ch,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
-    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
-    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
-  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM documents)
-),
-ratios AS (
-  SELECT doc_id, source, text, n_tok,
-    CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END AS stop_ratio,
-    CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END AS punct_ratio,
-    CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END AS mean_wl
-  FROM qd
-),
-flagged AS (
-  SELECT doc_id, source, text, n_tok,
-    (2.0 * stop_ratio - 3.0 * punct_ratio + least(n_tok, 100) / 100.0
-     - abs(mean_wl - 5.0) / 10.0) > 0.35::DOUBLE AS passq,
-    md5(text) AS h
-  FROM ratios
-),
-flag2 AS (
-  SELECT *,
-    passq AND doc_id = min(CASE WHEN passq THEN doc_id END)
-                         OVER (PARTITION BY h) AS keptx
-  FROM flagged
-),
-kept2 AS (SELECT doc_id, text FROM flag2 WHERE keptx),
-{_minhash_bands_cte('kept2')},
-pairs AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
-),
-cedges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT DISTINCT a, a FROM cedges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
-),
-clusters AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-sized AS (
-  SELECT f.source, f.passq, f.keptx,
-         f.keptx AND (c.component IS NULL OR f.doc_id = c.component) AS keptn,
-         d.n_chars
-  FROM flag2 f
-  LEFT JOIN clusters c ON f.doc_id = c.node
-  JOIN documents d ON d.doc_id = f.doc_id
-)
-SELECT source,
-  CAST(sum(n_chars) AS BIGINT) AS raw_chars,
-  CAST(coalesce(sum(CASE WHEN passq THEN n_chars END), 0) AS BIGINT)
-    AS quality_chars,
-  CAST(coalesce(sum(CASE WHEN keptx THEN n_chars END), 0) AS BIGINT)
-    AS exact_chars,
-  CAST(coalesce(sum(CASE WHEN keptn THEN n_chars END), 0) AS BIGINT)
-    AS final_chars,
-  CAST((sum(n_chars) - coalesce(sum(CASE WHEN keptn THEN n_chars END), 0))
-       * 10000 // sum(n_chars) AS INT) AS savings_bp
-FROM sized
-GROUP BY source
-ORDER BY source
-"""
-
-from pyprima_spark.plans.round7 import ROUND7_ORACLES as _ROUND7_ORACLES
-
-ORACLES.update(_ROUND7_ORACLES)
-
-from pyprima_spark.plans.round8 import ROUND8_ORACLES as _ROUND8_ORACLES
-
-ORACLES.update(_ROUND8_ORACLES)
-
-# Round-9 oracles. corpus_pipeline_manifest's is BUILT here (via
-# round9._pipeline_oracle -> curation_funnel_ctes above) because the
-# round9 module cannot import this one at module scope without a cycle
-# (the round4/round5 convention).
-from pyprima_spark.plans.round9 import ROUND9_ORACLES as _ROUND9_ORACLES
-from pyprima_spark.plans.round9 import _pipeline_oracle as _r9_pipeline_oracle
-
-ORACLES.update(_ROUND9_ORACLES)
-ORACLES["corpus_pipeline_manifest"] = _r9_pipeline_oracle()
+ORACLES: dict[str, str] = merge((m.__name__, m.ORACLES) for m in PLAN_MODULES)

@@ -1,2707 +1,59 @@
-"""Query catalog: one named entry per operator in SURVEY.md §2.
+"""The query catalog: one entry per operator in SURVEY.md §2.
 
-Each function takes ``(spark, sf_dir)`` and returns a DataFrame whose
-column names match the corresponding oracle SQL in
-:mod:`pyprima_spark.plans.oracles` exactly.
-
-All plans are declarative DataFrame compositions — Catalyst handles
-pushdown/pruning/join strategy; dimension tables are broadcast
-explicitly where the optimizer cannot know they stay small at 100 TB
-fact scale.
+Each plan module owns its keys: the plan functions in its ``QUERIES``
+and the DuckDB oracle SQL in its ``ORACLES`` (merged by
+:mod:`pyprima_spark.plans.oracles`). This module only merges them; no
+plan module imports it. A key defined in two modules is an error.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_tables
-from pyprima_spark.functions.agg import DEC, dec_avg, dec_avg_exact, dec_sum
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from pyprima_spark.catalog import load_table
-
-    return load_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# Core relational engine
-# ---------------------------------------------------------------------------
-
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 pricing summary — the flagship grouped aggregation.
-
-    Exercises scan→filter→project→partial/final agg. The filter and the
-    4-column projection push down to the parquet scan; the aggregate is
-    map-side partial then a 6-group shuffle (trivially skew-free).
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dec_sum("l_quantity").alias("sum_qty"),
-            dec_sum("l_extendedprice").alias("sum_base_price"),
-            dec_sum(disc_price).alias("sum_disc_price"),
-            dec_sum(disc_price * (1 + F.col("l_tax"))).alias("sum_charge"),
-            dec_avg("l_quantity").alias("avg_qty"),
-            dec_avg("l_extendedprice").alias("avg_price"),
-            dec_avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3: 3-way join + grouped agg + deterministic top-10."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1997-01-01"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-01-01"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            dec_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5: 6-way join with broadcast dims, region-filtered agg."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(
-            cust,
-            (orders.o_custkey == cust.c_custkey)
-            & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            dec_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cleaning / correction operators (SURVEY §2 #4-15)
-# ---------------------------------------------------------------------------
-
-
-def recode_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dict-recode nation names into merged countries, regroup.
-
-    Reference: clean_load_data_ENTSOE renames ENTSO-E country codes via
-    dict_countries then groups columns with the same new name
-    (correction_functions.py:298-313). Broadcast map join, no fact-side
-    shuffle until the final group.
-    """
-    from pyprima_spark.operators.recode import recode_column
-    from pyprima_spark.plans.constants import NATION_RECODE
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    recoded = recode_column(spark, nation, "n_name", NATION_RECODE, "country")
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(recoded), cust.c_nationkey == recoded.n_nationkey)
-        .groupBy("country")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("revenue"),
-        )
-        .orderBy("country")
-    )
-
-
-def shares_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group share-of-total normalization.
-
-    Reference: sector shares normalized by country total
-    (correction_functions.py:370-378). Window sum over the group key.
-    """
-    from pyprima_spark.operators.normalize import group_share
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    grouped = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment", "o_orderpriority")
-        .agg(F.sum("o_totalprice").alias("__val"))
-    )
-    return group_share(grouped, ["c_mktsegment"], "__val", "share").select(
-        "c_mktsegment", "o_orderpriority", "share"
-    )
-
-
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-
-
-def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long→wide pivot of revenue per (segment, priority).
-
-    Reference: sector shares pivoted Country×Sector
-    (correction_functions.py:381). Explicit pivot values keep the plan
-    single-pass (no value-discovery job).
-    """
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    piv = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .pivot("o_orderpriority", PRIORITIES)
-        .agg(F.sum(F.col("o_totalprice").cast(DEC)))
-    )
-    cols = [F.col("c_mktsegment")]
-    for p in PRIORITIES:
-        alias = "prio_" + p.split("-")[0]
-        cols.append(F.round(F.coalesce(F.col(f"`{p}`"), F.lit(0.0)), 2).alias(alias))
-    return piv.select(*cols).orderBy("c_mktsegment")
-
-
-def unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide→long unpivot (melt) of lineitem measures, then aggregate.
-
-    Reference: evrys suplm stacks the wide TS matrix into
-    (t, sit, co, value) rows (generate_models.py:349-368).
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    long = li.unpivot(
-        ["l_returnflag"],
-        ["l_quantity", "l_extendedprice", "l_discount"],
-        "metric",
-        "val",
-    )
-    return (
-        long.groupBy("l_returnflag", "metric")
-        .agg(dec_sum("val").alias("total"))
-        .orderBy("l_returnflag", "metric")
-    )
-
-
-def expand_multivalue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split multi-token cells and explode one row per token.
-
-    Reference: expand_dataframe on GridKit voltage/wires/cables cells
-    (util.py:158-203). split+explode is a narrow op — no shuffle.
-    """
-    from pyprima_spark.operators.expand import expand_multivalue as expand
-
-    part = _t(spark, sf_dir, "part")
-    words = expand(part, "p_name", " ", "word")
-    return (
-        words.groupBy("word")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            dec_avg("p_size").alias("avg_size"),
-        )
-        .orderBy("word")
-    )
-
-
-def dedup_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumcount-suffix name dedup (first occurrence unsuffixed).
-
-    Reference: correction_functions.py:474.
-    """
-    from pyprima_spark.operators.dedup_names import dedup_names as dd
-
-    part = _t(spark, sf_dir, "part")
-    return dd(part, "p_brand", "p_partkey").select(
-        "p_partkey", "p_brand", "name_dedup"
-    )
-
-
-def interval_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classify a continuous column into labelled ranges.
-
-    Reference: assign_values_based_on_series (util.py:228-252) mapping
-    voltage/length to discrete classes. Chained CASE, fully codegen'd.
-    """
-    from pyprima_spark.functions.binning import interval_bin
-    from pyprima_spark.plans.constants import SIZE_BINS, SIZE_DEFAULT
-
-    part = _t(spark, sf_dir, "part")
-    return (
-        part.withColumn(
-            "size_class", interval_bin(F.col("p_size"), SIZE_BINS, SIZE_DEFAULT)
-        )
-        .groupBy("size_class")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dec_avg("p_retailprice").alias("avg_price"),
-        )
-        .orderBy("size_class")
-    )
-
-
-def mode_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill missing values with the per-column mode.
-
-    Reference: GridKit fills NaN voltage/wires/cables/frequency with
-    value_counts().index[0] (correction_functions.py:617-623). Rows with
-    event_type='error' play the role of missing entries.
-    """
-    from pyprima_spark.operators.impute import mode_impute as mi
-
-    ev = _t(spark, sf_dir, "events")
-    k = F.regexp_extract("props", r"(\d+)", 1).cast("int")
-    ev = ev.withColumn("__k", k)
-    missing = F.col("event_type") == "error"
-    filled = mi(ev, F.col("__k"), missing, "k_filled")
-    return (
-        filled.groupBy("k_filled")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("k_filled")
-    )
-
-
-def ffill_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward-fill nulls in an ordered sequence per key.
-
-    Reference: IRENA summary forward-fills country/technology from the
-    previous row (correction_functions.py:704-708). Orders with status
-    'P' play the role of missing entries.
-    """
-    from pyprima_spark.operators.gapfill import forward_fill
-
-    orders = _t(spark, sf_dir, "orders")
-    withnull = orders.withColumn(
-        "__prio",
-        F.when(F.col("o_orderstatus") == "P", F.lit(None)).otherwise(
-            F.col("o_orderpriority")
-        ),
-    )
-    filled = forward_fill(
-        withnull, "__prio", ["o_custkey"], ["o_orderdate", "o_orderkey"], "filled_priority"
-    )
-    return filled.select(
-        "o_orderkey",
-        "o_custkey",
-        F.coalesce("filled_priority", F.lit("NONE")).alias("filled_priority"),
-    )
-
-
-def gap_fill_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trend-adjusted previous-day gap fill on a dense hourly grid.
-
-    Reference: ENTSO-E load fills zero hours from the previous day,
-    scaled by the last-5-hour trend (correction_functions.py:315-318).
-    The dense grid (hour × series) is built with sequence+explode; the
-    fill is three window frames per series — state bounded per key.
-    """
-    from pyprima_spark.operators.gapfill import trend_fill_day_before
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "h", F.date_trunc("hour", F.col("ts"))
-    )
-    bounds = ev.agg(F.min("h").alias("hmin"), F.max("h").alias("hmax"))
-    hours = bounds.select(
-        F.explode(F.expr("sequence(hmin, hmax, interval 1 hour)")).alias("h")
-    )
-    types = ev.select("event_type").distinct()
-    sums = ev.groupBy("h", "event_type").agg(dec_sum("value").alias("v"))
-    dense = (
-        hours.crossJoin(F.broadcast(types))
-        .join(sums, ["h", "event_type"], "left")
-        .withColumn("v", F.coalesce(F.col("v"), F.lit(0.0)))
-    )
-    filled = trend_fill_day_before(dense, "v", ["event_type"], "h")
-    return filled.select(
-        F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("h"),
-        "event_type",
-        "filled",
-    )
-
-
-def clean_names_ascii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strip non-ASCII chars and truncate to 63 — clean_names
-    (correction_functions.py:809-822) over document text.
-    """
-    from pyprima_spark.functions.strings import clean_name
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        clean_name(F.col("text")).alias("name_clean"),
-        F.length(clean_name(F.col("text"))).alias("n_ascii"),
-    )
-
-
-def flh_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot indicator rows to columns and compute their ratio (FLH).
-
-    Reference: IRENA 'Electricity capacity' / 'Electricity generation'
-    indicators pivoted per (country, technology), FLH = gen / cap
-    (correction_functions.py:717-743). Conditional aggregation — one
-    pass, no join of the table with itself.
-    """
-    ev = _t(spark, sf_dir, "events")
-    cap = F.sum(F.when(F.col("event_type") == "purchase", F.col("value")))
-    gen = F.count(F.when(F.col("event_type") == "view", F.lit(1)))
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.round(F.coalesce(cap, F.lit(0.0)), 2).alias("purchase_value"),
-            gen.alias("view_count"),
-        )
-        .withColumn(
-            "flh",
-            F.when(F.col("purchase_value") == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("view_count") / F.col("purchase_value"), 4)
-            ),
-        )
-        .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Intermediate-generation operators (SURVEY §2 #16-18)
-# ---------------------------------------------------------------------------
-
-
-def calendar_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Enrich dates with season + daytype dictionaries, aggregate.
-
-    Reference: dict_season / dict_daytype enrichment of the 365-day
-    frame (correction_functions.py:29-32).
-    """
-    from pyprima_spark.functions.calendar import daytype, season
-
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.withColumn("season", season(F.col("o_orderdate")))
-        .withColumn("daytype", daytype(F.col("o_orderdate")))
-        .groupBy("season", "daytype")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("revenue"),
-        )
-        .orderBy("season", "daytype")
-    )
-
-
-def profile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalize each series so its values sum to 1 per entity.
-
-    Reference: load profiles normalized to integral 1
-    (correction_functions.py:46-47), per sector. Here per user.
-    """
-    from pyprima_spark.operators.normalize import group_share
-
-    ev = _t(spark, sf_dir, "events")
-    return group_share(ev, ["user_id"], "value", "share").select(
-        "event_id", "user_id", "share"
-    )
-
-
-def resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """15-min → hourly-style resample: truncate + aggregate.
-
-    Reference: correction_functions.py:133-139 (commercial profile
-    15-min → hourly groupby).
-    """
-    from pyprima_spark.operators.resample import resample
-
-    ev = _t(spark, sf_dir, "events")
-    out = resample(
-        ev,
-        "ts",
-        "hour",
-        ["event_type"],
-        [
-            F.count(F.lit(1)).alias("n"),
-            dec_sum("value").alias("total"),
-        ],
-        bucket_col="h",
-    )
-    return out.select(
-        F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("h"),
-        "event_type",
-        "n",
-        "total",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Intermediate-generation operators (SURVEY §2 #19-25)
-# ---------------------------------------------------------------------------
-
-
-def weighted_disaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Allocate group totals to members by weight, re-aggregate elsewhere.
-
-    Reference: generate_load_timeseries splits country loads onto
-    pixels by land-use/population weights, then re-aggregates pixel
-    loads into subregions (generate_intermediate_files.py:204-397).
-    Here: nation order revenue → customers by |acctbal| → market segment.
-    """
-    from pyprima_spark.operators.disaggregate import disaggregate
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    totals = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_nationkey")
-        .agg(F.sum("o_totalprice").alias("nation_total"))
-    )
-    alloc = disaggregate(
-        cust, totals, ["c_nationkey"], F.abs(F.col("c_acctbal")), "nation_total"
-    )
-    return (
-        alloc.groupBy("c_mktsegment")
-        .agg(dec_sum("allocated").alias("alloc_revenue"))
-        .orderBy("c_mktsegment")
-    )
-
-
-def _edge_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical undirected nation-pair aggregate of lineitem revenue.
-
-    Shared by canonical_edges / neighbor_expansion / transmission_attrs —
-    the analogue of the cleaned+grouped GridKit line table.
-    """
-    from pyprima_spark.operators.edges import canonicalize_edges
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .select(
-            F.col("c_nationkey").alias("cn"),
-            F.col("s_nationkey").alias("sn"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-        )
-    )
-    edges = canonicalize_edges(pairs, "cn", "sn")
-    return edges.groupBy("edge_a", "edge_b").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        dec_sum("rev").alias("cap"),
-    )
-
-
-def canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected edge canonicalization + symmetric aggregation.
-
-    Reference: reverse_lines (util.py:139-155) + the grouped line
-    aggregation (generate_intermediate_files.py:463-469), dropping
-    intra-regional (loop) edges.
-    """
-    return _edge_aggregate(spark, sf_dir).orderBy("edge_a", "edge_b")
-
-
-def neighbor_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order neighbor pair grid outer-joined with existing edges.
-
-    Reference: Queen-contiguity neighbor pairs joined with existing
-    lines, capacity filled with 0 (generate_intermediate_files.py:
-    476-490). Neighborhood = same region here.
-    """
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    n1 = nation.select(
-        F.col("n_nationkey").alias("edge_a"), F.col("n_regionkey").alias("rk")
-    )
-    n2 = nation.select(
-        F.col("n_nationkey").alias("edge_b"), F.col("n_regionkey").alias("rk2")
-    )
-    pairs = n1.join(
-        n2, (F.col("rk") == F.col("rk2")) & (F.col("edge_a") < F.col("edge_b"))
-    ).join(F.broadcast(region), F.col("rk") == region.r_regionkey)
-    edges = _edge_aggregate(spark, sf_dir)
-    return (
-        pairs.select("r_name", "edge_a", "edge_b")
-        .join(edges, ["edge_a", "edge_b"], "left")
-        .select(
-            "r_name",
-            "edge_a",
-            "edge_b",
-            F.coalesce(F.col("cap"), F.lit(0.0)).alias("cap"),
-        )
-        .orderBy("r_name", "edge_a", "edge_b")
-    )
-
-
-def transmission_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge length via haversine centroids, range-classified, with
-    efficiency/cost formulas.
-
-    Reference: generate_transmission length/eff/cost derivation
-    (generate_intermediate_files.py:492-533): length from centroid
-    distance, eff = eff_per_1000km ** (length/1000),
-    inv-cost = inv-cost-length * length + inv-cost-fix.
-    """
-    from pyprima_spark.functions.binning import interval_bin
-    from pyprima_spark.functions.geo import (
-        haversine_km,
-        synth_lat,
-        synth_lon,
-    )
-    from pyprima_spark.plans.constants import (
-        EFF_PER_1000KM,
-        INV_COST_FIX,
-        INV_COST_LENGTH,
-        LENGTH_BINS,
-        LENGTH_DEFAULT,
-    )
-
-    edges = _edge_aggregate(spark, sf_dir)
-    with_len = edges.withColumn(
-        "length_km",
-        F.round(
-            haversine_km(
-                synth_lat(F.col("edge_a")),
-                synth_lon(F.col("edge_a")),
-                synth_lat(F.col("edge_b")),
-                synth_lon(F.col("edge_b")),
-            ),
-            2,
-        ),
-    )
-    return with_len.select(
-        "edge_a",
-        "edge_b",
-        "length_km",
-        interval_bin(F.col("length_km"), LENGTH_BINS, LENGTH_DEFAULT).alias(
-            "length_class"
-        ),
-        F.round(
-            F.pow(F.lit(EFF_PER_1000KM), F.col("length_km") / 1000), 6
-        ).alias("eff"),
-        F.round(
-            F.lit(INV_COST_LENGTH) * F.col("length_km") + F.lit(INV_COST_FIX), 2
-        ).alias("inv_cost"),
-    ).orderBy("edge_a", "edge_b")
-
-
-def cohort_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucket entities into year cohorts and aggregate.
-
-    Reference: Cohort = (Year // cohorts) * cohorts then group-sum
-    (generate_intermediate_files.py:675-683).
-    """
-    from pyprima_spark.operators.cohorts import cohort_of
-    from pyprima_spark.plans.constants import COHORT_WIDTH
-
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.withColumn(
-            "cohort", cohort_of(F.year("o_orderdate"), COHORT_WIDTH)
-        )
-        .groupBy("cohort", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("revenue"),
-        )
-        .orderBy("cohort", "o_orderstatus")
-    )
-
-
-def expansion_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-join dimension grid left-joined with existing facts, 0-fill.
-
-    Reference: site × technology expansion combinations with
-    inst-cap = 0 appended to existing capacity
-    (generate_intermediate_files.py:692-711).
-    """
-    from pyprima_spark.operators.grids import expansion_grid as grid_op
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    existing = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name", "o_orderpriority")
-        .agg(dec_sum("o_totalprice").alias("inst_cap"))
-    )
-    sites = nation.select("n_name")
-    techs = orders.select("o_orderpriority").distinct()
-    return (
-        grid_op([sites, techs], existing, ["n_name", "o_orderpriority"], {"inst_cap": 0.0})
-        .orderBy("n_name", "o_orderpriority")
-    )
-
-
-DEMAND_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-
-
-def export_demand_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide hour × region demand matrix with a leading t column.
-
-    Reference: the urbs Demand sheet — regions as columns, hour index t
-    as rows (generate_models.py:159-166).
-    """
-    ev = _t(spark, sf_dir, "events")
-    region = _t(spark, sf_dir, "region")
-    labelled = ev.withColumn("rk", F.col("user_id") % 5).join(
-        F.broadcast(region), F.col("rk") == region.r_regionkey
-    )
-    piv = (
-        labelled.withColumn("t", F.hour("ts"))
-        .groupBy("t")
-        .pivot("r_name", DEMAND_REGIONS)
-        .agg(F.sum(F.col("value").cast(DEC)))
-    )
-    cols = [F.col("t")]
-    for r in DEMAND_REGIONS:
-        cols.append(
-            F.round(F.coalesce(F.col(f"`{r}`"), F.lit(0.0)), 2).alias(
-                r.replace(" ", "_")
-            )
-        )
-    return piv.select(*cols).orderBy("t")
-
-
-# ---------------------------------------------------------------------------
-# LLM-data-pipeline operators (SURVEY §2 #26-36)
-# ---------------------------------------------------------------------------
-
-
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via md5 hash-groupBy (SURVEY §2 #26)."""
-    from pyprima_spark.operators.dedup import exact_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    return exact_dedup(docs, "doc_id", "text")
-
-
-def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized-fingerprint dedup (SURVEY §2 #27)."""
-    from pyprima_spark.operators.dedup import fingerprint_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    return fingerprint_dedup(docs, "doc_id", "text")
-
-
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH candidate near-dup pairs (SURVEY §2 #28).
-
-    16 minhashes over word 3-shingles, 4 bands × 4 rows; pairs share
-    >= 1 band. The signature is computed in one narrow pass — only the
-    (doc, band, sig) table shuffles.
-    """
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_candidate_pairs(docs, "doc_id", "text").orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash hamming distances for chunk-sharing pairs (SURVEY §2 #29)."""
-    from pyprima_spark.operators.dedup import simhash_pair_hamming
-
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_pair_hamming(docs, "doc_id", "text").orderBy("doc_a", "doc_b")
-
-
-def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-3-gram Jaccard similarity pairs >= tau within (source,
-    length-band) buckets (SURVEY §2 #30)."""
-    from pyprima_spark.operators.dedup import gram_set_sizes, ngram_gram_table
-    from pyprima_spark.plans.constants import (
-        NGRAM_DF_MAX,
-        NGRAM_JACCARD_TAU,
-        NGRAM_LEN_BAND,
-    )
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "len_band", F.floor(F.length("text") / NGRAM_LEN_BAND)
-    )
-    # Stop-grams (bucket df > NGRAM_DF_MAX) are cut before the
-    # self-join: they dominate join fanout without signal. The gram
-    # table is materialized once — the per-side renames below the join
-    # exchanges defeat exchange reuse, so without the stage boundary
-    # the explode+normalize+window derivation runs twice, and at corpus
-    # scale the derivation is the dominant stage.
-    grams = ngram_gram_table(
-        docs, "doc_id", "text", ["source", "len_band"], df_max=NGRAM_DF_MAX
-    ).localCheckpoint(eager=True)
-    # Set sizes ride on the (tiny) per-doc count, joined onto the
-    # aggregated pairs — not window-attached to every gram row, which
-    # would sort-shuffle the full gram table once more. (The size
-    # subtree feeds both pair-side joins and does evaluate twice; an
-    # r10 A/B of a persist/checkpoint boundary here measured the
-    # barrier slightly SLOWER than the duplicate aggregate over the
-    # already-checkpointed gram blocks, so the duplication stays.)
-    sizes = gram_set_sizes(grams)
-    a = grams.select(F.col("doc").alias("doc_a"), "source", "len_band", "gram")
-    b = grams.select(F.col("doc").alias("doc_b"), "source", "len_band", "gram")
-    shared = (
-        a.join(b, ["source", "len_band", "gram"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    withsizes = (
-        shared.join(
-            sizes.select(F.col("doc").alias("doc_a"), F.col("gset_size").alias("size_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc").alias("doc_b"), F.col("gset_size").alias("size_b")),
-            "doc_b",
-        )
-    )
-    jacc = F.round(
-        F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared")), 4
-    )
-    return (
-        withsizes.withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= NGRAM_JACCARD_TAU)
-        .select("doc_a", "doc_b", "jacc")
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k per query vector (SURVEY §2 #31)."""
-    from pyprima_spark.operators.similarity import ann_topk as op
-    from pyprima_spark.plans.constants import ANN_K, ANN_N_QUERIES
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return op(emb, ANN_N_QUERIES, ANN_K).orderBy("query_id", "rank")
-
-
-def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate NN per query vector (SURVEY §2 #32)."""
-    from pyprima_spark.operators.similarity import ann_lsh as op
-    from pyprima_spark.plans.constants import ANN_K, ANN_N_QUERIES
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return op(emb, ANN_N_QUERIES, ANN_K).orderBy("query_id", "rank")
-
-
-def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer approximate NN — the cluster-scale path
-    (SURVEY §2 #32b). Uses the deterministic fixed-id quantizer so the
-    full plan (cell assignment → probe selection → per-cell verify) is
-    hash-checkable against the SQL oracle; the KMeans variant shares
-    every downstream stage and is exercised by the recall unit test."""
-    from pyprima_spark.operators.similarity import ann_ivf as op
-    from pyprima_spark.plans.constants import (
-        ANN_K,
-        ANN_N_QUERIES,
-        IVF_CENTROID_IDS,
-        IVF_N_PROBE,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return op(
-        emb,
-        ANN_N_QUERIES,
-        ANN_K,
-        n_probe=IVF_N_PROBE,
-        centroid_ids=IVF_CENTROID_IDS,
-    ).orderBy("query_id", "rank")
-
-
-def embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine near-dup pairs via banded multi-table LSH (SURVEY §2 #33)."""
-    from pyprima_spark.operators.similarity import embedding_dedup as op
-    from pyprima_spark.plans.constants import EMB_DEDUP_TAU
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return op(emb, EMB_DEDUP_TAU).orderBy("vec_a", "vec_b")
-
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile language ID, reported as a confusion matrix
-    against the labelled lang column (SURVEY §2 #34). No joins — the
-    scores are per-row higher-order-function sums; argmax is a CASE
-    with alphabetical tie-break.
-    """
-    from pyprima_spark.functions import text as X
-    from pyprima_spark.plans.constants import STOPWORDS
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = X.tokens_spark("text")
-    scored = docs.withColumn("tokens", F.expr(toks))
-    for lang, words in STOPWORDS.items():
-        scored = scored.withColumn(
-            f"s_{lang}", F.expr(X.stopword_count_spark("tokens", words))
-        )
-    scored = scored.withColumn("s_zh", F.expr(X.cjk_count_spark("text")))
-    m = F.greatest(*[F.col(f"s_{l}") for l in sorted(STOPWORDS)])
-    pred = F.when(F.col("s_zh") > 0, F.lit("zh")).otherwise(
-        F.when(m == 0, F.lit("unknown"))
-        .when(F.col("s_de") == m, F.lit("de"))
-        .when(F.col("s_en") == m, F.lit("en"))
-        .when(F.col("s_es") == m, F.lit("es"))
-        .otherwise(F.lit("fr"))
-    )
-    return (
-        scored.withColumn("pred_lang", pred)
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
-    )
-
-
-def _quality_frame(docs: DataFrame) -> DataFrame:
-    """documents + raw (unrounded) quality components and composite
-    score. Rational arithmetic only — no transcendental functions — so
-    Spark and a sequential oracle compute bit-identical doubles; shared
-    by `quality_score` (rounds for output) and `corpus_curation` (gates
-    on the raw score)."""
-    from pyprima_spark.functions import text as X
-    from pyprima_spark.plans.constants import STOPWORDS
-
-    toks = X.tokens_spark("text")
-    d = (
-        docs.withColumn("tokens", F.expr(toks))
-        .withColumn("n_tok", F.size("tokens"))
-        .withColumn("n_ch", F.length("text"))
-        .withColumn(
-            "punct_cnt",
-            F.col("n_ch")
-            - F.length(F.regexp_replace("text", r"[^A-Za-z0-9\s]", "")),
-        )
-        .withColumn(
-            "word_chars",
-            F.length(F.regexp_replace(F.lower("text"), r"\s", "")),
-        )
-        .withColumn(
-            "stop_cnt", F.expr(X.stopword_count_spark("tokens", STOPWORDS["en"]))
-        )
-    )
-    n_tok = F.col("n_tok")
-    stop_ratio = F.when(n_tok == 0, F.lit(0.0)).otherwise(F.col("stop_cnt") / n_tok)
-    punct_ratio = F.when(F.col("n_ch") == 0, F.lit(0.0)).otherwise(
-        F.col("punct_cnt") / F.col("n_ch")
-    )
-    mean_wl = F.when(n_tok == 0, F.lit(0.0)).otherwise(F.col("word_chars") / n_tok)
-    score = (
-        F.lit(2.0) * stop_ratio
-        - F.lit(3.0) * punct_ratio
-        + F.least(n_tok, F.lit(100)) / F.lit(100.0)
-        - F.abs(mean_wl - F.lit(5.0)) / F.lit(10.0)
-    )
-    return (
-        d.withColumn("stop_ratio", stop_ratio)
-        .withColumn("punct_ratio", punct_ratio)
-        .withColumn("mean_wl", mean_wl)
-        .withColumn("score", score)
-    )
-
-
-def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic document quality: token count, stopword ratio, punct
-    ratio, mean word length, composite score (SURVEY §2 #35). Rational
-    arithmetic only — no transcendental functions.
-
-    Every reported value rounds HALF-AWAY-FROM-ZERO in exact integer
-    space over its rational's own denominator (``round(double, 4)``
-    proved engine-divergent at sf0.1: Spark rounds the shortest
-    decimal repr HALF_UP, DuckDB rounds the binary value — 4/5000 docs
-    straddled a .00005 boundary). The integer form is
-    ``(2·10⁴·NUM ± DEN) div (2·DEN)`` — Spark ``div`` and DuckDB
-    ``//`` both truncate toward zero — then one exact division by 10⁴.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    d = _quality_frame(docs)
-
-    def rnd(num_sql: str, den_sql: str) -> F.Column:
-        num = f"cast(({num_sql}) as bigint)"
-        den = f"cast(({den_sql}) as bigint)"
-        return F.expr(
-            f"CASE WHEN {den} = 0 THEN 0.0D ELSE "
-            f"cast((20000 * {num} + IF({num} >= 0, {den},"
-            f" -{den})) div (2 * {den}) as double) / 10000 END"
-        )
-
-    return d.select(
-        "doc_id",
-        "n_tok",
-        rnd("stop_cnt", "n_tok").alias("stop_ratio"),
-        rnd("punct_cnt", "n_ch").alias("punct_ratio"),
-        rnd("word_chars", "n_tok").alias("mean_word_len"),
-        rnd(
-            "2 * stop_cnt * 100 * n_ch - 3 * punct_cnt * 100 * n_tok"
-            " + least(n_tok, 100) * n_tok * n_ch"
-            " - 10 * abs(word_chars - 5 * n_tok) * n_ch",
-            "100 * n_tok * n_ch",
-        ).alias("score"),
-    )
-
-
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenization stats per source (SURVEY §2 #36)."""
-    from pyprima_spark.functions import text as X
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = X.tokens_spark("text")
-    d = (
-        docs.withColumn("tokens", F.expr(toks))
-        .withColumn("n_tok", F.size("tokens"))
-        .withColumn("n_distinct", F.size(F.array_distinct("tokens")))
-    )
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("total_tokens"),
-            dec_avg("n_tok").alias("avg_tokens"),
-            F.sum("n_distinct").alias("total_distinct"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Non-relational surfaces exposed as catalog entries (SURVEY §2, tail)
-# ---------------------------------------------------------------------------
-
-
-def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming windowed hourly stats, run to completion
-    with an availableNow trigger — must equal the batch aggregate.
-    Checkpoint rides fsio.scratch_dir (``spark.pyprima.scratchDir`` on
-    a cluster — Spark's checkpoint manager accepts any Hadoop-FS URI).
-    """
-    import uuid
-
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.streaming.events import (
-        hourly_event_stats,
-        stream_events,
-    )
-
-    name = f"hourly_{uuid.uuid4().hex[:8]}"
-    out = hourly_event_stats(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", fsio.scratch_dir(spark, "ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        F.date_format("hour_start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-        "event_type",
-        "n",
-        "total",
-    )
-
-
-def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media column → Arrow-batched decode stub → resize.
-
-    The mapInPandas plumbing is the product; the fake decoder derives
-    dimensions from the payload md5, so an independent SQL oracle can
-    reproduce it.
-    """
-    from pyprima_spark.operators.multimodal import (
-        attach_fake_media,
-        decode_media,
-        resize_stub,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    out = resize_stub(decode_media(attach_fake_media(docs)))
-    return out.select(
-        "doc_id", "n_bytes", "width", "height", "out_width", "out_height",
-        "fingerprint",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse the events.props JSON column with a declared schema
-    (from_json — JVM-side, no UDF) and aggregate by a derived bucket.
-    The schema-on-read path for semi-structured event payloads.
-
-    The parse is heavy per-row compute BEFORE the first shuffle, so a
-    degenerate scan (one row group locally) would run it on one core —
-    widen_scan spreads it; a no-op once the file has >= cores splits
-    (measured: 3.5s -> 0.8s at sf0.1 local[32])."""
-    from pyprima_spark.catalog import widen_scan
-
-    ev = widen_scan(_t(spark, sf_dir, "events"))
-    parsed = ev.withColumn(
-        "k", F.from_json("props", "k int").getField("k")
-    )
-    return (
-        parsed.withColumn("k_bucket", F.floor(F.col("k") / 10).cast("int"))
-        .groupBy("k_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dec_avg("value").alias("avg_value"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("k_bucket")
-    )
-
-
-def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zonal raster statistics (SURVEY §2 #49): aggregate a pixel grid
-    per containing region — spatial_functions.py:zonal_stats, which
-    sums/counts raster cells (population, land use) inside each region
-    polygon.
-
-    The raster is a deterministic 160x360 1-degree grid generated
-    DISTRIBUTIVELY from `spark.range` (no driver-side materialization —
-    at real raster resolution this is billions of cells and range()
-    splits across executors). Region boxes broadcast; one narrow pass
-    assigns cells, one shuffle aggregates per region.
-    """
-    from pyprima_spark.operators.spatial import point_in_box_join
-
-    pix = (
-        spark.range(160 * 360)
-        .withColumn("latidx", (F.col("id") / 360).cast("int"))
-        .withColumn("lonidx", (F.col("id") % 360).cast("int"))
-        .select(
-            (F.col("latidx") - 80 + F.lit(0.5)).alias("lat"),
-            (F.col("lonidx") - 180 + F.lit(0.5)).alias("lon"),
-            ((F.col("latidx") * 7 + F.col("lonidx") * 13) % 100).alias("pixval"),
-        )
-    )
-    nat = _t(spark, sf_dir, "nation").select(
-        "n_name",
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80).alias("lat_min"),
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80 + 40).alias("lat_max"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180).alias("lon_min"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180 + 72).alias("lon_max"),
-    )
-    return (
-        point_in_box_join(pix, nat)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("pixval").alias("total"),
-            dec_avg("pixval").alias("mean_val"),
-            F.max("pixval").alias("max_val"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def nearest_site(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid assignment (SURVEY §2 #51): map each customer
-    point to the closest nation centroid by haversine distance —
-    spatial_functions.py:get_sites / crd point-to-site assignment.
-
-    The centroid table is dim-sized and BROADCAST; the fact side streams
-    through one narrow pass (cross join × 25 + per-key min-rank), no
-    shuffle until the final count-per-site agg. At huge centroid counts
-    the layout switches to the same grid-cell candidate join as
-    point-in-box.
-    """
-    from pyprima_spark.functions.geo import haversine_km
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        ((F.col("c_custkey") * 7919 % 160) - 80 + F.lit(0.5)).alias("lat"),
-        ((F.col("c_custkey") * 104729 % 360) - 180 + F.lit(0.5)).alias("lon"),
-    )
-    sites = _t(spark, sf_dir, "nation").select(
-        "n_name",
-        ((F.col("n_nationkey") * 13 % 140) - 70 + F.lit(0.0)).alias("slat"),
-        ((F.col("n_nationkey") * 29 % 340) - 170 + F.lit(0.0)).alias("slon"),
-    )
-    from pyspark.sql import Window
-
-    d = F.round(
-        haversine_km(F.col("lat"), F.col("lon"), F.col("slat"), F.col("slon")), 6
-    )
-    w = Window.partitionBy("c_custkey").orderBy(F.asc("dist"), F.asc("n_name"))
-    assigned = (
-        cust.crossJoin(F.broadcast(sites))
-        .withColumn("dist", d)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    return (
-        assigned.groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_assigned"),
-            dec_avg("dist").alias("avg_dist_km"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def grid_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2D grid downsampling (SURVEY §2 #52): resample the 1-degree pixel
-    grid to 4x4-degree blocks by mean — util.py:resizem, the raster
-    coarsening every map-based input goes through.
-
-    Pure groupBy on (block_lat, block_lon): uniform keys, map-side
-    partial means, one shuffle of block aggregates only.
-    """
-    pix = (
-        spark.range(160 * 360)
-        .withColumn("latidx", (F.col("id") / 360).cast("int"))
-        .withColumn("lonidx", (F.col("id") % 360).cast("int"))
-        .select(
-            "latidx",
-            "lonidx",
-            ((F.col("latidx") * 7 + F.col("lonidx") * 13) % 100).alias("pixval"),
-        )
-    )
-    return (
-        pix.groupBy(
-            (F.col("latidx") / 4).cast("int").alias("block_lat"),
-            (F.col("lonidx") / 4).cast("int").alias("block_lon"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            dec_avg("pixval").alias("mean_val"),
-        )
-        .orderBy("block_lat", "block_lon")
-    )
-
-
-def incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingestion dedup (SURVEY §2 #47): keep only incoming
-    docs whose normalized fingerprint is NOT already in the seen-set —
-    the don't-re-ingest gate of a continuously-fed training corpus.
-
-    A LEFT ANTI join on the 128-bit fingerprint: one shuffle on a
-    uniformly-distributed key. At 100 TB the seen-set side stays a
-    compact (fingerprint) table; AQE turns the probe into a broadcast
-    when a partition's seen-slice is small, and a bloom-filter pushdown
-    prunes most incoming rows before the exchange.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""),
-            r"\s+",
-            " ",
-        )
-    )
-    # Materialized ONCE: both anti-join sides derive from fp, so the
-    # two-regex normalize + md5 pass otherwise runs twice (guide §2.4).
-    from pyprima_spark.operators.checkpointing import materialize
-
-    fp = materialize(docs.select("doc_id", F.md5(norm).alias("fingerprint")))
-    seen = fp.filter(F.col("doc_id") % 3 == 0).select("fingerprint")
-    incoming = fp.filter(F.col("doc_id") % 3 != 0)
-    return incoming.join(seen, "fingerprint", "left_anti").select(
-        "doc_id", "fingerprint"
-    ).orderBy("doc_id")
-
-
-def incremental_new_docs_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-assisted incremental ingestion dedup (SURVEY §2 #47b) —
-    same output as `incremental_new_docs`, with the seen-set compressed
-    into a broadcastable Bloom word table probed map-side; only the
-    Bloom-positive rows continue to the exact anti-join. At 100 TB this
-    turns an |incoming|-row shuffle into a |hits|-row shuffle while the
-    definite-news pass straight through.
-    """
-    from pyprima_spark.operators.bloom import bloom_build, bloom_probe
-
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""),
-            r"\s+",
-            " ",
-        )
-    )
-    # Materialized ONCE: fp feeds the Bloom build, the probe side
-    # (evaluated twice through `tagged`), and the exact anti-join's
-    # seen side — without the boundary the two-regex normalize + md5
-    # pass re-runs once per consumer (~4x; guide §2.4, measured 17
-    # Exchanges). The checkpoint is the (doc_id, fingerprint) index an
-    # incremental ingest persists anyway.
-    from pyprima_spark.operators.checkpointing import materialize
-
-    fp = materialize(docs.select("doc_id", F.md5(norm).alias("fingerprint")))
-    seen = fp.filter(F.col("doc_id") % 3 == 0).select("fingerprint")
-    incoming = fp.filter(F.col("doc_id") % 3 != 0)
-
-    tagged = bloom_probe(incoming, bloom_build(seen, "fingerprint"), "fingerprint")
-    definite_new = tagged.filter(~F.col("bloom_maybe")).select(
-        "doc_id", "fingerprint"
-    )
-    verified_new = (
-        tagged.filter(F.col("bloom_maybe"))
-        .select("doc_id", "fingerprint")
-        .join(seen, "fingerprint", "left_anti")
-        .select("doc_id", "fingerprint")
-    )
-    return definite_new.unionByName(verified_new).orderBy("doc_id")
-
-
-def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination check (SURVEY §2 #48): count winnowing
-    fingerprints shared between every pair of sources — the train/test
-    benchmark-contamination probe over a corpus.
-
-    The (source, fingerprint) table is materialized once before the
-    self-join (the per-side source renames defeat exchange reuse, so
-    the winnow pass — rolling hashes + two windows — would run twice);
-    the join key is the fingerprint hash (uniform), and per-pair
-    distinct counting happens after the row-level distinct, so the pair
-    space is bounded by real overlap, never |docs|^2.
-    """
-    from pyprima_spark.operators.dedup import winnow_fingerprints as op
-
-    docs = _t(spark, sf_dir, "documents")
-    fps = op(docs, "doc_id", "text")
-    # repartition(fingerprint) BEFORE the distinct: hash(fingerprint)
-    # co-locates every duplicate (source, fingerprint) row, so the
-    # distinct plans exchange-free on top of it, the checkpoint
-    # preserves the layout, and BOTH self-join sides (join key =
-    # fingerprint) consume it with zero further exchanges (guide §2.4;
-    # the market_basket_pairs subset-clustering layout).
-    fsrc = (
-        fps.join(docs.select("doc_id", "source"), "doc_id")
-        .select("source", "fingerprint")
-        .repartition("fingerprint")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    a = fsrc.select(F.col("source").alias("source_a"), "fingerprint")
-    b = fsrc.select(F.col("source").alias("source_b"), "fingerprint")
-    return (
-        a.join(b, "fingerprint")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .orderBy("source_a", "source_b")
-    )
-
-
-def latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC log compaction: last-write-wins snapshot per (user, type) key
-    (SURVEY §2 #45).
-
-    Implemented as a `max_by` AGGREGATION, not a row_number window: the
-    aggregate gets map-side partial combine (each task keeps one winner
-    per key before the shuffle), where a window would shuffle and sort
-    every raw event. At 100 TB of change-log this is the difference
-    between shuffling the keyspace and shuffling the log.
-    """
-    ev = _t(spark, sf_dir, "events")
-    ordk = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        ev.groupBy("user_id", "event_type")
-        .agg(
-            F.max_by("event_id", ordk).alias("last_event_id"),
-            F.round(F.max_by("value", ordk), 2).alias("last_value"),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-        )
-        .orderBy("user_id", "event_type")
-    )
-
-
-def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroid, one row per (label, dimension)
-    (SURVEY §2 #46) — the vector aggregation under KMeans/IVF training.
-
-    posexplode keeps the plan JVM-side and columnar; the agg shuffles
-    (label, dim) pairs — uniformly distributed, 64×|labels| groups —
-    with map-side partial sums, never whole vectors.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(dec_avg("v", 5).alias("centroid"))
-        .orderBy("label", "dim")
-    )
-
-
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive dedup clusters from minhash LSH candidate pairs
-    (SURVEY §2 #44): iterative hash-min connected components — the
-    operator class (iterative graph algorithm) no single SQL pass
-    expresses; see operators/components.py for the scale layout.
-    """
-    from pyprima_spark.operators.components import connected_components
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_candidate_pairs(docs, "doc_id", "text")
-    return (
-        connected_components(pairs, "doc_a", "doc_b")
-        .select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
-        .orderBy("doc_id")
-    )
-
-
-def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical subtotals: ROLLUP over (nation, order-year).
-
-    OLAP cube surface (reference runs separate groupbys per level, e.g.
-    generate_intermediate_files.py:469 then re-aggregation; ROLLUP
-    computes all levels in one pass). Spark evaluates rollup with a
-    single Expand + one shuffle — no per-level rescan of the fact side.
-    """
-    ord_ = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
-    joined = (
-        ord_.join(F.broadcast(cust), ord_.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .withColumn("o_year", F.year("o_orderdate"))
-    )
-    return (
-        joined.rollup("n_name", "o_year")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("total_price"),
-        )
-        .select(
-            F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-            F.coalesce("o_year", F.lit(-1)).alias("o_year"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("nation", "o_year")
-    )
-
-
-def cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (segment, priority): all 4 grouping combinations in one
-    Expand pass (SURVEY §2 #50) — completes the grouping-set matrix next
-    to `rollup_sales` (which emits only the 3 hierarchical levels)."""
-    ord_ = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    joined = ord_.join(F.broadcast(cust), ord_.o_custkey == cust.c_custkey)
-    return (
-        joined.cube("c_mktsegment", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("total_price"),
-        )
-        .select(
-            F.coalesce("c_mktsegment", F.lit("ALL")).alias("segment"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("segment", "priority")
-    )
-
-
-def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles of event value per event type.
-
-    Uses the exact `percentile` aggregate (single pass, per-group sort
-    inside the agg) because the oracle demands bit-equality; at 100 TB
-    the drop-in scale path is `percentile_approx` (mergeable KLL-style
-    sketch, no per-group materialization) at the cost of bounded error.
-    """
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.25)"), 4).alias("p25"),
-            F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-            F.round(F.expr("percentile(value, 0.75)"), 4).alias("p75"),
-            dec_avg("value").alias("mean_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def point_in_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-region spatial bounding-box join (SURVEY §2 #40).
-
-    Deterministic synthetic geometry: each customer gets a lat/lon from
-    integer arithmetic on its key; each nation a bounding box from its
-    nationkey. The broadcast inequality join assigns points to regions
-    — the pyPRIMA point-in-polygon analogue (see operators/spatial.py).
-    """
-    from pyprima_spark.operators.spatial import point_in_box_join
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_acctbal",
-        ((F.col("c_custkey") * 7919 % 160) - 80 + F.lit(0.5)).alias("lat"),
-        ((F.col("c_custkey") * 104729 % 360) - 180 + F.lit(0.5)).alias("lon"),
-    )
-    nat = _t(spark, sf_dir, "nation").select(
-        "n_nationkey",
-        "n_name",
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80).alias("lat_min"),
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80 + 40).alias("lat_max"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180).alias("lon_min"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180 + 72).alias("lon_max"),
-    )
-    return (
-        point_in_box_join(cust, nat)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            # dec_avg_exact: the sf0.001 sweep caught a half-ulp round
-            # tie here (5739.32375 -> .3238 Spark vs .3237 DuckDB)
-            dec_avg_exact("c_acctbal").alias("avg_bal"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def purchase_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-interval attribution join (SURVEY §2 #39b): every purchase
-    paired with the same user's clicks in the preceding hour — the
-    batch form of the watermarked stream-stream interval join
-    (streaming/joins.py), sharing the same transform."""
-    from pyprima_spark.streaming.joins import purchase_click_pairs
-
-    ev = _t(spark, sf_dir, "events")
-    return (
-        purchase_click_pairs(ev)
-        .select(
-            "purchase_id",
-            "user_id",
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("p_ts"),
-            F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("c_ts"),
-            F.round("click_value", 2).alias("click_value"),
-        )
-        .orderBy("purchase_id", "c_ts")
-    )
-
-
-def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-resilient join demo (SURVEY §2 #57): orders keyed so one
-    hot key holds most rows, joined to a priority dim through
-    `salted_join` — the explicit fallback when AQE cannot split a
-    heavy-hitter partition (post-join co-grouping pins the layout).
-    Salting must not change semantics: the oracle is the plain join.
-    """
-    from pyprima_spark.functions.skew import salted_join
-
-    orders = _t(spark, sf_dir, "orders")
-    # ~60% of rows land on hot_key 0 (URGENT+HIGH+MEDIUM collapse).
-    fact = orders.select(
-        "o_orderkey",
-        "o_totalprice",
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM"), 0)
-        .otherwise(F.substring("o_orderpriority", 1, 1).cast("int"))
-        .alias("hot_key"),
-    )
-    dim = spark.createDataFrame(
-        [(0, "compressed"), (4, "deferred"), (5, "background")],
-        "hot_key int, tier string",
-    )
-    return (
-        salted_join(fact, dim, "hot_key")
-        .groupBy("hot_key", "tier")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dec_sum("o_totalprice").alias("revenue"),
-        )
-        .orderBy("hot_key")
-    )
-
-
-def point_in_region_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-cell spatial join (SURVEY §2 #40b) — same semantics and
-    output as `point_in_region`, via the cell-bucketed equi-join that
-    replaces the broadcast when the region table is itself fact-sized.
-    """
-    from pyprima_spark.operators.spatial import point_in_box_grid_join
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_acctbal",
-        ((F.col("c_custkey") * 7919 % 160) - 80 + F.lit(0.5)).alias("lat"),
-        ((F.col("c_custkey") * 104729 % 360) - 180 + F.lit(0.5)).alias("lon"),
-    )
-    nat = _t(spark, sf_dir, "nation").select(
-        "n_nationkey",
-        "n_name",
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80).alias("lat_min"),
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80 + 40).alias("lat_max"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180).alias("lon_min"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180 + 72).alias("lon_max"),
-    )
-    return (
-        point_in_box_grid_join(cust, nat)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            dec_avg_exact("c_acctbal").alias("avg_bal"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing rolling-hash document fingerprints (SURVEY §2 #27b)."""
-    from pyprima_spark.operators.dedup import winnow_fingerprints as op
-
-    docs = _t(spark, sf_dir, "documents")
-    return op(docs, "doc_id", "text").orderBy("doc_id", "fingerprint")
-
-
-def quality_topk_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quota sampling: top 10 documents per source by quality score
-    (rounded score + doc_id tiebreak keeps ranking deterministic across
-    engines). The per-group top-k is a rank window over one shuffle on
-    source — the standard quota-filter shape for corpus curation."""
-    from pyspark.sql import Window
-
-    from pyprima_spark.functions import text as X
-    from pyprima_spark.plans.constants import STOPWORDS
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = X.tokens_spark("text")
-    d = (
-        docs.withColumn("tokens", F.expr(toks))
-        .withColumn("n_tok", F.size("tokens"))
-        .withColumn("n_ch", F.length("text"))
-        .withColumn(
-            "punct_cnt",
-            F.col("n_ch")
-            - F.length(F.regexp_replace("text", r"[^A-Za-z0-9\s]", "")),
-        )
-        .withColumn(
-            "word_chars",
-            F.length(F.regexp_replace(F.lower("text"), r"\s", "")),
-        )
-        .withColumn(
-            "stop_cnt", F.expr(X.stopword_count_spark("tokens", STOPWORDS["en"]))
-        )
-    )
-    n_tok = F.col("n_tok")
-    stop_ratio = F.when(n_tok == 0, F.lit(0.0)).otherwise(F.col("stop_cnt") / n_tok)
-    punct_ratio = F.when(F.col("n_ch") == 0, F.lit(0.0)).otherwise(
-        F.col("punct_cnt") / F.col("n_ch")
-    )
-    mean_wl = F.when(n_tok == 0, F.lit(0.0)).otherwise(F.col("word_chars") / n_tok)
-    score = F.round(
-        F.lit(2.0) * stop_ratio
-        - F.lit(3.0) * punct_ratio
-        + F.least(n_tok, F.lit(100)) / F.lit(100.0)
-        - F.abs(mean_wl - F.lit(5.0)) / F.lit(10.0),
-        4,
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        d.withColumn("score", score)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("source", "rnk", "doc_id", "score")
-        .orderBy("source", "rnk")
-    )
-
-
-def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified deterministic sampling: keep a doc iff its id-hash
-    falls under its source's rate (5-50%). Hash-gated filters are the
-    reproducible sampling primitive for training-data pipelines — no
-    rand(), so retries, re-runs, and other engines agree row-for-row."""
-    from pyprima_spark.functions import text as X
-
-    docs = _t(spark, sf_dir, "documents")
-    rate = 5 + (F.substring("source", 4, 10).cast("int") % 4) * 15
-    gate = F.expr(X.hash64_spark("cast(doc_id as string)")) % 100
-    return (
-        docs.withColumn("rate", rate)
-        .filter(gate < F.col("rate"))
-        .select("doc_id", "source", "rate")
-        .orderBy("doc_id")
-    )
-
-
-def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping 1h/15m sliding-window event counts, computed by the
-    streaming engine (availableNow) — each event lands in 4 windows."""
-    from pyprima_spark.streaming.events import run_sliding_stream
-
-    return run_sliding_stream(spark, sf_dir)
-
-
-def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling stub: k evenly spaced frame fingerprints per
-    payload via mapInPandas (one output row per frame)."""
-    from pyprima_spark.operators.multimodal import attach_fake_media, frame_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return frame_sample(attach_fake_media(docs)).orderBy("doc_id", "frame_idx")
-
-
-def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature-extraction stub over the binary payload column."""
-    from pyprima_spark.operators.multimodal import attach_fake_media, audio_features
-
-    docs = _t(spark, sf_dir, "documents")
-    return audio_features(attach_fake_media(docs)).orderBy("doc_id")
-
-
-def rolling_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event: count / sum of the same user's events in the preceding
-    hour (inclusive), via a RANGE window frame on event-time micros.
-
-    The range frame slides within each user's time-sorted partition —
-    one shuffle on user_id, per-key bounded state, no self-join. This is
-    the reference's 5-hour trend window (correction_functions.py:315)
-    generalized to an arbitrary time-range frame.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            F.count(F.lit(1)).over(w).alias("n_1h"),
-            F.round(F.sum(F.col("value").cast(DEC)).over(w), 2).cast("double").alias("sum_1h"),
-        )
-        .orderBy("event_id")
-    )
-
-
-def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Annotate each purchase with the user's most recent prior click
-    (temporal as-of join; SURVEY §2 asof_join)."""
-    from pyprima_spark.operators.asof import asof_join as _asof
-
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "value"
-    )
-    j = _asof(purchases, clicks, "user_id", value_cols=["value"])
-    return j.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        F.round("value", 2).alias("value"),
-        F.round("value_asof", 2).alias("click_value"),
-        F.round(
-            (F.unix_micros("ts") - F.unix_micros("ts_asof")) / 1_000_000.0, 3
-        ).alias("lag_sec"),
-    ).orderBy("event_id")
-
-
-def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based per-user sessions via session_window (SURVEY §2
-    sessionize)."""
-    from pyprima_spark.streaming.sessions import sessionize as _sess
-
-    return _sess(_t(spark, sf_dir, "events"))
-
-
-def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming sessionizer (applyInPandasWithState);
-    same output contract as the batch sessionize."""
-    from pyprima_spark.streaming.sessions import run_sessions_stream
-
-    return run_sessions_stream(spark, sf_dir)
-
-
-def supply_ts_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intermittent-supply time-series assembly (SURVEY §2 #56).
-
-    Reference: ``generate_intermittent_supply_timeseries``
-    (generate_intermediate_files.py:115-201) assembles per-(subregion,
-    tech) supply series from regional series × capacity shares, filling
-    absent series with zero. Here: daily regional series per event type
-    (the "tech") × each nation's capacity share within its region, made
-    dense over the full (day × tech × nation) grid with zero fill.
-
-    Scale shape: the series table aggregates once (shuffle on day×tech×
-    region); the share matrix is dimension-sized and broadcast; the
-    dense grid is a broadcast cross join of three small dims left-joined
-    with the real series — the fact table never shuffles for the grid.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    nation = _t(spark, sf_dir, "nation")
-
-    ts_regional = (
-        ev.select(
-            F.date_trunc("day", "ts").alias("d"),
-            F.col("event_type").alias("tech"),
-            (F.col("user_id") % 5).alias("rk"),
-            "value",
-        )
-        .groupBy("d", "tech", "rk")
-        .agg(dec_sum("value").alias("ts_val"))
-    )
-    wreg = Window.partitionBy("n_regionkey")
-    share = nation.select(
-        F.col("n_nationkey").alias("nk"),
-        "n_name",
-        F.col("n_regionkey").alias("rk"),
-        (
-            (F.col("n_nationkey") % 7 + 1).cast("double")
-            / F.sum(F.col("n_nationkey") % 7 + 1).over(wreg).cast("double")
-        ).alias("cap_share"),
-    )
-
-    bounds = ev.agg(
-        F.date_trunc("day", F.min("ts")).alias("dmin"),
-        F.date_trunc("day", F.max("ts")).alias("dmax"),
-    )
-    days = bounds.select(
-        F.explode(F.expr("sequence(dmin, dmax, interval 1 day)")).alias("d")
-    )
-    techs = ev.select(F.col("event_type").alias("tech")).distinct()
-    grid = days.crossJoin(F.broadcast(techs)).crossJoin(F.broadcast(share))
-
-    return (
-        grid.join(ts_regional, ["d", "tech", "rk"], "left")
-        .select(
-            F.date_format("d", "yyyy-MM-dd").alias("day"),
-            "tech",
-            "n_name",
-            # no rounding: ts_val (exact 2dp) x cap_share (same bits both
-            # engines) multiplies to identical doubles, while a 4dp round
-            # hits exact .5 ties (dyadic shares) that HALF_UP/HALF_EVEN
-            # engines break differently
-            F.coalesce(F.col("ts_val") * F.col("cap_share"), F.lit(0.0)).alias(
-                "supply"
-            ),
-        )
-        .orderBy("day", "tech", "n_name")
-    )
-
-
-def region_overlap_disaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Area-weighted overlay disaggregation (SURVEY §2 #53).
-
-    Reference: ``intersection_subregions_countries``
-    (lib/spatial_functions.py:225-277) overlays subregions with
-    countries and names each piece sub_country; downstream load
-    disaggregation weights by the piece areas — which the reference
-    computes in a cylindrical EQUAL-AREA projection first
-    (generate_intermediate_files.py:79-82 ``to_crs('+proj=cea')``;
-    initialization.py:39), not in raw degrees. Here: nation boxes ×
-    region boxes via the broadcast box-overlap join; each region's
-    revenue total is split over its pieces by EQUAL-AREA overlap
-    share — for a lat/lon box the cea-projected area is
-    Δlon·(sin(lat_hi)−sin(lat_lo)), the exact spherical-zone formula,
-    no geo library needed (VERDICT r8 item 4).
-
-    Determinism: the equal-area weight is quantized to integer
-    millionths (``area_ea``) before the share division, so group sums
-    and shares stay bit-identical across engines (sin(radians(k·5°))
-    itself verified bit-equal Spark vs DuckDB for every latitude the
-    synthetic boxes can produce); the planar integer ``area`` column
-    is kept for the overlay-extent readout.
-    """
-    from pyspark.sql import Window
-
-    from pyprima_spark.operators.spatial import box_overlap_join
-
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    sub = nation.select(
-        F.col("n_name").alias("name"),
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80).alias("lat_min"),
-        ((F.col("n_nationkey") * 7 % 32) * 5 - 80 + 40).alias("lat_max"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180).alias("lon_min"),
-        ((F.col("n_nationkey") * 11 % 60) * 6 - 180 + 72).alias("lon_max"),
-    )
-    country = region.select(
-        F.col("r_regionkey").alias("rkey"),
-        F.col("r_name").alias("name"),
-        ((F.col("r_regionkey") * 13 % 8) * 20 - 80).alias("lat_min"),
-        ((F.col("r_regionkey") * 13 % 8) * 20 - 80 + 60).alias("lat_max"),
-        ((F.col("r_regionkey") * 17 % 10) * 36 - 180).alias("lon_min"),
-        ((F.col("r_regionkey") * 17 % 10) * 36 - 180 + 108).alias("lon_max"),
-    )
-    pieces = box_overlap_join(sub, country).select(
-        F.concat_ws("_", F.col("a_name"), F.col("b_name")).alias("piece"),
-        F.col("a_name").alias("subregion"),
-        F.col("b_name").alias("country"),
-        F.col("b_rkey").alias("rkey"),
-        F.col("overlap_area").alias("area"),
-        F.expr(
-            "cast(round((least(a_lon_max, b_lon_max)"
-            " - greatest(a_lon_min, b_lon_min))"
-            " * (sin(radians(least(a_lat_max, b_lat_max)))"
-            "    - sin(radians(greatest(a_lat_min, b_lat_min))))"
-            " * 1000000) as bigint)"
-        ).alias("area_ea"),
-    )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nat_dim = nation.select("n_nationkey", "n_regionkey")
-    totals = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat_dim), cust.c_nationkey == nat_dim.n_nationkey)
-        .groupBy(F.col("n_regionkey").alias("rkey"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast(DEC))
-            .cast("double")
-            .alias("region_total")
-        )
-    )
-    wr = Window.partitionBy("rkey")
-    share_raw = F.col("area_ea").cast("double") / F.sum("area_ea").over(
-        wr
-    ).cast("double")
-    return (
-        pieces.join(totals, "rkey")
-        .withColumn("share_raw", share_raw)
-        .select(
-            "piece",
-            "subregion",
-            "country",
-            "area",
-            "area_ea",
-            F.round("share_raw", 6).alias("share"),
-            F.round(F.col("region_total") * F.col("share_raw"), 4).alias(
-                "allocated"
-            ),
-        )
-        .orderBy("piece")
-    )
-
-
-def grid_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-neighbor 2D grid upsampling (SURVEY §2 #54).
-
-    Reference: ``resizem``'s enlarge path (lib/util.py:68-93) repeats
-    each pixel of a coarse raster into an r×c block. Spark-first: a
-    sequence+explode per axis fans each pixel row out to its block —
-    pure map-side Generate, no shuffle at any scale; the inverse of
-    ``grid_downsample``'s block-mean.
-    """
-    pix = (
-        spark.range(40 * 90)
-        .withColumn("i", (F.col("id") / 90).cast("int"))
-        .withColumn("j", (F.col("id") % 90).cast("int"))
-        .select(
-            "i", "j", ((F.col("i") * 7 + F.col("j") * 13) % 100).alias("val")
-        )
-    )
-    rep = pix.withColumn(
-        "a", F.explode(F.sequence(F.lit(0), F.lit(3)))
-    ).withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(3))))
-    return rep.select(
-        (F.col("i") * 4 + F.col("a")).alias("row_idx"),
-        (F.col("j") * 4 + F.col("b")).alias("col_idx"),
-        "val",
-    ).orderBy("row_idx", "col_idx")
-
-
-def capped_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative capped proportional allocation (SURVEY §2 #55).
-
-    Reference: ``distribute_renewable_capacities_IRENA``
-    (lib/correction_functions.py:749-806) — a country total spread over
-    sites proportional to potential, clipped at per-site caps, residual
-    re-distributed iteratively (water-filling). Sites are customers;
-    weights/caps are deterministic integers off the key; each nation
-    distributes 60% of its aggregate cap.
-    """
-    from pyprima_spark.operators.allocate import capped_allocate
-
-    cust = _t(spark, sf_dir, "customer")
-    sites = cust.select(
-        "c_custkey",
-        "c_nationkey",
-        (F.col("c_custkey") % 19 + 1).alias("w"),
-        (F.col("c_custkey") % 50 + 10).alias("cap"),
-    )
-    totals = sites.groupBy("c_nationkey").agg(
-        (F.sum("cap").cast("double") * F.lit(0.6)).alias("total")
-    )
-    out = capped_allocate(
-        sites, totals, ["c_nationkey"], "w", "cap", "total", rounds=4
-    )
-    return out.select(
-        "c_custkey",
-        "c_nationkey",
-        "w",
-        "cap",
-        F.round("alloc", 4).alias("alloc"),
-    ).orderBy("c_custkey")
-
-
-def region_mask_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rasterize region geometries onto a shared pixel grid with an
-    equal-share population burn-in (SURVEY §2 #66) — the analogue of
-    input_maps.py generate_landsea/generate_population, which burn each
-    region's shape (and its attribute total) into a global raster
-    window by window.
-
-    Distribution: each region row fans out to its covered pixel indices
-    via sequence+explode ON THE EXECUTORS (no driver-side raster
-    array), then one (latidx, lonidx) aggregation overlays all regions.
-    A region covers 40x72 index cells here; at real resolution the same
-    plan shape holds — fanout per region is bounded by its bbox, and
-    the overlay shuffle is keyed by uniformly-distributed pixel ids.
-    """
-    reg = _t(spark, sf_dir, "region")
-    nat = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    pop = (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("n_regionkey")
-        .agg(F.count(F.lit(1)).alias("pop"))
-    )
-    boxes = (
-        reg.join(F.broadcast(pop), reg.r_regionkey == pop.n_regionkey)
-        .select(
-            "r_regionkey",
-            "pop",
-            (F.col("r_regionkey") * 37 % 120).alias("la0"),
-            (F.col("r_regionkey") * 53 % 288).alias("lo0"),
-        )
-    )
-    cells = boxes.select(
-        "pop",
-        F.explode(F.sequence(F.col("la0"), F.col("la0") + 39)).alias("latidx"),
-        "lo0",
-    ).select(
-        "pop",
-        "latidx",
-        F.explode(F.sequence(F.col("lo0"), F.col("lo0") + 71)).alias("lonidx"),
-    )
-    return (
-        cells.groupBy("latidx", "lonidx")
-        .agg(
-            F.count(F.lit(1)).alias("n_regions"),
-            dec_sum(F.col("pop") / F.lit(2880.0), 6).alias("pop_alloc"),
-        )
-        .orderBy("latidx", "lonidx")
-    )
-
-
-def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of extended prices (SURVEY §2 #64): fixed
-    bucket width so the bucket id is a row-local expression — one
-    map-side-combined aggregation, no range computation pass and no
-    sort. (histogram_numeric is approximate and engine-specific; fixed
-    buckets are the deterministic, scale-stable form.)
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    bucket = F.floor(F.col("l_extendedprice") / F.lit(5000.0)).cast("int")
-    return (
-        li.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dec_sum("l_extendedprice").alias("sum_price"),
-        )
-        .withColumn("lo", (F.col("bucket") * 5000).cast("double"))
-        .select("bucket", "lo", "n", "sum_price")
-        .orderBy("bucket")
-    )
-
-
-def outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier screen (SURVEY §2 #65): flag values more than
-    3×MAD from their group median — the rescaling-tolerant outlier rule
-    the reference's sanity checks approximate with hard bounds
-    (correction_functions.py clip paths). Exact interpolated medians.
-
-    Both medians run as WINDOW aggregates over the same event_type
-    partitioning: one shuffle total, values never leave their
-    partition. The groupBy-join layout would scan the fact table three
-    times.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type")
-    d = ev.withColumn("m", F.expr("percentile(value, 0.5)").over(w))
-    d = d.withColumn("mad", F.expr("percentile(abs(value - m), 0.5)").over(w))
-    return (
-        d.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(
-                F.when(F.abs(F.col("value") - F.col("m")) > 3 * F.col("mad"), 1)
-            ).alias("n_outliers"),
-            F.round(F.min("m"), 4).alias("median_value"),
-            F.round(F.min("mad"), 4).alias("mad"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel analysis (SURVEY §2 #68): signup → later click →
-    later purchase, per signup-day cohort. The event-analytics staple
-    for activation tracking.
-
-    All three stage timestamps come from windows over ONE user
-    partitioning (no self-joins): t1 = min signup ts; t2 = min click ts
-    at/after t1; t3 = min purchase ts at/after t2. Window 2 references
-    window 1's output column row-locally, so Catalyst stacks the three
-    Window operators over a single exchange+sort of the log.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    d = ev.withColumn(
-        "t1", F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).over(w)
-    )
-    d = d.withColumn(
-        "t2",
-        F.min(
-            F.when(
-                (F.col("event_type") == "click") & (F.col("ts") >= F.col("t1")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    d = d.withColumn(
-        "t3",
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("ts") >= F.col("t2")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    users = d.groupBy("user_id").agg(
-        F.min("t1").alias("t1"), F.min("t2").alias("t2"), F.min("t3").alias("t3")
-    )
-    return (
-        users.filter(F.col("t1").isNotNull())
-        .groupBy(F.date_format("t1", "yyyy-MM-dd").alias("signup_date"))
-        .agg(
-            F.count(F.lit(1)).alias("n_signed_up"),
-            F.count(F.col("t2")).alias("n_clicked"),
-            F.count(F.col("t3")).alias("n_purchased"),
-        )
-        .orderBy("signup_date")
-    )
-
-
-def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention cohort matrix (SURVEY §2 #69): users grouped by
-    first-seen day, activity counted per day offset — the
-    (cohort × age) triangle every growth dashboard renders.
-
-    First-seen day is one min-window over the user partition; the
-    matrix is one (cohort_day, offset) aggregation with a distinct-user
-    count. No per-cohort self-joins — the log shuffles once by user,
-    once by the (small) matrix key.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    d = (
-        ev.withColumn("day", F.to_date("ts"))
-        .withColumn("cohort_day", F.min(F.to_date("ts")).over(w))
-        .withColumn("offset_days", F.datediff(F.col("day"), F.col("cohort_day")))
-        .filter(F.col("offset_days") <= 7)
-    )
-    return (
-        d.groupBy(
-            F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_day"),
-            "offset_days",
-        )
-        .agg(F.countDistinct("user_id").alias("n_active"))
-        .orderBy("cohort_day", "offset_days")
-    )
-
-
-def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-distribution Shannon entropy (SURVEY §2 #67) —
-    the corpus-diversity metric curation pipelines track alongside
-    quality scores (low entropy flags templated/boilerplate sources).
-
-    H = -sum p ln p over the source's term frequencies: one explode,
-    one (source, term) count, one source-level aggregation. p is a
-    ratio of exact counts (identical doubles both engines); each
-    p·ln p term is cast DECIMAL(18,12) before summing so the total is
-    order-insensitive (see functions/agg.py).
-    """
-    from pyprima_spark.functions.text import tokens_spark
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        "source", F.explode(F.expr(tokens_spark("text"))).alias("term")
-    )
-    tf = terms.groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf"))
-    from pyspark.sql import Window
-
-    tot = F.sum("tf").over(Window.partitionBy("source"))
-    p = F.col("tf") / tot
-    return (
-        tf.withColumn("p", p)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.round(
-                -F.sum((F.col("p") * F.log("p")).cast("decimal(18,12)")).cast(
-                    "double"
-                ),
-                4,
-            ).alias("entropy"),
-        )
-        .orderBy("source")
-    )
-
-
-CURATION_TAU = 0.35  # quality gate; mirrored verbatim in the oracle
-
-
-def curation_flags(spark: SparkSession, sf_dir: str):
-    """Per-document curation stage flags: (frame, kept_final_column).
-
-    The frame carries (doc_id, source, n_tok, text, passq, keptx,
-    component); the returned Column is the final-survivor predicate.
-    Shared by `corpus_curation` (funnel counts) and
-    `pipeline.run_curation` (materializes the curated corpus).
-    """
-    from pyspark.sql import Window
-
-    from pyprima_spark.operators.components import connected_components
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    # Stage boundary: evaluate the (large) quality expression tree ONCE
-    # into a narrow materialized table. Downstream flags reference the
-    # score/hash columns several times (window arg, partition key, flag
-    # conjunctions); without the boundary CollapseProject inlines the
-    # whole tokenize+stopword tree into each reference — measured 3x
-    # the gate cost. In production this boundary is a parquet write.
-    d = (
-        _quality_frame(docs)
-        .select(
-            "doc_id",
-            "source",
-            "n_tok",
-            "text",
-            F.md5("text").alias("h"),
-            (F.col("score") > F.lit(CURATION_TAU)).alias("passq"),
-        )
-        .localCheckpoint()
-    )
-    d = d.withColumn(
-        "keptx",
-        F.col("passq")
-        & (
-            F.col("doc_id")
-            == F.min(F.when(F.col("passq"), F.col("doc_id"))).over(
-                Window.partitionBy("h")
-            )
-        ),
-    )
-    survivors = d.filter("keptx").select("doc_id", "text")
-    pairs = minhash_candidate_pairs(survivors, "doc_id", "text")
-    clusters = connected_components(pairs, "doc_a", "doc_b").withColumnRenamed(
-        "node", "doc_id"
-    )
-    keptn = F.col("keptx") & (
-        F.col("component").isNull() | (F.col("doc_id") == F.col("component"))
-    )
-    return d.join(clusters, "doc_id", "left"), keptn
-
-
-def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-data curation funnel (SURVEY §2 #63):
-    quality gate → exact dedup (md5 keep-min) → MinHash-LSH near-dup
-    cluster dedup — reported as per-source survivor counts and retained
-    tokens. The composition every corpus pipeline runs before
-    tokenization, assembled from the already-oracled stage operators.
-
-    Stage flags are computed in ONE wide per-doc plan (no per-stage
-    re-aggregation): quality is a row-local expression, the exact-dedup
-    winner is a conditional-min window over the md5 partition, and the
-    near-dup winner is a left join against hash-min connected-component
-    labels (operators/components.py) built over survivors only. All
-    outputs are integer counts — nothing float-hashable in the result.
-    """
-    d, keptn = curation_flags(spark, sf_dir)
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_raw"),
-            F.count(F.when(F.col("passq"), 1)).alias("n_quality"),
-            F.count(F.when(F.col("keptx"), 1)).alias("n_exact"),
-            F.count(F.when(keptn, 1)).alias("n_final"),
-            F.coalesce(F.sum(F.when(keptn, F.col("n_tok"))), F.lit(0)).alias(
-                "tokens_final"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-def incident_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-key-free interval join (SURVEY §2 #58): high-value error
-    events open 10-minute incident windows; EVERY event (any user)
-    inside a window is attributed to it. No shared key exists, so the
-    naive plan is a broadcast nested loop — `interval_overlap_join`
-    manufactures a time-bucket equi-key instead (see operators/ranges).
-    """
-    from pyprima_spark.operators.ranges import interval_overlap_join
-
-    ev = _t(spark, sf_dir, "events")
-    incidents = ev.filter(
-        (F.col("event_type") == "error") & (F.col("value") > 195)
-    ).select(
-        F.col("event_id").alias("incident_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("w_end"),
-    )
-    probe = ev.select("event_id", "ts", "user_id", "value")
-    hits = interval_overlap_join(probe, incidents, "ts", "w_start", "w_end", 600)
-    return (
-        hits.groupBy("incident_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            dec_sum("value").alias("sum_value"),
-        )
-        .orderBy("incident_id")
-    )
-
-
-def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duration-weighted mean per entity (SURVEY §2 #59): each event's
-    value holds until the user's next event; the average weights by
-    that holding time. The energy-pipeline staple behind pyPRIMA's
-    full-load-hours math (lib/correction_functions.py FLH series):
-    state values sampled at irregular times, averaged over time, not
-    over samples.
-
-    One window (lead over the per-user timeline) + one aggregation.
-    Dwell times are exact integer microseconds (`unix_micros`), and the
-    weighted sum runs through the decimal path, so the quotient is
-    bit-identical across engines.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    spans = (
-        ev.withColumn("_us", F.unix_micros("ts"))
-        .withColumn("_dwell", F.lead("_us").over(w) - F.col("_us"))
-        .filter(F.col("_dwell").isNotNull())
-    )
-    return (
-        spans.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.round(
-                (
-                    F.sum((F.col("value") * F.col("_dwell")).cast(DEC)).cast("double")
-                    / F.sum(F.col("_dwell")).cast("double")
-                ),
-                6,
-            ).alias("twa_value"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 dimension build (SURVEY §2 #60): the events log compacted
-    into versioned (user, event_type) validity ranges via
-    `scd2_from_log` (operators/scd.py). Open rows close at a sentinel
-    so the output stays one fully-typed string column per boundary.
-    """
-    from pyprima_spark.operators.scd import scd2_from_log
-
-    ev = _t(spark, sf_dir, "events")
-    scd = scd2_from_log(ev, "user_id", "event_type")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return (
-        scd.select(
-            "user_id",
-            "event_type",
-            "version",
-            F.date_format("valid_from", fmt).alias("valid_from"),
-            F.coalesce(
-                F.date_format("valid_to", fmt), F.lit("9999-12-31 00:00:00.000000")
-            ).alias("valid_to"),
-        )
-        .orderBy("user_id", "version")
-    )
-
-
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus TF-IDF keywords (SURVEY §2 #61): top-5 characteristic
-    terms per source. Term frequency aggregates within each source;
-    document frequency is corpus-global; idf = ln(N/df). All JVM-side:
-    one explode of the token array, one aggregation, one term-window
-    for global df, one rank window — the corpus text is scanned once.
-
-    Ranking compares `round(score, 4)`, not the raw double — ln() may
-    differ in the last ulp across engines, and a rank flip would swap
-    whole output rows (the one failure rounding the OUTPUT cannot fix).
-    """
-    from pyprima_spark.functions.text import tokens_spark
-
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    terms = docs.select(
-        "doc_id", "source", F.explode(F.expr(tokens_spark("text"))).alias("term")
-    )
-    # Single-pass tf+df: a doc belongs to exactly ONE source (doc_id is
-    # the documents PK), so global document frequency per term is the
-    # sum of per-(term, source) distinct-doc counts — one aggregation
-    # chain plus a term-window, instead of two independent aggregations
-    # that would each scan and tokenize the corpus text.
-    from pyspark.sql import Window
-
-    per_ts = terms.groupBy("term", "source").agg(
-        F.count(F.lit(1)).alias("tf"),
-        F.countDistinct("doc_id").alias("dfp"),
-    )
-    tf = per_ts.withColumn(
-        "df", F.sum("dfp").over(Window.partitionBy("term"))
-    ).drop("dfp")
-
-    scored = (
-        tf.withColumn(
-            "tfidf",
-            F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 4),
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(
-                    F.desc("tfidf"), F.asc("term")
+from pyprima_spark.plans import (
+    core,
+    round3,
+    round4,
+    round5,
+    round6,
+    round7,
+    round8,
+    round9,
+    tpch_extra,
+)
+from pyprima_spark.plans.core import q1_pricing_summary  # noqa: F401 - __spark_entry__ uses it
+
+PLAN_MODULES = (core, tpch_extra, round3, round4, round5, round6, round7, round8, round9)
+
+
+def merge(named: Iterable[tuple[str, dict]]) -> dict:
+    """Union of ``(owner, dict)`` pairs in order; raises ``ValueError``
+    naming the key and both owners when two dicts share a key."""
+    out: dict = {}
+    owner: dict[str, str] = {}
+    for name, entries in named:
+        for key, value in entries.items():
+            if key in owner:
+                raise ValueError(
+                    f"catalog key {key!r} is defined in both {owner[key]} and {name}"
                 )
-            ),
-        )
-        .filter(F.col("rnk") <= 5)
-    )
-    return scored.select("source", "rnk", "term", "tf", "df", "tfidf").orderBy(
-        "source", "rnk"
-    )
+            owner[key] = name
+            out[key] = value
+    return out
 
 
-def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank (SURVEY §2 #62) over the symmetrized
-    canonical trade-edge graph — importance scoring of network nodes,
-    the principled version of pyPRIMA's connected-capacity node ranking
-    (generate_intermediate_files.py:463-490). 3 synchronous rounds,
-    decimal contribution sums; see operators/graph.py for the scale
-    and determinism story.
-    """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from pyprima_spark.operators.exactmath import bounded_collect
-
-    # The graph is the DIM-BOUNDED nation-pair census (≤ |nations|² =
-    # 625 rows): the fact-sized stage (the 4-way lineitem join inside
-    # _edge_aggregate) stays distributed, and the 3 synchronous rounds
-    # run driver-side on the collected census — the same
-    # census-collect-then-iterate adjudication as the other 13 keys
-    # (SURVEY §7.24a): the former operators/graph.py loop ran ~8 Spark
-    # jobs of join+agg on ≤ 50-row state per call (32 jobs total at
-    # sf0.1; pure scheduler overhead at EVERY scale).  Arithmetic is
-    # replicated bit-for-bit: per-edge contribution = the double
-    # rank/outdeg cast to DECIMAL(18,12) (Spark casts via the shortest
-    # decimal repr — Python's repr() is the same shortest-roundtrip
-    # string — then HALF_UP at scale 12), contributions sum exactly in
-    # Decimal, and the update is the identical IEEE-double
-    # base + 0.85 * double(csum). The final round(rank, 8) stays IN
-    # SPARK over the literal frame so the published rounding is the
-    # engine's own.
-    e_rows = bounded_collect(
-        _edge_aggregate(spark, sf_dir).select("edge_a", "edge_b"),
-        625,
-        "pagerank_nations: nation-pair edge census",
-    )
-    out_nbrs: dict[int, list[int]] = {}
-    for r in e_rows:
-        a, b = r["edge_a"], r["edge_b"]
-        out_nbrs.setdefault(a, []).append(b)
-        out_nbrs.setdefault(b, []).append(a)
-    nodes = sorted(out_nbrs)
-    n = len(nodes)
-    ranks = {v: 1.0 / n for v in nodes}
-    base = (1.0 - 0.85) / n
-    q12 = Decimal(1).scaleb(-12)
-    for _ in range(3):
-        csum = {v: Decimal(0) for v in nodes}
-        got = set()
-        for v in nodes:
-            c = Decimal(repr(ranks[v] / len(out_nbrs[v]))).quantize(
-                q12, rounding=ROUND_HALF_UP
-            )
-            for nbr in out_nbrs[v]:
-                csum[nbr] += c
-                got.add(nbr)
-        ranks = {
-            v: base + 0.85 * (float(csum[v]) if v in got else 0.0)
-            for v in nodes
-        }
-    lit = spark.createDataFrame(
-        [(int(v), ranks[v]) for v in nodes], schema="nationkey int, rank double"
-    )
-    return lit.select(
-        "nationkey", F.round("rank", 8).alias("rank")
-    ).orderBy("nationkey")
-
-
-# ---------------------------------------------------------------------------
-# Registration order is GRADING COVERAGE POLICY: the external driver
-# grades only the FIRST 50 dict keys each round. Keys with no green
-# correctness row yet (never graded, fixed this round, or newly added)
-# must come first; keys already verified green in a previous round go
-# last. Do not insert new keys mid-dict without checking the window.
-# ---------------------------------------------------------------------------
-
-from pyprima_spark.plans.tpch_extra import EXTRA_QUERIES as _EXTRA_QUERIES
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-# The driver grades the FIRST 50 keys only, so insertion order is
-# coverage policy. Round-3 window: the 16 keys never graded in r1/r2,
-# then the 6 red rows from CORRECTNESS_r02 (all fixed this round:
-# TIMESTAMP_NTZ normalization in catalog/streaming, BIGINT casts in the
-# q12/token_count oracles), then new round-3 operators, then rotation.
-
-# Block 1 — never graded in rounds 1-2 (past the 50-key window).
-QUERIES.update(
-    {
-        "point_in_region_grid": point_in_region_grid,
-        "incremental_new_docs_bloom": incremental_new_docs_bloom,
-        "salted_skew_join": salted_skew_join,
-        "purchase_click_attribution": purchase_click_attribution,
-        "incident_window_join": incident_window_join,
-        "time_weighted_avg": time_weighted_avg,
-        "scd2_snapshot": scd2_snapshot,
-        "tfidf_top_terms": tfidf_top_terms,
-        "pagerank_nations": pagerank_nations,
-        "corpus_curation": corpus_curation,
-        "price_histogram": price_histogram,
-        "outlier_mad": outlier_mad,
-        "region_mask_raster": region_mask_raster,
-        "token_entropy": token_entropy,
-        "funnel_conversion": funnel_conversion,
-        "retention_cohorts": retention_cohorts,
-    }
-)
-
-# Block 2 — red in CORRECTNESS_r02, fixed this round; re-grade.
-QUERIES.update(
-    {
-        "q12_priority_lines": _EXTRA_QUERIES["q12_priority_lines"],
-        "asof_join": asof_join,
-        "rolling_user_stats": rolling_user_stats,
-        "token_count": token_count,
-        "streaming_hourly_stats": streaming_hourly_stats,
-        "streaming_sliding_counts": streaming_sliding_counts,
-    }
-)
-
-# Block 3 — new in round 3 (inserted by _register_round3 below).
-
-# Block 4a — changed by the round-3 avg→dec_avg determinism sweep (or,
-# for q17/q22, by the exact scalar threshold); re-grade in the window.
-QUERIES.update(
-    {
-        "q1_pricing_summary": q1_pricing_summary,
-        "interval_binning": interval_binning,
-        "point_in_region": point_in_region,
-        "json_props_stats": json_props_stats,
-        "value_percentiles": value_percentiles,
-        "zonal_stats": zonal_stats,
-        "grid_downsample": grid_downsample,
-        "nearest_site": nearest_site,
-        "label_centroids": label_centroids,
-        "q17_small_quantity": _EXTRA_QUERIES["q17_small_quantity"],
-        "q22_inactive_customers": _EXTRA_QUERIES["q22_inactive_customers"],
-    }
-)
-
-# Block 4b — last green row dates from round 1; refresh while slots last.
-# (expand_multivalue leads: its dec_avg change still needs a re-grade
-# once the window rotates past the round-3 additions.)
-QUERIES.update(
-    {
-        "expand_multivalue": expand_multivalue,
-        "recode_group": recode_group,
-        "shares_normalize": shares_normalize,
-        "pivot_wide": pivot_wide,
-        "unpivot_long": unpivot_long,
-        "dedup_names": dedup_names,
-        "ffill_impute": ffill_impute,
-        "clean_names_ascii": clean_names_ascii,
-        "calendar_enrich": calendar_enrich,
-    }
-)
-
-# Block 5 — rotation: previously-green keys past the window (dict update
-# keeps first-insertion order, so re-updating an existing key does not
-# move it).
-QUERIES.update(_EXTRA_QUERIES)  # TPC-H q2..q22 adaptations
-QUERIES.update(
-    {
-        "sessionize": sessionize,
-        "streaming_sessions": streaming_sessions,
-        "lang_id": lang_id,
-        "quality_score": quality_score,
-        "multimodal_decode": multimodal_decode,
-        "multimodal_frames": multimodal_frames,
-        "multimodal_audio": multimodal_audio,
-        "mode_impute": mode_impute,
-        "gap_fill_trend": gap_fill_trend,
-        "flh_pivot": flh_pivot,
-        "profile_normalize": profile_normalize,
-        "resample_hourly": resample_hourly,
-        "export_demand_matrix": export_demand_matrix,
-        "json_props_stats": json_props_stats,
-        "latest_snapshot": latest_snapshot,
-        "value_percentiles": value_percentiles,
-        "canonical_edges": canonical_edges,
-        "neighbor_expansion": neighbor_expansion,
-        "transmission_attrs": transmission_attrs,
-        "ann_ivf": ann_ivf,
-        "embedding_dedup": embedding_dedup,
-        "region_overlap_disaggregate": region_overlap_disaggregate,
-        "grid_upsample": grid_upsample,
-        "capped_distribution": capped_distribution,
-        "supply_ts_assembly": supply_ts_assembly,
-        "ngram_jaccard": ngram_jaccard,
-        "weighted_disaggregate": weighted_disaggregate,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_local_supplier": q5_local_supplier,
-        "recode_group": recode_group,
-        "shares_normalize": shares_normalize,
-        "pivot_wide": pivot_wide,
-        "unpivot_long": unpivot_long,
-        "expand_multivalue": expand_multivalue,
-        "dedup_names": dedup_names,
-        "interval_binning": interval_binning,
-        "ffill_impute": ffill_impute,
-        "clean_names_ascii": clean_names_ascii,
-        "calendar_enrich": calendar_enrich,
-        "cohort_rollup": cohort_rollup,
-        "expansion_grid": expansion_grid,
-        "dedup_exact": dedup_exact,
-        "dedup_fingerprint": dedup_fingerprint,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "dedup_simhash": dedup_simhash,
-        "zonal_stats": zonal_stats,
-        "nearest_site": nearest_site,
-        "grid_downsample": grid_downsample,
-        "incremental_new_docs": incremental_new_docs,
-        "cross_source_overlap": cross_source_overlap,
-        "label_centroids": label_centroids,
-        "dedup_clusters": dedup_clusters,
-        "rollup_sales": rollup_sales,
-        "cube_sales": cube_sales,
-        "point_in_region": point_in_region,
-        "winnow_fingerprints": winnow_fingerprints,
-        "quality_topk_per_source": quality_topk_per_source,
-        "deterministic_sample": deterministic_sample,
-        "ann_topk": ann_topk,
-        "ann_lsh": ann_lsh,
-    }
-)
-
-
-def _register_rounds() -> None:
-    """Register the round-3 / round-4 operator modules.
-
-    Ordering is irrelevant here — ``_order_grading_window`` below rebuilds
-    the dict so the driver's grading window (the FIRST ``_WINDOW_SIZE``
-    keys in insertion order) is exactly the intended re-grade set.
-    """
-    from pyprima_spark.plans.round3 import ROUND3_QUERIES
-    from pyprima_spark.plans.round4 import ROUND4_LATE_QUERIES, ROUND4_QUERIES
-    from pyprima_spark.plans.round5 import ROUND5_QUERIES
-
-    QUERIES.update(ROUND3_QUERIES)
-    QUERIES.update(ROUND4_QUERIES)
-    # Late round-4 keys: implemented after the 50-slot window filled;
-    # ordered BEHIND the window (first in line for the round-5 window).
-    QUERIES.update(ROUND4_LATE_QUERIES)
-    # Round-5 additions: behind the round-4 window, after the late keys.
-    QUERIES.update(ROUND5_QUERIES)
-    # Round-6 additions: last in rotation order (newest, least graded).
-    from pyprima_spark.plans.round6 import ROUND6_QUERIES
-
-    QUERIES.update(ROUND6_QUERIES)
-    # Round-7 additions: behind the round-6 batch.
-    from pyprima_spark.plans.round7 import ROUND7_QUERIES
-
-    QUERIES.update(ROUND7_QUERIES)
-    # Round-8 additions: newest, last in rotation order.
-    from pyprima_spark.plans.round8 import ROUND8_QUERIES
-
-    QUERIES.update(ROUND8_QUERIES)
-    # Round-9 additions (the driver-gated format/pipeline closures).
-    from pyprima_spark.plans.round9 import ROUND9_QUERIES
-
-    QUERIES.update(ROUND9_QUERIES)
-
-
-_WINDOW_SIZE = 50
-
-# Round-10 window (VERDICT r9 item 1 / SURVEY §7.24, as amended by
-# §7.24a): (1) the EIGHT keys whose bodies changed in round 9 after
-# their last driver row — the equal-area amendment, the ppjoin core
-# extraction, the four census-collect-then-iterate rewrites with prior
-# driver rows, and the dec_avg_exact half-ulp tie fix pair; (2) then 42
-# never-driver-graded keys oldest-first per the §7.24 list. The
-# remaining 9 never-graded keys (page_trend_test,
-# indirect_standardization, dissimilarity_index, local_morans_hotspots,
-# arc_elasticity, rescaled_range_census, allan_variance,
-# price_index_bias, birthday_collision_audit) finish in round 11.
-# Exact-size asserted below so a drive-by key insertion can't silently
-# evict a planned regrade.
-_R10_WINDOW = [
-    # (1) bodies changed since their last driver row
-    "region_overlap_disaggregate",  # equal-area spherical weighting (r9)
-    "ppjoin_similarity",            # _ppjoin_over core extraction (r9)
-    "graph_modularity",             # census-collect rewrite (§7.24a)
-    "markov_attribution",           # census-collect rewrite (§7.24a)
-    "label_propagation",            # census-collect rewrite (§7.24a)
-    "weighted_shortest_path",       # census-collect rewrite (§7.24a)
-    "point_in_region",              # dec_avg_exact half-ulp tie fix
-    "point_in_region_grid",         # dec_avg_exact half-ulp tie fix
-    # (2) never-driver-graded, oldest-first (SURVEY §7.24 order)
+# Only the first 50 keys are graded: the ones CORRECTNESS_r1{0,1}.json record.
+GRADING_WINDOW = (
+    "region_overlap_disaggregate",
+    "ppjoin_similarity",
+    "graph_modularity",
+    "markov_attribution",
+    "label_propagation",
+    "weighted_shortest_path",
+    "point_in_region",
+    "point_in_region_grid",
     "decision_stump_1r",
     "ab_power_analysis",
     "iv_wald_estimate",
@@ -2744,26 +96,12 @@ _R10_WINDOW = [
     "mcnemar_test",
     "cochran_q_test",
     "friedman_test",
-]
+)
 
+_merged = merge((m.__name__, m.QUERIES) for m in PLAN_MODULES)
+assert len(GRADING_WINDOW) == 50 and set(GRADING_WINDOW) <= _merged.keys()
 
-def _order_grading_window() -> None:
-    """Rebuild QUERIES so the first ``_WINDOW_SIZE`` keys are exactly
-    ``_R10_WINDOW``. Everything else keeps its current relative order
-    after the window. Asserts (rather than comments — see ADVICE r3 on
-    the fragile round-3 splice) that the list is exactly window-sized
-    and fully registered."""
-    missing = [k for k in _R10_WINDOW if k not in QUERIES]
-    assert not missing, f"grading-window keys not registered: {missing}"
-    assert len(_R10_WINDOW) == _WINDOW_SIZE, (
-        f"window has {len(_R10_WINDOW)} keys; driver grades {_WINDOW_SIZE}"
-    )
-    rest = dict(QUERIES)
-    QUERIES.clear()
-    for key in _R10_WINDOW:
-        QUERIES[key] = rest.pop(key)
-    QUERIES.update(rest)
-
-
-_register_rounds()
-_order_grading_window()
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    key: _merged[key] for key in GRADING_WINDOW
+}
+QUERIES.update(_merged)

@@ -1,13 +1,10 @@
 """Round-3 operators: training-corpus signals, sequence analytics, and
 data-layout / ops tooling.
 
-Each query has an exact-match DuckDB oracle in ``ROUND3_ORACLES``.
+Each query has an exact-match DuckDB oracle in ``ORACLES``.
 Determinism rules follow functions/agg.py: integer arithmetic wherever
 possible, DECIMAL sums for doubles, single correctly-rounded double
 divisions (identical across engines), rounding only at the output edge.
-
-Self-contained on purpose (imports catalog, not plans.queries) so
-plans.oracles can import this module without a circular chain.
 """
 
 from __future__ import annotations
@@ -15,15 +12,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
-from pyprima_spark.functions.text import tokens_duck, tokens_spark
+from pyprima_spark.functions import text as X
+from pyprima_spark.functions.agg import DEC
+from pyprima_spark.functions.text import (
+    hash64_duck,
+    hash64_spark,
+    normtext_duck,
+    normtext_spark,
+    tokens_duck,
+    tokens_spark,
+)
+from pyprima_spark.plans.core import _t
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND3_ORACLES: dict[str, str] = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +87,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["doc_repetition"] = f"""
+ORACLES["doc_repetition"] = f"""
 WITH base AS (SELECT doc_id, {tokens_duck('text')} AS t FROM documents),
 a AS (
   SELECT doc_id, len(t) AS n_tok,
@@ -145,7 +147,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["event_transitions"] = """
+ORACLES["event_transitions"] = """
 WITH pairs AS (
   SELECT event_type AS src,
          lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -194,7 +196,7 @@ def sliding_7d_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["sliding_7d_actives"] = """
+ORACLES["sliding_7d_actives"] = """
 WITH du AS (
   SELECT DISTINCT user_id, cast(date_trunc('day', ts) AS DATE) AS day
   FROM events
@@ -255,7 +257,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b).orderBy("key")
 
 
-ROUND3_ORACLES["key_skew_profile"] = """
+ORACLES["key_skew_profile"] = """
 WITH lc AS (SELECT count(*) AS cnt FROM lineitem GROUP BY l_suppkey),
 oc AS (SELECT count(*) AS cnt FROM orders GROUP BY o_custkey),
 a AS (
@@ -326,7 +328,6 @@ def ntile_features_census(j: DataFrame) -> DataFrame:
     o_totalprice, o_orderkey) frame — separated so
     tools/stress_probe.py can measure the broadcast percentile-cut
     plan on replicated orders."""
-    from pyprima_spark.functions import text as X
 
     qs = [i / _NTILE_BUCKETS for i in range(1, _NTILE_BUCKETS)]
     gate = F.expr(X.hash64_spark("cast(o_orderkey as string)")) % 100 < 4
@@ -370,8 +371,6 @@ def ntile_features_census(j: DataFrame) -> DataFrame:
 
 
 def _ntile_features_oracle() -> str:
-    from pyprima_spark.functions import text as X
-
     qs = [i / _NTILE_BUCKETS for i in range(1, _NTILE_BUCKETS)]
     bound_cols = ", ".join(
         f"quantile_disc(o_totalprice, {q}) AS b{i}"
@@ -412,7 +411,7 @@ FROM bucketed GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-ROUND3_ORACLES["ntile_features"] = _ntile_features_oracle()
+ORACLES["ntile_features"] = _ntile_features_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -453,7 +452,7 @@ def churn_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["churn_setops"] = """
+ORACLES["churn_setops"] = """
 WITH y94 AS (
   SELECT DISTINCT o_custkey FROM orders
   WHERE o_orderdate >= TIMESTAMP '1995-01-01'
@@ -527,7 +526,7 @@ def morton_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["morton_tiles"] = f"""
+ORACLES["morton_tiles"] = f"""
 WITH pix AS (
   SELECT cast(i // 360 AS INT) AS latidx, cast(i % 360 AS INT) AS lonidx,
          (cast(i // 360 AS INT) * 31 + cast(i % 360 AS INT) * 17) % 97 AS val
@@ -591,7 +590,7 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["ewma_user_value"] = """
+ORACLES["ewma_user_value"] = """
 WITH p AS (
   SELECT user_id, ts, event_id,
          cast(round(value * 100) AS BIGINT) AS cents,
@@ -628,7 +627,6 @@ def grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     x is seconds since the group's first event (window min shares the
     groupBy's exchange), keeping x^2 within DECIMAL(27,6) headroom.
     """
-    from pyprima_spark.functions.agg import DEC
 
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")
@@ -662,7 +660,7 @@ def grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-ROUND3_ORACLES["grouped_regression"] = """
+ORACLES["grouped_regression"] = """
 WITH base AS (
   SELECT event_type, value AS y,
          (epoch_us(ts) - min(epoch_us(ts)) OVER (PARTITION BY event_type))
@@ -735,7 +733,7 @@ def seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["seasonal_profile"] = """
+ORACLES["seasonal_profile"] = """
 WITH g AS (
   SELECT event_type, dayofweek(ts) + 1 AS dow, hour(ts) AS hod,
          count(*) AS n,
@@ -759,7 +757,6 @@ def daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, so the whole screen is two shuffles: one on (type, day),
     one on type. The z comparison happens on deterministic doubles.
     """
-    from pyprima_spark.functions.agg import DEC
 
     ev = _t(spark, sf_dir, "events")
     daily = (
@@ -788,7 +785,7 @@ def daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["daily_anomaly"] = """
+ORACLES["daily_anomaly"] = """
 WITH daily AS (
   SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
          round(sum(CAST(value AS DECIMAL(27,6))), 6)::DOUBLE AS total
@@ -822,7 +819,6 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg). The split every training pipeline needs to be stable under
     re-ingestion.
     """
-    from pyprima_spark.functions.text import hash64_spark
 
     docs = _t(spark, sf_dir, "documents")
     h = F.expr(hash64_spark("cast(doc_id as string) || ':split'")) % 100
@@ -843,12 +839,10 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hash64_duck_split() -> str:
-    from pyprima_spark.functions.text import hash64_duck
-
     return hash64_duck("cast(doc_id as varchar) || ':split'")
 
 
-ROUND3_ORACLES["sample_split"] = f"""
+ORACLES["sample_split"] = f"""
 WITH s AS (
   SELECT *, CASE WHEN {_hash64_duck_split()} % 100 < 80 THEN 'train'
                  WHEN {_hash64_duck_split()} % 100 < 90 THEN 'val'
@@ -859,59 +853,6 @@ SELECT source, split, count(*) AS n_docs,
        cast(sum(n_chars) AS BIGINT) AS total_chars,
        min(doc_id) AS min_doc, max(doc_id) AS max_doc
 FROM s GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-# ---------------------------------------------------------------------------
-# fuzzy_name_match — blocked Levenshtein entity resolution
-# ---------------------------------------------------------------------------
-
-def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-identical part names by edit distance, with blocking: the
-    quadratic Levenshtein only runs inside (first-letter, length-band)
-    blocks — the standard entity-resolution layout that keeps the
-    candidate join an equi-join at any scale (same family as the LSH
-    band joins in operators/dedup.py). Oracle applies the identical
-    blocking, so semantics are the blocked ones on both sides.
-    """
-    part = _t(spark, sf_dir, "part")
-    names = (
-        part.select(F.col("p_name").alias("name"))
-        .distinct()
-        .withColumn("blk_c", F.substring("name", 1, 1))
-        .withColumn("blk_l", F.expr("length(name) div 3"))
-    )
-    a = names.alias("a")
-    b = names.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk_c") == F.col("b.blk_c"))
-            & (F.col("a.blk_l") == F.col("b.blk_l"))
-            & (F.col("a.name") < F.col("b.name")),
-        )
-        .select(
-            F.col("a.name").alias("name_a"),
-            F.col("b.name").alias("name_b"),
-            F.levenshtein("a.name", "b.name").alias("lev"),
-        )
-        .filter(F.col("lev") <= 3)
-        .orderBy("name_a", "name_b")
-    )
-
-
-ROUND3_ORACLES["fuzzy_name_match"] = """
-WITH names AS (
-  SELECT DISTINCT p_name AS name, substring(p_name, 1, 1) AS blk_c,
-         length(p_name) // 3 AS blk_l
-  FROM part
-)
-SELECT a.name AS name_a, b.name AS name_b,
-       levenshtein(a.name, b.name) AS lev
-FROM names a JOIN names b
-  ON a.blk_c = b.blk_c AND a.blk_l = b.blk_l AND a.name < b.name
-WHERE levenshtein(a.name, b.name) <= 3
-ORDER BY 1, 2
 """
 
 
@@ -931,7 +872,6 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size. doc_id div 100 stands in for the
     ingestion-batch id of the test corpus.
     """
-    from pyprima_spark.functions.text import normtext_spark
 
     docs = _t(spark, sf_dir, "documents")
     fp = docs.select(
@@ -960,8 +900,6 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_oracle() -> str:
-    from pyprima_spark.functions.text import normtext_duck
-
     return f"""
 WITH fp AS (
   SELECT DISTINCT cast(doc_id // 100 AS INT) AS batch,
@@ -981,7 +919,7 @@ ORDER BY p.batch
 """
 
 
-ROUND3_ORACLES["corpus_novelty"] = _novelty_oracle()
+ORACLES["corpus_novelty"] = _novelty_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1006,7 +944,7 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["quantile_normalize"] = """
+ORACLES["quantile_normalize"] = """
 SELECT event_id, event_type, value,
        round(percent_rank() OVER (PARTITION BY event_type ORDER BY value), 6)
          AS pr
@@ -1083,7 +1021,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("column_name")
 
 
-ROUND3_ORACLES["table_profile"] = """
+ORACLES["table_profile"] = """
 SELECT 'o_custkey' AS column_name, count(o_custkey) AS n_nonnull,
        count(DISTINCT o_custkey) AS n_distinct,
        cast(min(o_custkey) AS DOUBLE) AS min_num,
@@ -1190,7 +1128,7 @@ def grid_upsample_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND3_ORACLES["grid_upsample_bilinear"] = f"""
+ORACLES["grid_upsample_bilinear"] = f"""
 WITH src AS (
   SELECT cast(i // {_BI_W} AS INT) AS y, cast(i % {_BI_W} AS INT) AS x,
          (cast(i // {_BI_W} AS INT) * 31 + cast(i % {_BI_W} AS INT) * 17) % 97 AS v
@@ -1224,7 +1162,7 @@ FROM agg ORDER BY oi, oj
 """
 
 
-ROUND3_QUERIES = {
+QUERIES = {
     "doc_repetition": doc_repetition,
     "event_transitions": event_transitions,
     "sliding_7d_actives": sliding_7d_actives,
@@ -1237,7 +1175,6 @@ ROUND3_QUERIES = {
     "seasonal_profile": seasonal_profile,
     "daily_anomaly": daily_anomaly,
     "sample_split": sample_split,
-    "fuzzy_name_match": fuzzy_name_match,
     "table_profile": table_profile,
     "corpus_novelty": corpus_novelty,
     "quantile_normalize": quantile_normalize,

@@ -1,14 +1,11 @@
 """Round-4 operators: raster reclassification, model-file export bundle,
 approximate table statistics, and further corpus / analytics coverage.
 
-Each query has an exact-match DuckDB oracle in ``ROUND4_ORACLES`` (keys
+Each query has an exact-match DuckDB oracle in ``ORACLES`` (keys
 without one fall back to the driver's rows-only check). Determinism rules
 follow functions/agg.py: integer arithmetic wherever possible, DECIMAL
 sums for doubles, single correctly-rounded double divisions, rounding
 only at the output edge.
-
-Self-contained on purpose (imports catalog, not plans.queries) so
-plans.oracles can import this module without a circular chain.
 """
 
 from __future__ import annotations
@@ -16,20 +13,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
-from pyprima_spark.functions.agg import dec_sum
+from pyprima_spark.functions import text as X, vectors as V
+from pyprima_spark.functions.agg import dec_avg, dec_sum
+from pyprima_spark.functions.geo import haversine_km, haversine_km_sql
+from pyprima_spark.functions.text import tokens_duck, tokens_spark
+from pyprima_spark.operators.checkpointing import materialize
+from pyprima_spark.operators.dedup import (
+    gram_set_sizes,
+    minhash_band_table,
+    ngram_gram_table,
+)
+from pyprima_spark.operators.edges import canonicalize_edges
+from pyprima_spark.operators.spatial import point_in_box_join
+from pyprima_spark.plans.constants import ANN_N_QUERIES
+from pyprima_spark.plans.core import _MINHASH_BANDS_CTE, _t
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND4_QUERIES: dict = {}
-ROUND4_ORACLES: dict[str, str] = {}
-
-# Keys added after the round-4 grading window filled (the driver grades
-# 50/round); registered BEHIND the window, queued first for round 5.
-ROUND4_LATE_QUERIES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -94,7 +95,6 @@ def landuse_reclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("n_nationkey") * 11 % 60) * 6 - 180).alias("lon_min"),
         ((F.col("n_nationkey") * 11 % 60) * 6 - 180 + 72).alias("lon_max"),
     )
-    from pyprima_spark.operators.spatial import point_in_box_join
 
     reclassed = pix.join(F.broadcast(lut), "lu_class")
     return (
@@ -110,7 +110,7 @@ def landuse_reclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LU_VALUES_SQL = ", ".join(f"({c}, '{cat}', {s})" for c, cat, s in _LU_RECLASS)
 
-ROUND4_ORACLES["landuse_reclass"] = f"""
+ORACLES["landuse_reclass"] = f"""
 WITH pix AS (
   SELECT (cast(id // 360 AS INT) - 80 + 0.5) AS lat,
          (cast(id % 360 AS INT) - 180 + 0.5) AS lon,
@@ -134,7 +134,7 @@ GROUP BY n_name, category
 ORDER BY n_name, category
 """
 
-ROUND4_QUERIES["landuse_reclass"] = landuse_reclass
+QUERIES["landuse_reclass"] = landuse_reclass
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +214,7 @@ def protected_areas_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PA_VALUES_SQL = ", ".join(f"('{c}', {r})" for c, r in _PA_RANKS)
 _PA_CAT_ARRAY_SQL = "[" + ", ".join(f"'{c}'" for c, _ in _PA_RANKS) + "]"
 
-ROUND4_ORACLES["protected_areas_raster"] = f"""
+ORACLES["protected_areas_raster"] = f"""
 WITH cats(iucn_cat, rank) AS (VALUES {_PA_VALUES_SQL}),
 feats AS (
   SELECT (n_nationkey * 3 % 28) * 5 - 70 AS lat_min,
@@ -240,7 +240,7 @@ SELECT protection, count(*) AS n_cells
 FROM burned GROUP BY protection ORDER BY protection
 """
 
-ROUND4_QUERIES["protected_areas_raster"] = protected_areas_raster
+QUERIES["protected_areas_raster"] = protected_areas_raster
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +274,6 @@ def model_export_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     supp = _t(spark, sf_dir, "supplier")
     ev = _t(spark, sf_dir, "events")
-    from pyprima_spark.functions.agg import dec_avg
 
     null_s = F.lit(None).cast("string")
     null_i = F.lit(None).cast("int")
@@ -372,7 +371,7 @@ def model_export_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["model_export_bundle"] = """
+ORACLES["model_export_bundle"] = """
 WITH hourly AS (
   SELECT n_name AS site, hour(ts) AS t,
          sum(CAST(value AS DECIMAL(27,6))) AS hsum
@@ -414,7 +413,7 @@ SELECT * FROM (
 ORDER BY sheet, site NULLS FIRST, item NULLS FIRST, t NULLS FIRST, attr
 """
 
-ROUND4_QUERIES["model_export_bundle"] = model_export_bundle
+QUERIES["model_export_bundle"] = model_export_bundle
 
 
 # ---------------------------------------------------------------------------
@@ -485,7 +484,7 @@ def table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("column_name")
 
 
-ROUND4_ORACLES["table_profile_approx"] = """
+ORACLES["table_profile_approx"] = """
 SELECT 'o_custkey' AS column_name,
        count(DISTINCT o_custkey) AS n_distinct,
        abs(approx_count_distinct(o_custkey) - count(DISTINCT o_custkey))
@@ -509,7 +508,7 @@ FROM orders
 ORDER BY column_name
 """
 
-ROUND4_QUERIES["table_profile_approx"] = table_profile_approx
+QUERIES["table_profile_approx"] = table_profile_approx
 
 
 # ---------------------------------------------------------------------------
@@ -535,8 +534,6 @@ def bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL before the cross-term sum (double addition is
     order-dependent; token_entropy precedent).
     """
-    from pyprima_spark.functions.text import tokens_spark
-    from pyprima_spark.operators.checkpointing import materialize
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(tokens_spark("text")).alias("toks")
@@ -599,8 +596,6 @@ def bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_oracle() -> str:
-    from pyprima_spark.functions.text import tokens_duck
-
     terms_sql = ", ".join(f"('{t}')" for t in _BM25_TERMS)
     return f"""
 WITH docs AS (
@@ -639,8 +634,8 @@ ORDER BY rank
 """
 
 
-ROUND4_ORACLES["bm25_ranking"] = _bm25_oracle()
-ROUND4_QUERIES["bm25_ranking"] = bm25_ranking
+ORACLES["bm25_ranking"] = _bm25_oracle()
+QUERIES["bm25_ranking"] = bm25_ranking
 
 
 # ---------------------------------------------------------------------------
@@ -702,7 +697,7 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["pii_scan"] = f"""
+ORACLES["pii_scan"] = f"""
 WITH planted AS (
   SELECT source,
          text
@@ -728,7 +723,7 @@ SELECT source,
 FROM counted GROUP BY source ORDER BY source
 """
 
-ROUND4_QUERIES["pii_scan"] = pii_scan
+QUERIES["pii_scan"] = pii_scan
 
 
 # ---------------------------------------------------------------------------
@@ -745,7 +740,6 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition top-k heaps, no full sort). Ties break on the token
     string for determinism.
     """
-    from pyprima_spark.functions.text import tokens_spark
 
     docs = _t(spark, sf_dir, "documents")
     return (
@@ -758,8 +752,6 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _heavy_hitters_oracle() -> str:
-    from pyprima_spark.functions.text import tokens_duck
-
     return f"""
 SELECT token, count(*) AS n
 FROM (SELECT unnest({tokens_duck('text')}) AS token FROM documents)
@@ -769,8 +761,8 @@ LIMIT 20
 """
 
 
-ROUND4_ORACLES["heavy_hitters"] = _heavy_hitters_oracle()
-ROUND4_QUERIES["heavy_hitters"] = heavy_hitters
+ORACLES["heavy_hitters"] = _heavy_hitters_oracle()
+QUERIES["heavy_hitters"] = heavy_hitters
 
 
 # ---------------------------------------------------------------------------
@@ -789,7 +781,6 @@ def knn_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine 1-ulp territory; ranking on the rounded value is the
     stable contract, nearest_site precedent).
     """
-    from pyprima_spark.functions.geo import haversine_km
 
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -817,8 +808,6 @@ def knn_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_oracle() -> str:
-    from pyprima_spark.functions.geo import haversine_km_sql
-
     hav = haversine_km_sql("lat", "lon", "slat", "slon")
     return f"""
 WITH pts AS (
@@ -844,8 +833,8 @@ ORDER BY c_custkey, rn
 """
 
 
-ROUND4_ORACLES["knn_sites"] = _knn_oracle()
-ROUND4_QUERIES["knn_sites"] = knn_sites
+ORACLES["knn_sites"] = _knn_oracle()
+QUERIES["knn_sites"] = knn_sites
 
 
 # ---------------------------------------------------------------------------
@@ -870,9 +859,6 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §6). PMI's ln() runs once per surviving pair on integer
     counts; rounded at the output edge.
     """
-    from pyprima_spark.functions.text import tokens_spark
-
-    from pyprima_spark.operators.checkpointing import materialize
 
     docs = _t(spark, sf_dir, "documents")
     n_docs_df = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -927,8 +913,6 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pmi_oracle() -> str:
-    from pyprima_spark.functions.text import tokens_duck
-
     return f"""
 WITH tok AS (
   SELECT DISTINCT doc_id, unnest({tokens_duck('text')}) AS term
@@ -959,8 +943,8 @@ ORDER BY rank
 """
 
 
-ROUND4_ORACLES["cooccurrence_pmi"] = _pmi_oracle()
-ROUND4_QUERIES["cooccurrence_pmi"] = cooccurrence_pmi
+ORACLES["cooccurrence_pmi"] = _pmi_oracle()
+QUERIES["cooccurrence_pmi"] = cooccurrence_pmi
 
 
 # ---------------------------------------------------------------------------
@@ -971,7 +955,6 @@ def _canonical_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct canonical (a < b) nation-pair edges of the trade graph —
     the same edge semantics as canonical_edges (util.py:139-155
     reverse_lines + the grouped line table), weights dropped."""
-    from pyprima_spark.operators.edges import canonicalize_edges
 
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -1058,7 +1041,7 @@ def degree_triangle_census(edges: DataFrame) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["graph_degree_triangles"] = """
+ORACLES["graph_degree_triangles"] = """
 WITH pairs AS (
   SELECT least(c_nationkey, s_nationkey)    AS edge_a,
          greatest(c_nationkey, s_nationkey) AS edge_b
@@ -1099,7 +1082,7 @@ FROM deg LEFT JOIN tri_per_node ON deg.node = tri_per_node.node
 ORDER BY nationkey
 """
 
-ROUND4_QUERIES["graph_degree_triangles"] = graph_degree_triangles
+QUERIES["graph_degree_triangles"] = graph_degree_triangles
 
 
 # ---------------------------------------------------------------------------
@@ -1128,7 +1111,6 @@ def range_partition_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     even. The 7-bound row is a 1-row broadcast; bucket assignment is a
     row-local CASE, and the census is one map-combined aggregation.
     """
-    from pyprima_spark.functions import text as X
 
     orders = _t(spark, sf_dir, "orders")
     qs = [i / _RPB_BUCKETS for i in range(1, _RPB_BUCKETS)]
@@ -1159,8 +1141,6 @@ def range_partition_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rpb_oracle() -> str:
-    from pyprima_spark.functions import text as X
-
     qs = [i / _RPB_BUCKETS for i in range(1, _RPB_BUCKETS)]
     bound_cols = ", ".join(
         f"quantile_disc(o_totalprice, {q}) AS b{i}"
@@ -1187,8 +1167,8 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-ROUND4_ORACLES["range_partition_bounds"] = _rpb_oracle()
-ROUND4_QUERIES["range_partition_bounds"] = range_partition_bounds
+ORACLES["range_partition_bounds"] = _rpb_oracle()
+QUERIES["range_partition_bounds"] = range_partition_bounds
 
 
 # ---------------------------------------------------------------------------
@@ -1218,7 +1198,7 @@ def percent_change_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority", "month")
 
 
-ROUND4_ORACLES["percent_change_mom"] = """
+ORACLES["percent_change_mom"] = """
 WITH monthly AS (
   SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS month,
          round(sum(CAST(o_totalprice AS DECIMAL(27,6))), 2)::DOUBLE AS total
@@ -1232,7 +1212,7 @@ WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month)
 ORDER BY o_orderpriority, month
 """
 
-ROUND4_QUERIES["percent_change_mom"] = percent_change_mom
+QUERIES["percent_change_mom"] = percent_change_mom
 
 
 # ---------------------------------------------------------------------------
@@ -1262,7 +1242,6 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency cutoff is the only (and sufficient) fanout bound. Gram
     table materialized once ahead of its self-join (SURVEY §6).
     """
-    from pyprima_spark.operators.dedup import gram_set_sizes, ngram_gram_table
 
     docs = _t(spark, sf_dir, "documents")
     grams = ngram_gram_table(
@@ -1294,8 +1273,6 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_oracle() -> str:
-    from pyprima_spark.functions import text as X
-
     return f"""
 WITH docs AS (
   SELECT doc_id, source,
@@ -1330,8 +1307,8 @@ ORDER BY doc_a, doc_b
 """
 
 
-ROUND4_ORACLES["ngram_containment"] = _containment_oracle()
-ROUND4_QUERIES["ngram_containment"] = ngram_containment
+ORACLES["ngram_containment"] = _containment_oracle()
+QUERIES["ngram_containment"] = ngram_containment
 
 
 # ---------------------------------------------------------------------------
@@ -1382,7 +1359,7 @@ def vector_quantize_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["vector_quantize_sq"] = """
+ORACLES["vector_quantize_sq"] = """
 WITH long AS (
   SELECT vec_id, label, CAST(i AS INT) AS dim,
          CAST(embedding[i + 1] AS DOUBLE) AS v
@@ -1401,7 +1378,7 @@ SELECT label, count(*) AS n_elems,
 FROM quant GROUP BY label ORDER BY label
 """
 
-ROUND4_QUERIES["vector_quantize_sq"] = vector_quantize_sq
+QUERIES["vector_quantize_sq"] = vector_quantize_sq
 
 
 # ---------------------------------------------------------------------------
@@ -1446,7 +1423,7 @@ def event_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["event_gap_stats"] = """
+ORACLES["event_gap_stats"] = """
 WITH gaps AS (
   SELECT event_type,
          epoch_us(ts) - lag(epoch_us(ts)) OVER (
@@ -1462,7 +1439,7 @@ FROM gaps WHERE gap_us IS NOT NULL
 GROUP BY event_type ORDER BY event_type
 """
 
-ROUND4_QUERIES["event_gap_stats"] = event_gap_stats
+QUERIES["event_gap_stats"] = event_gap_stats
 
 
 # ---------------------------------------------------------------------------
@@ -1535,8 +1512,8 @@ FROM sums ORDER BY source
 """
 
 
-ROUND4_ORACLES["charset_stats"] = _charset_oracle()
-ROUND4_QUERIES["charset_stats"] = charset_stats
+ORACLES["charset_stats"] = _charset_oracle()
+QUERIES["charset_stats"] = charset_stats
 
 
 # ---------------------------------------------------------------------------
@@ -1587,7 +1564,7 @@ def running_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["running_inventory"] = """
+ORACLES["running_inventory"] = """
 WITH signed AS (
   SELECT l_partkey, l_shipdate, l_orderkey, l_linenumber,
          CAST(CASE WHEN l_returnflag = 'R' THEN l_quantity
@@ -1609,7 +1586,7 @@ SELECT l_partkey, count(*) AS n_moves,
 FROM run GROUP BY l_partkey ORDER BY l_partkey
 """
 
-ROUND4_QUERIES["running_inventory"] = running_inventory
+QUERIES["running_inventory"] = running_inventory
 
 
 # ---------------------------------------------------------------------------
@@ -1656,7 +1633,7 @@ def order_cycle_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["order_cycle_time"] = """
+ORACLES["order_cycle_time"] = """
 WITH per_order AS (
   SELECT o_orderpriority,
          date_diff('day', CAST(o_orderdate AS DATE),
@@ -1671,7 +1648,7 @@ SELECT o_orderpriority, count(*) AS n_orders,
 FROM per_order GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
-ROUND4_QUERIES["order_cycle_time"] = order_cycle_time
+QUERIES["order_cycle_time"] = order_cycle_time
 
 
 # ---------------------------------------------------------------------------
@@ -1728,7 +1705,7 @@ def golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("fingerprint")
 
 
-ROUND4_ORACLES["golden_record"] = """
+ORACLES["golden_record"] = """
 WITH fp AS (
   SELECT doc_id, source, n_chars,
          md5(substr(trim(regexp_replace(regexp_replace(lower(text),
@@ -1752,7 +1729,7 @@ HAVING count(*) >= 2
 ORDER BY fingerprint
 """
 
-ROUND4_QUERIES["golden_record"] = golden_record
+QUERIES["golden_record"] = golden_record
 
 
 # ---------------------------------------------------------------------------
@@ -1814,7 +1791,7 @@ def skyline_2d(
     )
 
 
-ROUND4_ORACLES["skyline_pareto"] = """
+ORACLES["skyline_pareto"] = """
 WITH ranked AS (
   SELECT p_partkey, p_name, p_retailprice, p_size,
          max(p_size) OVER (
@@ -1829,7 +1806,7 @@ WHERE prev_max IS NULL OR p_size > prev_max
 ORDER BY p_retailprice, p_partkey
 """
 
-ROUND4_QUERIES["skyline_pareto"] = skyline_pareto
+QUERIES["skyline_pareto"] = skyline_pareto
 
 
 # ---------------------------------------------------------------------------
@@ -1994,8 +1971,8 @@ GROUP BY n_name ORDER BY n_name
 """
 
 
-ROUND4_ORACLES["point_in_polygon"] = _pip_oracle()
-ROUND4_LATE_QUERIES["point_in_polygon"] = point_in_polygon
+ORACLES["point_in_polygon"] = _pip_oracle()
+QUERIES["point_in_polygon"] = point_in_polygon
 
 
 # ---------------------------------------------------------------------------
@@ -2126,8 +2103,8 @@ GROUP BY n_name ORDER BY n_name
 """
 
 
-ROUND4_ORACLES["polygon_zonal_stats"] = _polygon_zonal_oracle()
-ROUND4_LATE_QUERIES["polygon_zonal_stats"] = polygon_zonal_stats
+ORACLES["polygon_zonal_stats"] = _polygon_zonal_oracle()
+QUERIES["polygon_zonal_stats"] = polygon_zonal_stats
 
 
 # ---------------------------------------------------------------------------
@@ -2148,7 +2125,6 @@ def incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     then filter — at scale the index side is a parquet READ, not a
     derivation); the probe is a band-key equi-join, never all-pairs.
     """
-    from pyprima_spark.operators.dedup import minhash_band_table
 
     docs = _t(spark, sf_dir, "documents")
     bands = minhash_band_table(docs, "doc_id", "text").localCheckpoint(
@@ -2187,9 +2163,26 @@ def incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (oracle lives in plans/oracles.py — it reuses the shared minhash band
-# CTE builder, which this module cannot import without a cycle)
-ROUND4_LATE_QUERIES["incremental_minhash_index"] = incremental_minhash_index
+QUERIES["incremental_minhash_index"] = incremental_minhash_index
+
+ORACLES["incremental_minhash_index"] = f"""
+WITH {_MINHASH_BANDS_CTE},
+flagged AS (
+  SELECT DISTINCT i.doc
+  FROM bands i JOIN bands s
+    ON i.band_idx = s.band_idx AND i.band_sig = s.band_sig
+  WHERE i.doc % 5 >= 3 AND s.doc % 5 < 3
+)
+SELECT source,
+       count(*) AS n_incoming,
+       CAST(sum(CASE WHEN flagged.doc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_neardup,
+       CAST(sum(CASE WHEN flagged.doc IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_clean
+FROM documents LEFT JOIN flagged ON documents.doc_id = flagged.doc
+WHERE doc_id % 5 >= 3
+GROUP BY source ORDER BY source
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -2208,7 +2201,6 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, no join, whole-stage codegen; lists too big to inline ride
     a broadcast join instead.
     """
-    from pyprima_spark.functions import text as X
 
     docs = _t(spark, sf_dir, "documents")
     hits = F.expr(
@@ -2227,8 +2219,6 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blocklist_oracle() -> str:
-    from pyprima_spark.functions import text as X
-
     hits = X.stopword_count_duck(X.tokens_duck("text"), _BLOCKLIST)
     return f"""
 WITH counted AS (SELECT source, {hits} AS hits FROM documents)
@@ -2240,8 +2230,8 @@ FROM counted GROUP BY source ORDER BY source
 """
 
 
-ROUND4_ORACLES["blocklist_filter"] = _blocklist_oracle()
-ROUND4_LATE_QUERIES["blocklist_filter"] = blocklist_filter
+ORACLES["blocklist_filter"] = _blocklist_oracle()
+QUERIES["blocklist_filter"] = blocklist_filter
 
 
 # ---------------------------------------------------------------------------
@@ -2302,7 +2292,7 @@ def rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["rolling_origin_backtest"] = """
+ORACLES["rolling_origin_backtest"] = """
 WITH days AS (SELECT CAST(ts AS DATE) AS d FROM events),
 bounds AS (
   SELECT min(d) AS d0, date_diff('day', min(d), max(d)) + 1 AS span
@@ -2323,7 +2313,7 @@ SELECT fold, CAST(cut AS INT) AS cut, CAST(horizon AS INT) AS horizon,
 FROM tagged GROUP BY 1, 2, 3 ORDER BY fold
 """
 
-ROUND4_LATE_QUERIES["rolling_origin_backtest"] = rolling_origin_backtest
+QUERIES["rolling_origin_backtest"] = rolling_origin_backtest
 
 
 # ---------------------------------------------------------------------------
@@ -2354,7 +2344,7 @@ def ordered_string_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND4_ORACLES["ordered_string_export"] = """
+ORACLES["ordered_string_export"] = """
 SELECT n_name,
        count(*) AS n_suppliers,
        string_agg(s_name, ';' ORDER BY s_name) AS supplier_list
@@ -2362,7 +2352,7 @@ FROM supplier JOIN nation ON s_nationkey = n_nationkey
 GROUP BY n_name ORDER BY n_name
 """
 
-ROUND4_LATE_QUERIES["ordered_string_export"] = ordered_string_export
+QUERIES["ordered_string_export"] = ordered_string_export
 
 
 # ---------------------------------------------------------------------------
@@ -2382,8 +2372,6 @@ PQ_K = 16
 
 
 def _pq_centroid_ids() -> list[int]:
-    from pyprima_spark.plans.constants import ANN_N_QUERIES
-
     return [ANN_N_QUERIES + 11 * i for i in range(PQ_K)]
 
 
@@ -2404,8 +2392,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascending indices in both engines (functions/vectors.py), rounded
     to 6dp before every rank; argmin ties break on centroid id.
     """
-    from pyprima_spark.functions import vectors as V
-    from pyprima_spark.plans.constants import ANN_N_QUERIES
 
     emb = _t(spark, sf_dir, "embeddings")
     # Unit-normalize first: on normalized vectors L2^2 = 2 - 2cos, so
@@ -2475,8 +2461,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_pq_oracle() -> str:
-    from pyprima_spark.plans.constants import ANN_N_QUERIES
-
     ids = ", ".join(str(i) for i in _pq_centroid_ids())
     sub_selects = " UNION ALL ".join(
         f"SELECT vec_id, {s} AS sub,"
@@ -2487,7 +2471,6 @@ def _ann_pq_oracle() -> str:
         f"list_sum(list_transform(generate_series(1, {PQ_SUBDIM}),"
         " i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
     )
-    from pyprima_spark.functions import vectors as V
 
     norm = V.norm_duck("raw", V.EMB_DIM)
     return f"""
@@ -2526,8 +2509,8 @@ ORDER BY query_id, rank
 """
 
 
-ROUND4_ORACLES["ann_pq"] = _ann_pq_oracle()
-ROUND4_LATE_QUERIES["ann_pq"] = ann_pq
+ORACLES["ann_pq"] = _ann_pq_oracle()
+QUERIES["ann_pq"] = ann_pq
 
 
 # ---------------------------------------------------------------------------
@@ -2590,7 +2573,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("jaccard") >= 0.5).orderBy("node_a", "node_b")
 
 
-ROUND4_ORACLES["graph_neighbor_jaccard"] = """
+ORACLES["graph_neighbor_jaccard"] = """
 WITH pairs AS (
   SELECT least(c_nationkey, s_nationkey)    AS edge_a,
          greatest(c_nationkey, s_nationkey) AS edge_b
@@ -2624,4 +2607,4 @@ WHERE round(shared / (da.degree + db.degree - shared), 6) >= 0.5
 ORDER BY node_a, node_b
 """
 
-ROUND4_LATE_QUERIES["graph_neighbor_jaccard"] = graph_neighbor_jaccard
+QUERIES["graph_neighbor_jaccard"] = graph_neighbor_jaccard

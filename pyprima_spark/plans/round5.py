@@ -26,19 +26,12 @@ Families:
   rfm_segments, attribution_models, bounce_rate, pareto_revenue,
   props_variant_stats (Spark 4 VARIANT).
 
-Each query has an exact-match DuckDB oracle in ``ROUND5_ORACLES``.
+Each query has an exact-match DuckDB oracle in ``ORACLES``.
 Determinism rules follow functions/agg.py: integer arithmetic wherever
 possible, DECIMAL sums for doubles, single correctly-rounded double
 divisions, rounding only at the output edge — and, after this round's
 sf0.1 boundary finds, half-away-from-zero rounding in exact integer
 space wherever a reported value is a rational of integer counts.
-
-Self-contained on purpose (imports catalog, not plans.queries at
-module level) so plans.oracles can import this module without a
-circular chain; a few oracles that need shared CTE helpers live at the
-tail of plans/oracles.py instead (cluster_representatives,
-holdout_contamination, lsh_precision_eval, ann_recall_eval,
-training_manifest).
 """
 
 from __future__ import annotations
@@ -46,18 +39,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
-from pyprima_spark.functions.agg import DEC
-from pyprima_spark.functions import text as X
-from pyprima_spark.operators.exactmath import tdiv as _tdiv
+from pyprima_spark.catalog import widen_scan
+from pyprima_spark.functions import text as X, vectors as V
+from pyprima_spark.functions.agg import DEC, dec_avg
+from pyprima_spark.operators.asof import asof_join as _asof
+from pyprima_spark.operators.checkpointing import materialize
+from pyprima_spark.operators.components import connected_components
+from pyprima_spark.operators.dedup import minhash_candidate_pairs
+from pyprima_spark.operators.exactmath import (
+    bounded_collect,
+    min_label_components,
+    tdiv as _tdiv,
+)
+from pyprima_spark.operators.scd import scd2_from_log
+from pyprima_spark.operators.similarity import (
+    ann_lsh as op_lsh,
+    ann_topk as op_exact,
+    cosine_prenorm_col,
+    with_lsh_bucket,
+    with_vec_norm,
+)
+from pyprima_spark.plans.constants import ANN_K, ANN_N_QUERIES, STOPWORDS
+from pyprima_spark.plans.core import (
+    _edge_aggregate,
+    _MINHASH_BANDS_CTE,
+    _minhash_bands_cte,
+    _quality_frame,
+    _t,
+    curation_flags,
+    ORACLES as _CORE_ORACLES,
+)
+from pyprima_spark.streaming.events import stream_events
+from pyprima_spark.streaming.quota import run_quota_stream
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND5_QUERIES: dict = {}
-ROUND5_ORACLES: dict[str, str] = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -124,9 +141,9 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["snapshot_diff"] = snapshot_diff
+QUERIES["snapshot_diff"] = snapshot_diff
 
-ROUND5_ORACLES["snapshot_diff"] = """
+ORACLES["snapshot_diff"] = """
 WITH old AS (
   SELECT o_orderkey, o_totalprice AS price_a, o_orderstatus AS status_a
   FROM orders WHERE o_orderdate < DATE '1997-07-01'
@@ -200,9 +217,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["stratified_sample"] = stratified_sample
+QUERIES["stratified_sample"] = stratified_sample
 
-ROUND5_ORACLES["stratified_sample"] = f"""
+ORACLES["stratified_sample"] = f"""
 WITH counts AS (
   SELECT source, count(*) AS n_total,
          least(10000, ({_STRAT_TARGET} * 10000 + count(*) - 1) // count(*))
@@ -240,7 +257,6 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance and the left-retention are post-masks on the carried
     columns, so bounding staleness costs nothing over the plain as-of.
     """
-    from pyprima_spark.operators.asof import asof_join as _asof
 
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -270,9 +286,9 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ROUND5_QUERIES["asof_tolerance_join"] = asof_tolerance_join
+QUERIES["asof_tolerance_join"] = asof_tolerance_join
 
-ROUND5_ORACLES["asof_tolerance_join"] = f"""
+ORACLES["asof_tolerance_join"] = f"""
 WITH p AS (
   SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'
 ),
@@ -397,9 +413,9 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source", "chunk_id")
 
 
-ROUND5_QUERIES["sequence_packing"] = sequence_packing
+QUERIES["sequence_packing"] = sequence_packing
 
-ROUND5_ORACLES["sequence_packing"] = f"""
+ORACLES["sequence_packing"] = f"""
 WITH RECURSIVE d AS (
   SELECT source, doc_id // {_PACK_SHARD_DOCS} AS shard,
          row_number() OVER (
@@ -495,7 +511,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["vocab_coverage"] = vocab_coverage
+QUERIES["vocab_coverage"] = vocab_coverage
 
 _VOCAB_SELECTS = "\nUNION ALL\n".join(
     f"SELECT {n} AS top_n,"
@@ -509,7 +525,7 @@ _VOCAB_SELECTS = "\nUNION ALL\n".join(
     for n in _VOCAB_NS
 )
 
-ROUND5_ORACLES["vocab_coverage"] = f"""
+ORACLES["vocab_coverage"] = f"""
 WITH words AS (
   SELECT unnest({X.tokens_duck('text')}) AS word FROM documents
 ),
@@ -562,9 +578,9 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.filter(F.col("rank") <= _PATHS_TOPK).orderBy("rank")
 
 
-ROUND5_QUERIES["session_paths"] = session_paths
+QUERIES["session_paths"] = session_paths
 
-ROUND5_ORACLES["session_paths"] = f"""
+ORACLES["session_paths"] = f"""
 WITH seq AS (
   SELECT event_type,
          lead(event_type, 1) OVER w AS e2,
@@ -607,9 +623,6 @@ def centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan of the vector table, and the per-label bottom-k compiles
     to WindowGroupLimit (partial top-k before the single shuffle).
     """
-    from pyprima_spark.functions.agg import dec_avg
-    from pyprima_spark.functions import vectors as V
-    from pyprima_spark.operators.similarity import with_vec_norm
 
     emb = _t(spark, sf_dir, "embeddings")
     cent = (
@@ -645,12 +658,10 @@ def centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["centroid_outliers"] = centroid_outliers
+QUERIES["centroid_outliers"] = centroid_outliers
 
 
 def _centroid_outliers_oracle() -> str:
-    from pyprima_spark.functions import vectors as V
-
     return f"""
 WITH cent AS (
   SELECT label, i AS dim,
@@ -680,7 +691,7 @@ ORDER BY label, rank
 """
 
 
-ROUND5_ORACLES["centroid_outliers"] = _centroid_outliers_oracle()
+ORACLES["centroid_outliers"] = _centroid_outliers_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -742,9 +753,9 @@ def drift_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["drift_tv_distance"] = drift_tv_distance
+QUERIES["drift_tv_distance"] = drift_tv_distance
 
-ROUND5_ORACLES["drift_tv_distance"] = f"""
+ORACLES["drift_tv_distance"] = f"""
 WITH binned AS (
   SELECT event_type,
          CASE WHEN ts < TIMESTAMP '{_DRIFT_SPLIT}' THEN 0 ELSE 1 END AS p,
@@ -836,9 +847,9 @@ def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["ks_drift"] = ks_drift
+QUERIES["ks_drift"] = ks_drift
 
-ROUND5_ORACLES["ks_drift"] = f"""
+ORACLES["ks_drift"] = f"""
 WITH binned AS (
   SELECT event_type,
          CASE WHEN ts < TIMESTAMP '{_DRIFT_SPLIT}' THEN 0 ELSE 1 END AS p,
@@ -907,7 +918,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffled both sides: measured 13 exchanges -> 6, 1.85 s ->
     re-measured after, same rows.
     """
-    from pyprima_spark.operators.checkpointing import materialize
 
     li = materialize(
         _t(spark, sf_dir, "lineitem")
@@ -964,9 +974,9 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["market_basket_pairs"] = market_basket_pairs
+QUERIES["market_basket_pairs"] = market_basket_pairs
 
-ROUND5_ORACLES["market_basket_pairs"] = f"""
+ORACLES["market_basket_pairs"] = f"""
 WITH li AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
 ),
@@ -1016,12 +1026,8 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count + row_number share the shuffle).  Only real clusters
     (≥2 members) are reported.
 
-    Oracle: plans/oracles.py (shares the minhash band CTE; this module
-    cannot import that one without a cycle).
+    The oracle shares core's minhash band CTE.
     """
-    from pyprima_spark.operators.components import connected_components
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
-    from pyprima_spark.plans.queries import _quality_frame
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_candidate_pairs(docs, "doc_id", "text")
@@ -1072,7 +1078,61 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["cluster_representatives"] = cluster_representatives
+QUERIES["cluster_representatives"] = cluster_representatives
+
+ORACLES["cluster_representatives"] = f"""
+WITH RECURSIVE {_MINHASH_BANDS_CTE},
+pairs AS (
+  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
+),
+cedges AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION
+  SELECT doc_b, doc_a FROM pairs
+),
+reach(node, lbl) AS (
+  SELECT DISTINCT a, a FROM cedges
+  UNION
+  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
+),
+clusters AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
+qd AS (
+  SELECT
+    doc_id,
+    len(tokens) AS n_tok,
+    length(text) AS n_ch,
+    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
+    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
+    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
+  FROM (SELECT doc_id, text, {X.tokens_duck('text')} AS tokens FROM documents)
+),
+scored AS (
+  -- exact integer-rational score over D = 100*n_tok*n_ch (the double
+  -- chain's round(..,4) straddles decimal boundaries differently per
+  -- engine; one NUM/D division is bit-identical everywhere)
+  SELECT doc_id,
+    CAST(2 * stop_cnt * 100 * n_ch
+         - 3 * punct_cnt * 100 * n_tok
+         + least(n_tok, 100) * n_tok * n_ch
+         - 10 * abs(word_chars - 5 * n_tok) * n_ch AS BIGINT) AS num,
+    CAST(100 * n_tok * n_ch AS BIGINT) AS den
+  FROM qd
+),
+members AS (
+  SELECT c.cluster_id, c.node AS doc_id, s.num, s.den,
+         count(*) OVER (PARTITION BY c.cluster_id) AS n_members,
+         row_number() OVER (PARTITION BY c.cluster_id
+                            ORDER BY s.num / s.den DESC, c.node ASC) AS rn
+  FROM clusters c JOIN scored s ON s.doc_id = c.node
+)
+SELECT cluster_id, doc_id AS rep_doc_id, n_members,
+       ((20000 * num + CASE WHEN num >= 0 THEN den ELSE -den END)
+        // (2 * den)) / 10000.0 AS rep_score
+FROM members WHERE rn = 1
+ORDER BY cluster_id
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1135,9 +1195,9 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["bpe_token_count"] = bpe_token_count
+QUERIES["bpe_token_count"] = bpe_token_count
 
-ROUND5_ORACLES["bpe_token_count"] = f"""
+ORACLES["bpe_token_count"] = f"""
 WITH pieces AS (
   SELECT source, doc_id,
          regexp_extract_all(lower(text), '{_BPE_PATTERN}') AS pieces
@@ -1217,9 +1277,9 @@ def partition_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["partition_pruning_stats"] = partition_pruning_stats
+QUERIES["partition_pruning_stats"] = partition_pruning_stats
 
-ROUND5_ORACLES["partition_pruning_stats"] = f"""
+ORACLES["partition_pruning_stats"] = f"""
 WITH zones AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
          count(*) AS n_rows, max(value) AS vmax
@@ -1274,9 +1334,9 @@ def approx_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["approx_quantile_bands"] = approx_quantile_bands
+QUERIES["approx_quantile_bands"] = approx_quantile_bands
 
-ROUND5_ORACLES["approx_quantile_bands"] = """
+ORACLES["approx_quantile_bands"] = """
 SELECT event_type,
        round(quantile_cont(value, 0.5), 4) AS p50,
        abs(approx_quantile(value, 0.5) - quantile_cont(value, 0.5))
@@ -1344,9 +1404,9 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["weighted_median"] = weighted_median
+QUERIES["weighted_median"] = weighted_median
 
-ROUND5_ORACLES["weighted_median"] = """
+ORACLES["weighted_median"] = """
 WITH flagged AS (
   SELECT l_returnflag, l_extendedprice,
          sum(CAST(l_quantity AS BIGINT)) OVER (
@@ -1412,9 +1472,9 @@ def rate_limit_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["rate_limit_flags"] = rate_limit_flags
+QUERIES["rate_limit_flags"] = rate_limit_flags
 
-ROUND5_ORACLES["rate_limit_flags"] = f"""
+ORACLES["rate_limit_flags"] = f"""
 WITH flagged AS (
   SELECT event_type,
          row_number() OVER (
@@ -1483,9 +1543,9 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["join_cardinality_estimate"] = join_cardinality_estimate
+QUERIES["join_cardinality_estimate"] = join_cardinality_estimate
 
-ROUND5_ORACLES["join_cardinality_estimate"] = """
+ORACLES["join_cardinality_estimate"] = """
 WITH o_hist AS (
   SELECT o_orderpriority, o_orderkey, count(*) AS c_o
   FROM orders GROUP BY 1, 2
@@ -1526,10 +1586,9 @@ def holdout_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join every dedup op here uses (bounded fanout, signature
     table materialized once).  Cross-split pairs are a post-filter on
     the candidate table; the census counts DISTINCT contaminated eval
-    docs per source.  Oracle: plans/oracles.py (shares the minhash
-    band CTE).
+    docs per source.  The oracle shares
+    core's minhash band CTE.
     """
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
 
     docs = _t(spark, sf_dir, "documents")
     h = F.expr(X.hash64_spark("cast(doc_id as string) || ':split'")) % 100
@@ -1590,7 +1649,52 @@ def holdout_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["holdout_contamination"] = holdout_contamination
+QUERIES["holdout_contamination"] = holdout_contamination
+
+_SPLIT_EXPR = (
+    "CASE WHEN "
+    + X.hash64_duck("cast(doc_id as varchar) || ':split'")
+    + " % 100 < 80 THEN 'train' WHEN "
+    + X.hash64_duck("cast(doc_id as varchar) || ':split'")
+    + " % 100 < 90 THEN 'val' ELSE 'test' END"
+)
+
+ORACLES["holdout_contamination"] = f"""
+WITH {_MINHASH_BANDS_CTE},
+split AS (
+  SELECT doc_id, source, {_SPLIT_EXPR} AS split FROM documents
+),
+pairs AS (
+  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
+),
+sided AS (
+  SELECT p.doc_a, p.doc_b, sa.split AS split_a, sb.split AS split_b
+  FROM pairs p
+  JOIN split sa ON sa.doc_id = p.doc_a
+  JOIN split sb ON sb.doc_id = p.doc_b
+),
+contaminated AS (
+  SELECT DISTINCT doc_id FROM (
+    SELECT doc_b AS doc_id FROM sided
+    WHERE split_a = 'train' AND split_b <> 'train'
+    UNION ALL
+    SELECT doc_a FROM sided
+    WHERE split_b = 'train' AND split_a <> 'train'
+  )
+)
+SELECT s.source,
+       count(*) AS n_eval_docs,
+       CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_contaminated,
+       CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END) * 10000
+            // count(*) AS INT) AS contaminated_bp
+FROM split s LEFT JOIN contaminated c ON c.doc_id = s.doc_id
+WHERE s.split <> 'train'
+GROUP BY s.source
+ORDER BY s.source
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1604,15 +1708,14 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-event-type census as the batch ``rate_limit_flags`` audit, so
     one oracle grades both the batch rule and the online operator.
     """
-    from pyprima_spark.streaming.quota import run_quota_stream
 
     return run_quota_stream(
         spark, sf_dir, query_name=f"quota_{abs(hash(sf_dir)) % 10**8}"
     )
 
 
-ROUND5_QUERIES["streaming_rate_limit"] = streaming_rate_limit
-ROUND5_ORACLES["streaming_rate_limit"] = ROUND5_ORACLES["rate_limit_flags"]
+QUERIES["streaming_rate_limit"] = streaming_rate_limit
+ORACLES["streaming_rate_limit"] = ORACLES["rate_limit_flags"]
 
 
 # ---------------------------------------------------------------------------
@@ -1665,9 +1768,9 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("relation")
 
 
-ROUND5_QUERIES["fk_orphan_audit"] = fk_orphan_audit
+QUERIES["fk_orphan_audit"] = fk_orphan_audit
 
-ROUND5_ORACLES["fk_orphan_audit"] = """
+ORACLES["fk_orphan_audit"] = """
 WITH cust AS (SELECT c_custkey FROM customer WHERE c_custkey % 1000 <> 0),
 prt AS (SELECT p_partkey FROM part WHERE p_partkey % 500 <> 0)
 SELECT 'lineitem->orders' AS relation,
@@ -1778,9 +1881,9 @@ def ab_test_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["ab_test_chi2"] = ab_test_chi2
+QUERIES["ab_test_chi2"] = ab_test_chi2
 
-ROUND5_ORACLES["ab_test_chi2"] = f"""
+ORACLES["ab_test_chi2"] = f"""
 WITH users AS (
   SELECT {X.hash64_duck("cast(user_id as varchar) || ':ab'")} % 2 AS variant,
          max(CASE WHEN event_type = 'purchase' AND value > {_AB_CONV_VALUE}
@@ -1830,7 +1933,6 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB pass one becomes `approx_percentile` (mergeable sketch)
     with the approx_quantile_bands error contract.
     """
-    from pyprima_spark.functions.agg import dec_avg
 
     ev = _t(spark, sf_dir, "events")
     bounds = ev.groupBy("event_type").agg(
@@ -1851,9 +1953,9 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["winsorized_mean"] = winsorized_mean
+QUERIES["winsorized_mean"] = winsorized_mean
 
-ROUND5_ORACLES["winsorized_mean"] = """
+ORACLES["winsorized_mean"] = """
 WITH bounds AS (
   SELECT event_type,
          quantile_cont(value, 0.05) AS lo,
@@ -1887,16 +1989,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets per query; recall is hits·10⁴/k in integer basis points.  The
     expensive side (brute force) exists precisely because this is the
     ground-truth pass — run at evaluation sample size, never corpus
-    size.  Oracle: plans/oracles.py (composes the two ANN oracle CTEs).
+    size.  The oracle composes the two ANN oracles.
     """
-    from pyprima_spark.operators.checkpointing import materialize
-    from pyprima_spark.operators.similarity import (
-        ann_lsh as op_lsh,
-        ann_topk as op_exact,
-        with_lsh_bucket,
-        with_vec_norm,
-    )
-    from pyprima_spark.plans.constants import ANN_K, ANN_N_QUERIES
 
     # r11 (guide §2.4): the two composed passes each re-derived the
     # vec+norm(+bucket) projection from the parquet scan — four
@@ -1930,7 +2024,21 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["ann_recall_eval"] = ann_recall_eval
+QUERIES["ann_recall_eval"] = ann_recall_eval
+
+ORACLES["ann_recall_eval"] = f"""
+WITH exact AS ({_CORE_ORACLES['ann_topk']}),
+approx AS ({_CORE_ORACLES['ann_lsh']})
+SELECT e.query_id, count(*) AS k,
+       CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_hits,
+       CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000
+            // {ANN_K} AS INT) AS recall_bp
+FROM exact e LEFT JOIN approx a
+  ON a.query_id = e.query_id AND a.vec_id = e.vec_id
+GROUP BY e.query_id
+ORDER BY e.query_id
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1998,9 +2106,9 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-ROUND5_QUERIES["cusum_changepoint"] = cusum_changepoint
+QUERIES["cusum_changepoint"] = cusum_changepoint
 
-ROUND5_ORACLES["cusum_changepoint"] = """
+ORACLES["cusum_changepoint"] = """
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
          sum(CAST(value AS DECIMAL(27,6))) AS d
@@ -2087,9 +2195,9 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["interval_union_coverage"] = interval_union_coverage
+QUERIES["interval_union_coverage"] = interval_union_coverage
 
-ROUND5_ORACLES["interval_union_coverage"] = f"""
+ORACLES["interval_union_coverage"] = f"""
 WITH iv AS (
   SELECT CAST(ts AS DATE) AS day,
          epoch_us(ts) AS s,
@@ -2130,8 +2238,6 @@ def scd2_temporal_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the rewrite equivalent.  Ties at equal valid_from resolve
     to the highest version on both sides.
     """
-    from pyprima_spark.operators.asof import asof_join as _asof
-    from pyprima_spark.operators.scd import scd2_from_log
 
     ev = _t(spark, sf_dir, "events")
     dim = scd2_from_log(ev, "user_id", "event_type").select(
@@ -2154,9 +2260,9 @@ def scd2_temporal_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ROUND5_QUERIES["scd2_temporal_lookup"] = scd2_temporal_lookup
+QUERIES["scd2_temporal_lookup"] = scd2_temporal_lookup
 
-ROUND5_ORACLES["scd2_temporal_lookup"] = """
+ORACLES["scd2_temporal_lookup"] = """
 WITH runs AS (
   SELECT user_id, event_type, ts, event_id,
          lag(event_type) OVER (PARTITION BY user_id
@@ -2223,9 +2329,9 @@ def time_rollup_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["time_rollup_grouping_sets"] = time_rollup_grouping_sets
+QUERIES["time_rollup_grouping_sets"] = time_rollup_grouping_sets
 
-ROUND5_ORACLES["time_rollup_grouping_sets"] = """
+ORACLES["time_rollup_grouping_sets"] = """
 WITH g AS (
   SELECT CAST(ts AS DATE) AS day,
          CAST(date_trunc('week', ts) AS DATE) AS week,
@@ -2293,9 +2399,9 @@ def late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["late_data_census"] = late_data_census
+QUERIES["late_data_census"] = late_data_census
 
-ROUND5_ORACLES["late_data_census"] = f"""
+ORACLES["late_data_census"] = f"""
 WITH scored AS (
   SELECT event_type,
          greatest(0,
@@ -2336,10 +2442,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force pass runs per mini-corpus shard or on an LSH-bucketed
     candidate set (ann_lsh) — the ranking stage is identical.
     """
-    from pyprima_spark.operators.similarity import (
-        cosine_prenorm_col,
-        with_vec_norm,
-    )
 
     emb = _t(spark, sf_dir, "embeddings")
     base = with_vec_norm(emb)
@@ -2369,12 +2471,10 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["hard_negative_mining"] = hard_negative_mining
+QUERIES["hard_negative_mining"] = hard_negative_mining
 
 
 def _hard_negative_oracle() -> str:
-    from pyprima_spark.functions import vectors as V
-
     cos = V.cosine_duck("qvec", "cvec", V.EMB_DIM)
     return f"""
 WITH base AS (
@@ -2398,7 +2498,7 @@ ORDER BY anchor_id, rank
 """
 
 
-ROUND5_ORACLES["hard_negative_mining"] = _hard_negative_oracle()
+ORACLES["hard_negative_mining"] = _hard_negative_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -2437,7 +2537,6 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", "doc_id", "b.w1", "b.w2")
     )
-    from pyprima_spark.operators.checkpointing import materialize
 
     # The bigram census is materialized ONCE (vocab-bounded — one row
     # per distinct (w1, w2), not fact-sized) and the unigram counts are
@@ -2478,9 +2577,9 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["bigram_lm_score"] = bigram_lm_score
+QUERIES["bigram_lm_score"] = bigram_lm_score
 
-ROUND5_ORACLES["bigram_lm_score"] = f"""
+ORACLES["bigram_lm_score"] = f"""
 WITH toks AS (
   SELECT source, doc_id, {X.tokens_duck('text')} AS tokens FROM documents
 ),
@@ -2578,9 +2677,9 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["cohort_ltv"] = cohort_ltv
+QUERIES["cohort_ltv"] = cohort_ltv
 
-ROUND5_ORACLES["cohort_ltv"] = """
+ORACLES["cohort_ltv"] = """
 WITH seen AS (
   SELECT user_id, event_type, ts, CAST(value AS DECIMAL(27,6)) AS v,
          CAST(date_trunc('week', min(ts) OVER (PARTITION BY user_id)) AS DATE)
@@ -2624,10 +2723,9 @@ def lsh_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins each pair to the exploded distinct-shingle table twice and
     counts shared shingles (one aggregation per pair — the standard
     verify pass, run on candidates only, never all pairs).  The
-    threshold compare is integer cross-multiplied (2·∩ ≥ ∪).  Oracle:
-    plans/oracles.py (shares the band CTE).
+    threshold compare is integer cross-multiplied (2·∩ ≥ ∪).  The oracle
+    shares core's minhash band CTE.
     """
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_candidate_pairs(docs, "doc_id", "text")
@@ -2680,7 +2778,46 @@ def lsh_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["lsh_precision_eval"] = lsh_precision_eval
+QUERIES["lsh_precision_eval"] = lsh_precision_eval
+
+# The shingle CTE mirrors minhash_band_table's distinct word-3-shingles.
+ORACLES["lsh_precision_eval"] = f"""
+WITH {_MINHASH_BANDS_CTE},
+pairs AS (
+  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
+),
+sh AS (
+  SELECT doc, unnest(shingles) AS s FROM (
+    SELECT doc_id AS doc, {X.shingles_duck(X.tokens_duck('text'))} AS shingles
+    FROM documents
+    WHERE len({X.tokens_duck('text')}) >= 3
+  )
+),
+sizes AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
+inter AS (
+  SELECT p.doc_a, p.doc_b, count(*) AS i
+  FROM pairs p
+  JOIN sh a ON a.doc = p.doc_a
+  JOIN sh b ON b.doc = p.doc_b AND b.s = a.s
+  GROUP BY 1, 2
+),
+verified AS (
+  SELECT coalesce(i.i, 0) AS i,
+         sa.sz + sb.sz - coalesce(i.i, 0) AS u
+  FROM pairs p
+  LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+  JOIN sizes sa ON sa.doc = p.doc_a
+  JOIN sizes sb ON sb.doc = p.doc_b
+)
+SELECT count(*) AS n_candidates,
+       CAST(sum(CASE WHEN i * 2 >= u THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_verified,
+       CAST(sum(CASE WHEN i * 2 >= u THEN 1 ELSE 0 END) * 10000 // count(*)
+            AS INT) AS precision_bp
+FROM verified
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -2746,9 +2883,9 @@ def funnel_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["funnel_with_timeout"] = funnel_with_timeout
+QUERIES["funnel_with_timeout"] = funnel_with_timeout
 
-ROUND5_ORACLES["funnel_with_timeout"] = f"""
+ORACLES["funnel_with_timeout"] = f"""
 WITH d1 AS (
   SELECT user_id, event_type, ts,
          min(CASE WHEN event_type = 'signup' THEN ts END)
@@ -2825,9 +2962,9 @@ def key_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["key_gini"] = key_gini
+QUERIES["key_gini"] = key_gini
 
-ROUND5_ORACLES["key_gini"] = """
+ORACLES["key_gini"] = """
 WITH ef AS (
   SELECT count(*) AS c, user_id AS k FROM events GROUP BY user_id
 ),
@@ -2878,7 +3015,6 @@ def trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     census collapses). Integer BFS is engine-exact, so results are
     bit-identical.
     """
-    from pyprima_spark.plans.queries import _edge_aggregate
 
     edges = _edge_aggregate(spark, sf_dir).select("edge_a", "edge_b", "n_lines")
     tot = edges.agg(
@@ -2889,7 +3025,6 @@ def trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_lines") * F.col("ne") * 10 >= 11 * F.col("tot"))
         .select("edge_a", "edge_b")
     )
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     e_rows = [
         (r["edge_a"], r["edge_b"])
@@ -2926,9 +3061,9 @@ def trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["trade_reachability"] = trade_reachability
+QUERIES["trade_reachability"] = trade_reachability
 
-ROUND5_ORACLES["trade_reachability"] = """
+ORACLES["trade_reachability"] = """
 WITH RECURSIVE pairs AS (
   SELECT least(c_nationkey, s_nationkey) AS edge_a,
          greatest(c_nationkey, s_nationkey) AS edge_b
@@ -2979,7 +3114,6 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated path extractions don't re-parse the string — the path to
     prefer when payload schemas drift across a 100 TB log.
     """
-    from pyprima_spark.catalog import widen_scan
 
     ev = widen_scan(_t(spark, sf_dir, "events"))
     parsed = ev.select(
@@ -2999,9 +3133,9 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["props_variant_stats"] = props_variant_stats
+QUERIES["props_variant_stats"] = props_variant_stats
 
-ROUND5_ORACLES["props_variant_stats"] = """
+ORACLES["props_variant_stats"] = """
 SELECT event_type,
        count(*) AS n,
        count(k) AS n_with_k,
@@ -3075,9 +3209,9 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.orderBy("day", "event_type")
 
 
-ROUND5_QUERIES["incremental_agg_maintenance"] = incremental_agg_maintenance
+QUERIES["incremental_agg_maintenance"] = incremental_agg_maintenance
 
-ROUND5_ORACLES["incremental_agg_maintenance"] = """
+ORACLES["incremental_agg_maintenance"] = """
 SELECT CAST(ts AS DATE) AS day, event_type,
        count(*) AS n,
        round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total
@@ -3136,9 +3270,9 @@ def pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["pareto_revenue"] = pareto_revenue
+QUERIES["pareto_revenue"] = pareto_revenue
 
-ROUND5_ORACLES["pareto_revenue"] = """
+ORACLES["pareto_revenue"] = """
 WITH rev AS (
   SELECT l_partkey,
          sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))) AS rev
@@ -3175,7 +3309,6 @@ def streaming_hourly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     of drift_tv_distance: this is what a live data-quality monitor
     alerts on.
     """
-    from pyprima_spark.streaming.events import stream_events
 
     stream = stream_events(spark, sf_dir)
     src = stream.withWatermark("ts", "2 hours")
@@ -3231,9 +3364,9 @@ def streaming_hourly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["streaming_hourly_drift"] = streaming_hourly_drift
+QUERIES["streaming_hourly_drift"] = streaming_hourly_drift
 
-ROUND5_ORACLES["streaming_hourly_drift"] = """
+ORACLES["streaming_hourly_drift"] = """
 WITH hist AS (
   SELECT date_trunc('hour', ts) AS hour_start,
          least(9, CAST(floor(value / 50) AS INT)) AS bin,
@@ -3369,9 +3502,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["rfm_segments"] = rfm_segments
+QUERIES["rfm_segments"] = rfm_segments
 
-ROUND5_ORACLES["rfm_segments"] = f"""
+ORACLES["rfm_segments"] = f"""
 WITH prof AS (
   SELECT user_id,
          datediff('day', CAST(max(ts) AS DATE), DATE '{_RFM_ASOF[:10]}')
@@ -3433,7 +3566,6 @@ def boilerplate_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode), then one dim-sized per-source aggregation of integer
     counts; the two ratios divide once each at the output edge.
     """
-    from pyprima_spark.plans.constants import STOPWORDS
 
     docs = _t(spark, sf_dir, "documents")
     toks = X.tokens_spark("text")
@@ -3476,12 +3608,10 @@ def boilerplate_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["boilerplate_position"] = boilerplate_position
+QUERIES["boilerplate_position"] = boilerplate_position
 
 
 def _boilerplate_oracle() -> str:
-    from pyprima_spark.plans.constants import STOPWORDS
-
     return f"""
 WITH d AS (
   SELECT source,
@@ -3507,7 +3637,7 @@ ORDER BY source
 """
 
 
-ROUND5_ORACLES["boilerplate_position"] = _boilerplate_oracle()
+ORACLES["boilerplate_position"] = _boilerplate_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -3552,9 +3682,9 @@ def salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["salted_aggregation"] = salted_aggregation
+QUERIES["salted_aggregation"] = salted_aggregation
 
-ROUND5_ORACLES["salted_aggregation"] = """
+ORACLES["salted_aggregation"] = """
 WITH agg AS (
   SELECT user_id, count(*) AS n_events,
          round(sum(CAST(value AS DECIMAL(27,6))), 2)::DOUBLE AS total_value
@@ -3587,7 +3717,6 @@ def attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     union+window as-of operator.  Credit sums are DECIMAL; hours with
     no credit under one model show 0.00 via the full outer merge.
     """
-    from pyprima_spark.operators.asof import asof_join as _asof
 
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -3624,9 +3753,9 @@ def attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["attribution_models"] = attribution_models
+QUERIES["attribution_models"] = attribution_models
 
-ROUND5_ORACLES["attribution_models"] = """
+ORACLES["attribution_models"] = """
 WITH purchases AS (
   SELECT user_id, ts, CAST(value AS DECIMAL(27,6)) AS v
   FROM events WHERE event_type = 'purchase'
@@ -3691,7 +3820,6 @@ def copurchase_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
-    from pyprima_spark.operators.checkpointing import materialize
 
     # Compute-once boundaries: cp feeds both the part-degree census and
     # the kept projection, and kept feeds cust_deg + BOTH wedge-join
@@ -3775,9 +3903,9 @@ def copurchase_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["copurchase_similarity"] = copurchase_similarity
+QUERIES["copurchase_similarity"] = copurchase_similarity
 
-ROUND5_ORACLES["copurchase_similarity"] = f"""
+ORACLES["copurchase_similarity"] = f"""
 WITH cp AS (
   SELECT DISTINCT o_custkey AS cust, l_partkey AS part
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -3860,11 +3988,11 @@ def contract_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["contract_violations"] = contract_violations
+QUERIES["contract_violations"] = contract_violations
 
 _CONTRACT_ENUM_SQL = ", ".join(f"'{t}'" for t in _CONTRACT_TYPES)
 
-ROUND5_ORACLES["contract_violations"] = f"""
+ORACLES["contract_violations"] = f"""
 WITH agg AS (
   SELECT count(*) AS n_rows,
     sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS user_id_not_null,
@@ -3943,9 +4071,9 @@ def debounce_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["debounce_dedup"] = debounce_dedup
+QUERIES["debounce_dedup"] = debounce_dedup
 
-ROUND5_ORACLES["debounce_dedup"] = f"""
+ORACLES["debounce_dedup"] = f"""
 WITH flagged AS (
   SELECT event_type,
          epoch_us(ts) - lag(epoch_us(ts)) OVER (
@@ -3984,9 +4112,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds run driver-side in exact integers on the constant-size
     graph.
     """
-    from pyprima_spark.plans.queries import _edge_aggregate
-
-    from pyprima_spark.operators.checkpointing import materialize
 
     # Materialize the dim-bounded edge census once: tot and sparse
     # both reference it, so without the boundary the 4-way lineitem
@@ -4001,10 +4126,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.crossJoin(F.broadcast(tot))
         .filter(F.col("n_lines") * F.col("ne") * 10 >= 11 * F.col("tot"))
         .select("edge_a", "edge_b")
-    )
-    from pyprima_spark.operators.exactmath import (
-        bounded_collect,
-        min_label_components,
     )
 
     e_rows = [
@@ -4044,9 +4165,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["graph_modularity"] = graph_modularity
+QUERIES["graph_modularity"] = graph_modularity
 
-ROUND5_ORACLES["graph_modularity"] = """
+ORACLES["graph_modularity"] = """
 WITH RECURSIVE pairs AS (
   SELECT least(c_nationkey, s_nationkey) AS edge_a,
          greatest(c_nationkey, s_nationkey) AS edge_b
@@ -4119,7 +4240,6 @@ def mixed_language_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex, no explode), then a per-(source, lang) census of mixed
     flags.  The per-language hit counts ride one scan.
     """
-    from pyprima_spark.plans.constants import STOPWORDS
 
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(
@@ -4151,12 +4271,10 @@ def mixed_language_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["mixed_language_flags"] = mixed_language_flags
+QUERIES["mixed_language_flags"] = mixed_language_flags
 
 
 def _mixed_language_oracle() -> str:
-    from pyprima_spark.plans.constants import STOPWORDS
-
     hits = " + ".join(
         f"(CASE WHEN {X.stopword_count_duck('tokens', words)} > 0"
         f" THEN 1 ELSE 0 END)"
@@ -4181,7 +4299,7 @@ ORDER BY source, lang
 """
 
 
-ROUND5_ORACLES["mixed_language_flags"] = _mixed_language_oracle()
+ORACLES["mixed_language_flags"] = _mixed_language_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -4241,9 +4359,9 @@ def nested_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["nested_order_items"] = nested_order_items
+QUERIES["nested_order_items"] = nested_order_items
 
-ROUND5_ORACLES["nested_order_items"] = """
+ORACLES["nested_order_items"] = """
 WITH nested AS (
   SELECT l_orderkey,
          list_sort(list({'ln': l_linenumber, 'part': l_partkey,
@@ -4322,9 +4440,9 @@ def price_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["price_reconciliation"] = price_reconciliation
+QUERIES["price_reconciliation"] = price_reconciliation
 
-ROUND5_ORACLES["price_reconciliation"] = """
+ORACLES["price_reconciliation"] = """
 WITH line_tot AS (
   SELECT l_orderkey,
          sum(CAST(l_extendedprice * (1 + l_tax) * (1 - l_discount)
@@ -4384,9 +4502,9 @@ def pk_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["pk_uniqueness_audit"] = pk_uniqueness_audit
+QUERIES["pk_uniqueness_audit"] = pk_uniqueness_audit
 
-ROUND5_ORACLES["pk_uniqueness_audit"] = """
+ORACLES["pk_uniqueness_audit"] = """
 WITH o AS (
   SELECT count(*) AS n_keys, CAST(sum(c) AS BIGINT) AS n_rows,
          CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_keys,
@@ -4580,9 +4698,9 @@ def _ppjoin_over(toks: DataFrame) -> DataFrame:
     return verified.orderBy("doc_a", "doc_b")
 
 
-ROUND5_QUERIES["ppjoin_similarity"] = ppjoin_similarity
+QUERIES["ppjoin_similarity"] = ppjoin_similarity
 
-ROUND5_ORACLES["ppjoin_similarity"] = f"""
+ORACLES["ppjoin_similarity"] = f"""
 WITH toks AS (
   SELECT doc_id, source, lang,
          list_distinct({X.tokens_duck('text')}) AS tokens
@@ -4693,9 +4811,9 @@ def bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["bounce_rate"] = bounce_rate
+QUERIES["bounce_rate"] = bounce_rate
 
-ROUND5_ORACLES["bounce_rate"] = f"""
+ORACLES["bounce_rate"] = f"""
 WITH lagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
@@ -4764,9 +4882,9 @@ def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["peak_concurrency"] = peak_concurrency
+QUERIES["peak_concurrency"] = peak_concurrency
 
-ROUND5_ORACLES["peak_concurrency"] = f"""
+ORACLES["peak_concurrency"] = f"""
 WITH iv AS (
   SELECT CAST(ts AS DATE) AS day, epoch_us(ts) AS s,
          epoch_us(ts) + {_INCIDENT_LEN_US} AS e
@@ -4803,7 +4921,6 @@ def nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two single-shuffle as-of plans on the same key; nothing pairwise.
     """
-    from pyprima_spark.operators.asof import asof_join as _asof
 
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -4850,9 +4967,9 @@ def nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ROUND5_QUERIES["nearest_event_join"] = nearest_event_join
+QUERIES["nearest_event_join"] = nearest_event_join
 
-ROUND5_ORACLES["nearest_event_join"] = """
+ORACLES["nearest_event_join"] = """
 WITH p AS (
   SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
 ),
@@ -4914,7 +5031,6 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages — this key certifies the COMPOSITION, the way a user would
     actually wire the pipeline together.
     """
-    from pyprima_spark.plans.queries import curation_flags
 
     d, keptn = curation_flags(spark, sf_dir)
     h = F.expr(X.hash64_spark("cast(doc_id as string) || ':split'")) % 100
@@ -4944,7 +5060,79 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["training_manifest"] = training_manifest
+QUERIES["training_manifest"] = training_manifest
+
+# Curate -> hash split -> shard manifest, over the curation CTE chain
+# and the minhash bands.
+ORACLES["training_manifest"] = f"""
+WITH RECURSIVE qd AS (
+  SELECT
+    doc_id, source, text,
+    len(tokens) AS n_tok,
+    length(text) AS n_ch,
+    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
+    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
+    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
+  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM documents)
+),
+ratios AS (
+  SELECT doc_id, source, text, n_tok,
+    CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END AS stop_ratio,
+    CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END AS punct_ratio,
+    CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END AS mean_wl
+  FROM qd
+),
+flagged AS (
+  SELECT doc_id, source, text, n_tok,
+    (2.0 * stop_ratio - 3.0 * punct_ratio + least(n_tok, 100) / 100.0
+     - abs(mean_wl - 5.0) / 10.0) > 0.35::DOUBLE AS passq,
+    md5(text) AS h
+  FROM ratios
+),
+flag2 AS (
+  SELECT *,
+    passq AND doc_id = min(CASE WHEN passq THEN doc_id END)
+                         OVER (PARTITION BY h) AS keptx
+  FROM flagged
+),
+kept2 AS (SELECT doc_id, text FROM flag2 WHERE keptx),
+{_minhash_bands_cte('kept2')},
+pairs AS (
+  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
+),
+cedges AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION
+  SELECT doc_b, doc_a FROM pairs
+),
+reach(node, lbl) AS (
+  SELECT DISTINCT a, a FROM cedges
+  UNION
+  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
+),
+clusters AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
+survivors AS (
+  SELECT f.doc_id, f.source, f.n_tok
+  FROM flag2 f LEFT JOIN clusters c ON f.doc_id = c.node
+  WHERE f.keptx AND (c.component IS NULL OR f.doc_id = c.component)
+),
+split AS (
+  SELECT CASE WHEN {X.hash64_duck("cast(doc_id as varchar) || ':split'")} % 100 < 80 THEN 'train'
+              WHEN {X.hash64_duck("cast(doc_id as varchar) || ':split'")} % 100 < 90 THEN 'val'
+              ELSE 'test' END AS split,
+         source, n_tok
+  FROM survivors
+)
+SELECT split, source, count(*) AS n_docs,
+       CAST(sum(n_tok) AS BIGINT) AS total_tokens,
+       CAST((sum(n_tok) + {_PACK_BUDGET} - 1) // {_PACK_BUDGET} AS INT)
+         AS est_chunks
+FROM split
+GROUP BY split, source
+ORDER BY split, source
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -5016,9 +5204,9 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["kmv_distinct_sketch"] = kmv_distinct_sketch
+QUERIES["kmv_distinct_sketch"] = kmv_distinct_sketch
 
-ROUND5_ORACLES["kmv_distinct_sketch"] = f"""
+ORACLES["kmv_distinct_sketch"] = f"""
 WITH hashed AS (
   SELECT DISTINCT source,
          {X.hash64_duck('token')} >> {60 - _KMV_BITS} AS h
@@ -5108,7 +5296,7 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["equidepth_histogram"] = equidepth_histogram
+QUERIES["equidepth_histogram"] = equidepth_histogram
 
 
 def _equidepth_oracle() -> str:
@@ -5144,7 +5332,7 @@ ORDER BY bucket
 """
 
 
-ROUND5_ORACLES["equidepth_histogram"] = _equidepth_oracle()
+ORACLES["equidepth_histogram"] = _equidepth_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -5186,9 +5374,9 @@ def order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["order_aging"] = order_aging
+QUERIES["order_aging"] = order_aging
 
-ROUND5_ORACLES["order_aging"] = f"""
+ORACLES["order_aging"] = f"""
 WITH aged AS (
   SELECT o_orderstatus,
          CASE WHEN datediff('day', o_orderdate, DATE '{_AGING_ASOF}') <= 30
@@ -5224,7 +5412,6 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer char sums, savings in basis points with one integer
     division against the raw total.
     """
-    from pyprima_spark.plans.queries import curation_flags
 
     d, keptn = curation_flags(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -5257,4 +5444,76 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND5_QUERIES["dedup_savings"] = dedup_savings
+QUERIES["dedup_savings"] = dedup_savings
+
+ORACLES["dedup_savings"] = f"""
+WITH RECURSIVE qd AS (
+  SELECT
+    doc_id, source, text,
+    len(tokens) AS n_tok,
+    length(text) AS n_ch,
+    length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS punct_cnt,
+    length(regexp_replace(lower(text), '\\s', '', 'g')) AS word_chars,
+    {X.stopword_count_duck('tokens', STOPWORDS['en'])} AS stop_cnt
+  FROM (SELECT doc_id, source, text, {X.tokens_duck('text')} AS tokens FROM documents)
+),
+ratios AS (
+  SELECT doc_id, source, text, n_tok,
+    CASE WHEN n_tok = 0 THEN 0 ELSE stop_cnt / n_tok END AS stop_ratio,
+    CASE WHEN n_ch = 0 THEN 0 ELSE punct_cnt / n_ch END AS punct_ratio,
+    CASE WHEN n_tok = 0 THEN 0 ELSE word_chars / n_tok END AS mean_wl
+  FROM qd
+),
+flagged AS (
+  SELECT doc_id, source, text, n_tok,
+    (2.0 * stop_ratio - 3.0 * punct_ratio + least(n_tok, 100) / 100.0
+     - abs(mean_wl - 5.0) / 10.0) > 0.35::DOUBLE AS passq,
+    md5(text) AS h
+  FROM ratios
+),
+flag2 AS (
+  SELECT *,
+    passq AND doc_id = min(CASE WHEN passq THEN doc_id END)
+                         OVER (PARTITION BY h) AS keptx
+  FROM flagged
+),
+kept2 AS (SELECT doc_id, text FROM flag2 WHERE keptx),
+{_minhash_bands_cte('kept2')},
+pairs AS (
+  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc < b.doc
+),
+cedges AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION
+  SELECT doc_b, doc_a FROM pairs
+),
+reach(node, lbl) AS (
+  SELECT DISTINCT a, a FROM cedges
+  UNION
+  SELECT e.b, r.lbl FROM reach r JOIN cedges e ON e.a = r.node
+),
+clusters AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
+sized AS (
+  SELECT f.source, f.passq, f.keptx,
+         f.keptx AND (c.component IS NULL OR f.doc_id = c.component) AS keptn,
+         d.n_chars
+  FROM flag2 f
+  LEFT JOIN clusters c ON f.doc_id = c.node
+  JOIN documents d ON d.doc_id = f.doc_id
+)
+SELECT source,
+  CAST(sum(n_chars) AS BIGINT) AS raw_chars,
+  CAST(coalesce(sum(CASE WHEN passq THEN n_chars END), 0) AS BIGINT)
+    AS quality_chars,
+  CAST(coalesce(sum(CASE WHEN keptx THEN n_chars END), 0) AS BIGINT)
+    AS exact_chars,
+  CAST(coalesce(sum(CASE WHEN keptn THEN n_chars END), 0) AS BIGINT)
+    AS final_chars,
+  CAST((sum(n_chars) - coalesce(sum(CASE WHEN keptn THEN n_chars END), 0))
+       * 10000 // sum(n_chars) AS INT) AS savings_bp
+FROM sized
+GROUP BY source
+ORDER BY source
+"""

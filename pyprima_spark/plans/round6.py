@@ -27,7 +27,7 @@ Families / what each adds that the existing 206 keys do not:
   materialize() stage boundary per round; oracle unrolls the same
   rounds as chained CTEs.
 
-Each key has an exact-match DuckDB oracle in ``ROUND6_ORACLES``;
+Each key has an exact-match DuckDB oracle in ``ORACLES``;
 determinism rules follow functions/agg.py (integer arithmetic at every
 reported edge, DECIMAL-truncated log terms, no rounding of raw
 doubles).
@@ -38,18 +38,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
-from pyprima_spark.functions import text as X
-from pyprima_spark.functions import vectors as V
+from pyprima_spark.functions import text as X, vectors as V
 from pyprima_spark.operators.checkpointing import materialize
+from pyprima_spark.operators.graph import k_core_round
+from pyprima_spark.operators.multimodal import (
+    jpeg_features_roundtrip,
+    png_features_roundtrip,
+)
+from pyprima_spark.plans.core import _t
+from pyprima_spark.sources import fsio
+from pyprima_spark.sources.geotiff import read_raster_tiles, write_raster_tiles
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND6_QUERIES: dict = {}
-ROUND6_ORACLES: dict[str, str] = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -157,9 +159,9 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["decontaminate_ngrams"] = decontaminate_ngrams
+QUERIES["decontaminate_ngrams"] = decontaminate_ngrams
 
-ROUND6_ORACLES["decontaminate_ngrams"] = f"""
+ORACLES["decontaminate_ngrams"] = f"""
 WITH tok AS (
   SELECT doc_id, source,
          ({X.hash64_duck("CAST(doc_id AS VARCHAR) || ':split'")}) % 100 < 80
@@ -272,9 +274,9 @@ def data_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["data_mixture_plan"] = data_mixture_plan
+QUERIES["data_mixture_plan"] = data_mixture_plan
 
-ROUND6_ORACLES["data_mixture_plan"] = f"""
+ORACLES["data_mixture_plan"] = f"""
 WITH census AS (
   SELECT source, count(*) AS n_docs,
          CAST(sum(len({X.tokens_duck('text')})) AS BIGINT) AS tokens
@@ -346,9 +348,9 @@ def deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["deterministic_shuffle"] = deterministic_shuffle
+QUERIES["deterministic_shuffle"] = deterministic_shuffle
 
-ROUND6_ORACLES["deterministic_shuffle"] = f"""
+ORACLES["deterministic_shuffle"] = f"""
 WITH sharded AS (
   SELECT doc_id, source, len({X.tokens_duck('text')}) AS n_tok,
          {X.hash64_duck("CAST(doc_id AS VARCHAR) || ':shuffle'")} AS h
@@ -441,9 +443,9 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["pii_redact"] = pii_redact
+QUERIES["pii_redact"] = pii_redact
 
-ROUND6_ORACLES["pii_redact"] = f"""
+ORACLES["pii_redact"] = f"""
 WITH planted AS (
   SELECT source,
          text
@@ -522,9 +524,9 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["compaction_plan"] = compaction_plan
+QUERIES["compaction_plan"] = compaction_plan
 
-ROUND6_ORACLES["compaction_plan"] = f"""
+ORACLES["compaction_plan"] = f"""
 WITH census AS (
   SELECT source, lang, count(*) AS n_docs,
          CAST(sum(n_chars) AS BIGINT) AS bytes,
@@ -597,11 +599,11 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["embedding_norm_audit"] = embedding_norm_audit
+QUERIES["embedding_norm_audit"] = embedding_norm_audit
 
 # Dim known at plan time on the oracle side only through len();
 # norm_duck needs the per-row length, so use len(body) inline.
-ROUND6_ORACLES["embedding_norm_audit"] = f"""
+ORACLES["embedding_norm_audit"] = f"""
 WITH planted AS (
   SELECT label,
          CASE WHEN vec_id % 97 = 0
@@ -689,9 +691,9 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["psi_drift"] = psi_drift
+QUERIES["psi_drift"] = psi_drift
 
-ROUND6_ORACLES["psi_drift"] = f"""
+ORACLES["psi_drift"] = f"""
 WITH binned AS (
   SELECT event_type, day(ts) <= 15 AS is_a,
          least(greatest(CAST(floor(value / {_PSI_BIN_WIDTH}) AS INT), 0),
@@ -791,7 +793,6 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if rnd == _KCORE_ROUNDS:
             break
-        from pyprima_spark.operators.graph import k_core_round
 
         cur = materialize(k_core_round(cur, _KCORE_K))
     out = census[0]
@@ -800,7 +801,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("round")
 
 
-ROUND6_QUERIES["graph_k_core"] = graph_k_core
+QUERIES["graph_k_core"] = graph_k_core
 
 
 def _kcore_oracle() -> str:
@@ -844,7 +845,7 @@ e{i + 1} AS MATERIALIZED (
     )
 
 
-ROUND6_ORACLES["graph_k_core"] = _kcore_oracle()
+ORACLES["graph_k_core"] = _kcore_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -915,9 +916,9 @@ def doc_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["doc_window_chunks"] = doc_window_chunks
+QUERIES["doc_window_chunks"] = doc_window_chunks
 
-ROUND6_ORACLES["doc_window_chunks"] = f"""
+ORACLES["doc_window_chunks"] = f"""
 WITH per_doc AS (
   SELECT source, n_tok,
          CASE WHEN n_tok = 0 THEN 0 ELSE
@@ -966,7 +967,6 @@ def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline can have (a bug anywhere in encode, deflate, parse,
     unfilter, or the statistics breaks the match).
     """
-    from pyprima_spark.operators.multimodal import png_features_roundtrip
 
     # r11: the staged form (image_features_png(attach_png_media(docs)))
     # ran TWO chained Python workers per task — 2×32 simultaneous
@@ -978,9 +978,9 @@ def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     return png_features_roundtrip(docs).orderBy("doc_id")
 
 
-ROUND6_QUERIES["multimodal_image"] = multimodal_image
+QUERIES["multimodal_image"] = multimodal_image
 
-ROUND6_ORACLES["multimodal_image"] = """
+ORACLES["multimodal_image"] = """
 WITH dims AS (
   SELECT doc_id,
          8 + doc_id % 13 AS w,
@@ -1050,8 +1050,6 @@ def multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from pyprima_spark.operators.multimodal import jpeg_features_roundtrip
-
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     nparts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
@@ -1080,9 +1078,9 @@ def multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-ROUND6_QUERIES["multimodal_jpeg"] = multimodal_jpeg
+QUERIES["multimodal_jpeg"] = multimodal_jpeg
 
-ROUND6_ORACLES["multimodal_jpeg"] = """
+ORACLES["multimodal_jpeg"] = """
 SELECT doc_id,
        CAST(16 + doc_id % 17 AS INT) AS width,
        CAST(16 + doc_id % 11 AS INT) AS height,
@@ -1230,9 +1228,9 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["kmv_source_overlap"] = kmv_source_overlap
+QUERIES["kmv_source_overlap"] = kmv_source_overlap
 
-ROUND6_ORACLES["kmv_source_overlap"] = f"""
+ORACLES["kmv_source_overlap"] = f"""
 WITH hashed AS MATERIALIZED (
   SELECT DISTINCT source,
          ({X.hash64_duck('token')}) >> {60 - _KMVO_BITS} AS h
@@ -1348,9 +1346,9 @@ def champion_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.join(champs, "term").orderBy("term")
 
 
-ROUND6_QUERIES["champion_postings"] = champion_postings
+QUERIES["champion_postings"] = champion_postings
 
-ROUND6_ORACLES["champion_postings"] = f"""
+ORACLES["champion_postings"] = f"""
 WITH tok AS (
   SELECT doc_id, unnest({X.tokens_duck('text')}) AS term FROM documents
 ),
@@ -1436,9 +1434,9 @@ def oov_rate_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["oov_rate_sweep"] = oov_rate_sweep
+QUERIES["oov_rate_sweep"] = oov_rate_sweep
 
-ROUND6_ORACLES["oov_rate_sweep"] = f"""
+ORACLES["oov_rate_sweep"] = f"""
 WITH tok AS (
   SELECT unnest({X.tokens_duck('text')}) AS term FROM documents
 ),
@@ -1508,9 +1506,9 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 k_anonymity_audit.__doc__ = k_anonymity_audit.__doc__.format(k=_KANON_K)
 
-ROUND6_QUERIES["k_anonymity_audit"] = k_anonymity_audit
+QUERIES["k_anonymity_audit"] = k_anonymity_audit
 
-ROUND6_ORACLES["k_anonymity_audit"] = f"""
+ORACLES["k_anonymity_audit"] = f"""
 WITH groups AS (
   SELECT lang, source, n_chars // 50 AS size_bucket, count(*) AS n
   FROM documents GROUP BY 1, 2, 3
@@ -1603,9 +1601,9 @@ def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["blocking_quality_eval"] = blocking_quality_eval
+QUERIES["blocking_quality_eval"] = blocking_quality_eval
 
-ROUND6_ORACLES["blocking_quality_eval"] = """
+ORACLES["blocking_quality_eval"] = """
 WITH base AS (
   SELECT md5(substr(trim(regexp_replace(regexp_replace(lower(text),
              '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')), 1, 40))
@@ -1677,7 +1675,6 @@ def chunk_boundary_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # removal; measured 17 Exchanges in the executed plan). The
     # materialized form is (doc_id, source, 2 longs) — the boundary-key
     # side table a stitching pipeline persists anyway.
-    from pyprima_spark.operators.checkpointing import materialize
 
     b = materialize(
         b.select(
@@ -1724,9 +1721,9 @@ def chunk_boundary_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["chunk_boundary_dups"] = chunk_boundary_dups
+QUERIES["chunk_boundary_dups"] = chunk_boundary_dups
 
-ROUND6_ORACLES["chunk_boundary_dups"] = f"""
+ORACLES["chunk_boundary_dups"] = f"""
 WITH tok AS (
   SELECT doc_id, source, {X.tokens_duck('text')} AS t FROM documents
 ),
@@ -1793,11 +1790,6 @@ def raster_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     way (sources/fsio.py), so the executor-side write works on any
     URI pyarrow can open.
     """
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.geotiff import (
-        read_raster_tiles,
-        write_raster_tiles,
-    )
 
     reg = _t(spark, sf_dir, "region")
     boxes = reg.select(
@@ -1840,9 +1832,9 @@ def raster_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND6_QUERIES["raster_export_manifest"] = raster_export_manifest
+QUERIES["raster_export_manifest"] = raster_export_manifest
 
-ROUND6_ORACLES["raster_export_manifest"] = f"""
+ORACLES["raster_export_manifest"] = f"""
 WITH boxes AS (
   SELECT (r_regionkey * 37) % 120 AS la0,
          (r_regionkey * 53) % 288 AS lo0

@@ -33,7 +33,7 @@ Families / what each adds that the existing 223 keys do not:
   BIGINT fixed-point arithmetic, the data-driven counterpart of
   attribution_models' rule-based splits.
 
-Each key has an exact-match DuckDB oracle in ``ROUND7_ORACLES``;
+Each key has an exact-match DuckDB oracle in ``ORACLES``;
 determinism rules follow functions/agg.py (integer arithmetic at every
 reported edge; `div`/`//` truncation on both engines).
 """
@@ -43,18 +43,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
 from pyprima_spark.functions import text as X
+from pyprima_spark.functions.agg import dec_avg
 from pyprima_spark.operators.checkpointing import materialize
-from pyprima_spark.operators.exactmath import tdiv as _tdiv
+from pyprima_spark.operators.dedup import gram_set_sizes, ngram_gram_table
+from pyprima_spark.operators.exactmath import bounded_collect, tdiv as _tdiv
+from pyprima_spark.operators.multimodal import png_ahash_roundtrip
+from pyprima_spark.plans.constants import NGRAM_DF_MAX, NGRAM_LEN_BAND
+from pyprima_spark.plans.core import _edge_aggregate, _t
+from pyprima_spark.sources import fsio
+from pyprima_spark.sources.avro_ocf import read_avro, write_avro_file
+from pyprima_spark.sources.fixedwidth import read_fixed_width, write_fixed_width
+from pyprima_spark.sources.xlsx import read_xlsx_sheet, write_xlsx_book
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND7_QUERIES: dict = {}
-ROUND7_ORACLES: dict[str, str] = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -121,9 +125,9 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["curriculum_phases"] = curriculum_phases
+QUERIES["curriculum_phases"] = curriculum_phases
 
-ROUND7_ORACLES["curriculum_phases"] = f"""
+ORACLES["curriculum_phases"] = f"""
 WITH scored AS (
   SELECT source,
          len({X.tokens_duck('text')}) AS n_tok,
@@ -245,7 +249,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["countmin_heavy_hitters"] = countmin_heavy_hitters
+QUERIES["countmin_heavy_hitters"] = countmin_heavy_hitters
 
 
 def _cm_oracle() -> str:
@@ -282,7 +286,7 @@ ORDER BY rank
 """
 
 
-ROUND7_ORACLES["countmin_heavy_hitters"] = _cm_oracle()
+ORACLES["countmin_heavy_hitters"] = _cm_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -327,9 +331,9 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["cluster_size_histogram"] = cluster_size_histogram
+QUERIES["cluster_size_histogram"] = cluster_size_histogram
 
-ROUND7_ORACLES["cluster_size_histogram"] = """
+ORACLES["cluster_size_histogram"] = """
 WITH clusters AS (
   SELECT md5(substr(trim(regexp_replace(regexp_replace(lower(text),
            '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')), 1, 40)) AS fp,
@@ -395,9 +399,9 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["tokenizer_fertility"] = tokenizer_fertility
+QUERIES["tokenizer_fertility"] = tokenizer_fertility
 
-ROUND7_ORACLES["tokenizer_fertility"] = f"""
+ORACLES["tokenizer_fertility"] = f"""
 WITH d AS (
   SELECT lang,
          len({X.tokens_duck('text')}) AS n_tok,
@@ -489,9 +493,9 @@ def moving_average_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["moving_average_decompose"] = moving_average_decompose
+QUERIES["moving_average_decompose"] = moving_average_decompose
 
-ROUND7_ORACLES["moving_average_decompose"] = """
+ORACLES["moving_average_decompose"] = """
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
          CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -573,9 +577,9 @@ def contamination_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["contamination_attribution"] = contamination_attribution
+QUERIES["contamination_attribution"] = contamination_attribution
 
-ROUND7_ORACLES["contamination_attribution"] = f"""
+ORACLES["contamination_attribution"] = f"""
 WITH tok AS (
   SELECT doc_id, source,
          {X.hash64_duck("cast(doc_id as VARCHAR) || ':split'")} % 100 < 80
@@ -639,7 +643,6 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and per_bin (≤ |bins| rows) feeds the totals AND the smoothed
     # output — without them every consumer re-ran the events
     # aggregation (executed plan: 3 events scans → 1).
-    from pyprima_spark.operators.checkpointing import materialize
 
     prof = materialize(
         ev.groupBy("user_id").agg(
@@ -716,7 +719,7 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["woe_iv_binning"] = woe_iv_binning
+QUERIES["woe_iv_binning"] = woe_iv_binning
 
 
 def _woe_oracle() -> str:
@@ -770,7 +773,7 @@ FROM smoothed ORDER BY bin
 """
 
 
-ROUND7_ORACLES["woe_iv_binning"] = _woe_oracle()
+ORACLES["woe_iv_binning"] = _woe_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -880,9 +883,9 @@ def kaplan_meier_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["kaplan_meier_fulfillment"] = kaplan_meier_fulfillment
+QUERIES["kaplan_meier_fulfillment"] = kaplan_meier_fulfillment
 
-ROUND7_ORACLES["kaplan_meier_fulfillment"] = f"""
+ORACLES["kaplan_meier_fulfillment"] = f"""
 WITH first_ship AS (
   SELECT l_orderkey, min(l_shipdate) AS ship FROM lineitem GROUP BY 1
 ),
@@ -999,7 +1002,6 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     step_rows = paired.filter(F.col("src_t") != "purchase").select(
         F.col("src_t").alias("src"), mapped.alias("dst")
     )
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     counts = [
         (r["src"], r["dst"], r["c"])
@@ -1064,7 +1066,7 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["markov_attribution"] = markov_attribution
+QUERIES["markov_attribution"] = markov_attribution
 
 
 def _markov_oracle() -> str:
@@ -1160,7 +1162,7 @@ ORDER BY removed_channel
 """
 
 
-ROUND7_ORACLES["markov_attribution"] = _markov_oracle()
+ORACLES["markov_attribution"] = _markov_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1192,9 +1194,6 @@ def model_workbook_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     where driver and executors share a disk (local[k], the tested
     env). Bytes route through PyArrow's FileSystem API either way.
     """
-    from pyprima_spark.functions.agg import dec_avg
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.xlsx import read_xlsx_sheet, write_xlsx_book
 
     nat = _t(spark, sf_dir, "nation")
     orders = _t(spark, sf_dir, "orders")
@@ -1249,9 +1248,9 @@ def model_workbook_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["model_workbook_roundtrip"] = model_workbook_roundtrip
+QUERIES["model_workbook_roundtrip"] = model_workbook_roundtrip
 
-ROUND7_ORACLES["model_workbook_roundtrip"] = """
+ORACLES["model_workbook_roundtrip"] = """
 WITH site AS (
   SELECT 'site' AS sheet, n_name AS site, 'area' AS attr,
          CAST(n_nationkey * 13 % 50 + 10 AS DOUBLE) AS value
@@ -1303,8 +1302,6 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file sink is the format's contract, not a scale path;
     partitioned fan-out stays with the parquet sinks.
     """
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.avro_ocf import read_avro, write_avro_file
 
     orders = _t(spark, sf_dir, "orders")
     sl = orders.filter(F.expr("o_orderkey % 100 < 5")).select(
@@ -1345,9 +1342,9 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["avro_roundtrip"] = avro_roundtrip
+QUERIES["avro_roundtrip"] = avro_roundtrip
 
-ROUND7_ORACLES["avro_roundtrip"] = """
+ORACLES["avro_roundtrip"] = """
 WITH sl AS (
   SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
          CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderstatus END
@@ -1419,7 +1416,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["benford_digit_audit"] = benford_digit_audit
+QUERIES["benford_digit_audit"] = benford_digit_audit
 
 
 def _benford_oracle() -> str:
@@ -1451,7 +1448,7 @@ ORDER BY digit
 """
 
 
-ROUND7_ORACLES["benford_digit_audit"] = _benford_oracle()
+ORACLES["benford_digit_audit"] = _benford_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1505,9 +1502,9 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["hhi_concentration"] = hhi_concentration
+QUERIES["hhi_concentration"] = hhi_concentration
 
-ROUND7_ORACLES["hhi_concentration"] = """
+ORACLES["hhi_concentration"] = """
 WITH per_supp AS (
   SELECT n_regionkey, s_suppkey,
          CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
@@ -1598,9 +1595,9 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["theil_sen_trend"] = theil_sen_trend
+QUERIES["theil_sen_trend"] = theil_sen_trend
 
-ROUND7_ORACLES["theil_sen_trend"] = """
+ORACLES["theil_sen_trend"] = """
 WITH daily AS (
   SELECT event_type,
          datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
@@ -1675,9 +1672,9 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["neyman_allocation"] = neyman_allocation
+QUERIES["neyman_allocation"] = neyman_allocation
 
-ROUND7_ORACLES["neyman_allocation"] = f"""
+ORACLES["neyman_allocation"] = f"""
 WITH stats AS (
   SELECT event_type, count(*) AS n,
          CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s1,
@@ -1724,7 +1721,6 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical rounds as chained CTEs with a row_number pick matching
     the (count, smallest-label) tie-break.
     """
-    from pyprima_spark.plans.queries import _edge_aggregate
 
     # Materialize the dim-bounded edge census once: tot and sparse
     # both reference it, so without the boundary the 4-way lineitem
@@ -1740,7 +1736,6 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_lines") * F.col("ne") * 10 >= 11 * F.col("tot"))
         .select("edge_a", "edge_b")
     )
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     s_rows = {
         (r["edge_a"], r["edge_b"])
@@ -1780,7 +1775,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["label_propagation"] = label_propagation
+QUERIES["label_propagation"] = label_propagation
 
 
 def _lpa_oracle() -> str:
@@ -1840,7 +1835,7 @@ GROUP BY label ORDER BY community
 """
 
 
-ROUND7_ORACLES["label_propagation"] = _lpa_oracle()
+ORACLES["label_propagation"] = _lpa_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1926,9 +1921,9 @@ def interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["interpolate_linear"] = interpolate_linear
+QUERIES["interpolate_linear"] = interpolate_linear
 
-ROUND7_ORACLES["interpolate_linear"] = f"""
+ORACLES["interpolate_linear"] = f"""
 WITH obs AS MATERIALIZED (
   SELECT event_type,
          CAST(floor(epoch(ts)) AS BIGINT) // {_INTERP_BUCKET_S} AS i,
@@ -2083,9 +2078,9 @@ def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["hll_distinct_sketch"] = hll_distinct_sketch
+QUERIES["hll_distinct_sketch"] = hll_distinct_sketch
 
-ROUND7_ORACLES["hll_distinct_sketch"] = f"""
+ORACLES["hll_distinct_sketch"] = f"""
 WITH hashed AS MATERIALIZED (
   SELECT DISTINCT CAST(year(o_orderdate) AS VARCHAR) AS period,
          {X.hash64_duck("cast(o_custkey as varchar)")} AS h
@@ -2194,9 +2189,9 @@ def skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["skyline_2d"] = skyline_2d
+QUERIES["skyline_2d"] = skyline_2d
 
-ROUND7_ORACLES["skyline_2d"] = """
+ORACLES["skyline_2d"] = """
 WITH base AS (
   SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS cents,
          p_size AS size
@@ -2262,7 +2257,6 @@ def jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side collapse (bounded_collect + exact-int replication)
     # was also A/B'd and measured SLOWER than this form at bench scale
     # (the eager executeTake serializes what otherwise pipelines).
-    from pyprima_spark.operators.checkpointing import materialize
 
     strata = materialize(strata)
     w_all = Window.partitionBy()
@@ -2310,9 +2304,9 @@ def jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["jackknife_variance"] = jackknife_variance
+QUERIES["jackknife_variance"] = jackknife_variance
 
-ROUND7_ORACLES["jackknife_variance"] = """
+ORACLES["jackknife_variance"] = """
 WITH strata AS (
   SELECT year(l_shipdate) AS yr,
          sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS g,
@@ -2418,9 +2412,9 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["fuzzy_name_match"] = fuzzy_name_match
+QUERIES["fuzzy_name_match"] = fuzzy_name_match
 
-ROUND7_ORACLES["fuzzy_name_match"] = """
+ORACLES["fuzzy_name_match"] = """
 WITH names AS MATERIALIZED (
   SELECT p_name, count(*) AS cnt,
          string_split(p_name, ' ')[1] AS adj,
@@ -2489,9 +2483,9 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 l_diversity_audit.__doc__ = l_diversity_audit.__doc__.format(l=_LDIV_L)
 
-ROUND7_QUERIES["l_diversity_audit"] = l_diversity_audit
+QUERIES["l_diversity_audit"] = l_diversity_audit
 
-ROUND7_ORACLES["l_diversity_audit"] = f"""
+ORACLES["l_diversity_audit"] = f"""
 WITH groups AS (
   SELECT lang, n_chars // 50 AS size_bucket, count(*) AS n,
          count(DISTINCT source) AS l_div
@@ -2620,9 +2614,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["triangle_count"] = triangle_count
+QUERIES["triangle_count"] = triangle_count
 
-ROUND7_ORACLES["triangle_count"] = f"""
+ORACLES["triangle_count"] = f"""
 WITH lp AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
 ),
@@ -2746,9 +2740,9 @@ def zorder_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["zorder_layout_plan"] = zorder_layout_plan
+QUERIES["zorder_layout_plan"] = zorder_layout_plan
 
-ROUND7_ORACLES["zorder_layout_plan"] = f"""
+ORACLES["zorder_layout_plan"] = f"""
 WITH base AS (
   SELECT o_custkey, datediff('day', DATE '1990-01-01', o_orderdate) AS day
   FROM orders
@@ -2841,9 +2835,9 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["phrase_search"] = phrase_search
+QUERIES["phrase_search"] = phrase_search
 
-ROUND7_ORACLES["phrase_search"] = f"""
+ORACLES["phrase_search"] = f"""
 WITH toks AS (
   SELECT doc_id, {X.tokens_duck('text')} AS ts FROM documents
 ),
@@ -2938,9 +2932,9 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["rrf_fusion"] = rrf_fusion
+QUERIES["rrf_fusion"] = rrf_fusion
 
-ROUND7_ORACLES["rrf_fusion"] = f"""
+ORACLES["rrf_fusion"] = f"""
 WITH base AS (
   SELECT lang, doc_id, n_chars,
          len(list_distinct({X.tokens_duck('text')})) AS n_types
@@ -3026,12 +3020,12 @@ def randomized_response_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["randomized_response_audit"] = randomized_response_audit
+QUERIES["randomized_response_audit"] = randomized_response_audit
 
 _RR_KEEP = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':rrkeep'")
 _RR_BIT = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':rrbit'")
 
-ROUND7_ORACLES["randomized_response_audit"] = f"""
+ORACLES["randomized_response_audit"] = f"""
 WITH flips AS (
   SELECT source,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS s,
@@ -3120,11 +3114,11 @@ def random_projection_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["random_projection_sketch"] = random_projection_sketch
+QUERIES["random_projection_sketch"] = random_projection_sketch
 
 _RP_SIGN_DUCK = X.hash64_duck("CAST(d AS VARCHAR) || ':' || CAST(j AS VARCHAR)")
 
-ROUND7_ORACLES["random_projection_sketch"] = f"""
+ORACLES["random_projection_sketch"] = f"""
 WITH elems AS (
   SELECT vec_id, label, d,
          CAST(floor(CAST(e[d + 1] AS DOUBLE) * {_RP_QSCALE}) AS BIGINT) AS q
@@ -3245,12 +3239,12 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["ndcg_eval"] = ndcg_eval
+QUERIES["ndcg_eval"] = ndcg_eval
 
 _NDCG_W_SQL = ", ".join(str(w) for w in _NDCG_W)
 _NDCG_REL_DUCK = X.hash64_duck("CAST(vec_id AS VARCHAR) || ':rel'")
 
-ROUND7_ORACLES["ndcg_eval"] = f"""
+ORACLES["ndcg_eval"] = f"""
 WITH base AS (
   SELECT vec_id, label,
          list_sum(list_transform(embedding, e ->
@@ -3357,9 +3351,9 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["sorted_neighborhood_pairs"] = sorted_neighborhood_pairs
+QUERIES["sorted_neighborhood_pairs"] = sorted_neighborhood_pairs
 
-ROUND7_ORACLES["sorted_neighborhood_pairs"] = f"""
+ORACLES["sorted_neighborhood_pairs"] = f"""
 WITH names AS (
   SELECT p_name, count(*) AS cnt, substring(p_name, 1, 2) AS block
   FROM part GROUP BY p_name
@@ -3467,11 +3461,11 @@ def longest_prefix_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["longest_prefix_route"] = longest_prefix_route
+QUERIES["longest_prefix_route"] = longest_prefix_route
 
 _LPR_ADDR = X.hash64_duck("CAST(user_id AS VARCHAR) || ':ip'")
 
-ROUND7_ORACLES["longest_prefix_route"] = f"""
+ORACLES["longest_prefix_route"] = f"""
 WITH pts AS (
   SELECT event_id, user_id, ({_LPR_ADDR}) % 65536 AS addr FROM events
 ),
@@ -3579,9 +3573,9 @@ def bitmap_flag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["bitmap_flag_index"] = bitmap_flag_index
+QUERIES["bitmap_flag_index"] = bitmap_flag_index
 
-ROUND7_ORACLES["bitmap_flag_index"] = f"""
+ORACLES["bitmap_flag_index"] = f"""
 WITH flagged AS (
   SELECT source,
          doc_id // {_BM_WORD} AS word,
@@ -3654,7 +3648,6 @@ def image_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup extension at scale is dedup_simhash's banded plan with
     df-cutoffs, already in the catalog).
     """
-    from pyprima_spark.operators.multimodal import png_ahash_roundtrip
 
     # r11: fused single-worker round-trip (same bytes, same hashes) —
     # see multimodal_image's note; this key shared the chained
@@ -3672,7 +3665,7 @@ def image_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["image_phash_groups"] = image_phash_groups
+QUERIES["image_phash_groups"] = image_phash_groups
 
 _AHASH_TOTAL = " + ".join(_ahash_g(x, y) for y in range(8) for x in range(8))
 _AHASH_HI = " + ".join(
@@ -3688,7 +3681,7 @@ _AHASH_LO = " + ".join(
     for x in range(8)
 )
 
-ROUND7_ORACLES["image_phash_groups"] = f"""
+ORACLES["image_phash_groups"] = f"""
 WITH dims AS (
   SELECT doc_id, doc_id AS d,
          8 + doc_id % 13 AS w,
@@ -3788,7 +3781,7 @@ def replica_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["replica_checksum_audit"] = replica_checksum_audit
+QUERIES["replica_checksum_audit"] = replica_checksum_audit
 
 _CK_ROWH = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':' || md5(text)")
 _CK_ROWH_V2 = X.hash64_duck(
@@ -3796,7 +3789,7 @@ _CK_ROWH_V2 = X.hash64_duck(
     "md5(CASE WHEN doc_id % 97 = 0 THEN text || ' v2' ELSE text END)"
 )
 
-ROUND7_ORACLES["replica_checksum_audit"] = f"""
+ORACLES["replica_checksum_audit"] = f"""
 WITH base AS (
   SELECT source,
          sum(({_CK_ROWH}) & {_CK_MASK}) % {_CK_MASK + 1} AS base_ck,
@@ -3901,9 +3894,9 @@ def erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.orderBy("table_name")
 
 
-ROUND7_QUERIES["erasure_cascade"] = erasure_cascade
+QUERIES["erasure_cascade"] = erasure_cascade
 
-ROUND7_ORACLES["erasure_cascade"] = """
+ORACLES["erasure_cascade"] = """
 WITH requests AS (
   SELECT c_custkey FROM customer WHERE c_custkey % 101 = 0
 ),
@@ -3994,7 +3987,7 @@ def rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["rendezvous_sharding"] = rendezvous_sharding
+QUERIES["rendezvous_sharding"] = rendezvous_sharding
 
 _HRW_DUCK = X.hash64_duck("CAST(doc_id AS VARCHAR) || '#' || CAST(s AS VARCHAR)")
 
@@ -4006,7 +3999,7 @@ def _hrw_argmax_duck(n: int) -> str:
     )
 
 
-ROUND7_ORACLES["rendezvous_sharding"] = f"""
+ORACLES["rendezvous_sharding"] = f"""
 WITH assigned AS (
   SELECT doc_id,
          {_hrw_argmax_duck(_HRW_SHARDS)} AS shard_old,
@@ -4048,11 +4041,6 @@ def fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fsio.scratch_dir (``spark.pyprima.scratchDir`` on a cluster) and
     PyArrow's FileSystem API, like the xlsx/GeoTIFF roundtrips.
     """
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.fixedwidth import (
-        read_fixed_width,
-        write_fixed_width,
-    )
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
@@ -4078,9 +4066,9 @@ def fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
-ROUND7_QUERIES["fixed_width_roundtrip"] = fixed_width_roundtrip
+QUERIES["fixed_width_roundtrip"] = fixed_width_roundtrip
 
-ROUND7_ORACLES["fixed_width_roundtrip"] = """
+ORACLES["fixed_width_roundtrip"] = """
 SELECT n_name AS nation,
        CAST(count(*) AS BIGINT) AS n_orders,
        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -4158,9 +4146,9 @@ def slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["slo_burn_rate"] = slo_burn_rate
+QUERIES["slo_burn_rate"] = slo_burn_rate
 
-ROUND7_ORACLES["slo_burn_rate"] = f"""
+ORACLES["slo_burn_rate"] = f"""
 WITH hourly AS (
   SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d') AS day,
          CASE WHEN quantile_disc(value, 0.95) > {_SLO_P95_MAX}
@@ -4262,14 +4250,14 @@ def luhn_check_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["luhn_check_audit"] = luhn_check_audit
+QUERIES["luhn_check_audit"] = luhn_check_audit
 
 _LUHN_PAY = X.hash64_duck("CAST(c_custkey AS VARCHAR) || ':acct'")
 _LUHN_COIN = X.hash64_duck("CAST(c_custkey AS VARCHAR) || ':corrupt'")
 _LUHN_PSUM = _luhn_sum(f"(({_LUHN_PAY}) % {10 ** 11}) * 10", "//")
 _LUHN_VSUM = _luhn_sum("acct_id", "//")
 
-ROUND7_ORACLES["luhn_check_audit"] = f"""
+ORACLES["luhn_check_audit"] = f"""
 WITH ids AS (
   SELECT c_nationkey,
          (({_LUHN_PAY}) % {10 ** 11}) * 10
@@ -4364,13 +4352,13 @@ def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["cohens_kappa"] = cohens_kappa
+QUERIES["cohens_kappa"] = cohens_kappa
 
 _KAPPA_COIN = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':anno'")
 _KAPPA_PICK = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':pick'")
 _KAPPA_ARR = "[" + ", ".join(f"'{l}'" for l in _KAPPA_LANGS) + "]"
 
-ROUND7_ORACLES["cohens_kappa"] = f"""
+ORACLES["cohens_kappa"] = f"""
 WITH labeled AS (
   SELECT lang AS a,
          CASE WHEN ({_KAPPA_COIN}) % 100 < 15
@@ -4468,9 +4456,9 @@ def mutual_nn_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["mutual_nn_mining"] = mutual_nn_mining
+QUERIES["mutual_nn_mining"] = mutual_nn_mining
 
-ROUND7_ORACLES["mutual_nn_mining"] = """
+ORACLES["mutual_nn_mining"] = """
 WITH q AS (
   SELECT vec_id, label,
          list_transform(embedding, e ->
@@ -4538,7 +4526,6 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduler overhead at every scale.  Truncating integer divisions
     on positive operands, so the collapse is bit-identical.
     """
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     docs = _t(spark, sf_dir, "documents")
     cells = [
@@ -4590,9 +4577,9 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang", "source")
 
 
-ROUND7_QUERIES["ipf_raking"] = ipf_raking
+QUERIES["ipf_raking"] = ipf_raking
 
-ROUND7_ORACLES["ipf_raking"] = f"""
+ORACLES["ipf_raking"] = f"""
 WITH cells AS MATERIALIZED (
   SELECT lang, source, count(*) AS n FROM documents GROUP BY lang, source
 ),
@@ -4691,9 +4678,9 @@ def arrival_disorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["arrival_disorder_census"] = arrival_disorder_census
+QUERIES["arrival_disorder_census"] = arrival_disorder_census
 
-ROUND7_ORACLES["arrival_disorder_census"] = """
+ORACLES["arrival_disorder_census"] = """
 WITH seq AS (
   SELECT event_type,
          epoch_us(ts) AS us,
@@ -4786,9 +4773,9 @@ def kendall_tau_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["kendall_tau_topk"] = kendall_tau_topk
+QUERIES["kendall_tau_topk"] = kendall_tau_topk
 
-ROUND7_ORACLES["kendall_tau_topk"] = f"""
+ORACLES["kendall_tau_topk"] = f"""
 WITH base AS (
   SELECT lang, doc_id, n_chars AS sa,
          len(list_distinct({X.tokens_duck('text')})) AS sb
@@ -4908,9 +4895,9 @@ def decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy(F.desc("decile"))
 
 
-ROUND7_QUERIES["decile_lift"] = decile_lift
+QUERIES["decile_lift"] = decile_lift
 
-ROUND7_ORACLES["decile_lift"] = """
+ORACLES["decile_lift"] = """
 WITH first_half AS (
   SELECT o_custkey AS cust,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -5025,9 +5012,9 @@ def quantile_rollup_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["quantile_rollup_gap"] = quantile_rollup_gap
+QUERIES["quantile_rollup_gap"] = quantile_rollup_gap
 
-ROUND7_ORACLES["quantile_rollup_gap"] = """
+ORACLES["quantile_rollup_gap"] = """
 WITH base AS (
   SELECT strftime(ts, '%Y-%m-%d') AS day,
          strftime(ts, '%Y-%m-%d %H') AS hour,
@@ -5143,11 +5130,11 @@ def rank_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["rank_matched_pairs"] = rank_matched_pairs
+QUERIES["rank_matched_pairs"] = rank_matched_pairs
 
 _RMP_ARM = X.hash64_duck("CAST(cust AS VARCHAR) || ':arm'")
 
-ROUND7_ORACLES["rank_matched_pairs"] = f"""
+ORACLES["rank_matched_pairs"] = f"""
 WITH spend AS MATERIALIZED (
   SELECT cust, cents, n_name AS nation, ({_RMP_ARM}) % 2 AS treated
   FROM (
@@ -5263,9 +5250,9 @@ def encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["encoding_advisor"] = encoding_advisor
+QUERIES["encoding_advisor"] = encoding_advisor
 
-ROUND7_ORACLES["encoding_advisor"] = """
+ORACLES["encoding_advisor"] = """
 WITH long AS (
   SELECT o_orderkey, o_orderdate AS d, col_name, val
   FROM orders,
@@ -5372,7 +5359,7 @@ def majority_vote_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["majority_vote_repair"] = majority_vote_repair
+QUERIES["majority_vote_repair"] = majority_vote_repair
 
 _MVR_TRUTH = X.hash64_duck("CAST(doc_id AS VARCHAR) || ':payload'")
 
@@ -5388,7 +5375,7 @@ _MVR_REPS = [
 ]
 _MVR_COINS = [f"({_mvr_coin_duck(i)}) % 23 = 0" for i in range(3)]
 
-ROUND7_ORACLES["majority_vote_repair"] = f"""
+ORACLES["majority_vote_repair"] = f"""
 WITH voted AS (
   SELECT source,
          CASE WHEN ({_MVR_REPS[0]}) = ({_MVR_REPS[1]})
@@ -5449,8 +5436,6 @@ def _band_census_over(raw_docs: DataFrame) -> DataFrame:
     """The band-census core over an arbitrary documents frame
     (doc_id, source, text) — extracted so the stress probe can drive
     the identical plan at N× replication (the _ppjoin_over template)."""
-    from pyprima_spark.operators.dedup import gram_set_sizes, ngram_gram_table
-    from pyprima_spark.plans.constants import NGRAM_DF_MAX, NGRAM_LEN_BAND
 
     docs = raw_docs.withColumn(
         "len_band", F.floor(F.length("text") / NGRAM_LEN_BAND)
@@ -5513,14 +5498,9 @@ def _band_census_over(raw_docs: DataFrame) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["similarity_band_census"] = similarity_band_census
+QUERIES["similarity_band_census"] = similarity_band_census
 
-from pyprima_spark.plans.constants import (  # noqa: E402 - oracle literals
-    NGRAM_DF_MAX,
-    NGRAM_LEN_BAND,
-)
-
-ROUND7_ORACLES["similarity_band_census"] = f"""
+ORACLES["similarity_band_census"] = f"""
 WITH docs AS (
   SELECT doc_id, source,
          cast(floor(length(text) / {NGRAM_LEN_BAND}) AS bigint) AS len_band,
@@ -5663,9 +5643,9 @@ def mrl_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND7_QUERIES["mrl_truncation_eval"] = mrl_truncation_eval
+QUERIES["mrl_truncation_eval"] = mrl_truncation_eval
 
-ROUND7_ORACLES["mrl_truncation_eval"] = f"""
+ORACLES["mrl_truncation_eval"] = f"""
 WITH base AS (
   SELECT vec_id,
          list_transform(embedding, e ->

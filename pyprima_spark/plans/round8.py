@@ -16,7 +16,7 @@ Families / what each adds that the existing 272 keys do not:
   the published statistic is sign(cov)·10000·cov²/(varx·vary) — a
   signed r² in basis points with no float ever materialized.
 
-Each key has an exact-match DuckDB oracle in ``ROUND8_ORACLES``;
+Each key has an exact-match DuckDB oracle in ``ORACLES``;
 determinism rules follow functions/agg.py (integer arithmetic at every
 reported edge; `div`/`//` truncation on both engines; DECIMAL(38,0)
 accumulation where int64 would overflow — DuckDB widens to HUGEINT
@@ -30,18 +30,23 @@ from hashlib import md5 as _md5
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
-from pyprima_spark.functions import text as X
+from pyprima_spark.functions import text as X, vectors as V
+from pyprima_spark.functions.text import tokens_spark
 from pyprima_spark.operators.checkpointing import materialize
-from pyprima_spark.operators.exactmath import bounded_collect as _bounded_collect
+from pyprima_spark.operators.dedup import minhash_band_table
+from pyprima_spark.operators.exactmath import (
+    bounded_collect,
+    min_label_components,
+    tdiv as _tdiv,
+)
+from pyprima_spark.operators.similarity import with_vec_norm
+from pyprima_spark.plans.constants import STOPWORDS as _STOPWORDS
+from pyprima_spark.plans.core import _edge_aggregate, _MINHASH_BANDS_CTE, _t
+from pyprima_spark.plans.round7 import _z_interleave
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND8_QUERIES: dict = {}
-ROUND8_ORACLES: dict[str, str] = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -127,9 +132,9 @@ def roc_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["roc_auc_rank"] = roc_auc_rank
+QUERIES["roc_auc_rank"] = roc_auc_rank
 
-ROUND8_ORACLES["roc_auc_rank"] = """
+ORACLES["roc_auc_rank"] = """
 WITH first_half AS (
   SELECT o_custkey AS cust,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -251,9 +256,9 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["acf_lags"] = acf_lags
+QUERIES["acf_lags"] = acf_lags
 
-ROUND8_ORACLES["acf_lags"] = f"""
+ORACLES["acf_lags"] = f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -371,9 +376,9 @@ def ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["ams_f2_sketch"] = ams_f2_sketch
+QUERIES["ams_f2_sketch"] = ams_f2_sketch
 
-ROUND8_ORACLES["ams_f2_sketch"] = f"""
+ORACLES["ams_f2_sketch"] = f"""
 WITH hashed AS (
   SELECT event_type,
          {X.hash64_duck("CAST(user_id AS VARCHAR)")} AS h
@@ -489,9 +494,9 @@ def pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["pps_systematic_sample"] = pps_systematic_sample
+QUERIES["pps_systematic_sample"] = pps_systematic_sample
 
-ROUND8_ORACLES["pps_systematic_sample"] = f"""
+ORACLES["pps_systematic_sample"] = f"""
 WITH cum AS (
   SELECT source, doc_id, n_chars AS w,
          sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id) AS c,
@@ -549,7 +554,6 @@ def weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-DataFrame loop paid a broadcast join + min fold per round on
     a ≤25-row dist table).
     """
-    from pyprima_spark.plans.queries import _edge_aggregate
 
     # Materialize the dim-bounded edge census once: tot and sparse
     # both reference it, so without the boundary the 4-way lineitem
@@ -569,14 +573,14 @@ def weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s_rows = [
         (r["edge_a"], r["edge_b"], r["cost"])
-        for r in _bounded_collect(
+        for r in bounded_collect(
             sparse, 625, "weighted_shortest_path: nation-pair edge census"
         )
     ]  # dim-bounded sparsified census (≤ |nations|²)
     sym = s_rows + [(b, a, c) for a, b, c in s_rows]
     names = {
         r["n_nationkey"]: r["n_name"]
-        for r in _bounded_collect(
+        for r in bounded_collect(
             _t(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
             25,
             "weighted_shortest_path: nation name census",
@@ -602,9 +606,9 @@ def weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["weighted_shortest_path"] = weighted_shortest_path
+QUERIES["weighted_shortest_path"] = weighted_shortest_path
 
-ROUND8_ORACLES["weighted_shortest_path"] = f"""
+ORACLES["weighted_shortest_path"] = f"""
 WITH RECURSIVE pairs AS (
   SELECT least(c_nationkey, s_nationkey) AS edge_a,
          greatest(c_nationkey, s_nationkey) AS edge_b
@@ -707,9 +711,9 @@ def conformal_interval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["conformal_interval_eval"] = conformal_interval_eval
+QUERIES["conformal_interval_eval"] = conformal_interval_eval
 
-ROUND8_ORACLES["conformal_interval_eval"] = """
+ORACLES["conformal_interval_eval"] = """
 WITH base AS (
   SELECT o_orderpriority,
          o_orderkey % 3 AS split,
@@ -813,11 +817,11 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["embedding_covariance"] = embedding_covariance
+QUERIES["embedding_covariance"] = embedding_covariance
 
 _cov_pairs = [(i, j) for i in range(_COV_D) for j in range(i, _COV_D)]
 
-ROUND8_ORACLES["embedding_covariance"] = f"""
+ORACLES["embedding_covariance"] = f"""
 WITH q AS (
   SELECT {", ".join(f"CAST(floor((embedding)[{i + 1}]::DOUBLE * {_COV_SCALE}) AS BIGINT) AS q{i}" for i in range(_COV_D))}
   FROM embeddings
@@ -906,9 +910,9 @@ def hybrid_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["hybrid_skew_join"] = hybrid_skew_join
+QUERIES["hybrid_skew_join"] = hybrid_skew_join
 
-ROUND8_ORACLES["hybrid_skew_join"] = """
+ORACLES["hybrid_skew_join"] = """
 WITH orders_c AS (
   SELECT o_custkey AS cust,
          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -1054,9 +1058,9 @@ def _hamming_recall_over(emb: DataFrame) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["binary_hamming_recall"] = binary_hamming_recall
+QUERIES["binary_hamming_recall"] = binary_hamming_recall
 
-ROUND8_ORACLES["binary_hamming_recall"] = f"""
+ORACLES["binary_hamming_recall"] = f"""
 WITH base AS (
   SELECT vec_id,
          list_transform(embedding, e ->
@@ -1188,9 +1192,9 @@ def priority_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["priority_sample_estimate"] = priority_sample_estimate
+QUERIES["priority_sample_estimate"] = priority_sample_estimate
 
-ROUND8_ORACLES["priority_sample_estimate"] = f"""
+ORACLES["priority_sample_estimate"] = f"""
 WITH pri AS (
   SELECT doc_id, source, n_chars AS w,
          (n_chars * {_PSE_U})
@@ -1341,11 +1345,11 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["dup_span_census"] = dup_span_census
+QUERIES["dup_span_census"] = dup_span_census
 
 _dsc_gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(_DSC_K))
 
-ROUND8_ORACLES["dup_span_census"] = f"""
+ORACLES["dup_span_census"] = f"""
 WITH tok AS (
   SELECT doc_id, source, {X.tokens_duck('text')} AS toks
   FROM documents
@@ -1456,9 +1460,9 @@ def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["calibration_ece"] = calibration_ece
+QUERIES["calibration_ece"] = calibration_ece
 
-ROUND8_ORACLES["calibration_ece"] = f"""
+ORACLES["calibration_ece"] = f"""
 WITH base AS (
   SELECT o_custkey % 200 AS grp,
          (cast('0x' || substring(md5(CAST(o_orderkey AS VARCHAR) || ':cal'), 1, 15) as BIGINT)) % 2 = 0
@@ -1585,9 +1589,9 @@ def silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["silhouette_eval"] = silhouette_eval
+QUERIES["silhouette_eval"] = silhouette_eval
 
-ROUND8_ORACLES["silhouette_eval"] = """
+ORACLES["silhouette_eval"] = """
 WITH pts AS (
   SELECT vec_id, label, i - 1 AS dim,
          CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS xq
@@ -1713,7 +1717,7 @@ def padding_waste_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["padding_waste_buckets"] = padding_waste_buckets
+QUERIES["padding_waste_buckets"] = padding_waste_buckets
 
 _PWB_DEC_CASE = "CASE " + " ".join(
     f"WHEN len <= c{d} THEN {d}" for d in range(1, 10)
@@ -1722,7 +1726,7 @@ _PWB_QUA_CASE = "CASE " + " ".join(
     f"WHEN len <= q{i} THEN {i}" for i in range(1, 4)
 ) + " ELSE 4 END"
 
-ROUND8_ORACLES["padding_waste_buckets"] = f"""
+ORACLES["padding_waste_buckets"] = f"""
 WITH lens AS (
   SELECT len({X.tokens_duck('text')}) AS len FROM documents
   WHERE len({X.tokens_duck('text')}) > 0
@@ -1804,7 +1808,7 @@ def nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("dim", "xq"),
     )
-    cent_rows = _bounded_collect(
+    cent_rows = bounded_collect(
         pts.filter("is_train")
         .groupBy(F.col("label").alias("clabel"), "dim")
         .agg(
@@ -1895,9 +1899,9 @@ def nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["nearest_centroid_confusion"] = nearest_centroid_confusion
+QUERIES["nearest_centroid_confusion"] = nearest_centroid_confusion
 
-ROUND8_ORACLES["nearest_centroid_confusion"] = f"""
+ORACLES["nearest_centroid_confusion"] = f"""
 WITH pts AS (
   SELECT vec_id, label,
          ({X.hash64_duck("CAST(vec_id AS VARCHAR) || ':nc'")}) % 2 = 0
@@ -2001,9 +2005,9 @@ def fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("fd")
 
 
-ROUND8_QUERIES["fd_discovery"] = fd_discovery
+QUERIES["fd_discovery"] = fd_discovery
 
-ROUND8_ORACLES["fd_discovery"] = "\nUNION ALL\n".join(
+ORACLES["fd_discovery"] = "\nUNION ALL\n".join(
     f"""
 SELECT '{t}: {l} -> {r}' AS fd,
        CAST(count(*) AS BIGINT) AS n_lhs,
@@ -2085,9 +2089,9 @@ def prefix_cache_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("prefix_len")
 
 
-ROUND8_QUERIES["prefix_cache_hits"] = prefix_cache_hits
+QUERIES["prefix_cache_hits"] = prefix_cache_hits
 
-ROUND8_ORACLES["prefix_cache_hits"] = "\nUNION ALL\n".join(
+ORACLES["prefix_cache_hits"] = "\nUNION ALL\n".join(
     f"""
 SELECT 'p{p:02d}' AS prefix_len,
        CAST(sum(n) AS BIGINT) AS n_eligible,
@@ -2181,9 +2185,9 @@ def ips_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["ips_policy_eval"] = ips_policy_eval
+QUERIES["ips_policy_eval"] = ips_policy_eval
 
-ROUND8_ORACLES["ips_policy_eval"] = f"""
+ORACLES["ips_policy_eval"] = f"""
 WITH ev AS (
   SELECT event_type,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -2286,9 +2290,9 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["diff_in_diff"] = diff_in_diff
+QUERIES["diff_in_diff"] = diff_in_diff
 
-ROUND8_ORACLES["diff_in_diff"] = f"""
+ORACLES["diff_in_diff"] = f"""
 WITH ev AS (
   SELECT event_type,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -2389,9 +2393,9 @@ def hashing_trick_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("width")
 
 
-ROUND8_QUERIES["hashing_trick_collisions"] = hashing_trick_collisions
+QUERIES["hashing_trick_collisions"] = hashing_trick_collisions
 
-ROUND8_ORACLES["hashing_trick_collisions"] = "\nUNION ALL\n".join(
+ORACLES["hashing_trick_collisions"] = "\nUNION ALL\n".join(
     f"""
 SELECT 'b{b:02d}' AS width,
        CAST(sum(n) AS BIGINT) AS n_features,
@@ -2527,9 +2531,9 @@ def doubly_robust_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["doubly_robust_eval"] = doubly_robust_eval
+QUERIES["doubly_robust_eval"] = doubly_robust_eval
 
-ROUND8_ORACLES["doubly_robust_eval"] = f"""
+ORACLES["doubly_robust_eval"] = f"""
 WITH ev AS (
   SELECT event_type,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -2690,9 +2694,9 @@ def qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["qini_uplift"] = qini_uplift
+QUERIES["qini_uplift"] = qini_uplift
 
-ROUND8_ORACLES["qini_uplift"] = f"""
+ORACLES["qini_uplift"] = f"""
 WITH first_half AS (
   SELECT o_custkey AS cust,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -2827,9 +2831,9 @@ def wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["wasserstein_drift"] = wasserstein_drift
+QUERIES["wasserstein_drift"] = wasserstein_drift
 
-ROUND8_ORACLES["wasserstein_drift"] = f"""
+ORACLES["wasserstein_drift"] = f"""
 WITH binned AS (
   SELECT event_type,
          CASE WHEN ts < TIMESTAMP '{_W1_SPLIT}' THEN 0 ELSE 1 END AS p,
@@ -2965,9 +2969,9 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["poisson_bootstrap_ci"] = poisson_bootstrap_ci
+QUERIES["poisson_bootstrap_ci"] = poisson_bootstrap_ci
 
-ROUND8_ORACLES["poisson_bootstrap_ci"] = f"""
+ORACLES["poisson_bootstrap_ci"] = f"""
 WITH ev AS (
   SELECT event_type,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -3103,9 +3107,9 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["cuped_adjustment"] = cuped_adjustment
+QUERIES["cuped_adjustment"] = cuped_adjustment
 
-ROUND8_ORACLES["cuped_adjustment"] = f"""
+ORACLES["cuped_adjustment"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          sum(CASE WHEN o_orderdate < DATE '1998-07-01'
@@ -3216,9 +3220,9 @@ def postings_compression_estimate(
     )
 
 
-ROUND8_QUERIES["postings_compression_estimate"] = postings_compression_estimate
+QUERIES["postings_compression_estimate"] = postings_compression_estimate
 
-ROUND8_ORACLES["postings_compression_estimate"] = f"""
+ORACLES["postings_compression_estimate"] = f"""
 WITH postings AS (
   SELECT DISTINCT {X.hash64_duck('term')} AS th, doc_id
   FROM (
@@ -3294,7 +3298,7 @@ def source_selection_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bitmask's capacity; past it, use the segmented-mask extension.
     srcs = sorted(
         r[0]
-        for r in _bounded_collect(
+        for r in bounded_collect(
             docs.select("source").distinct(),
             60,
             "source_selection_greedy: the bigint bitmask holds at most"
@@ -3305,7 +3309,7 @@ def source_selection_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping = spark.createDataFrame(
         [(s, 1 << bit[s]) for s in srcs], "source string, sbit bigint"
     )
-    census = _bounded_collect(
+    census = bounded_collect(
         docs.select("source", F.expr(X.tokens_spark("text")).alias("toks"))
         .filter(F.size("toks") >= _SSG_GRAM)
         .select(
@@ -3363,7 +3367,7 @@ def source_selection_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("step")
 
 
-ROUND8_QUERIES["source_selection_greedy"] = source_selection_greedy
+QUERIES["source_selection_greedy"] = source_selection_greedy
 
 _ssg_grams_cte = f"""
 grams AS (
@@ -3400,7 +3404,7 @@ s3 AS (
 )
 """
 
-ROUND8_ORACLES["source_selection_greedy"] = f"""
+ORACLES["source_selection_greedy"] = f"""
 WITH {_ssg_grams_cte}
 SELECT 1 AS step, source, CAST(marginal AS BIGINT) AS marginal_grams,
        CAST(marginal AS BIGINT) AS cum_grams,
@@ -3511,9 +3515,9 @@ def coverage_decay_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["coverage_decay_curve"] = coverage_decay_curve
+QUERIES["coverage_decay_curve"] = coverage_decay_curve
 
-ROUND8_ORACLES["coverage_decay_curve"] = f"""
+ORACLES["coverage_decay_curve"] = f"""
 WITH ranks AS (
   SELECT source, row_number() OVER (ORDER BY mass DESC, source) AS rk
   FROM (
@@ -3596,9 +3600,8 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_pts"))
         .withColumn("cell", F.expr("(cx + 100) * 1000 + (cy + 100)"))
     )
-    from pyprima_spark.operators.exactmath import min_label_components
 
-    crows = _bounded_collect(
+    crows = bounded_collect(
         cells, 40401, "grid_density_clusters: resolution-bounded cell census"
     )  # ≤ 201×201 cells, the (cx+100)*1000+(cy+100) encoding capacity
     core = {
@@ -3640,9 +3643,9 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["grid_density_clusters"] = grid_density_clusters
+QUERIES["grid_density_clusters"] = grid_density_clusters
 
-ROUND8_ORACLES["grid_density_clusters"] = f"""
+ORACLES["grid_density_clusters"] = f"""
 WITH RECURSIVE cells AS (
   SELECT cx, cy, count(*) AS n_pts, (cx + 100) * 1000 + (cy + 100) AS cell
   FROM (
@@ -3764,9 +3767,9 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["simpson_paradox_audit"] = simpson_paradox_audit
+QUERIES["simpson_paradox_audit"] = simpson_paradox_audit
 
-ROUND8_ORACLES["simpson_paradox_audit"] = f"""
+ORACLES["simpson_paradox_audit"] = f"""
 WITH base AS (
   SELECT c.c_mktsegment AS segment,
          CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -3864,9 +3867,9 @@ def p99_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["p99_attribution"] = p99_attribution
+QUERIES["p99_attribution"] = p99_attribution
 
-ROUND8_ORACLES["p99_attribution"] = """
+ORACLES["p99_attribution"] = """
 WITH ev AS (
   SELECT event_type,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -3993,9 +3996,9 @@ def interpolation_search_census(keys: DataFrame) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["interpolation_search_error"] = interpolation_search_error
+QUERIES["interpolation_search_error"] = interpolation_search_error
 
-ROUND8_ORACLES["interpolation_search_error"] = f"""
+ORACLES["interpolation_search_error"] = f"""
 WITH keys AS (SELECT o_orderkey AS k FROM orders),
 stats AS (
   SELECT min(k) AS gmin, max(k) AS gmax,
@@ -4117,7 +4120,7 @@ def aa_test_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["aa_test_fpr"] = aa_test_fpr
+QUERIES["aa_test_fpr"] = aa_test_fpr
 
 _aa_chi_duck = (
     "(1000 * (a + bb + c + d)::HUGEINT"
@@ -4126,7 +4129,7 @@ _aa_chi_duck = (
     " // ((a::HUGEINT + bb) * (c + d) * (a::HUGEINT + c) * (bb + d))"
 )
 
-ROUND8_ORACLES["aa_test_fpr"] = f"""
+ORACLES["aa_test_fpr"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          max(CASE WHEN o_orderdate >= DATE '1998-07-01'
@@ -4236,7 +4239,7 @@ def curve_locality_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cell_rows = [
         (r["cx"], r["cy"])
-        for r in _bounded_collect(
+        for r in bounded_collect(
             cells, 65536, "curve_locality_compare: 256×256 grid census"
         )
     ]  # grid-bounded census (<= 65536 cells)
@@ -4297,21 +4300,7 @@ def curve_locality_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _z_interleave_r8(xb: str, yb: str, spark_syntax: bool) -> str:
-    """Round-7's _z_interleave, re-emitted here to keep round8
-    import-light (same 16-term sum, both dialects; round7.py:2565)."""
-    terms = []
-    for i in range(_CLC_BITS):
-        if spark_syntax:
-            terms.append(f"shiftleft(shiftright({xb}, {i}) & 1, {2 * i})")
-            terms.append(f"shiftleft(shiftright({yb}, {i}) & 1, {2 * i + 1})")
-        else:
-            terms.append(f"((({xb} >> {i}) & 1) << {2 * i})")
-            terms.append(f"((({yb} >> {i}) & 1) << {2 * i + 1})")
-    return " + ".join(terms)
-
-
-ROUND8_QUERIES["curve_locality_compare"] = curve_locality_compare
+QUERIES["curve_locality_compare"] = curve_locality_compare
 
 
 def _clc_oracle() -> str:
@@ -4323,7 +4312,7 @@ def _clc_oracle() -> str:
     for stage in _hilbert_stages(_CLC_BITS, spark_syntax=False):
         cols = ", ".join(f"{expr} AS {col}" for col, expr in stage.items())
         q = f"SELECT cx, cy, {cols} FROM ({q})"
-    z = _z_interleave_r8("cx", "cy", spark_syntax=False)
+    z = _z_interleave("cx", "cy", spark_syntax=False)
     h = X.hash64_duck("cx || ':' || cy")
     return f"""
 WITH coded AS (
@@ -4357,7 +4346,7 @@ GROUP BY curve ORDER BY curve
 """
 
 
-ROUND8_ORACLES["curve_locality_compare"] = _clc_oracle()
+ORACLES["curve_locality_compare"] = _clc_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -4454,9 +4443,9 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["isotonic_calibration"] = isotonic_calibration
+QUERIES["isotonic_calibration"] = isotonic_calibration
 
-ROUND8_ORACLES["isotonic_calibration"] = f"""
+ORACLES["isotonic_calibration"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          CAST(sum(CASE WHEN o_orderdate < DATE '1998-01-01'
@@ -4648,7 +4637,7 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["bh_fdr_control"] = bh_fdr_control
+QUERIES["bh_fdr_control"] = bh_fdr_control
 
 _bh_chi_duck = (
     "(1000 * (a + bb + c + d)::HUGEINT"
@@ -4657,7 +4646,7 @@ _bh_chi_duck = (
     " // nullif((a::HUGEINT + bb) * (c + d) * (a::HUGEINT + c) * (bb + d), 0)"
 )
 
-ROUND8_ORACLES["bh_fdr_control"] = f"""
+ORACLES["bh_fdr_control"] = f"""
 WITH cust AS (
   SELECT c_custkey AS cust, c_mktsegment AS segment, r_name AS region,
          CASE WHEN c_acctbal >= 5000 THEN 1 ELSE 0 END AS exposed
@@ -4771,7 +4760,6 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subset/marginal joins + two materializes were ~13 jobs on
     # <= 16-row state).  Exact integers; tdiv + the -1 fallback mirror
     # SQL div/nullif/coalesce (phi can be negative).
-    from pyprima_spark.operators.exactmath import bounded_collect, tdiv
 
     nc = {
         int(r["mask"]): int(r["n_conv"])
@@ -4795,14 +4783,14 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     tot = sum(phis.values())
     for name in sorted(phis):
-        share = tdiv(10000 * phis[name], tot if tot != 0 else None)
+        share = _tdiv(10000 * phis[name], tot if tot != 0 else None)
         out.append((name, phis[name], -1 if share is None else share))
     return spark.createDataFrame(
         out, schema="channel string, phi_x24 bigint, share_bp bigint"
     ).orderBy("channel")
 
 
-ROUND8_QUERIES["shapley_attribution"] = shapley_attribution
+QUERIES["shapley_attribution"] = shapley_attribution
 
 _shap_mask_duck = " + ".join(
     f"CASE WHEN event_type = '{name}' THEN {bit} ELSE 0 END"
@@ -4812,7 +4800,7 @@ _shap_chan_values = ", ".join(
     f"('{name}', {bit})" for name, bit in _SHAP_CHANNELS
 )
 
-ROUND8_ORACLES["shapley_attribution"] = f"""
+ORACLES["shapley_attribution"] = f"""
 WITH journeys AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
          bit_or({_shap_mask_duck}) AS mask,
@@ -4947,9 +4935,9 @@ def average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["average_precision_eval"] = average_precision_eval
+QUERIES["average_precision_eval"] = average_precision_eval
 
-ROUND8_ORACLES["average_precision_eval"] = f"""
+ORACLES["average_precision_eval"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          CAST(sum(CASE WHEN o_orderdate < DATE '1998-01-01'
@@ -5128,14 +5116,14 @@ def consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["consistent_hash_ring"] = consistent_hash_ring
+QUERIES["consistent_hash_ring"] = consistent_hash_ring
 
 _ring_pos_duck = X.hash64_duck(
     f"'node:' || CAST(i // {_RING_VNODES} AS VARCHAR)"
     f" || ':' || CAST(i % {_RING_VNODES} AS VARCHAR)"
 )
 
-ROUND8_ORACLES["consistent_hash_ring"] = f"""
+ORACLES["consistent_hash_ring"] = f"""
 WITH vnodes AS (
   SELECT CAST(i // {_RING_VNODES} AS INT) AS node,
          {_ring_pos_duck} AS pos
@@ -5305,9 +5293,9 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["brier_decomposition"] = brier_decomposition
+QUERIES["brier_decomposition"] = brier_decomposition
 
-ROUND8_ORACLES["brier_decomposition"] = f"""
+ORACLES["brier_decomposition"] = f"""
 WITH orders_t AS (
   SELECT o_custkey AS cust, o_custkey % 200 AS grp,
          ({X.hash64_duck("CAST(o_orderkey AS VARCHAR) || ':brier'")}) % 2 = 0
@@ -5409,7 +5397,6 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-joins were ~13 Spark jobs on <= 50-row state; the exact
     # 9^d/10^d integer terms and truncating divisions are Python-int
     # exact, so the collapse is bit-identical.
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     rows = bounded_collect(
         census, 2 * 128, "rank_biased_overlap: brand x year revenue census"
@@ -5439,9 +5426,9 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("depth")
 
 
-ROUND8_QUERIES["rank_biased_overlap"] = rank_biased_overlap
+QUERIES["rank_biased_overlap"] = rank_biased_overlap
 
-ROUND8_ORACLES["rank_biased_overlap"] = f"""
+ORACLES["rank_biased_overlap"] = f"""
 WITH census AS (
   SELECT year(o_orderdate) AS yr, p.p_brand AS brand,
          sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -5565,9 +5552,9 @@ def heavy_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["heavy_change_detection"] = heavy_change_detection
+QUERIES["heavy_change_detection"] = heavy_change_detection
 
-ROUND8_ORACLES["heavy_change_detection"] = f"""
+ORACLES["heavy_change_detection"] = f"""
 WITH census AS (
   SELECT l_partkey,
          sum(CASE WHEN l_shipdate >= DATE '1997-01-01'
@@ -5680,9 +5667,9 @@ def importance_weight_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["importance_weight_ess"] = importance_weight_ess
+QUERIES["importance_weight_ess"] = importance_weight_ess
 
-ROUND8_ORACLES["importance_weight_ess"] = """
+ORACLES["importance_weight_ess"] = """
 WITH orders_w AS (
   SELECT o_orderpriority AS prio, o_custkey,
          CASE WHEN o_orderdate < DATE '1997-07-01' THEN 1 ELSE 0 END
@@ -5828,9 +5815,9 @@ def runs_test_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["runs_test_residuals"] = runs_test_residuals
+QUERIES["runs_test_residuals"] = runs_test_residuals
 
-ROUND8_ORACLES["runs_test_residuals"] = """
+ORACLES["runs_test_residuals"] = """
 WITH daily AS (
   SELECT year(o_orderdate) AS yr, CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -5942,7 +5929,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_rows = [
         (r["src"], r["dst"])
-        for r in _bounded_collect(
+        for r in bounded_collect(
             edges, 625, "hits_hubs_authorities: nation-pair edge census"
         )
     ]  # dim-bounded (≤ |nations|²)
@@ -5975,7 +5962,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["hits_hubs_authorities"] = hits_hubs_authorities
+QUERIES["hits_hubs_authorities"] = hits_hubs_authorities
 
 
 def _hits_oracle() -> str:
@@ -6030,7 +6017,7 @@ ORDER BY nationkey
 """
 
 
-ROUND8_ORACLES["hits_hubs_authorities"] = _hits_oracle()
+ORACLES["hits_hubs_authorities"] = _hits_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -6113,9 +6100,9 @@ def newsvendor_stock_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["newsvendor_stock_level"] = newsvendor_stock_level
+QUERIES["newsvendor_stock_level"] = newsvendor_stock_level
 
-ROUND8_ORACLES["newsvendor_stock_level"] = """
+ORACLES["newsvendor_stock_level"] = """
 WITH joined AS (
   SELECT p.p_brand AS brand,
          CAST(weekofyear(l_shipdate) AS INT) AS wk,
@@ -6252,9 +6239,9 @@ def regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["regression_discontinuity"] = regression_discontinuity
+QUERIES["regression_discontinuity"] = regression_discontinuity
 
-ROUND8_ORACLES["regression_discontinuity"] = f"""
+ORACLES["regression_discontinuity"] = f"""
 WITH daily AS (
   SELECT c.c_mktsegment AS segment,
          datediff('day', DATE '1997-07-01', CAST(o_orderdate AS DATE)) AS x,
@@ -6383,9 +6370,9 @@ def disparate_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["disparate_impact_audit"] = disparate_impact_audit
+QUERIES["disparate_impact_audit"] = disparate_impact_audit
 
-ROUND8_ORACLES["disparate_impact_audit"] = """
+ORACLES["disparate_impact_audit"] = """
 WITH cust AS (
   SELECT c_custkey AS cust, c_mktsegment AS segment, r_name AS region
   FROM customer
@@ -6560,11 +6547,11 @@ def merkle_tree_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["merkle_tree_diff"] = merkle_tree_diff
+QUERIES["merkle_tree_diff"] = merkle_tree_diff
 
 _mkl_sel_duck = X.hash64_duck("CAST(c_custkey AS VARCHAR) || ':corrupt'")
 
-ROUND8_ORACLES["merkle_tree_diff"] = f"""
+ORACLES["merkle_tree_diff"] = f"""
 WITH base AS MATERIALIZED (
   SELECT c_custkey,
          CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS bal_c,
@@ -6733,9 +6720,9 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["t_closeness_audit"] = t_closeness_audit
+QUERIES["t_closeness_audit"] = t_closeness_audit
 
-ROUND8_ORACLES["t_closeness_audit"] = f"""
+ORACLES["t_closeness_audit"] = f"""
 WITH cust AS MATERIALIZED (
   SELECT c_mktsegment AS segment, n_name AS nation,
          least(greatest(CAST((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100
@@ -6792,8 +6779,6 @@ ORDER BY segment, nation
 # ---------------------------------------------------------------------------
 # rake_keywords — RAKE keyphrase extraction per source
 # ---------------------------------------------------------------------------
-
-from pyprima_spark.plans.constants import STOPWORDS as _STOPWORDS
 
 _RAKE_STOPS = sorted(set(w for ws in _STOPWORDS.values() for w in ws))
 _RAKE_TOPK = 5
@@ -6899,11 +6884,11 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["rake_keywords"] = rake_keywords
+QUERIES["rake_keywords"] = rake_keywords
 
 _rake_stops_sql = ", ".join(f"'{w}'" for w in _RAKE_STOPS)
 
-ROUND8_ORACLES["rake_keywords"] = f"""
+ORACLES["rake_keywords"] = f"""
 WITH toks AS MATERIALIZED (
   SELECT doc_id, source,
          list_filter(string_split_regex(lower(text), '[^a-z]+'),
@@ -7060,9 +7045,9 @@ def abc_xyz_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["abc_xyz_inventory"] = abc_xyz_inventory
+QUERIES["abc_xyz_inventory"] = abc_xyz_inventory
 
-ROUND8_ORACLES["abc_xyz_inventory"] = """
+ORACLES["abc_xyz_inventory"] = """
 WITH li AS MATERIALIZED (
   SELECT l_partkey,
          CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -7117,8 +7102,6 @@ GROUP BY abc, xyz ORDER BY abc, xyz
 # mmr_diversification — maximal marginal relevance re-ranking
 # ---------------------------------------------------------------------------
 
-from pyprima_spark.functions import vectors as V
-
 _MMR_QUERIES = 3
 _MMR_CANDS = 8
 _MMR_SELECT = 4
@@ -7146,7 +7129,6 @@ def mmr_diversification(spark: SparkSession, sf_dir: str) -> DataFrame:
     with vectors) and its 8x8 sim matrix are materialized once and
     every greedy round touches only them.
     """
-    from pyprima_spark.operators.similarity import with_vec_norm
 
     emb = with_vec_norm(_t(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
@@ -7212,12 +7194,12 @@ def mmr_diversification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all-DataFrame unroll paid 8 materialization jobs + per-round
     # joins on ≤24-row state (44 Spark jobs total for this key at any
     # scale — pure scheduler overhead; profiled 1.7 s build at sf0.1).
-    cand_rows = _bounded_collect(
+    cand_rows = bounded_collect(
         cands.select("query_id", "cand_id", "rel_ppm"),
         _MMR_QUERIES * _MMR_CANDS,
         "mmr_diversification: candidate census",
     )
-    sim_rows = _bounded_collect(
+    sim_rows = bounded_collect(
         sims,
         _MMR_QUERIES * _MMR_CANDS * (_MMR_CANDS - 1),
         "mmr_diversification: pairwise-sim census",
@@ -7272,7 +7254,7 @@ def mmr_diversification(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "mmr_rank")
 
 
-ROUND8_QUERIES["mmr_diversification"] = mmr_diversification
+QUERIES["mmr_diversification"] = mmr_diversification
 
 
 def _mmr_oracle() -> str:
@@ -7351,7 +7333,7 @@ ORDER BY query_id, mmr_rank
 """
 
 
-ROUND8_ORACLES["mmr_diversification"] = _mmr_oracle()
+ORACLES["mmr_diversification"] = _mmr_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -7384,7 +7366,6 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan gate accepts; the feedback term census is bounded by the 10
     selected docs' vocabularies.
     """
-    from pyprima_spark.functions.text import tokens_spark
 
     stops = ", ".join(f"'{w}'" for w in _RAKE_STOPS)
     docs = _t(spark, sf_dir, "documents").select(
@@ -7449,11 +7430,11 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["query_expansion_prf"] = query_expansion_prf
+QUERIES["query_expansion_prf"] = query_expansion_prf
 
 _prf_terms_sql = ", ".join(f"'{t}'" for t in _PRF_TERMS)
 
-ROUND8_ORACLES["query_expansion_prf"] = f"""
+ORACLES["query_expansion_prf"] = f"""
 WITH toks AS MATERIALIZED (
   SELECT doc_id, unnest({X.tokens_duck('text')}) AS term FROM documents
 ),
@@ -7521,7 +7502,6 @@ def capture_recapture_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     union) fold in a single pass — no per-census distinct+join
     branches re-shuffling the pair table.
     """
-    from pyprima_spark.operators.dedup import minhash_band_table
 
     docs = _t(spark, sf_dir, "documents")
     bands = materialize(minhash_band_table(docs, "doc_id", "text"))
@@ -7574,33 +7554,10 @@ def capture_recapture_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["capture_recapture_dups"] = capture_recapture_dups
+QUERIES["capture_recapture_dups"] = capture_recapture_dups
 
-from pyprima_spark.plans.constants import MINHASH_BANDS as _CRD_NBANDS
-
-# Local copy of the shared minhash band CTE (oracles.py owns the
-# canonical one, but importing it here would be a circular import —
-# oracles.py imports ROUND8_ORACLES from this module).
-_CRD_BANDS_CTE = f"""sigs AS (
-  SELECT doc_id AS doc,
-         {X.bands_duck(X.minhashes_duck('bh'), _CRD_NBANDS)} AS bands
-  FROM (
-    SELECT doc_id, {X.base_hashes_duck('shingles')} AS bh
-    FROM (
-      SELECT doc_id, {X.shingles_duck(X.tokens_duck('text'))} AS shingles
-      FROM documents
-    )
-    WHERE len(shingles) > 0
-  )
-),
-bands AS (
-  SELECT doc, unnest(bands) AS band_sig,
-         unnest(generate_series(1, len(bands))) AS band_idx
-  FROM sigs
-)"""
-
-ROUND8_ORACLES["capture_recapture_dups"] = f"""
-WITH {_CRD_BANDS_CTE},
+ORACLES["capture_recapture_dups"] = f"""
+WITH {_MINHASH_BANDS_CTE},
 pairs AS MATERIALIZED (
   SELECT a.band_idx, a.doc AS d1, b.doc AS d2
   FROM bands a
@@ -7734,9 +7691,9 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["mann_kendall_trend"] = mann_kendall_trend
+QUERIES["mann_kendall_trend"] = mann_kendall_trend
 
-ROUND8_ORACLES["mann_kendall_trend"] = """
+ORACLES["mann_kendall_trend"] = """
 WITH daily AS MATERIALIZED (
   SELECT year(o_orderdate) AS yr, CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -7817,7 +7774,6 @@ def voptimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # census³ joins + 4-chain equi-join + TakeOrdered were ~13 jobs).
     # len·svv ≥ sv² (Cauchy-Schwarz), so the SSE div is on
     # non-negative operands and // is exact SQL div.
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     orders = _t(spark, sf_dir, "orders")
     cnt = {
@@ -7879,9 +7835,9 @@ def voptimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket")
 
 
-ROUND8_QUERIES["voptimal_histogram"] = voptimal_histogram
+QUERIES["voptimal_histogram"] = voptimal_histogram
 
-ROUND8_ORACLES["voptimal_histogram"] = f"""
+ORACLES["voptimal_histogram"] = f"""
 WITH stripe_counts AS (
   SELECT least(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                     AS BIGINT) // {_VOPT_STRIPE_CENTS} AS INT),
@@ -8005,14 +7961,14 @@ def burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["burstiness_fano"] = burstiness_fano
+QUERIES["burstiness_fano"] = burstiness_fano
 
 _fano_expr = (
     "coalesce((1000 * (n_periods * scc - sc::HUGEINT * sc))"
     " // nullif((n_periods - 1) * sc::HUGEINT, 0), -1)"
 )
 
-ROUND8_ORACLES["burstiness_fano"] = f"""
+ORACLES["burstiness_fano"] = f"""
 WITH per_period AS (
   SELECT event_type, CAST(ts AS DATE) AS d, hour(ts) AS hr,
          count(*) AS c
@@ -8138,9 +8094,9 @@ def youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["youden_threshold"] = youden_threshold
+QUERIES["youden_threshold"] = youden_threshold
 
-ROUND8_ORACLES["youden_threshold"] = f"""
+ORACLES["youden_threshold"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          CAST(sum(CASE WHEN o_orderdate < DATE '1998-01-01'
@@ -8275,9 +8231,9 @@ def levene_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["levene_variance_test"] = levene_variance_test
+QUERIES["levene_variance_test"] = levene_variance_test
 
-ROUND8_ORACLES["levene_variance_test"] = """
+ORACLES["levene_variance_test"] = """
 WITH vals AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment,
          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -8396,14 +8352,14 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["degree_assortativity"] = degree_assortativity
+QUERIES["degree_assortativity"] = degree_assortativity
 
 _das_r = (
     "coalesce((1000 * (4 * m * sc - sa::HUGEINT * sa))"
     " // nullif(2 * m * sb - sa::HUGEINT * sa, 0), 0)"
 )
 
-ROUND8_ORACLES["degree_assortativity"] = f"""
+ORACLES["degree_assortativity"] = f"""
 WITH edges AS MATERIALIZED (
   SELECT DISTINCT least(s_nationkey, c_nationkey) AS a,
          greatest(s_nationkey, c_nationkey) AS b
@@ -8579,9 +8535,9 @@ def decision_stump_1r(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["decision_stump_1r"] = decision_stump_1r
+QUERIES["decision_stump_1r"] = decision_stump_1r
 
-ROUND8_ORACLES["decision_stump_1r"] = f"""
+ORACLES["decision_stump_1r"] = f"""
 WITH cust AS (
   SELECT c_custkey AS cust, c_mktsegment AS segment, r_name AS region,
          least(greatest(CAST((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100
@@ -8743,7 +8699,7 @@ def ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["ab_power_analysis"] = ab_power_analysis
+QUERIES["ab_power_analysis"] = ab_power_analysis
 
 _pwr_p1 = "(10000 * pos) // n"
 _pwr_mde = f"(({_pwr_p1}) * {_POWER_MDE_REL_BP}) // 10000"
@@ -8755,7 +8711,7 @@ _pwr_num = (
 )
 _pwr_den = f"(1000000 * ({_pwr_mde})::HUGEINT * ({_pwr_mde}))"
 
-ROUND8_ORACLES["ab_power_analysis"] = f"""
+ORACLES["ab_power_analysis"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          max(CASE WHEN o_orderdate >= DATE '1998-01-01'
@@ -8879,9 +8835,9 @@ def iv_wald_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["iv_wald_estimate"] = iv_wald_estimate
+QUERIES["iv_wald_estimate"] = iv_wald_estimate
 
-ROUND8_ORACLES["iv_wald_estimate"] = f"""
+ORACLES["iv_wald_estimate"] = f"""
 WITH supp AS (
   SELECT s_nationkey AS nk, count(*) AS n_supp
   FROM supplier GROUP BY 1
@@ -8980,7 +8936,6 @@ def morans_i_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and moment folds were ~11 jobs / ~11 exchanges.  tdiv replicates
     # SQL div's truncation toward zero (z products are signed) and the
     # nullif-guard exactly.
-    from pyprima_spark.operators.exactmath import bounded_collect, tdiv
 
     crows = bounded_collect(
         cells, 8192, "morans_i_autocorrelation: region cell census"
@@ -9006,7 +8961,7 @@ def morans_i_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # rook-adjacent pair outright
             continue
         sz2 = sum(v * v for v in z.values())
-        i_milli = tdiv(1000 * n * szz, (w * sz2) or None)
+        i_milli = _tdiv(1000 * n * szz, (w * sz2) or None)
         i_milli = 0 if i_milli is None else i_milli
         pattern = (
             "clustered"
@@ -9021,9 +8976,9 @@ def morans_i_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("region")
 
 
-ROUND8_QUERIES["morans_i_autocorrelation"] = morans_i_autocorrelation
+QUERIES["morans_i_autocorrelation"] = morans_i_autocorrelation
 
-ROUND8_ORACLES["morans_i_autocorrelation"] = f"""
+ORACLES["morans_i_autocorrelation"] = f"""
 WITH cust AS (
   SELECT r_name AS region,
          CAST((c_custkey * 104729 % 360) // {360 // _MOR_LON_CELLS} AS INT)
@@ -9082,7 +9037,6 @@ ORDER BY d.region
 # ---------------------------------------------------------------------------
 
 _SAX_PAA_DAYS = 3
-_SAX_WORD = 3
 _SAX_TOPK = 5
 
 
@@ -9173,9 +9127,9 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["sax_motifs"] = sax_motifs
+QUERIES["sax_motifs"] = sax_motifs
 
-ROUND8_ORACLES["sax_motifs"] = f"""
+ORACLES["sax_motifs"] = f"""
 WITH daily AS (
   SELECT year(o_orderdate) AS yr,
          datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS d,
@@ -9270,7 +9224,6 @@ def haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " as decimal(38,0)) div 100000"
         ).alias("y")
     ).filter(f"d >= 0 AND d < {_HAAR_LEN}")
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     # Dense 256-slot series from the day census (missing days are 0),
     # then the unrolled UNNORMALIZED ladder in exact Python integers —
@@ -9309,7 +9262,7 @@ def haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-ROUND8_QUERIES["haar_wavelet_topk"] = haar_wavelet_topk
+QUERIES["haar_wavelet_topk"] = haar_wavelet_topk
 
 
 def _haar_oracle() -> str:
@@ -9355,7 +9308,7 @@ ORDER BY rank
 """
 
 
-ROUND8_ORACLES["haar_wavelet_topk"] = _haar_oracle()
+ORACLES["haar_wavelet_topk"] = _haar_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -9408,7 +9361,7 @@ def graph_robustness_attack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_rows = [
         (r["a"], r["b"])
-        for r in _bounded_collect(
+        for r in bounded_collect(
             edges, 625, "graph_robustness_attack: nation-pair edge census"
         )
     ]  # dim-bounded (≤ |nations|²)
@@ -9463,7 +9416,7 @@ def graph_robustness_attack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["graph_robustness_attack"] = graph_robustness_attack
+QUERIES["graph_robustness_attack"] = graph_robustness_attack
 
 
 def _rob_oracle() -> str:
@@ -9538,7 +9491,7 @@ ORDER BY strategy, k_removed
 """
 
 
-ROUND8_ORACLES["graph_robustness_attack"] = _rob_oracle()
+ORACLES["graph_robustness_attack"] = _rob_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -9570,7 +9523,6 @@ def maxmin_fair_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly: div-by-zero -> NULL water level, least() skipping NULLs,
     sum() skipping NULL allocations.
     """
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     li = _t(spark, sf_dir, "lineitem").filter(
         F.expr("l_shipdate >= date'1997-07-01'")
@@ -9634,9 +9586,9 @@ def maxmin_fair_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out, schema=schema).orderBy("brand")
 
 
-ROUND8_QUERIES["maxmin_fair_allocation"] = maxmin_fair_allocation
+QUERIES["maxmin_fair_allocation"] = maxmin_fair_allocation
 
-ROUND8_ORACLES["maxmin_fair_allocation"] = f"""
+ORACLES["maxmin_fair_allocation"] = f"""
 WITH demands AS MATERIALIZED (
   SELECT p.p_brand AS brand, CAST(sum(l_quantity) AS BIGINT) AS d
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -9777,9 +9729,9 @@ def knapsack_density_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["knapsack_density_bound"] = knapsack_density_bound
+QUERIES["knapsack_density_bound"] = knapsack_density_bound
 
-ROUND8_ORACLES["knapsack_density_bound"] = f"""
+ORACLES["knapsack_density_bound"] = f"""
 WITH items AS MATERIALIZED (
   SELECT l_partkey,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -9907,14 +9859,14 @@ def james_stein_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
-ROUND8_QUERIES["james_stein_shrinkage"] = james_stein_shrinkage
+QUERIES["james_stein_shrinkage"] = james_stein_shrinkage
 
 _js_keep = (
     "least(greatest(10000 - (10000 * (k - 3) * sigma2)"
     " // nullif(s_between, 0), 0), 10000)"
 )
 
-ROUND8_ORACLES["james_stein_shrinkage"] = f"""
+ORACLES["james_stein_shrinkage"] = f"""
 WITH cust AS (
   SELECT n_name AS nation,
          CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
@@ -10048,9 +10000,9 @@ def empirical_bayes_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["empirical_bayes_rates"] = empirical_bayes_rates
+QUERIES["empirical_bayes_rates"] = empirical_bayes_rates
 
-ROUND8_ORACLES["empirical_bayes_rates"] = """
+ORACLES["empirical_bayes_rates"] = """
 WITH cust AS (
   SELECT c_custkey AS cust, n_name AS nation
   FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -10152,7 +10104,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, j in pairs
     ]
-    mrow = _bounded_collect(
+    mrow = bounded_collect(
         emb.agg(*aggs), 1, "pca_power_iteration: exact moment row"
     )[0]  # ONE row of exact moments
     n = int(mrow["n"])
@@ -10197,7 +10149,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["pca_power_iteration"] = pca_power_iteration
+QUERIES["pca_power_iteration"] = pca_power_iteration
 
 
 def _pca_oracle() -> str:
@@ -10259,7 +10211,7 @@ ORDER BY dim
 """
 
 
-ROUND8_ORACLES["pca_power_iteration"] = _pca_oracle()
+ORACLES["pca_power_iteration"] = _pca_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -10386,9 +10338,9 @@ def drf_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["drf_allocation"] = drf_allocation
+QUERIES["drf_allocation"] = drf_allocation
 
-ROUND8_ORACLES["drf_allocation"] = f"""
+ORACLES["drf_allocation"] = f"""
 WITH demand AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment,
          count(*) AS d_slots,
@@ -10523,7 +10475,7 @@ def assignment_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = {
         (r["src"], r["dst"]): r["c_milli"]
-        for r in _bounded_collect(
+        for r in bounded_collect(
             cost, 25, "assignment_exhaustive: region-pair cost census"
         )
     }  # the 25-cell cost census — design-size, collected once
@@ -10576,7 +10528,7 @@ def assignment_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out, schema=schema)
 
 
-ROUND8_QUERIES["assignment_exhaustive"] = assignment_exhaustive
+QUERIES["assignment_exhaustive"] = assignment_exhaustive
 
 
 def _assign_oracle() -> str:
@@ -10644,7 +10596,7 @@ FROM best CROSS JOIN greedy
 """
 
 
-ROUND8_ORACLES["assignment_exhaustive"] = _assign_oracle()
+ORACLES["assignment_exhaustive"] = _assign_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -10714,9 +10666,9 @@ def median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["median_of_means"] = median_of_means
+QUERIES["median_of_means"] = median_of_means
 
-ROUND8_ORACLES["median_of_means"] = f"""
+ORACLES["median_of_means"] = f"""
 WITH vals AS (
   SELECT c.c_mktsegment AS segment,
          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -10826,9 +10778,9 @@ def fagin_ta_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["fagin_ta_depth"] = fagin_ta_depth
+QUERIES["fagin_ta_depth"] = fagin_ta_depth
 
-ROUND8_ORACLES["fagin_ta_depth"] = f"""
+ORACLES["fagin_ta_depth"] = f"""
 WITH items AS MATERIALIZED (
   SELECT l_partkey,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -10915,7 +10867,6 @@ def oaxaca_blinder_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoins were ~13 jobs on <= 50-row state).  tdiv replicates
     # SQL div's truncation toward zero (explained/unexplained terms
     # are signed); the inner join's nation intersection is explicit.
-    from pyprima_spark.operators.exactmath import bounded_collect, tdiv
 
     cells = bounded_collect(
         per_cust.join(cust, "cust")
@@ -10939,15 +10890,15 @@ def oaxaca_blinder_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nation,
                 na,
                 nb,
-                tdiv(
+                _tdiv(
                     1000 * (na * nb_tot - nb * na_tot) * syb,
                     na_tot * nb_tot * nb,
                 ),
-                tdiv(
+                _tdiv(
                     1000 * na * (sya * nb - syb * na),
                     na_tot * na * nb,
                 ),
-                1000 * (tdiv(sya_tot, na_tot) - tdiv(syb_tot, nb_tot)),
+                1000 * (_tdiv(sya_tot, na_tot) - _tdiv(syb_tot, nb_tot)),
             )
         )
     return spark.createDataFrame(
@@ -10958,9 +10909,9 @@ def oaxaca_blinder_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
-ROUND8_QUERIES["oaxaca_blinder_decomposition"] = oaxaca_blinder_decomposition
+QUERIES["oaxaca_blinder_decomposition"] = oaxaca_blinder_decomposition
 
-ROUND8_ORACLES["oaxaca_blinder_decomposition"] = """
+ORACLES["oaxaca_blinder_decomposition"] = """
 WITH cust AS (
   SELECT c_custkey AS cust, n_name AS nation,
          CASE WHEN c_mktsegment = 'BUILDING' THEN 'A' ELSE 'B' END AS grp
@@ -11111,9 +11062,9 @@ def ransac_consensus_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["ransac_consensus_fit"] = ransac_consensus_fit
+QUERIES["ransac_consensus_fit"] = ransac_consensus_fit
 
-ROUND8_ORACLES["ransac_consensus_fit"] = f"""
+ORACLES["ransac_consensus_fit"] = f"""
 WITH daily AS MATERIALIZED (
   SELECT datediff('day', DATE '1997-01-01', CAST(o_orderdate AS DATE)) AS x,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -11258,9 +11209,9 @@ def tail_dependence_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["tail_dependence_lambda"] = tail_dependence_lambda
+QUERIES["tail_dependence_lambda"] = tail_dependence_lambda
 
-ROUND8_ORACLES["tail_dependence_lambda"] = f"""
+ORACLES["tail_dependence_lambda"] = f"""
 WITH per_cust AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment, o.cust, o.x, o.y
   FROM (
@@ -11373,9 +11324,9 @@ def survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["survival_rmst"] = survival_rmst
+QUERIES["survival_rmst"] = survival_rmst
 
-ROUND8_ORACLES["survival_rmst"] = f"""
+ORACLES["survival_rmst"] = f"""
 WITH first_ship AS (
   SELECT l_orderkey, min(l_shipdate) AS ship FROM lineitem GROUP BY 1
 ),
@@ -11410,7 +11361,6 @@ _BT_SCALE = 1000
 
 # SQL-semantics integral division for the driver-side iteration family
 # (shared: operators/exactmath.py — truncate toward zero, NULL-safe).
-from pyprima_spark.operators.exactmath import tdiv as _tdiv  # noqa: E402
 
 
 def bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11488,7 +11438,7 @@ def bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w_ij"),
         )
     )
-    pairs = _bounded_collect(
+    pairs = bounded_collect(
         games, 600, "bradley_terry_strength: ordered brand-pair census"
     )  # <= 25x24 brand pairs — dim-bounded census
     wins: dict = {}
@@ -11538,7 +11488,7 @@ def bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["bradley_terry_strength"] = bradley_terry_strength
+QUERIES["bradley_terry_strength"] = bradley_terry_strength
 
 
 def _bt_oracle() -> str:
@@ -11596,7 +11546,7 @@ ORDER BY strength_milli DESC, s.brand
 """
 
 
-ROUND8_ORACLES["bradley_terry_strength"] = _bt_oracle()
+ORACLES["bradley_terry_strength"] = _bt_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -11694,7 +11644,7 @@ def ratio_metric_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["ratio_metric_variance"] = ratio_metric_variance
+QUERIES["ratio_metric_variance"] = ratio_metric_variance
 
 _rmv_delta = (
     "(1000000 * n::HUGEINT"
@@ -11707,7 +11657,7 @@ _rmv_naive = (
     " // (m::HUGEINT * (m - 1) * m)"
 )
 
-ROUND8_ORACLES["ratio_metric_variance"] = f"""
+ORACLES["ratio_metric_variance"] = f"""
 WITH cust AS (
   SELECT c_custkey AS cust, c_mktsegment AS segment FROM customer
 ),
@@ -11853,9 +11803,9 @@ def cluster_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["cluster_design_effect"] = cluster_design_effect
+QUERIES["cluster_design_effect"] = cluster_design_effect
 
-ROUND8_ORACLES["cluster_design_effect"] = """
+ORACLES["cluster_design_effect"] = """
 WITH cust AS (
   SELECT c_custkey AS cust, c_nationkey AS nk FROM customer
 ),
@@ -11993,9 +11943,9 @@ def ripley_k_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["ripley_k_function"] = ripley_k_function
+QUERIES["ripley_k_function"] = ripley_k_function
 
-ROUND8_ORACLES["ripley_k_function"] = f"""
+ORACLES["ripley_k_function"] = f"""
 WITH cust AS (
   SELECT CAST((c_custkey * 104729 % 360) // {360 // _MOR_LON_CELLS} AS INT)
            AS cx,
@@ -12083,7 +12033,7 @@ def spectral_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_rows = [
         (r["a"], r["b"])
-        for r in _bounded_collect(
+        for r in bounded_collect(
             edges, 625, "spectral_bisection: nation-pair edge census"
         )
     ]  # dim-bounded (≤ |nations|²)
@@ -12150,7 +12100,7 @@ def spectral_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["spectral_bisection"] = spectral_bisection
+QUERIES["spectral_bisection"] = spectral_bisection
 
 
 def _spb_oracle() -> str:
@@ -12228,7 +12178,7 @@ ORDER BY nationkey
 """
 
 
-ROUND8_ORACLES["spectral_bisection"] = _spb_oracle()
+ORACLES["spectral_bisection"] = _spb_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -12262,7 +12212,6 @@ def seat_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     All quotients/floors/remainders are truncating integer ops on
     positive operands, so the collapse is bit-identical.
     """
-    from pyprima_spark.operators.exactmath import bounded_collect
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").select(
@@ -12315,9 +12264,9 @@ def seat_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["seat_apportionment"] = seat_apportionment
+QUERIES["seat_apportionment"] = seat_apportionment
 
-ROUND8_ORACLES["seat_apportionment"] = f"""
+ORACLES["seat_apportionment"] = f"""
 WITH demand AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment, count(*) AS d
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -12418,7 +12367,7 @@ def voting_methods_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("disc_micro"),
         )
     )
-    rows = _bounded_collect(
+    rows = bounded_collect(
         stats, 25, "voting_methods_compare: brand census"
     )  # 25-brand census — design-size
     k = _VOTE_TOPK
@@ -12462,9 +12411,9 @@ def voting_methods_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["voting_methods_compare"] = voting_methods_compare
+QUERIES["voting_methods_compare"] = voting_methods_compare
 
-ROUND8_ORACLES["voting_methods_compare"] = f"""
+ORACLES["voting_methods_compare"] = f"""
 WITH stats AS MATERIALIZED (
   SELECT p.p_brand AS brand,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -12605,9 +12554,9 @@ def littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["littles_law_audit"] = littles_law_audit
+QUERIES["littles_law_audit"] = littles_law_audit
 
-ROUND8_ORACLES["littles_law_audit"] = f"""
+ORACLES["littles_law_audit"] = f"""
 WITH first_ship AS (
   SELECT l_orderkey, min(l_shipdate) AS ship FROM lineitem GROUP BY 1
 ),
@@ -12734,9 +12683,9 @@ def cell_suppression_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["cell_suppression_audit"] = cell_suppression_audit
+QUERIES["cell_suppression_audit"] = cell_suppression_audit
 
-ROUND8_ORACLES["cell_suppression_audit"] = f"""
+ORACLES["cell_suppression_audit"] = f"""
 WITH cust AS (
   SELECT c_mktsegment AS segment, n_name AS nation,
          least(greatest(CAST((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100
@@ -12883,9 +12832,9 @@ def energy_distance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["energy_distance_test"] = energy_distance_test
+QUERIES["energy_distance_test"] = energy_distance_test
 
-ROUND8_ORACLES["energy_distance_test"] = """
+ORACLES["energy_distance_test"] = """
 WITH vals AS (
   SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
            // 100000 AS v,
@@ -13009,7 +12958,7 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["quantile_treatment_effect"] = quantile_treatment_effect
+QUERIES["quantile_treatment_effect"] = quantile_treatment_effect
 
 _qte_t = " ".join(f"WHEN d.decile = {i} THEN t.q{i}" for i in range(1, 10))
 _qte_c = " ".join(f"WHEN d.decile = {i} THEN c.q{i}" for i in range(1, 10))
@@ -13019,7 +12968,7 @@ _qte_cols = ",\n         ".join(
     for i in range(1, 10)
 )
 
-ROUND8_ORACLES["quantile_treatment_effect"] = f"""
+ORACLES["quantile_treatment_effect"] = f"""
 WITH cust AS (
   SELECT c_custkey AS cust,
          CASE WHEN c_acctbal >= 5000 THEN 1 ELSE 0 END AS exposed
@@ -13126,9 +13075,9 @@ def positivity_overlap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["positivity_overlap_audit"] = positivity_overlap_audit
+QUERIES["positivity_overlap_audit"] = positivity_overlap_audit
 
-ROUND8_ORACLES["positivity_overlap_audit"] = f"""
+ORACLES["positivity_overlap_audit"] = f"""
 WITH cust AS (
   SELECT c_custkey AS cust, c_mktsegment AS segment,
          least(greatest(CAST((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100
@@ -13226,9 +13175,9 @@ def german_tank_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["german_tank_estimate"] = german_tank_estimate
+QUERIES["german_tank_estimate"] = german_tank_estimate
 
-ROUND8_ORACLES["german_tank_estimate"] = """
+ORACLES["german_tank_estimate"] = """
 WITH week AS (
   SELECT o_orderkey, o_custkey FROM orders
   WHERE o_orderdate >= DATE '1997-03-03'
@@ -13276,7 +13225,6 @@ def chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-of-frequencies census (tiny); estimators are per-source
     folds.  The vocab census is the only shuffle.
     """
-    from pyprima_spark.functions.text import tokens_spark
 
     docs = _t(spark, sf_dir, "documents").select(
         "source", F.expr(tokens_spark("text")).alias("toks")
@@ -13309,9 +13257,9 @@ def chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-ROUND8_QUERIES["chao1_richness"] = chao1_richness
+QUERIES["chao1_richness"] = chao1_richness
 
-ROUND8_ORACLES["chao1_richness"] = f"""
+ORACLES["chao1_richness"] = f"""
 WITH tf AS (
   SELECT source, tok, count(*) AS c
   FROM (
@@ -13420,9 +13368,9 @@ def running_records_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["running_records_test"] = running_records_test
+QUERIES["running_records_test"] = running_records_test
 
-ROUND8_ORACLES["running_records_test"] = """
+ORACLES["running_records_test"] = """
 WITH daily AS MATERIALIZED (
   SELECT year(o_orderdate) AS yr, CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -13502,7 +13450,6 @@ def secretary_stopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two windows + three broadcast joins + pick window were ~12 jobs
     # on dim-bounded state.  Exact integers; SQL edge semantics kept
     # (k = 0 -> no learning row -> no pick, div-by-zero -> NULL -> -1).
-    from pyprima_spark.operators.exactmath import bounded_collect, tdiv
 
     rows = bounded_collect(
         daily, 8192, "secretary_stopping_replay: segment-day census"
@@ -13527,7 +13474,7 @@ def secretary_stopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     chosen = (i + 1, true_rank[day], y)
                     break
         share = (
-            tdiv(10000 * chosen[2], best_y or None)
+            _tdiv(10000 * chosen[2], best_y or None)
             if chosen is not None
             else None
         )
@@ -13549,9 +13496,9 @@ def secretary_stopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["secretary_stopping_replay"] = secretary_stopping_replay
+QUERIES["secretary_stopping_replay"] = secretary_stopping_replay
 
-ROUND8_ORACLES["secretary_stopping_replay"] = f"""
+ORACLES["secretary_stopping_replay"] = f"""
 WITH daily AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment, CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -13685,7 +13632,7 @@ def kelly_fraction_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["kelly_fraction_sizing"] = kelly_fraction_sizing
+QUERIES["kelly_fraction_sizing"] = kelly_fraction_sizing
 
 _kelly_num = (
     "(1000 * (n_up::HUGEINT * (up_sum::HUGEINT * n_dn"
@@ -13694,7 +13641,7 @@ _kelly_num = (
 )
 _kelly_den = "((n_up + n_dn) * up_sum::HUGEINT * n_dn)"
 
-ROUND8_ORACLES["kelly_fraction_sizing"] = f"""
+ORACLES["kelly_fraction_sizing"] = f"""
 WITH daily AS (
   SELECT c.c_mktsegment AS segment, CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -13833,7 +13780,7 @@ def hotelling_t2_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["hotelling_t2_test"] = hotelling_t2_test
+QUERIES["hotelling_t2_test"] = hotelling_t2_test
 
 _ht2_stat = (
     "(n1::HUGEINT * n0 * (n1 + n0 - 2)"
@@ -13842,7 +13789,7 @@ _ht2_stat = (
     " // ((n1::HUGEINT + n0) * 1000 * nullif(wxx * wyy - wxy * wxy, 0))"
 )
 
-ROUND8_ORACLES["hotelling_t2_test"] = f"""
+ORACLES["hotelling_t2_test"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -13984,9 +13931,9 @@ def mahalanobis_outlier_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["mahalanobis_outlier_census"] = mahalanobis_outlier_census
+QUERIES["mahalanobis_outlier_census"] = mahalanobis_outlier_census
 
-ROUND8_ORACLES["mahalanobis_outlier_census"] = f"""
+ORACLES["mahalanobis_outlier_census"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -14098,14 +14045,14 @@ def mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["mcnemar_test"] = mcnemar_test
+QUERIES["mcnemar_test"] = mcnemar_test
 
 _mcn_chi = (
     "coalesce((1000 * (abs(b - c) - 1) * (abs(b - c) - 1)::HUGEINT)"
     " // nullif(b + c, 0), -1)"
 )
 
-ROUND8_ORACLES["mcnemar_test"] = f"""
+ORACLES["mcnemar_test"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          max(CASE WHEN o_orderdate >= DATE '1996-01-01'
@@ -14204,14 +14151,14 @@ def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["cochran_q_test"] = cochran_q_test
+QUERIES["cochran_q_test"] = cochran_q_test
 
 _coq_q = (
     "(2000 * (3 * (c1::HUGEINT * c1 + c2::HUGEINT * c2 + c3::HUGEINT * c3)"
     " - sr::HUGEINT * sr)) // nullif(3 * sr::HUGEINT - sr2, 0)"
 )
 
-ROUND8_ORACLES["cochran_q_test"] = f"""
+ORACLES["cochran_q_test"] = f"""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
          max(CASE WHEN o_orderdate >= DATE '1995-01-01'
@@ -14313,7 +14260,7 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["friedman_test"] = friedman_test
+QUERIES["friedman_test"] = friedman_test
 
 _FRIED_RANKS_CTE = """yearly AS MATERIALIZED (
   SELECT c.c_nationkey AS nk, year(o_orderdate) AS yr,
@@ -14328,7 +14275,7 @@ ranked AS MATERIALIZED (
   FROM yearly
 )"""
 
-ROUND8_ORACLES["friedman_test"] = f"""
+ORACLES["friedman_test"] = f"""
 WITH {_FRIED_RANKS_CTE},
 cols AS (SELECT yr, sum(r) AS rj FROM ranked GROUP BY yr),
 folded AS (
@@ -14394,9 +14341,9 @@ def page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["page_trend_test"] = page_trend_test
+QUERIES["page_trend_test"] = page_trend_test
 
-ROUND8_ORACLES["page_trend_test"] = f"""
+ORACLES["page_trend_test"] = f"""
 WITH {_FRIED_RANKS_CTE},
 cols AS (
   SELECT yr, sum(r) AS rj,
@@ -14502,9 +14449,9 @@ def indirect_standardization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["indirect_standardization"] = indirect_standardization
+QUERIES["indirect_standardization"] = indirect_standardization
 
-ROUND8_ORACLES["indirect_standardization"] = """
+ORACLES["indirect_standardization"] = """
 WITH cust AS (
   SELECT c_custkey AS cust, n_name AS nation,
          least(greatest(CAST((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100
@@ -14619,9 +14566,9 @@ def dissimilarity_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["dissimilarity_index"] = dissimilarity_index
+QUERIES["dissimilarity_index"] = dissimilarity_index
 
-ROUND8_ORACLES["dissimilarity_index"] = """
+ORACLES["dissimilarity_index"] = """
 WITH cells AS MATERIALIZED (
   SELECT n_name AS nation,
          sum(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS a,
@@ -14759,9 +14706,9 @@ def local_morans_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["local_morans_hotspots"] = local_morans_hotspots
+QUERIES["local_morans_hotspots"] = local_morans_hotspots
 
-ROUND8_ORACLES["local_morans_hotspots"] = f"""
+ORACLES["local_morans_hotspots"] = f"""
 WITH cust AS (
   SELECT CAST((c_custkey * 104729 % 360) // {360 // _MOR_LON_CELLS} AS INT)
            AS cx,
@@ -14916,9 +14863,9 @@ def arc_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["arc_elasticity"] = arc_elasticity
+QUERIES["arc_elasticity"] = arc_elasticity
 
-ROUND8_ORACLES["arc_elasticity"] = f"""
+ORACLES["arc_elasticity"] = f"""
 WITH sides AS MATERIALIZED (
   SELECT p.p_brand AS brand,
          CASE WHEN CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS INT)
@@ -15069,9 +15016,9 @@ def rescaled_range_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["rescaled_range_census"] = rescaled_range_census
+QUERIES["rescaled_range_census"] = rescaled_range_census
 
-ROUND8_ORACLES["rescaled_range_census"] = f"""
+ORACLES["rescaled_range_census"] = f"""
 WITH daily AS MATERIALIZED (
   SELECT datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS d,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS HUGEINT)
@@ -15195,9 +15142,9 @@ def allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["allan_variance"] = allan_variance
+QUERIES["allan_variance"] = allan_variance
 
-ROUND8_ORACLES["allan_variance"] = f"""
+ORACLES["allan_variance"] = f"""
 WITH daily AS MATERIALIZED (
   SELECT datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS d,
          count(*) AS c
@@ -15323,9 +15270,9 @@ def price_index_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["price_index_bias"] = price_index_bias
+QUERIES["price_index_bias"] = price_index_bias
 
-ROUND8_ORACLES["price_index_bias"] = """
+ORACLES["price_index_bias"] = """
 WITH yearly AS MATERIALIZED (
   SELECT p.p_brand AS brand, year(l_shipdate) AS yr,
          CAST(sum(l_quantity) AS BIGINT) AS q,
@@ -15440,7 +15387,7 @@ def erlang_b_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("n_servers")
 
 
-ROUND8_QUERIES["erlang_b_blocking"] = erlang_b_blocking
+QUERIES["erlang_b_blocking"] = erlang_b_blocking
 
 
 def _erlang_oracle() -> str:
@@ -15478,7 +15425,7 @@ ORDER BY n_servers
     return sql
 
 
-ROUND8_ORACLES["erlang_b_blocking"] = _erlang_oracle()
+ORACLES["erlang_b_blocking"] = _erlang_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -15505,7 +15452,6 @@ def banzhaf_power_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmask joins over <= 32-row state.  Truncating divisions with a
     None guard mirror SQL `div` + NULL exactly.
     """
-    from pyprima_spark.operators.exactmath import bounded_collect, tdiv
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").select(
@@ -15546,9 +15492,9 @@ def banzhaf_power_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             seg,
             w,
-            tdiv(10000 * w, tw if tw != 0 else None),
+            _tdiv(10000 * w, tw if tw != 0 else None),
             ns,
-            tdiv(10000 * ns, tot_swings if tot_swings != 0 else None),
+            _tdiv(10000 * ns, tot_swings if tot_swings != 0 else None),
         )
         for (seg, w), ns in zip(wrows, swings)
     ]
@@ -15559,9 +15505,9 @@ def banzhaf_power_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-ROUND8_QUERIES["banzhaf_power_index"] = banzhaf_power_index
+QUERIES["banzhaf_power_index"] = banzhaf_power_index
 
-ROUND8_ORACLES["banzhaf_power_index"] = """
+ORACLES["banzhaf_power_index"] = """
 WITH weights AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment, count(*) AS w
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -15705,14 +15651,14 @@ def shapley_shubik_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["shapley_shubik_index"] = shapley_shubik_index
+QUERIES["shapley_shubik_index"] = shapley_shubik_index
 
 _ss_perm_values = ", ".join(
     "({}, {})".format(pid, ", ".join(str(v) for v in p))
     for pid, p in enumerate(_permutations(range(5)))
 )
 
-ROUND8_ORACLES["shapley_shubik_index"] = f"""
+ORACLES["shapley_shubik_index"] = f"""
 WITH weights AS MATERIALIZED (
   SELECT c.c_mktsegment AS segment, count(*) AS w
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -15815,9 +15761,9 @@ def birthday_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND8_QUERIES["birthday_collision_audit"] = birthday_collision_audit
+QUERIES["birthday_collision_audit"] = birthday_collision_audit
 
-ROUND8_ORACLES["birthday_collision_audit"] = f"""
+ORACLES["birthday_collision_audit"] = f"""
 WITH buckets AS MATERIALIZED (
   SELECT ({X.hash64_duck("CAST(c_custkey AS VARCHAR) || ':bday'")})
            % {_BDAY_BUCKETS} AS bucket,

@@ -27,16 +27,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyprima_spark.catalog import load_table
 from pyprima_spark.functions import text as X
+from pyprima_spark.pipeline import export_curated_tfrecord, ingest_warc
+from pyprima_spark.plans.core import _t, curation_funnel_ctes
+from pyprima_spark.sources import fsio
+from pyprima_spark.sources.tfrecord import read_tfrecord, write_tfrecord_shards
+from pyprima_spark.sources.warc import read_warc, write_warc_shards
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-ROUND9_QUERIES: dict = {}
-ROUND9_ORACLES: dict[str, str] = {}
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
 
 # mod-p id checksums: large enough that collisions are vanishing,
 # small enough that a 5k-row sum stays far inside int64 on both engines
@@ -74,11 +74,6 @@ def tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     set ``spark.pyprima.scratchDir`` to a shared URI on a multi-node
     cluster (the avro/xlsx-roundtrip convention).
     """
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.tfrecord import (
-        read_tfrecord,
-        write_tfrecord_shards,
-    )
 
     orders = _t(spark, sf_dir, "orders")
     sl = orders.filter(F.expr("o_orderkey % 100 < 4")).select(
@@ -116,9 +111,9 @@ def tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND9_QUERIES["tfrecord_roundtrip"] = tfrecord_roundtrip
+QUERIES["tfrecord_roundtrip"] = tfrecord_roundtrip
 
-ROUND9_ORACLES["tfrecord_roundtrip"] = f"""
+ORACLES["tfrecord_roundtrip"] = f"""
 WITH sl AS (
   SELECT o_orderkey, o_custkey, o_orderpriority,
          CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -161,8 +156,6 @@ def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binaryFile.  write_warc_file stays pytest-covered as the
     small-export contract.
     """
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.warc import read_warc, write_warc_shards
 
     docs = _t(spark, sf_dir, "documents")
     is_resp = F.expr("doc_id % 2 = 0")
@@ -213,9 +206,9 @@ def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND9_QUERIES["warc_roundtrip"] = warc_roundtrip
+QUERIES["warc_roundtrip"] = warc_roundtrip
 
-ROUND9_ORACLES["warc_roundtrip"] = f"""
+ORACLES["warc_roundtrip"] = f"""
 WITH recs AS (
   SELECT CASE WHEN doc_id % 2 = 0 THEN 'response' ELSE 'resource' END
            AS warc_type,
@@ -252,7 +245,7 @@ def corpus_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum over the REMAPPED ids).
 
     The oracle replays the identical curation funnel
-    (oracles.curation_funnel_ctes — quality gate → exact dedup →
+    (core.curation_funnel_ctes — quality gate → exact dedup →
     minhash-cluster dedup) over a pure-SQL remap of the document ids,
     so every hop is load-bearing: WARC framing, the ingest's
     host/hash mapping, the funnel's survivor choice (which depends on
@@ -267,10 +260,6 @@ def corpus_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the TFRecord export is one-file-per-task.  No stage funnels
     through a single task.
     """
-    from pyprima_spark.pipeline import export_curated_tfrecord, ingest_warc
-    from pyprima_spark.sources import fsio
-    from pyprima_spark.sources.tfrecord import read_tfrecord
-    from pyprima_spark.sources.warc import write_warc_shards
 
     docs = _t(spark, sf_dir, "documents")
     recs = docs.select(
@@ -315,12 +304,10 @@ def corpus_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND9_QUERIES["corpus_pipeline_manifest"] = corpus_pipeline_manifest
+QUERIES["corpus_pipeline_manifest"] = corpus_pipeline_manifest
 
 
 def _pipeline_oracle() -> str:
-    from pyprima_spark.plans.oracles import curation_funnel_ctes
-
     remap = X.hash64_duck("'<urn:doc:' || CAST(doc_id AS VARCHAR) || '>'")
     docs_rel = (
         f"(SELECT {remap} AS doc_id, source, text FROM documents)"
@@ -333,3 +320,6 @@ SELECT source,
   CAST(sum(doc_id % {_CK_P}) AS BIGINT) AS id_checksum
 FROM perdoc WHERE keptn GROUP BY source ORDER BY source
 """
+
+
+ORACLES["corpus_pipeline_manifest"] = _pipeline_oracle()

@@ -32,12 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyprima_spark.functions.agg import DEC, dec_sum
-
-from pyprima_spark.catalog import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from pyprima_spark.plans.core import _t
 
 
 def _dstr(col: str) -> F.Column:
@@ -940,7 +935,7 @@ WHERE val > (SELECT sum(val) FROM values_t) * 0.001
 ORDER BY value DESC, p_partkey
 """
 
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q2_min_cost_supplier": q2_min_cost_supplier,
     "q4_order_priority": q4_order_priority,
     "q6_forecast_revenue": q6_forecast_revenue,
@@ -962,7 +957,7 @@ EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q22_inactive_customers": q22_inactive_customers,
 }
 
-EXTRA_ORACLES: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "q2_min_cost_supplier": ORACLE_Q2,
     "q4_order_priority": ORACLE_Q4,
     "q6_forecast_revenue": ORACLE_Q6,

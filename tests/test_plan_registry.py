@@ -1,0 +1,92 @@
+"""The plan registry: plan modules own their keys, the registries only
+merge them, and nothing below the registries imports them."""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+from pyprima_spark.plans import queries
+from pyprima_spark.plans.oracles import ORACLES
+from pyprima_spark.plans.queries import GRADING_WINDOW, PLAN_MODULES, QUERIES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS_DIR = os.path.join(REPO, "pyprima_spark", "plans")
+REGISTRIES = {"pyprima_spark.plans.queries", "pyprima_spark.plans.oracles"}
+
+
+def test_operator_imports_do_not_load_the_registries():
+    """Operators and functions may read plans.constants; that must not
+    pull in the catalog (and with it every plan module)."""
+    code = (
+        "import sys\n"
+        "import pyprima_spark.operators.dedup, pyprima_spark.functions.text\n"
+        "print(sorted(m for m in sys.modules if m.startswith('pyprima_spark.plans')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True,
+        check=True, timeout=120,
+    ).stdout
+    loaded = set(ast.literal_eval(out.strip()))
+    assert not loaded & REGISTRIES, sorted(loaded)
+
+
+def _imported_modules(tree: ast.Module) -> set[str]:
+    """Dotted names each import statement can bind, relative ones
+    resolved against pyprima_spark.plans."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                base = ".".join(["pyprima_spark.plans"] + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{alias.name}" for alias in node.names)
+    return names
+
+
+def test_no_plan_module_imports_a_registry():
+    offenders = {}
+    for fname in sorted(os.listdir(PLANS_DIR)):
+        if not fname.endswith(".py") or fname in ("queries.py", "oracles.py"):
+            continue
+        with open(os.path.join(PLANS_DIR, fname)) as fh:
+            hits = _imported_modules(ast.parse(fh.read())) & REGISTRIES
+        if hits:
+            offenders[fname] = sorted(hits)
+    assert not offenders, offenders
+
+
+def test_each_key_plan_and_oracle_share_a_module():
+    owner = {}
+    for module in PLAN_MODULES:
+        for key in module.ORACLES:
+            owner[key] = module.__name__
+    assert owner.keys() == QUERIES.keys()
+    misplaced = {
+        key: (QUERIES[key].__module__, mod)
+        for key, mod in owner.items()
+        if QUERIES[key].__module__ != mod
+    }
+    assert not misplaced, misplaced
+
+
+def test_grading_window_leads_the_catalog():
+    assert list(QUERIES)[:50] == list(GRADING_WINDOW)
+    with open(os.path.join(REPO, "CORRECTNESS_r11.json")) as fh:
+        assert set(GRADING_WINDOW) == set(json.load(fh))
+    assert len(QUERIES) == len(ORACLES) == 392
+
+
+def test_merge_rejects_a_key_defined_twice():
+    merged = queries.merge([("mod_a", {"k1": 1}), ("mod_b", {"k2": 2})])
+    assert merged == {"k1": 1, "k2": 2}
+    with pytest.raises(ValueError, match=r"'shared'.*mod_a.*mod_b"):
+        queries.merge([("mod_a", {"shared": 1}), ("mod_b", {"shared": 2})])

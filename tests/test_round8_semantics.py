@@ -272,10 +272,10 @@ def test_isotonic_fit_is_monotone_and_brackets_rates():
     """The max-min PAV identity must produce a NON-DECREASING curve
     bounded by the observed rate range — the whole point of the
     operator (a violation means the lattice join lost an interval)."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables()
-    df = con.execute(ROUND8_ORACLES["isotonic_calibration"]).df()
+    df = con.execute(ORACLES["isotonic_calibration"]).df()
     iso = df.sort_values("score_level")["iso_milli"].tolist()
     assert iso == sorted(iso), "isotonic output must be non-decreasing"
     assert min(iso) >= min(df["rate_milli"]) - 1
@@ -286,10 +286,10 @@ def test_shapley_efficiency_axiom():
     """Credits must sum to 24*(v(full) - v(empty)) exactly — Shapley's
     efficiency axiom at the x4! integer scale; share_bp must sum to
     ~10000 (floor slack < n_channels)."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables()
-    df = con.execute(ROUND8_ORACLES["shapley_attribution"]).df()
+    df = con.execute(ORACLES["shapley_attribution"]).df()
     v = con.execute("""
 WITH journeys AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
@@ -315,10 +315,10 @@ FROM journeys
 def test_bh_rejects_at_least_bonferroni():
     """Step-up BH dominates Bonferroni at the same alpha — if this
     flips, the ladder literals or the rank join are wrong."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["bh_fdr_control"]).df()
+    df = con.execute(ORACLES["bh_fdr_control"]).df()
     assert int(df["rejected_bh"].sum()) >= int(
         df["rejected_bonferroni"].sum()
     )
@@ -332,10 +332,10 @@ def test_merkle_walk_finds_planted_divergence():
     exist at sf0.01, and the per-level compare counts must show the
     descend-only-under-diff property (compared children bounded by
     fanout x differing parents; the tree need not be full)."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["merkle_tree_diff"]).df()
+    df = con.execute(ORACLES["merkle_tree_diff"]).df()
     assert len(df) > 0
     row = df.iloc[0]
     assert 1 <= row["l2_diff"] <= row["l2_compared"]
@@ -346,10 +346,10 @@ def test_merkle_walk_finds_planted_divergence():
 def test_water_filling_feasible_and_fair():
     """Allocations must fit the capacity (slack >= 0, < n), never
     exceed demand, and uncapped brands get exactly their demand."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["maxmin_fair_allocation"]).df()
+    df = con.execute(ORACLES["maxmin_fair_allocation"]).df()
     assert (df["allocation"] <= df["demand"]).all()
     slack = int(df["unallocated_slack"][0])
     assert 0 <= slack <= len(df) + int(df["water_level"][0])
@@ -363,10 +363,10 @@ def test_water_filling_feasible_and_fair():
 def test_rmst_equals_mean_truncated_time():
     """RMST with administrative censoring IS E[min(T, H)] — the
     telescoping identity the operator's exactness claim rests on."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES, _RMST_HORIZON
+    from pyprima_spark.plans.round8 import ORACLES, _RMST_HORIZON
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["survival_rmst"]).df()
+    df = con.execute(ORACLES["survival_rmst"]).df()
     direct = con.execute(f"""
 WITH first_ship AS (
   SELECT l_orderkey, min(l_shipdate) AS ship FROM lineitem GROUP BY 1
@@ -389,10 +389,10 @@ def test_bradley_terry_scale_and_positivity():
     """Strengths stay positive and mean-normalized (renorm contract);
     the top brand by strength must have a top-3 win count (MM can
     reorder, but not pathologically on near-uniform data)."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES, _BT_SCALE
+    from pyprima_spark.plans.round8 import ORACLES, _BT_SCALE
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["bradley_terry_strength"]).df()
+    df = con.execute(ORACLES["bradley_terry_strength"]).df()
     assert (df["strength_milli"] > 0).all()
     mean = df["strength_milli"].mean()
     assert abs(mean - _BT_SCALE) <= _BT_SCALE * 0.02
@@ -405,10 +405,10 @@ def test_bradley_terry_scale_and_positivity():
 def test_knapsack_lp_bound_dominates_greedy():
     """greedy_value <= lp_upper_bound and the budget is respected —
     the certificate's defining inequalities."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["knapsack_density_bound"]).df()
+    df = con.execute(ORACLES["knapsack_density_bound"]).df()
     row = df.iloc[0]
     assert row["greedy_value"] <= row["lp_upper_bound"]
     assert row["selected_weight"] <= row["budget_weight"]
@@ -418,10 +418,10 @@ def test_knapsack_lp_bound_dominates_greedy():
 def test_assignment_optimum_beats_greedy():
     """Exhaustive optimum <= greedy by construction; the published bp
     ratio must agree with the two costs."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["assignment_exhaustive"]).df()
+    df = con.execute(ORACLES["assignment_exhaustive"]).df()
     row = df.iloc[0]
     assert row["optimal_cost_milli"] <= row["greedy_cost_milli"]
     assert (
@@ -436,10 +436,10 @@ def test_assignment_optimum_beats_greedy():
 def test_youden_j_is_argmax_over_curve():
     """The chosen cut's J must dominate a direct scan of every level
     boundary recomputed independently."""
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES
+    from pyprima_spark.plans.round8 import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
-    df = con.execute(ROUND8_ORACLES["youden_threshold"]).df()
+    df = con.execute(ORACLES["youden_threshold"]).df()
     curve = con.execute("""
 WITH per_cust AS (
   SELECT o_custkey AS cust,
@@ -516,7 +516,7 @@ def test_pca_empty_embeddings_publishes_null_rows(spark, tmp_path):
     Rayleigh quotient — the engine must mirror, not int(None)-crash."""
     import os
 
-    from pyprima_spark.plans.round8 import ROUND8_ORACLES, pca_power_iteration
+    from pyprima_spark.plans.round8 import ORACLES, pca_power_iteration
     from tests.oracle_utils import assert_matches_oracle, contract_table
 
     import pyarrow.parquet as pq
@@ -530,7 +530,7 @@ def test_pca_empty_embeddings_publishes_null_rows(spark, tmp_path):
         os.path.join(d, "embeddings.parquet"),
     )
     df = pca_power_iteration(spark, d)
-    assert_matches_oracle(df, ROUND8_ORACLES["pca_power_iteration"], d)
+    assert_matches_oracle(df, ORACLES["pca_power_iteration"], d)
 
 
 def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
@@ -541,7 +541,7 @@ def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
     import os
 
     from pyprima_spark.plans.round8 import (
-        ROUND8_ORACLES,
+        ORACLES,
         bradley_terry_strength,
     )
     from tests.oracle_utils import assert_matches_oracle, contract_table
@@ -576,7 +576,7 @@ def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
     # round 1 truncates s[X] to 0 and s[Y] to 0; round 2's (X, Y) game
     # is the si+sj = 0 division — reaching this line at all means the
     # engine survived it; the oracle then pins the values.
-    assert_matches_oracle(df, ROUND8_ORACLES["bradley_terry_strength"], d)
+    assert_matches_oracle(df, ORACLES["bradley_terry_strength"], d)
 
 
 def test_source_selection_stops_at_exhausted_coverage(spark, tmp_path):
@@ -587,7 +587,7 @@ def test_source_selection_stops_at_exhausted_coverage(spark, tmp_path):
     import os
 
     from pyprima_spark.plans.round8 import (
-        ROUND8_ORACLES,
+        ORACLES,
         source_selection_greedy,
     )
     from tests.oracle_utils import assert_matches_oracle, contract_table
@@ -606,7 +606,7 @@ def test_source_selection_stops_at_exhausted_coverage(spark, tmp_path):
             os.path.join(path, "documents.parquet"),
         )
 
-    sql = ROUND8_ORACLES["source_selection_greedy"]
+    sql = ORACLES["source_selection_greedy"]
     long_text = " ".join(f"t{i}" for i in range(10))  # 3 distinct 8-grams
     d1 = str(tmp_path / "ssg_covered")
     _docs(d1, [
