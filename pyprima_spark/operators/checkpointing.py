@@ -1,26 +1,27 @@
-"""Stage-boundary materialization with a cluster-safe toggle.
+"""Stage-boundary materialization, reliable exactly when the session is.
 
-Every iterative / self-join operator in this package needs a stage
-boundary (band tables before LSH self-joins, label tables between
-hash-min rounds) so the expensive derivation runs once and the plan
-stays flat. Locally that is ``localCheckpoint`` — but localCheckpoint
-is NON-RELIABLE: blocks live on executors, so an executor loss makes
-the downstream job unrecoverable, and the MEMORY_AND_DISK blocks stay
-pinned until the plan is GC'd (VERDICT r3/r4 ADVICE item, open two
-rounds). On a real cluster the production form is a RELIABLE
-checkpoint to a fault-tolerant directory (or equivalently the parquet
-write every LSH pipeline persists anyway).
+Every iterative / self-join operator and plan in this package needs a
+stage boundary (band tables before LSH self-joins, label tables
+between hash-min rounds) so the expensive derivation runs once and the
+plan stays flat. ``materialize`` is the only place that cuts lineage,
+and the session decides how:
 
-``materialize`` is the one switch: every house site threads a
-``checkpoint_dir`` kwarg down to it, defaulting to the local fast
-path. Passing a directory flips all of an operator's stage boundaries
-to reliable checkpoints with no other code change.
+* A session with a checkpoint directory (``sc.getCheckpointDir()``
+  set, by Spark's own ``spark.checkpoint.dir`` conf or one
+  ``setCheckpointDir`` call) gets a RELIABLE ``checkpoint``: the rows
+  are written to that fault-tolerant directory and survive executor
+  loss. This is the cluster form; point the directory at HDFS/S3/DBFS.
+* Any other session gets ``localCheckpoint``: fast, but NON-RELIABLE —
+  blocks live on executors, so an executor loss makes the downstream
+  job unrecoverable. This is the local[k] / test form.
+
+No operator or plan takes a checkpoint argument, so one deployment
+setting flips every stage boundary in the package at once.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -49,47 +50,16 @@ def audit_passthrough():
         _PASSTHROUGH = False
 
 
-def materialize(
-    df: DataFrame, checkpoint_dir: Optional[str] = None, eager: bool = True
-) -> DataFrame:
-    """Cut lineage and materialize ``df`` as a stage boundary.
-
-    checkpoint_dir=None  -> ``localCheckpoint`` (fast, non-reliable;
-                            the local[k] / test path).
-    checkpoint_dir=path  -> reliable ``checkpoint`` into ``path``
-                            (survives executor loss; the cluster path —
-                            point it at HDFS/S3/DBFS).
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut lineage and materialize ``df`` as a stage boundary: a
+    reliable ``checkpoint`` when the session has a checkpoint
+    directory, else ``localCheckpoint``.
 
     Inside :func:`audit_passthrough` this is a no-op (plan-audit
     measurement of otherwise checkpoint-hidden windows).
     """
     if _PASSTHROUGH:
         return df
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    # setCheckpointDir appends a per-context UUID subdir; compare the
-    # PARENT of the effective dir to decide whether this is a retarget.
-    current = sc._jsc.sc().getCheckpointDir()
-    cur_parent = (
-        None
-        if current.isEmpty()
-        else current.get().split("://")[-1].removeprefix("file:").rsplit("/", 1)[0]
-    )
-    import os
-
-    want = os.path.abspath(checkpoint_dir).rstrip("/")
-    if cur_parent != want:
-        # The checkpoint dir is GLOBAL SparkContext state, consumed at
-        # ACTION time — with eager=False two operators pointing at
-        # different dirs could race and checkpoint into the wrong one
-        # (ADVICE r5). Set it once per session; a lazy checkpoint with a
-        # dir CHANGE is the racy combination, so refuse it.
-        if not eager and cur_parent is not None:
-            raise ValueError(
-                "materialize(eager=False) cannot retarget the session "
-                f"checkpoint dir ({cur_parent} -> {want}); "
-                "use eager=True or keep one dir per session"
-            )
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=eager)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -16,7 +16,7 @@ Scale design (hash-min label propagation, the Kiveris et al. layout):
   uniformly-distributed ids.
 * Convergence in O(diameter) rounds; dedup-cluster graphs have tiny
   diameter (near-clique components), so 3-5 rounds in practice.
-* `localCheckpoint` truncates the lineage each round — without it the
+* `materialize` truncates the lineage each round — without it the
   plan doubles per iteration and the driver, not the data, becomes the
   bottleneck (classic iterative-Spark failure mode).
 """
@@ -34,15 +34,12 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(node, component) with component = min node id reachable.
 
     ``edges`` is undirected input (each pair once, either order).
-    ``checkpoint_dir``: None (default) truncates per-round lineage with
-    localCheckpoint (local-mode fast path, non-reliable); a path flips
-    every round's boundary to a reliable checkpoint so a long-running
-    cluster job survives executor loss (operators/checkpointing).
+    Per-round lineage is cut with ``materialize``, reliable when the
+    session has a checkpoint directory (operators/checkpointing).
     """
     # Symmetrize with ONE explode instead of a self-union: the two
     # union branches are distinct subtrees (the column swap defeats
@@ -95,7 +92,6 @@ def connected_components(
             F.col("a").alias("node"),
             F.least(F.col("_mb"), F.col("a")).alias("label"),
         ),
-        checkpoint_dir,
         eager=False,
     )
     total = _total(labels)
@@ -110,7 +106,6 @@ def connected_components(
             labels.union(prop)
             .groupBy("node")
             .agg(F.min("label").alias("label")),
-            checkpoint_dir,
             eager=False,
         )
         new_total = _total(new_labels)

@@ -112,7 +112,6 @@ def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Distinct candidate near-dup pairs sharing >= 1 LSH band.
 
@@ -124,19 +123,15 @@ def minhash_candidate_pairs(
     corpus scale the derivation dominates the join, so the stage
     boundary here is the 2x; in production this materialization is the
     signature-table parquet write every LSH pipeline persists anyway.
-    With the default ``checkpoint_dir=None`` the boundary is a
-    localCheckpoint — the LOCAL-MODE stand-in, non-reliable under
-    executor loss; pass a fault-tolerant directory to flip it to a
-    reliable checkpoint for the cluster path (operators/checkpointing).
+    The boundary is reliable when the session has a checkpoint
+    directory (operators/checkpointing).
     (An A/B against a lazy-persist boundary measured the eager
     checkpoint FASTER end-to-end: the materialized LogicalRDD gives the
     planner exact stats for the self-join, and the derivation job runs
     once cleanly instead of under block-lock contention between the two
     concurrent join-side stages.)
     """
-    bands = materialize(
-        minhash_band_table(df, id_col, text_col), checkpoint_dir
-    )
+    bands = materialize(minhash_band_table(df, id_col, text_col))
     a = bands.select(
         F.col("doc").alias("doc_a"), "band_idx", "band_sig"
     )
@@ -183,16 +178,14 @@ def simhash_pair_hamming(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Hamming distance for candidate pairs sharing a 15-bit chunk.
 
     Like minhash: the signature derivation is materialized once before
     the self-join (the per-side renames defeat exchange reuse, so
     without the stage boundary the token/bit-sum pass runs twice).
-    ``checkpoint_dir`` as in :func:`minhash_candidate_pairs`.
     """
-    sims = materialize(simhash_table(df, id_col, text_col), checkpoint_dir)
+    sims = materialize(simhash_table(df, id_col, text_col))
     chunks = sims.select(
         "doc",
         "simhash",

@@ -14,7 +14,7 @@ Scale design mirrors components.py:
 * One iteration = join ranks to the out-edge table (equi-join on src,
   both sides partitioned on the same key) + one groupBy(dst) sum —
   two shuffles on uniform ids, plan size held flat by
-  `localCheckpoint` per round.
+  `materialize` every few rounds.
 * Fixed iteration count (the usual choice for bounded pipelines)
   keeps the loop deterministic and lets a SQL oracle unroll it.
 
@@ -41,7 +41,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(node, rank) after `iterations` synchronous PageRank rounds.
 
@@ -58,8 +57,7 @@ def pagerank(
     nodes = materialize(
         out.select("node")
         .union(out.select(F.col("nbr").alias("node")))
-        .distinct(),
-        checkpoint_dir,  # eager: pins O(V) rows, fills the out cache
+        .distinct(),  # eager: pins O(V) rows, fills the out cache
     )
     n_nodes = nodes.count()
     deg = out.groupBy("node").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -90,8 +88,8 @@ def pagerank(
         # so only pay for it every few rounds (a 3-round plan is fine
         # to compile whole).
         if (i + 1) % 4 == 0 and i + 1 < iterations:
-            ranks = materialize(ranks, checkpoint_dir)
-    ranks = materialize(ranks, checkpoint_dir)  # pin before dropping caches
+            ranks = materialize(ranks)
+    ranks = materialize(ranks)  # pin before dropping caches
     adj.unpersist()
     out.unpersist()
     return ranks

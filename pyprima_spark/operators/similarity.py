@@ -128,7 +128,6 @@ def embedding_dedup(
     emb: DataFrame,
     tau: float,
     id_col: str = "vec_id",
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Near-dup pairs (cosine >= tau) via banded multi-table LSH.
 
@@ -169,10 +168,8 @@ def embedding_dedup(
     # fires and the hyperplane-projection pass would run twice. The
     # signature table is small (id, band, bucket — no vectors), which is
     # exactly why it is the thing to persist; on a cluster this is the
-    # signature-table parquet write every LSH pipeline does
-    # (default localCheckpoint is non-reliable under executor loss —
-    # local-mode stand-in; pass checkpoint_dir for the cluster path).
-    sig = materialize(sig, checkpoint_dir)
+    # signature-table parquet write every LSH pipeline does.
+    sig = materialize(sig)
     pairs = (
         sig.alias("a")
         .join(

@@ -19,12 +19,13 @@ grows with them while the slots they wait for stay the same.
 
 **Atomic commit.** The outputs are written into a fresh sibling
 directory, ``<out_dir>.staging-<uuid>``, which replaces ``out_dir``
-only after every output has been written: an existing ``out_dir`` is
-renamed aside, the staging directory renamed into its place, and the
-old copy removed. On the first failed output, the outputs not yet
-started are cancelled, the running ones awaited, the staging directory
-deleted, and ``PipelineStageError`` raised with the failing output's
-name; an earlier ``out_dir`` stays exactly as it was.
+only after every output has been written (``sources.writers.staged_dir``,
+the commit every table rewrite in the package goes through). On the
+first failed output, the outputs not yet started are cancelled, the
+running ones awaited, the staging directory deleted, and
+``PipelineStageError`` raised with the failing output's name; an
+earlier ``out_dir`` stays exactly as it was. ``run_curation`` commits
+its two outputs the same way.
 
 **Manifest.** The last file written to the staging directory, and so
 committed with the outputs, is ``_manifest.json``: rows, bytes, data
@@ -39,13 +40,13 @@ from __future__ import annotations
 import csv
 import json
 import os
-import shutil
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
+
+from pyprima_spark.sources.writers import staged_dir
 
 # Stage membership mirrors runme.py's three phases.
 CLEANING = (
@@ -99,12 +100,8 @@ def run_pipeline(
     from pyprima_spark.sources import readers
 
     out_dir = os.path.abspath(out_dir)
-    os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-    token = uuid.uuid4().hex
-    staging = f"{out_dir}.staging-{token}"
-    os.mkdir(staging)
 
-    def write(name: str, submitted: float) -> dict[str, dict]:
+    def write(name: str, staging: str, submitted: float) -> dict[str, dict]:
         df = QUERIES[name](spark, sf_dir)
         path = os.path.join(staging, name)
         df.write.parquet(path)
@@ -119,14 +116,16 @@ def run_pipeline(
         return written
 
     stages = CLEANING + INTERMEDIATE + MODEL
+    outputs = stages + (CSV_OUTPUT,)
     manifest: dict[str, dict] = {}
-    try:
+    with staged_dir(out_dir) as staging:
+        os.mkdir(staging)
         with ThreadPoolExecutor(
             max_workers=spark.sparkContext.defaultParallelism,
             thread_name_prefix="run_pipeline",
         ) as pool:
             futures = {
-                pool.submit(write, name, time.perf_counter()): name
+                pool.submit(write, name, staging, time.perf_counter()): name
                 for name in stages
             }
             try:
@@ -138,13 +137,8 @@ def run_pipeline(
             except BaseException:
                 pool.shutdown(wait=True, cancel_futures=True)
                 raise
-        outputs = stages + (CSV_OUTPUT,)
         with open(os.path.join(staging, MANIFEST), "w") as fh:
             json.dump({name: manifest[name] for name in outputs}, fh, indent=1)
-        _replace_dir(staging, out_dir, f"{out_dir}.previous-{token}")
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
     return {name: os.path.join(out_dir, name) for name in outputs}
 
 
@@ -176,23 +170,6 @@ def _describe(path: str, submitted: float) -> dict:
     }
 
 
-def _replace_dir(new: str, target: str, aside: str) -> None:
-    """Rename ``new`` to ``target``. An existing ``target`` is first
-    renamed to ``aside``, put back if the swap fails, and removed once
-    it succeeded."""
-    had_target = os.path.lexists(target)
-    if had_target:
-        os.replace(target, aside)
-    try:
-        os.replace(new, target)
-    except OSError:
-        if had_target:
-            os.replace(aside, target)
-        raise
-    if had_target:
-        shutil.rmtree(aside)
-
-
 def run_curation(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, str]:
@@ -202,23 +179,28 @@ def run_curation(
     manifest table. Stage semantics are `core.corpus_curation`'s —
     both read the same flag frame, so the written corpus always agrees
     with the oracled funnel counts.
+
+    Like ``run_pipeline``, the two outputs are committed to ``out_dir``
+    as a whole (``sources.writers.staged_dir``): ``out_dir`` is replaced
+    by a directory holding exactly these two outputs, and if either
+    write fails an earlier ``out_dir`` stays exactly as it was.
     """
     from pyprima_spark.plans.core import curation_flags
     from pyprima_spark.plans.queries import QUERIES
 
     d, keptn = curation_flags(spark, sf_dir)
+    with staged_dir(out_dir) as staging:
+        (
+            d.filter(keptn)
+            .select("doc_id", "source", "n_tok", "text")
+            .write.partitionBy("source")
+            .parquet(os.path.join(staging, "curated_docs"))
+        )
+        QUERIES["corpus_curation"](spark, sf_dir).write.parquet(
+            os.path.join(staging, "curation_funnel")
+        )
     corpus_path = os.path.join(out_dir, "curated_docs")
-    (
-        d.filter(keptn)
-        .select("doc_id", "source", "n_tok", "text")
-        .write.mode("overwrite")
-        .partitionBy("source")
-        .parquet(corpus_path)
-    )
     funnel_path = os.path.join(out_dir, "curation_funnel")
-    QUERIES["corpus_curation"](spark, sf_dir).write.mode("overwrite").parquet(
-        funnel_path
-    )
     return {"curated_docs": corpus_path, "curation_funnel": funnel_path}
 
 

@@ -805,9 +805,11 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges defeat exchange reuse, so without the stage boundary
     # the explode+normalize+window derivation runs twice, and at corpus
     # scale the derivation is the dominant stage.
-    grams = ngram_gram_table(
-        docs, "doc_id", "text", ["source", "len_band"], df_max=NGRAM_DF_MAX
-    ).localCheckpoint(eager=True)
+    grams = materialize(
+        ngram_gram_table(
+            docs, "doc_id", "text", ["source", "len_band"], df_max=NGRAM_DF_MAX
+        )
+    )
     # Set sizes ride on the (tiny) per-doc count, joined onto the
     # aggregated pairs — not window-attached to every gram row, which
     # would sort-shuffle the full gram table once more. (The size
@@ -1309,12 +1311,11 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # preserves the layout, and BOTH self-join sides (join key =
     # fingerprint) consume it with zero further exchanges (guide §2.4;
     # the market_basket_pairs subset-clustering layout).
-    fsrc = (
+    fsrc = materialize(
         fps.join(docs.select("doc_id", "source"), "doc_id")
         .select("source", "fingerprint")
         .repartition("fingerprint")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     a = fsrc.select(F.col("source").alias("source_a"), "fingerprint")
     b = fsrc.select(F.col("source").alias("source_b"), "fingerprint")
@@ -2200,9 +2201,8 @@ def curation_flags(spark: SparkSession, sf_dir: str):
     # conjunctions); without the boundary CollapseProject inlines the
     # whole tokenize+stopword tree into each reference — measured 3x
     # the gate cost. In production this boundary is a parquet write.
-    d = (
-        _quality_frame(docs)
-        .select(
+    d = materialize(
+        _quality_frame(docs).select(
             "doc_id",
             "source",
             "n_tok",
@@ -2210,7 +2210,6 @@ def curation_flags(spark: SparkSession, sf_dir: str):
             F.md5("text").alias("h"),
             (F.col("score") > F.lit(CURATION_TAU)).alias("passq"),
         )
-        .localCheckpoint()
     )
     d = d.withColumn(
         "keptx",

@@ -879,7 +879,7 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r") <= _PMI_VOCAB_K)
         .select("term", F.col("cnt").alias("c_term"))
     )
-    inc = tok.join(F.broadcast(vocab), "term").localCheckpoint(eager=True)
+    inc = materialize(tok.join(F.broadcast(vocab), "term"))
     a = inc.select(
         "doc_id", F.col("term").alias("term_a"), F.col("c_term").alias("c_a")
     )
@@ -990,7 +990,7 @@ def graph_degree_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (it feeds four consumers); at web-graph scale the same plan holds
     with the standard high-degree-vertex split.
     """
-    edges = _canonical_edge_set(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_canonical_edge_set(spark, sf_dir))
     return (
         degree_triangle_census(edges)
         .select(
@@ -1244,9 +1244,9 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     docs = _t(spark, sf_dir, "documents")
-    grams = ngram_gram_table(
-        docs, "doc_id", "text", ["source"], df_max=_CONTAIN_DF_MAX
-    ).localCheckpoint(eager=True)
+    grams = materialize(
+        ngram_gram_table(docs, "doc_id", "text", ["source"], df_max=_CONTAIN_DF_MAX)
+    )
     sizes = gram_set_sizes(grams)
     a = grams.select(F.col("doc").alias("doc_a"), "source", "gram")
     b = grams.select(F.col("doc").alias("doc_b"), "source", "gram")
@@ -2127,9 +2127,7 @@ def incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     docs = _t(spark, sf_dir, "documents")
-    bands = minhash_band_table(docs, "doc_id", "text").localCheckpoint(
-        eager=True
-    )
+    bands = materialize(minhash_band_table(docs, "doc_id", "text"))
     seen_b = bands.filter(F.col("doc") % 5 < 3)
     inc_b = bands.filter(F.col("doc") % 5 >= 3)
     flagged = (
@@ -2531,7 +2529,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     as two dim-sized broadcasts; Jaccard = shared / (da + db - shared)
     is one division of exact integers.
     """
-    edges = _canonical_edge_set(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_canonical_edge_set(spark, sf_dir))
     # symmetrized adjacency (node, nbr)
     adj = edges.select(
         F.col("edge_a").alias("node"), F.col("edge_b").alias("nbr")

@@ -1998,9 +1998,13 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized base now feeds both operators' query and candidate
     # sides (identical expressions over identical rows, so the floats
     # are bit-equal). The per-query top-k frames are ≤ n_queries*k
-    # rows, so the approx side broadcasts instead of sort-merging.
+    # rows, so the approx side broadcasts instead of sort-merging. Only
+    # the four columns the passes read are checkpointed, not the wide
+    # raw embedding beside its decoded copy.
     emb = _t(spark, sf_dir, "embeddings")
-    base = materialize(with_lsh_bucket(with_vec_norm(emb)))
+    base = materialize(
+        with_lsh_bucket(with_vec_norm(emb)).select("vec_id", "vec", "nrm", "bucket")
+    )
     exact = op_exact(emb, ANN_N_QUERIES, ANN_K, base=base).select(
         "query_id", "vec_id"
     )
@@ -4600,10 +4604,13 @@ def ppjoin_shingles_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise inline the tokenizer into every one of the k lambda
     # references (k·|doc| regex splits per row — measured 15 s of the
     # leg's 18 s at sf0.1); the ngram_gram_table precedent.
-    tk = docs.select(
-        "doc_id", "source", "lang",
-        F.expr(X.tokens_spark("text")).alias("tk"),
-    ).localCheckpoint(eager=False)
+    tk = materialize(
+        docs.select(
+            "doc_id", "source", "lang",
+            F.expr(X.tokens_spark("text")).alias("tk"),
+        ),
+        eager=False,
+    )
     toks = (
         tk.select(
             "doc_id",

@@ -5440,9 +5440,11 @@ def _band_census_over(raw_docs: DataFrame) -> DataFrame:
     docs = raw_docs.withColumn(
         "len_band", F.floor(F.length("text") / NGRAM_LEN_BAND)
     )
-    grams = ngram_gram_table(
-        docs, "doc_id", "text", ["source", "len_band"], df_max=NGRAM_DF_MAX
-    ).localCheckpoint(eager=True)
+    grams = materialize(
+        ngram_gram_table(
+            docs, "doc_id", "text", ["source", "len_band"], df_max=NGRAM_DF_MAX
+        )
+    )
     sizes = gram_set_sizes(grams)
     a = grams.select(F.col("doc").alias("doc_a"), "source", "len_band", "gram")
     b = grams.select(F.col("doc").alias("doc_b"), "source", "len_band", "gram")

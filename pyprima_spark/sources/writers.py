@@ -12,9 +12,21 @@ flat file is unusable; the scale-correct sinks are:
   same way join with ZERO shuffle (Catalyst sees the co-partitioning).
   This is how a 100 TB fact table joins a 10 TB fact table nightly
   without re-shuffling either side every run.
+
+Every rewrite of a local table or output directory (`merge_upsert`,
+`compact_partitioned`, `pipeline.run_pipeline`, `pipeline.run_curation`)
+commits through :func:`staged_dir`: the new files are written beside
+the target and renamed over it only when the write succeeded.
 """
 
 from __future__ import annotations
+
+import math
+import os
+import shutil
+import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,18 +101,14 @@ def compact_partitioned(
     Streaming/foreachBatch and high-task-count writers accumulate many
     tiny files per partition; scans then pay one task + one open per
     file. Rewrite the table with one file per `target_bytes` of data:
-    a single read → repartition-by-partition-key → overwrite pass, all
+    a single read → repartition-by-partition-key → write pass, all
     distributed (file sizing estimated from the table's on-disk
-    footprint, no driver-side listing of row data).
+    footprint, no driver-side listing of row data). The rewrite is
+    committed with :func:`staged_dir`, so a failed write leaves the
+    old files as they were.
 
-    Returns the file count after compaction. Dynamic partition
-    overwrite only touches partitions that produced output — an empty
-    incremental run rewrites nothing.
+    Returns the file count after compaction.
     """
-    import math
-    import os
-
-    df = spark.read.parquet(path)
     total = 0
     for root, _dirs, files in os.walk(path):
         total += sum(
@@ -109,21 +117,9 @@ def compact_partitioned(
             if f.endswith(".parquet")
         )
     n_files = max(1, math.ceil(total / target_bytes))
-    # The compacted frame reads the very files the overwrite replaces:
-    # materialize before truncating the source.
-    compacted = df.repartition(n_files, *partition_cols).localCheckpoint()
-    with_overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            compacted.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", with_overwrite
-        )
+    compacted = spark.read.parquet(path).repartition(n_files, *partition_cols)
+    with staged_dir(path) as staging:
+        compacted.write.partitionBy(*partition_cols).parquet(staging)
     count = 0
     for root, _dirs, files in os.walk(path):
         count += sum(1 for f in files if f.endswith(".parquet"))
@@ -141,29 +137,61 @@ def merge_upsert(
 
     Existing rows whose key matches an update are replaced; new keys
     append. One anti-join (existing vs update keys, update side usually
-    broadcastable) + one union + one overwrite — the batch pattern
-    behind every warehouse table Spark maintains without a table
-    format. With `partition_cols` + dynamic overwrite, only partitions
-    containing updated keys are rewritten; a table format (Iceberg /
-    Delta) replaces the directory swap, not the plan shape.
+    broadcastable) + one union + one write of the whole table — the
+    batch pattern behind every warehouse table Spark maintains without
+    a table format. The merged table is written beside the target and
+    swapped in by :func:`staged_dir`; a table format (Iceberg / Delta)
+    replaces the directory swap, not the plan shape.
     """
-    import os
-
-    if not os.path.exists(target_path):
-        w = updates.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(target_path)
-        return
-    existing = spark.read.parquet(target_path)
-    keep = existing.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    )
-    merged = keep.unionByName(updates.select(*existing.columns))
-    # localCheckpoint: the merged frame READS the files the overwrite
-    # is about to replace — materialize before truncating the source.
-    merged = merged.localCheckpoint()
-    w = merged.write.mode("overwrite")
+    merged = updates
+    if os.path.exists(target_path):
+        existing = spark.read.parquet(target_path)
+        keep = existing.join(
+            updates.select(*key_cols).distinct(), key_cols, "left_anti"
+        )
+        merged = keep.unionByName(updates.select(*existing.columns))
+    w = merged.write
     if partition_cols:
         w = w.partitionBy(*partition_cols)
-    w.parquet(target_path)
+    with staged_dir(target_path) as staging:
+        w.parquet(staging)
+
+
+@contextmanager
+def staged_dir(target: str) -> Iterator[str]:
+    """Commit a directory rewrite as a whole.
+
+    Yields a fresh sibling path ``<target>.staging-<uuid>`` (the parent
+    of ``target`` is created first) for the caller to write into. On
+    normal exit the staging path replaces ``target``; on any exception
+    it is removed and the exception re-raised, so ``target`` is left
+    exactly as it was. The staging write may read ``target`` itself:
+    nothing under ``target`` changes until the swap.
+    """
+    target = os.path.abspath(target)
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    token = uuid.uuid4().hex
+    staging = f"{target}.staging-{token}"
+    try:
+        yield staging
+        _replace_dir(staging, target, f"{target}.previous-{token}")
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
+def _replace_dir(new: str, target: str, aside: str) -> None:
+    """Rename ``new`` to ``target``. An existing ``target`` is first
+    renamed to ``aside``, put back if the swap fails, and removed once
+    it succeeded."""
+    had_target = os.path.lexists(target)
+    if had_target:
+        os.replace(target, aside)
+    try:
+        os.replace(new, target)
+    except OSError:
+        if had_target:
+            os.replace(aside, target)
+        raise
+    if had_target:
+        shutil.rmtree(aside)

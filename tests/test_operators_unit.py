@@ -4,6 +4,9 @@ expectations — encoding the reference's documented semantics (SURVEY §5).
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -778,65 +781,121 @@ def test_observation_metrics_single_pass(spark, sf_dir):
     assert 0 < n < got["n_rows"]
 
 
-def test_reliable_checkpoint_roundtrip(spark, sf_dir, tmp_path):
+# Run in a fresh interpreter whose session is built with
+# spark.checkpoint.dir: Spark has no public way to unset a checkpoint
+# dir, so setting one on the shared test session would make every later
+# test checkpoint reliably. localCheckpoint is patched to raise, and
+# DataFrame.checkpoint counted, so the catalog keys below prove that
+# every stage boundary on their path went through materialize.
+_RELIABLE_SESSION = r"""
+import json, os, sys
+sys.path.insert(0, os.getcwd())
+from pyspark.sql import functions as F
+from pyprima_spark.catalog import load_table
+from pyprima_spark.operators.checkpointing import materialize
+from pyprima_spark.operators.components import connected_components
+from pyprima_spark.operators.dedup import minhash_candidate_pairs
+from pyprima_spark.plans.oracles import ORACLES
+from pyprima_spark.plans.queries import QUERIES
+from pyprima_spark.session import build_session
+from tests.oracle_utils import assert_matches_oracle
+
+sf_dir, keys = sys.argv[1], sys.argv[2].split(",")
+spark = build_session("reliable_checkpoints")
+DataFrame = type(spark.range(1))  # the classic subclass that defines both
+
+def no_local_checkpoint(self, *args, **kwargs):
+    raise AssertionError("localCheckpoint called")
+
+checkpoints = []
+reliable = DataFrame.checkpoint
+def counted(self, *args, **kwargs):
+    checkpoints.append(1)
+    return reliable(self, *args, **kwargs)
+
+DataFrame.localCheckpoint = no_local_checkpoint
+DataFrame.checkpoint = counted
+docs = load_table(spark, sf_dir, "documents")
+sig = materialize(docs.select("doc_id", F.md5("text").alias("h")))
+joined = sig.alias("a").join(
+    sig.alias("b"),
+    (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")),
+)
+out = {
+    "checkpoint_dir": spark.sparkContext.getCheckpointDir(),
+    "self_join_rows": joined.count(),
+    "plan": sig._jdf.queryExecution().optimizedPlan().toString(),
+    "pairs": sorted(
+        [r.doc_a, r.doc_b]
+        for r in minhash_candidate_pairs(docs.limit(200), "doc_id", "text").collect()
+    ),
+}
+edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"])
+out["components"] = [
+    [r.node, r.component] for r in connected_components(edges).collect()
+]
+out["keys"] = {}
+for key in keys:
+    before = len(checkpoints)
+    try:
+        assert_matches_oracle(QUERIES[key](spark, sf_dir), ORACLES[key], sf_dir)
+        out["keys"][key] = len(checkpoints) - before
+    except Exception as exc:
+        out["keys"][key] = repr(exc)
+print(json.dumps(out))
+"""
+
+# Catalog keys that cut lineage in plan code (plans/core, round4,
+# round7) rather than inside an operator, plus the LSH dedup key, whose
+# boundary sits in operators/dedup.
+_REROUTED_KEYS = (
+    "ngram_jaccard",
+    "cross_source_overlap",
+    "corpus_curation",
+    "cooccurrence_pmi",
+    "graph_degree_triangles",
+    "ngram_containment",
+    "incremental_minhash_index",
+    "graph_neighbor_jaccard",
+    "similarity_band_census",
+    "dedup_minhash_lsh",
+)
+
+
+@pytest.fixture(scope="module")
+def reliable_run(sf_dir, tmp_path_factory):
+    """Run ``_RELIABLE_SESSION`` once in a fresh interpreter started with
+    ``spark.checkpoint.dir`` set; return its JSON report and the dir."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ckpt = str(tmp_path_factory.mktemp("reliable") / "reliable_ckpt")
+    env = dict(
+        os.environ,
+        PYSPARK_SUBMIT_ARGS=f"--conf spark.checkpoint.dir={ckpt} pyspark-shell",
+        SPARK_DRIVER_MEMORY="2g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_SESSION, sf_dir, ",".join(_REROUTED_KEYS)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1]), ckpt
+
+
+def test_reliable_checkpoint_roundtrip(reliable_run):
     """The cluster-safe alternative the localCheckpoint docstrings
-    point to: a RELIABLE checkpoint to a checkpoint dir survives
-    executor loss (here: verifies the write/read path and that the
-    checkpointed plan is truncated and re-usable)."""
-    import pyspark.sql.functions as F
-
-    from pyprima_spark.catalog import load_table
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    docs = load_table(spark, sf_dir, "documents")
-    sig = docs.select(
-        "doc_id", F.md5("text").alias("h")
-    ).checkpoint(eager=True)
-    joined = sig.alias("a").join(
-        sig.alias("b"),
-        (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    assert joined.count() >= 0
+    point to: a session with ``spark.checkpoint.dir`` checkpoints
+    RELIABLY through materialize, the checkpointed plan is truncated
+    (no parquet scan) and re-usable in a self-join, and recovery state
+    is written into the dir."""
+    got, ckpt = reliable_run
+    assert got["checkpoint_dir"].startswith(f"file:{ckpt}/")
+    assert got["self_join_rows"] >= 0
     # the checkpointed plan no longer references the parquet scan
-    assert "parquet" not in sig._jdf.queryExecution().optimizedPlan().toString().lower()
-
-
-def test_reliable_checkpoint_operator_toggle(spark, sf_dir, tmp_path):
-    """The `checkpoint_dir` kwarg (VERDICT r4 item 4) end-to-end: the
-    LSH band-table self-join and the iterative components loop run
-    their stage boundaries as RELIABLE checkpoints when a dir is
-    given, produce the exact same results as the local fast path, and
-    actually write recovery state into the dir."""
-    import os
-
-    from pyprima_spark.catalog import load_table
-    from pyprima_spark.operators.components import connected_components
-    from pyprima_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    ckpt = str(tmp_path / "reliable_ckpt")
-
-    local_pairs = sorted(
-        (r.doc_a, r.doc_b)
-        for r in minhash_candidate_pairs(docs, "doc_id", "text").collect()
-    )
-    rel_pairs_df = minhash_candidate_pairs(
-        docs, "doc_id", "text", checkpoint_dir=ckpt
-    )
-    rel_pairs = sorted((r.doc_a, r.doc_b) for r in rel_pairs_df.collect())
-    assert rel_pairs == local_pairs
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"]
-    )
-    local_cc = {
-        r.node: r.component for r in connected_components(edges).collect()
-    }
-    rel_cc = {
-        r.node: r.component
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert rel_cc == local_cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
+    assert "parquet" not in got["plan"].lower()
 
     # reliable state was actually written (RDD checkpoint part files)
     written = [
@@ -846,6 +905,69 @@ def test_reliable_checkpoint_operator_toggle(spark, sf_dir, tmp_path):
         if f.startswith("part-")
     ]
     assert written, "no reliable checkpoint state written"
+
+
+def test_reliable_checkpoint_operator_toggle(spark, sf_dir, reliable_run):
+    """The session's checkpoint dir is the toggle: with it set, the LSH
+    band-table self-join and the iterative components loop give the
+    same results as the local path of the fixture session, and the
+    catalog keys above match their oracles, each checkpointing reliably
+    without one localCheckpoint."""
+    from pyprima_spark.catalog import load_table
+    from pyprima_spark.operators.components import connected_components
+    from pyprima_spark.operators.dedup import minhash_candidate_pairs
+
+    got, _ckpt = reliable_run
+    docs = load_table(spark, sf_dir, "documents").limit(200)
+    local_pairs = sorted(
+        [r.doc_a, r.doc_b]
+        for r in minhash_candidate_pairs(docs, "doc_id", "text").collect()
+    )
+    assert got["pairs"] == local_pairs
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"]
+    )
+    local_cc = {
+        r.node: r.component for r in connected_components(edges).collect()
+    }
+    rel_cc = dict(got["components"])
+    assert rel_cc == local_cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
+
+    # every key matched its oracle and checkpointed reliably on the way
+    assert all(
+        isinstance(n, int) and n > 0 for n in got["keys"].values()
+    ), got["keys"]
+    assert sorted(got["keys"]) == sorted(_REROUTED_KEYS)
+
+
+def test_checkpoints_only_through_materialize():
+    """Static guard: materialize (operators/checkpointing.py) is the one
+    place that checkpoints or sets a checkpoint dir, so the session's
+    checkpoint dir decides every stage boundary in the package and its
+    tools."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = os.path.join(repo, "pyprima_spark", "operators", "checkpointing.py")
+    calls = {"localCheckpoint", "checkpoint", "setCheckpointDir"}
+    found = []
+    for top in ("pyprima_spark", "tools"):
+        for dirpath, _dirs, names in os.walk(os.path.join(repo, top)):
+            for name in sorted(names):
+                path = os.path.join(dirpath, name)
+                if not name.endswith(".py") or path == allowed:
+                    continue
+                with open(path) as fh:
+                    tree = ast.parse(fh.read(), path)
+                found += [
+                    f"{os.path.relpath(path, repo)}:{node.lineno} {node.func.attr}"
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in calls
+                ]
+    assert found == []
 
 
 def test_deterministic_shuffle_partition(spark, sf_dir):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,6 +182,71 @@ def test_merge_upsert_last_writer_wins(spark, tmp_path):
         (r.id, r.v, r.p) for r in spark.read.parquet(path).collect()
     }
     assert got == {(1, "a", "x"), (2, "B", "x"), (3, "c", "x"), (4, "d", "y")}
+
+
+def _tree_sha256(root):
+    """{relative path: SHA-256} of every file under ``root``."""
+    out = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def _parquet_writes_then_fails(monkeypatch):
+    """Every parquet write completes, then raises."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+
+    def write_then_fail(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        raise OSError("parquet write failed on purpose")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail)
+
+
+def test_merge_upsert_failed_write_keeps_old_table(spark, tmp_path, monkeypatch):
+    """A merge whose write fails leaves every file of the old table as
+    it was and no staging or set-aside sibling behind."""
+    from pyprima_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "dim")
+    v1 = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "x"), (3, "c", "x")], "id long, v string, p string"
+    )
+    merge_upsert(spark, path, v1, ["id"], ["p"])
+    before = _tree_sha256(path)
+    v2 = spark.createDataFrame(
+        [(2, "B", "x"), (4, "d", "y")], "id long, v string, p string"
+    )
+    _parquet_writes_then_fails(monkeypatch)
+    with pytest.raises(OSError, match="on purpose"):
+        merge_upsert(spark, path, v2, ["id"], ["p"])
+    assert _tree_sha256(path) == before
+    assert os.listdir(tmp_path) == ["dim"]
+
+
+def test_compact_partitioned_failed_write_keeps_old_table(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A compaction whose write fails leaves every file of the old
+    table as it was and no staging or set-aside sibling behind."""
+    from pyprima_spark.catalog import load_table
+    from pyprima_spark.sources.writers import compact_partitioned
+
+    path = str(tmp_path / "shattered")
+    load_table(spark, sf_dir, "events").repartition(16).write.partitionBy(
+        "event_type"
+    ).parquet(path)
+    before = _tree_sha256(path)
+    _parquet_writes_then_fails(monkeypatch)
+    with pytest.raises(OSError, match="on purpose"):
+        compact_partitioned(spark, path, ["event_type"])
+    assert _tree_sha256(path) == before
+    assert os.listdir(tmp_path) == ["shattered"]
 
 
 def test_python_streaming_datasource_exactly_once(spark, tmp_path):

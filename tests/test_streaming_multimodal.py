@@ -212,6 +212,37 @@ def test_curation_pipeline_materializes_consistently(spark, sf_dir, tmp_path):
     assert "PartitionFilters: [isnotnull(source" in plan
 
 
+def test_curation_failed_second_output_keeps_old_out_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """run_curation commits out_dir as a whole: when its second output's
+    write fails, an earlier out_dir stays byte-for-byte as it was and no
+    staging or set-aside sibling is left."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pyprima_spark.pipeline import run_curation
+
+    out_dir = str(tmp_path / "curation")
+    run_curation(spark, sf_dir, out_dir)
+    before = _tree_bytes(out_dir)
+
+    write = DataFrameWriter.parquet
+    calls = []
+
+    def second_write_fails(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("second output failed on purpose")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_write_fails)
+    with pytest.raises(OSError, match="on purpose"):
+        run_curation(spark, sf_dir, out_dir)
+    assert [os.path.basename(c) for c in calls] == ["curated_docs", "curation_funnel"]
+    assert _tree_bytes(out_dir) == before
+    assert os.listdir(tmp_path) == ["curation"]
+
+
 def test_stateful_sessionize_event_time_timeout(spark, tmp_path):
     """Burst-1 sessions must be emitted by TIMER (watermark passing
     last_ts + gap), not by per-batch flushing: they arrive closed only

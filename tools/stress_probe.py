@@ -221,14 +221,18 @@ def probe(spark, docs):
         # the prefix-filtered exact-Jaccard core; VERDICT r8 item 3
         # asks for exactly this leg under N× replication
         from pyprima_spark.functions import text as X
+        from pyprima_spark.operators.checkpointing import materialize
         from pyprima_spark.plans.round5 import _ppjoin_over
 
-        tk = docs.select(
-            "doc_id",
-            "source",
-            F.lit("xx").alias("lang"),
-            F.expr(X.tokens_spark("text")).alias("tk"),
-        ).localCheckpoint(eager=False)
+        tk = materialize(
+            docs.select(
+                "doc_id",
+                "source",
+                F.lit("xx").alias("lang"),
+                F.expr(X.tokens_spark("text")).alias("tk"),
+            ),
+            eager=False,
+        )
         toks = tk.select(
             "doc_id",
             "source",
