@@ -435,9 +435,9 @@ BENCH_EXCLUDED = {
 # prefix token has df ≈ N, so the candidate join IS the cross
 # product); real near-dup joins run over SHINGLE sets, where the
 # vocabulary is wide and the prefix holds rare elements. The leg runs
-# the IDENTICAL _ppjoin_over core (plans/round5.py) on 3-gram shingle
+# the IDENTICAL _ppjoin_over core (plans/similarity.py) on 3-gram shingle
 # sets from the same documents table.
-from pyprima_spark.plans.round5 import ppjoin_shingles_bench
+from pyprima_spark.plans.similarity import ppjoin_shingles_bench
 
 BENCH_OVERRIDES = {
     "ppjoin_similarity": ppjoin_shingles_bench,

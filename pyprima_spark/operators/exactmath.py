@@ -82,7 +82,7 @@ def bounded_collect(df, cap: int, what: str) -> list:
     a docstring into code: ``limit(cap + 1)`` bounds the driver
     transfer itself, and a census that exceeds ``cap`` raises
     ValueError instead of silently pulling a data-sized result onto
-    the driver (the round8 source_selection_greedy limit(61) pattern,
+    the driver (the plans/curation.source_selection_greedy limit(61) pattern,
     generalized per VERDICT r9 item 5).
     """
     if _AUDIT_SINK is not None:

@@ -99,7 +99,7 @@ def k_core_round(edges: DataFrame, k: int) -> DataFrame:
     """ONE k-core peeling round: drop every node with degree < k and
     every edge touching one. `edges` is an undirected edge list with
     columns (a, b), each edge once. Iterating to a fixed point yields
-    the k-core; a fixed round count (plans/round6.graph_k_core) keeps
+    the k-core; a fixed round count (plans/graph.graph_k_core) keeps
     the census engine-deterministic. One degree aggregation + two
     semi-joins — key-partitioned, O(E), no fanout.
     """

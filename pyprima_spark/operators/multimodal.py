@@ -7,7 +7,7 @@ Decode status per modality:
   (attach_wav_media / audio_features_wav).
 - IMAGE: REAL end-to-end since round 5 for PNG — spec-valid PNGs
   encoded and decoded with stdlib zlib + struct (encode_png_rgb /
-  decode_png_rgb below), closed-form-oracled in plans/round6.py.
+  decode_png_rgb below), closed-form-oracled in plans/curation.py.
   GRAYSCALE BASELINE JPEG is REAL since round 7 — a pure numpy+stdlib
   ITU-T T.81 codec (operators/jpeg.py: Annex-K tables, 8×8 DCT,
   Huffman entropy coding, verifying parser) wired below as

@@ -1,7 +1,7 @@
 """The query catalog: one entry per operator in SURVEY.md §2.
 
-Each plan module owns its keys: the plan functions in its ``QUERIES``
-and the DuckDB oracle SQL in its ``ORACLES`` (merged by
+Each plan module owns the keys of one domain: the plan functions in its
+``QUERIES`` and the DuckDB oracle SQL in its ``ORACLES`` (merged by
 :mod:`pyprima_spark.plans.oracles`). This module only merges them; no
 plan module imports it. A key defined in two modules is an error.
 """
@@ -13,19 +13,43 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 
 from pyprima_spark.plans import (
-    core,
-    round3,
-    round4,
-    round5,
-    round6,
-    round7,
-    round8,
-    round9,
-    tpch_extra,
+    cleaning,
+    curation,
+    experiments,
+    graph,
+    intermediate,
+    model_eval,
+    model_export,
+    operations,
+    retrieval,
+    similarity,
+    sketches,
+    spatial,
+    statistics,
+    timeseries,
+    tpch,
+    warehouse,
 )
-from pyprima_spark.plans.core import q1_pricing_summary  # noqa: F401 - __spark_entry__ uses it
+from pyprima_spark.plans.tpch import q1_pricing_summary  # noqa: F401 - __spark_entry__ uses it
 
-PLAN_MODULES = (core, tpch_extra, round3, round4, round5, round6, round7, round8, round9)
+PLAN_MODULES = (
+    tpch,
+    cleaning,
+    intermediate,
+    model_export,
+    timeseries,
+    spatial,
+    graph,
+    similarity,
+    retrieval,
+    curation,
+    warehouse,
+    sketches,
+    statistics,
+    experiments,
+    model_eval,
+    operations,
+)
 
 
 def merge(named: Iterable[tuple[str, dict]]) -> dict:

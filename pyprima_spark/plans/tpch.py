@@ -1,15 +1,14 @@
-"""Extended relational query suite — the remaining TPC-H query classes,
-adapted to the driver's trimmed schema (no partsupp / commitdate /
-receiptdate / shipmode / phone columns).
+"""The TPC-H relational query suite, Q1–Q22, adapted to the driver's
+trimmed schema (no partsupp / commitdate / receiptdate / shipmode /
+phone columns).
 
-Each query exercises a relational capability the core trio (q1/q3/q5)
-does not: semi-joins (EXISTS), anti-joins (NOT EXISTS / NOT IN),
-correlated per-group subqueries, scalar aggregate subqueries, left
-outer join + distribution, disjunctive join predicates, and
-conditional-aggregate market shares. Together with the core trio this
-is the full TPC-H capability matrix, which subsumes every relational
-shape in the reference (joins/groupbys in
-generate_intermediate_files.py, filters in correction_functions.py).
+Together the queries are the full TPC-H capability matrix, which
+subsumes every relational shape in the reference (joins/groupbys in
+generate_intermediate_files.py, filters in correction_functions.py):
+semi-joins (EXISTS), anti-joins (NOT EXISTS / NOT IN), correlated
+per-group subqueries, scalar aggregate subqueries, left outer join +
+distribution, disjunctive join predicates, and conditional-aggregate
+market shares.
 
 Scale notes per query are in the docstrings. Only bounded sides are
 force-broadcast (nation/region dims, 1-row scalar aggregates): part and
@@ -26,13 +25,159 @@ signal; where it uses phone country codes, we use `c_nationkey % 7`.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyprima_spark.functions.agg import DEC, dec_sum
+from pyprima_spark.functions.agg import DEC, dec_avg, dec_sum
 from pyprima_spark.plans.core import _t
+
+
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
+
+
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1 pricing summary — the flagship grouped aggregation.
+
+    Exercises scan→filter→project→partial/final agg. The filter and the
+    4-column projection push down to the parquet scan; the aggregate is
+    map-side partial then a 6-group shuffle (trivially skew-free).
+    """
+    li = _t(spark, sf_dir, "lineitem")
+    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            dec_sum("l_quantity").alias("sum_qty"),
+            dec_sum("l_extendedprice").alias("sum_base_price"),
+            dec_sum(disc_price).alias("sum_disc_price"),
+            dec_sum(disc_price * (1 + F.col("l_tax"))).alias("sum_charge"),
+            dec_avg("l_quantity").alias("avg_qty"),
+            dec_avg("l_extendedprice").alias("avg_price"),
+            dec_avg("l_discount").alias("avg_disc"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+QUERIES["q1_pricing_summary"] = q1_pricing_summary
+
+ORACLES["q1_pricing_summary"] = """
+SELECT
+  l_returnflag,
+  l_linestatus,
+  round(sum(CAST(l_quantity AS DECIMAL(27,6))), 2)::DOUBLE                                        AS sum_qty,
+  round(sum(CAST(l_extendedprice AS DECIMAL(27,6))), 2)::DOUBLE                                   AS sum_base_price,
+  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE                AS sum_disc_price,
+  round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(27,6))), 2)::DOUBLE  AS sum_charge,
+  round(sum(CAST(l_quantity AS DECIMAL(27,6)))::DOUBLE / count(l_quantity), 4)                                        AS avg_qty,
+  round(sum(CAST(l_extendedprice AS DECIMAL(27,6)))::DOUBLE / count(l_extendedprice), 4)                                   AS avg_price,
+  round(sum(CAST(l_discount AS DECIMAL(27,6)))::DOUBLE / count(l_discount), 4)                                        AS avg_disc,
+  count(*)                                                         AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
+
+
+def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3: 3-way join + grouped agg + deterministic top-10."""
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1997-01-01"))
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-01-01"))
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(
+            dec_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
+        .select(
+            "l_orderkey",
+            "revenue",
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
+            "o_orderpriority",
+        )
+        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
+        .limit(10)
+    )
+
+
+QUERIES["q3_shipping_priority"] = q3_shipping_priority
+
+ORACLES["q3_shipping_priority"] = """
+SELECT
+  l_orderkey,
+  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue,
+  strftime(o_orderdate, '%Y-%m-%d')                 AS o_orderdate,
+  o_orderpriority
+FROM customer
+JOIN orders   ON o_custkey = c_custkey
+JOIN lineitem ON l_orderkey = o_orderkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1997-01-01'
+  AND l_shipdate  > TIMESTAMP '1997-01-01'
+GROUP BY l_orderkey, o_orderdate, o_orderpriority
+ORDER BY revenue DESC, l_orderkey ASC
+LIMIT 10
+"""
+
+
+def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5: 6-way join with broadcast dims, region-filtered agg."""
+    cust = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01"))
+    )
+    li = _t(spark, sf_dir, "lineitem")
+    supp = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(
+            cust,
+            (orders.o_custkey == cust.c_custkey)
+            & (cust.c_nationkey == supp.s_nationkey),
+        )
+        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .groupBy("n_name")
+        .agg(
+            dec_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
+        .orderBy(F.desc("revenue"))
+    )
+
+
+QUERIES["q5_local_supplier"] = q5_local_supplier
+
+ORACLES["q5_local_supplier"] = """
+SELECT
+  n_name,
+  round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
+FROM customer, orders, lineitem, supplier, nation, region
+WHERE c_custkey = o_custkey
+  AND l_orderkey = o_orderkey
+  AND l_suppkey = s_suppkey
+  AND c_nationkey = s_nationkey
+  AND s_nationkey = n_nationkey
+  AND n_regionkey = r_regionkey
+  AND r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate <  TIMESTAMP '1997-01-01'
+GROUP BY n_name
+ORDER BY revenue DESC
+"""
 
 
 def _dstr(col: str) -> F.Column:
@@ -82,7 +227,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q2 = """
+QUERIES["q2_min_cost_supplier"] = q2_min_cost_supplier
+
+ORACLES["q2_min_cost_supplier"] = """
 WITH ps AS (
   SELECT l_partkey, p_name, l_suppkey,
          min(l_extendedprice / l_quantity) AS supplycost
@@ -133,7 +280,9 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q4 = """
+QUERIES["q4_order_priority"] = q4_order_priority
+
+ORACLES["q4_order_priority"] = """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -165,7 +314,9 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q6 = """
+QUERIES["q6_forecast_revenue"] = q6_forecast_revenue
+
+ORACLES["q6_forecast_revenue"] = """
 SELECT round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
@@ -216,7 +367,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q7 = """
+QUERIES["q7_volume_shipping"] = q7_volume_shipping
+
+ORACLES["q7_volume_shipping"] = """
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        year(l_shipdate) AS l_year,
        round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
@@ -275,7 +428,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q8 = """
+QUERIES["q8_market_share"] = q8_market_share
+
+ORACLES["q8_market_share"] = """
 SELECT year(o_orderdate) AS o_year,
        round(sum(CASE WHEN n2.n_name = 'NATION_3'
                  THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
@@ -325,7 +480,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q9 = """
+QUERIES["q9_product_profit"] = q9_product_profit
+
+ORACLES["q9_product_profit"] = """
 SELECT n_name AS nation, year(o_orderdate) AS o_year,
        round(sum(CAST(l_extendedprice * (1 - l_discount)
                  - p_retailprice * l_quantity * 0.1 AS DECIMAL(27,6))), 2)::DOUBLE AS sum_profit
@@ -374,7 +531,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q10 = """
+QUERIES["q10_returned_items"] = q10_returned_items
+
+ORACLES["q10_returned_items"] = """
 SELECT c_custkey, c_name,
        round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue,
        round(c_acctbal, 2) AS c_acctbal, n_name
@@ -414,7 +573,9 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q12 = """
+QUERIES["q12_priority_lines"] = q12_priority_lines
+
+ORACLES["q12_priority_lines"] = """
 SELECT l_linestatus,
        cast(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
          AS BIGINT) AS high_line_count,
@@ -451,7 +612,9 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q13 = """
+QUERIES["q13_customer_distribution"] = q13_customer_distribution
+
+ORACLES["q13_customer_distribution"] = """
 SELECT c_count, count(*) AS custdist
 FROM (
   SELECT c_custkey, count(o_orderkey) AS c_count
@@ -493,7 +656,9 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q14 = """
+QUERIES["q14_promo_revenue"] = q14_promo_revenue
+
+ORACLES["q14_promo_revenue"] = """
 SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
                          THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
              / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue
@@ -535,7 +700,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q15 = """
+QUERIES["q15_top_supplier"] = q15_top_supplier
+
+ORACLES["q15_top_supplier"] = """
 WITH revenue AS (
   SELECT l_suppkey, sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))) AS total
   FROM lineitem
@@ -579,7 +746,9 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q16 = """
+QUERIES["q16_part_supplier_counts"] = q16_part_supplier_counts
+
+ORACLES["q16_part_supplier_counts"] = """
 SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -618,7 +787,9 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q17 = """
+QUERIES["q17_small_quantity"] = q17_small_quantity
+
+ORACLES["q17_small_quantity"] = """
 SELECT round((sum(CAST(l_extendedprice AS DECIMAL(27,6)))::DOUBLE) / 7.0, 2) AS avg_yearly
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -664,7 +835,9 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q18 = """
+QUERIES["q18_large_orders"] = q18_large_orders
+
+ORACLES["q18_large_orders"] = """
 SELECT c_custkey, c_name, o_orderkey,
        strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
        round(o_totalprice, 2) AS o_totalprice,
@@ -720,7 +893,9 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q19 = """
+QUERIES["q19_disjunctive_revenue"] = q19_disjunctive_revenue
+
+ORACLES["q19_disjunctive_revenue"] = """
 SELECT round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))), 2)::DOUBLE AS revenue
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -763,7 +938,9 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q20 = """
+QUERIES["q20_excess_suppliers"] = q20_excess_suppliers
+
+ORACLES["q20_excess_suppliers"] = """
 SELECT s_name, round(s_acctbal, 2) AS s_acctbal
 FROM supplier
 JOIN nation ON s_nationkey = n_nationkey
@@ -822,7 +999,9 @@ def q21_sole_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q21 = """
+QUERIES["q21_sole_blame"] = q21_sole_blame
+
+ORACLES["q21_sole_blame"] = """
 SELECT s_name, count(*) AS numwait
 FROM lineitem l1
 JOIN supplier ON l1.l_suppkey = s_suppkey
@@ -879,7 +1058,9 @@ def q22_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q22 = """
+QUERIES["q22_inactive_customers"] = q22_inactive_customers
+
+ORACLES["q22_inactive_customers"] = """
 SELECT c_nationkey % 7 AS cntrycode, count(*) AS numcust,
        round(sum(CAST(c_acctbal AS DECIMAL(27,6))), 2)::DOUBLE AS totacctbal
 FROM customer
@@ -890,7 +1071,6 @@ WHERE c_nationkey % 7 IN (1, 2, 3)
 GROUP BY 1
 ORDER BY 1
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -920,7 +1100,9 @@ def q11_important_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q11 = """
+QUERIES["q11_important_values"] = q11_important_values
+
+ORACLES["q11_important_values"] = """
 WITH values_t AS (
   SELECT l_partkey, sum(l_extendedprice * l_quantity) AS val
   FROM lineitem
@@ -934,47 +1116,3 @@ FROM values_t
 WHERE val > (SELECT sum(val) FROM values_t) * 0.001
 ORDER BY value DESC, p_partkey
 """
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q4_order_priority": q4_order_priority,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q10_returned_items": q10_returned_items,
-    "q11_important_values": q11_important_values,
-    "q12_priority_lines": q12_priority_lines,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_part_supplier_counts": q16_part_supplier_counts,
-    "q17_small_quantity": q17_small_quantity,
-    "q18_large_orders": q18_large_orders,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q20_excess_suppliers": q20_excess_suppliers,
-    "q21_sole_blame": q21_sole_blame,
-    "q22_inactive_customers": q22_inactive_customers,
-}
-
-ORACLES: dict[str, str] = {
-    "q2_min_cost_supplier": ORACLE_Q2,
-    "q4_order_priority": ORACLE_Q4,
-    "q6_forecast_revenue": ORACLE_Q6,
-    "q7_volume_shipping": ORACLE_Q7,
-    "q8_market_share": ORACLE_Q8,
-    "q9_product_profit": ORACLE_Q9,
-    "q10_returned_items": ORACLE_Q10,
-    "q11_important_values": ORACLE_Q11,
-    "q12_priority_lines": ORACLE_Q12,
-    "q13_customer_distribution": ORACLE_Q13,
-    "q14_promo_revenue": ORACLE_Q14,
-    "q15_top_supplier": ORACLE_Q15,
-    "q16_part_supplier_counts": ORACLE_Q16,
-    "q17_small_quantity": ORACLE_Q17,
-    "q18_large_orders": ORACLE_Q18,
-    "q19_disjunctive_revenue": ORACLE_Q19,
-    "q20_excess_suppliers": ORACLE_Q20,
-    "q21_sole_blame": ORACLE_Q21,
-    "q22_inactive_customers": ORACLE_Q22,
-}

@@ -86,6 +86,12 @@ def open_output(path: str):
     return fs.open_output_stream(p, compression=None)
 
 
+def remove_dir(path: str) -> None:
+    """Delete a directory and everything under it."""
+    fs, p = _resolve(path)
+    fs.delete_dir(p)
+
+
 def read_bytes(path: str) -> bytes:
     """Read raw bytes (``compression=None``: never transparently
     inflate — the verifying format parsers own decompression)."""

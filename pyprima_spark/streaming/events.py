@@ -10,8 +10,42 @@ bounded per (window, event_type).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pyprima_spark.sources import fsio
+
+
+def run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into a memory sink
+    and return the sink's rows.
+
+    Every call takes a fresh query name, so two threads may run the
+    same stream in one session at once, and its own checkpoint under
+    ``fsio.scratch_dir``: a stateful stream's state must sit on a
+    filesystem every executor reaches (``spark.pyprima.scratchDir`` on
+    a cluster). The returned DataFrame holds the sink itself, so the
+    checkpoint and the sink's view are removed once the run ends,
+    whether it completed or failed."""
+    spark = stream.sparkSession
+    name = f"stream_{uuid.uuid4().hex}"
+    checkpoint = fsio.scratch_dir(spark, "ckpt_")
+    try:
+        (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        fsio.remove_dir(checkpoint)
 
 
 def hourly_event_stats(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -51,21 +85,10 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_hourly_stats_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "hourly_stats"
-) -> DataFrame:
+def run_hourly_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stream to completion (availableNow) into a memory sink
     and return the materialized result."""
-    out = hourly_event_stats(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(hourly_event_stats(stream_events(spark, sf_dir)), "complete")
 
 
 def sliding_event_counts(
@@ -156,16 +179,6 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     ).select("event_id", "ts", "user_id", "event_type", "value", "n_name")
 
 
-def run_sliding_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "sliding_counts"
-) -> DataFrame:
-    out = sliding_event_counts(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).orderBy("win_start", "event_type")
+def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    out = run_to_memory(sliding_event_counts(stream_events(spark, sf_dir)), "complete")
+    return out.orderBy("win_start", "event_type")

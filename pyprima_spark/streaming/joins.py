@@ -49,23 +49,12 @@ def purchase_click_pairs(
     ).select("purchase_id", "user_id", "p_ts", "c_ts", "click_value")
 
 
-def run_purchase_click_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "pc_pairs"
-) -> DataFrame:
+def run_purchase_click_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stream-stream join to completion (availableNow) into a
     memory sink and return the materialized result."""
-    from pyprima_spark.streaming.events import stream_events
+    from pyprima_spark.streaming.events import run_to_memory, stream_events
 
-    out = purchase_click_pairs(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(purchase_click_pairs(stream_events(spark, sf_dir)), "append")
 
 
 def purchase_click_pairs_outer(
@@ -105,20 +94,10 @@ def purchase_click_pairs_outer(
     ).select("purchase_id", "user_id", "p_ts", "c_ts", "click_value")
 
 
-def run_purchase_click_outer_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "pc_outer"
-) -> DataFrame:
+def run_purchase_click_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the left-outer stream-stream join to completion
     (availableNow) into a memory sink and return the result."""
-    from pyprima_spark.streaming.events import stream_events
+    from pyprima_spark.streaming.events import run_to_memory, stream_events
 
     out = purchase_click_pairs_outer(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(out, "append")

@@ -1,6 +1,6 @@
 """Stateful streaming rate-limit (quota) enforcement.
 
-Online form of the batch ``rate_limit_flags`` audit (plans/round5.py):
+Online form of the batch ``rate_limit_flags`` audit (plans/timeseries.py):
 every event beyond the Nth within a (user, hour) is throttled at
 ingestion time.
 
@@ -77,23 +77,12 @@ def quota_flags(events: DataFrame) -> DataFrame:
     )
 
 
-def run_quota_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_quota"
-) -> DataFrame:
+def run_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the quota stream to completion (availableNow) and return the
     per-event-type throttle census (same columns as the batch audit)."""
-    from pyprima_spark.streaming.events import stream_events
+    from pyprima_spark.streaming.events import run_to_memory, stream_events
 
-    out = quota_flags(stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    flagged = spark.table(query_name)
+    flagged = run_to_memory(quota_flags(stream_events(spark, sf_dir)), "append")
     return (
         flagged.groupBy("event_type")
         .agg(

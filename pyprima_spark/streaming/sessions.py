@@ -97,14 +97,12 @@ def _sessionize_group(
     )
 
 
-def run_sessions_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_sessions"
-) -> DataFrame:
+def run_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful sessionization of the events stream via
     applyInPandasWithState, materialized through a memory sink."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from pyprima_spark.streaming.events import stream_events
+    from pyprima_spark.streaming.events import run_to_memory, stream_events
 
     stream = stream_events(spark, sf_dir)
     out = (
@@ -118,15 +116,7 @@ def run_sessions_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).orderBy("user_id", "session_start")
+    return run_to_memory(out, "update").orderBy("user_id", "session_start")
 
 
 def _sessionize_group_timeout(
@@ -200,13 +190,14 @@ def run_sessions_stream_timeout(
     spark: SparkSession,
     src_dir: str,
     watermark: str = "1 second",
-    query_name: str = "stream_sessions_timeout",
 ) -> DataFrame:
     """Stateful sessionization with event-time state eviction over a
     file stream (one micro-batch per file via maxFilesPerTrigger, so
     the watermark advances between batches and timers actually fire)."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from pyprima_spark.streaming.events import run_to_memory
 
     schema = spark.read.parquet(src_dir).schema
     stream = (
@@ -231,12 +222,4 @@ def run_sessions_stream_timeout(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).orderBy("user_id", "session_start")
+    return run_to_memory(out, "update").orderBy("user_id", "session_start")

@@ -148,7 +148,7 @@ def test_scratch_dir_honours_conf(spark, tmp_path):
 def test_roundtrip_operators_respect_scratch_conf(spark, tmp_path, sf_dir):
     """The two previously-weak keys must place their file hop under the
     configured scratch URI and still match their semantics."""
-    from pyprima_spark.plans import round6, round7
+    from pyprima_spark.plans import model_export as round7, spatial as round6
 
     base = "file://" + str(tmp_path / "opscratch")
     fsio.makedirs(base)

@@ -470,7 +470,7 @@ def test_skyline_2d_hand_built(spark):
     incomparable points stay, equal-coordinate duplicates keep the
     lowest tiebreak key; the salted local-skyline -> global pass gives
     the same answer as the direct single pass."""
-    from pyprima_spark.plans.round4 import skyline_2d
+    from pyprima_spark.operators.skyline import pareto_skyline as skyline_2d
 
     rows = [
         # (key, price, size)
@@ -501,7 +501,7 @@ def test_degree_triangle_census_hand_built(spark):
     """Triangle kernel on a known graph: square 1-2-3-4 plus diagonal
     1-3 has exactly two triangles (1,2,3) and (1,3,4); each triangle is
     counted once and per-node participation is correct."""
-    from pyprima_spark.plans.round4 import degree_triangle_census
+    from pyprima_spark.plans.graph import degree_triangle_census
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4), (1, 3)],
@@ -539,7 +539,7 @@ def test_skyline_2d_property_vs_bruteforce(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from pyprima_spark.plans.round4 import skyline_2d
+    from pyprima_spark.operators.skyline import pareto_skyline as skyline_2d
 
     pt = st.tuples(
         st.integers(min_value=0, max_value=8),   # price
@@ -588,7 +588,7 @@ def test_triangle_census_property_vs_bruteforce(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from pyprima_spark.plans.round4 import degree_triangle_census
+    from pyprima_spark.plans.graph import degree_triangle_census
 
     edge = st.tuples(
         st.integers(min_value=0, max_value=6),
@@ -625,7 +625,7 @@ def test_point_in_polygon_vs_python_raycast(spark, sf_dir):
     """The integer ray-cast PIP census agrees with an independent pure-
     Python ray caster over every (customer, nation) pair at sf0.001."""
     from pyprima_spark.catalog import load_table
-    from pyprima_spark.plans.round4 import _PIP_XOFF, _PIP_YOFF, point_in_polygon
+    from pyprima_spark.plans.spatial import _PIP_XOFF, _PIP_YOFF, point_in_polygon
 
     cust = [
         r.c_custkey
@@ -672,7 +672,7 @@ def test_ann_pq_contract_and_recall(spark, sf_dir):
     true cosine top-10 (coarse-quantizer floor)."""
     from pyprima_spark.catalog import load_table
     from pyprima_spark.operators.similarity import ann_topk
-    from pyprima_spark.plans.round4 import ann_pq
+    from pyprima_spark.plans.retrieval import ann_pq
 
     got = ann_pq(spark, sf_dir).toPandas()
     assert list(got.columns) == ["query_id", "vec_id", "adc", "rank"]
@@ -731,7 +731,7 @@ def test_sequence_packing_edges(spark, sf_dir):
     """Greedy packing invariants: chunks are contiguous in doc order,
     never exceed the budget unless a single doc alone does, and every
     doc is packed exactly once."""
-    from pyprima_spark.plans.round5 import _PACK_BUDGET, sequence_packing
+    from pyprima_spark.plans.curation import _PACK_BUDGET, sequence_packing
 
     rows = sequence_packing(spark, sf_dir).collect()
     by_src = {}
@@ -975,7 +975,7 @@ def test_deterministic_shuffle_partition(spark, sf_dir):
     shard ids are in [0, S), and the census is reproducible run-to-run
     (same salted hash → same permutation)."""
     from pyprima_spark.catalog import load_table
-    from pyprima_spark.plans.round6 import _SHUF_SHARDS, deterministic_shuffle
+    from pyprima_spark.plans.curation import _SHUF_SHARDS, deterministic_shuffle
 
     rows = deterministic_shuffle(spark, sf_dir).collect()
     n_docs = load_table(spark, sf_dir, "documents").count()
@@ -990,7 +990,7 @@ def test_graph_k_core_monotone(spark, sf_dir):
     node has degree >= k in the PREVIOUS round's edge set (one-step
     peel semantics; full k-core needs convergence, which the fixed
     round count approximates and the census makes visible)."""
-    from pyprima_spark.plans.round6 import _KCORE_ROUNDS, graph_k_core
+    from pyprima_spark.plans.graph import _KCORE_ROUNDS, graph_k_core
 
     rows = {r.round: r for r in graph_k_core(spark, sf_dir).collect()}
     assert sorted(rows) == list(range(_KCORE_ROUNDS + 1))
@@ -1003,7 +1003,7 @@ def test_decontaminate_ngrams_bounds(spark, sf_dir):
     """Leakage census sanity: leaked grams never exceed total grams,
     contaminated docs never exceed eval docs, and the eval split size
     matches the 20% hash gate's actual cut."""
-    from pyprima_spark.plans.round6 import decontaminate_ngrams
+    from pyprima_spark.plans.curation import decontaminate_ngrams
 
     rows = decontaminate_ngrams(spark, sf_dir).collect()
     assert rows, "census empty"
@@ -1074,7 +1074,7 @@ def test_doc_window_chunk_closed_form_property():
     from hypothesis import given
     from hypothesis import strategies as st
 
-    from pyprima_spark.plans.round6 import _CHUNK_S, _CHUNK_W
+    from pyprima_spark.plans.retrieval import _CHUNK_S, _CHUNK_W
 
     @given(n_tok=st.integers(min_value=0, max_value=5000))
     def check(n_tok):
@@ -1127,7 +1127,7 @@ def test_kmv_source_overlap_bounds(spark, sf_dir):
     """Sketch-algebra sanity: Jaccard estimates live in [0, 10000] bp,
     the union estimate is positive, and err_bp is exactly the absolute
     difference of the two Jaccard columns."""
-    from pyprima_spark.plans.round6 import kmv_source_overlap
+    from pyprima_spark.plans.sketches import kmv_source_overlap
 
     rows = kmv_source_overlap(spark, sf_dir).collect()
     assert rows, "no source pairs"
@@ -1142,11 +1142,7 @@ def test_doc_window_chunks_duplication(spark, sf_dir):
     """Overlap chunking invariants: windowed tokens always cover the
     doc at least once (dup_bp >= 10000 whenever tokens > 0), and the
     window count is consistent with the closed form for a spot doc."""
-    from pyprima_spark.plans.round6 import (
-        _CHUNK_S,
-        _CHUNK_W,
-        doc_window_chunks,
-    )
+    from pyprima_spark.plans.retrieval import _CHUNK_S, _CHUNK_W, doc_window_chunks
 
     rows = doc_window_chunks(spark, sf_dir).collect()
     assert rows
@@ -1166,8 +1162,7 @@ def test_pii_redact_consistent_with_scan(spark, sf_dir):
     (same planted layer, same patterns): emails/phones redacted equal
     matches found, and chars_removed is positive wherever anything was
     redacted."""
-    from pyprima_spark.plans.round4 import pii_scan
-    from pyprima_spark.plans.round6 import pii_redact
+    from pyprima_spark.plans.curation import pii_redact, pii_scan
 
     scan = {r.source: r for r in pii_scan(spark, sf_dir).collect()}
     red = {r.source: r for r in pii_redact(spark, sf_dir).collect()}
@@ -1198,7 +1193,7 @@ def test_half_up_rounding_sign_contract(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from pyprima_spark.catalog import load_table
-    from pyprima_spark.plans.round3 import grid_upsample_bilinear
+    from pyprima_spark.plans.spatial import grid_upsample_bilinear
 
     ev_min = (
         load_table(spark, sf_dir, "events")
@@ -1228,7 +1223,7 @@ def test_ntile_census_keeps_unsampled_tiny_segments(spark):
     dropped."""
     from pyspark.sql import functions as F
 
-    from pyprima_spark.plans.round3 import ntile_features_census
+    from pyprima_spark.plans.model_eval import ntile_features_census
 
     big = spark.range(0, 3000).select(
         F.lit("BIG").alias("c_mktsegment"),

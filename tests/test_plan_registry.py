@@ -11,7 +11,7 @@ import sys
 
 import pytest
 
-from pyprima_spark.plans import queries
+from pyprima_spark.plans import core, queries
 from pyprima_spark.plans.oracles import ORACLES
 from pyprima_spark.plans.queries import GRADING_WINDOW, PLAN_MODULES, QUERIES
 
@@ -90,3 +90,64 @@ def test_merge_rejects_a_key_defined_twice():
     assert merged == {"k1": 1, "k2": 2}
     with pytest.raises(ValueError, match=r"'shared'.*mod_a.*mod_b"):
         queries.merge([("mod_a", {"shared": 1}), ("mod_b", {"shared": 2})])
+
+
+def _plan_module_trees() -> dict[str, ast.Module]:
+    """AST of every plan module, keyed by module name; core included."""
+    trees = {}
+    for module in (*PLAN_MODULES, core):
+        with open(module.__file__) as fh:
+            trees[module.__name__.rsplit(".", 1)[1]] = ast.parse(fh.read())
+    return trees
+
+
+def test_plan_modules_import_only_core_and_constants():
+    trees = _plan_module_trees()
+    siblings = {f"pyprima_spark.plans.{name}" for name in trees} - {
+        "pyprima_spark.plans.core"
+    }
+    offenders = {
+        name: sorted(_imported_modules(tree) & siblings)
+        for name, tree in trees.items()
+        if _imported_modules(tree) & siblings
+    }
+    assert not offenders, offenders
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for leaf in ast.walk(target):
+                    if isinstance(leaf, ast.Name) and isinstance(leaf.ctx, ast.Store):
+                        names.add(leaf.id)
+    return names - {"QUERIES", "ORACLES"}
+
+
+def test_no_two_plan_modules_define_a_name():
+    owners: dict[str, list[str]] = {}
+    for name, tree in _plan_module_trees().items():
+        for defined in _top_level_names(tree):
+            owners.setdefault(defined, []).append(name)
+    shared = {n: mods for n, mods in owners.items() if len(mods) > 1}
+    assert not shared, shared
+
+
+def test_core_registers_no_key():
+    tree = _plan_module_trees()["core"]
+    registers = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Name) and node.id in ("QUERIES", "ORACLES")
+    ]
+    assert not registers, registers
+    assert core not in PLAN_MODULES
+
+
+def test_plan_modules_are_named_by_domain():
+    stale = [f for f in os.listdir(PLANS_DIR) if f.startswith("round")]
+    assert not stale, stale

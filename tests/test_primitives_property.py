@@ -17,7 +17,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pyprima_spark.plans.round7 import _luhn_sum, _z_interleave
+from pyprima_spark.plans.warehouse import _luhn_sum, _z_interleave
 
 
 def _luhn_valid(acct_id: int) -> bool:

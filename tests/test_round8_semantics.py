@@ -173,11 +173,8 @@ SELECT
 
 # --- round-8 second batch: Hilbert unroll, chi-square, Poisson weights ----
 
-from pyprima_spark.plans.round8 import (
-    _AA_CRIT_MILLI,
-    _PBC_CUTS,
-    _hilbert_stages,
-)
+from pyprima_spark.plans.experiments import _AA_CRIT_MILLI, _PBC_CUTS
+from pyprima_spark.plans.warehouse import _hilbert_stages
 
 
 def test_hilbert_unroll_is_the_hilbert_curve():
@@ -272,7 +269,7 @@ def test_isotonic_fit_is_monotone_and_brackets_rates():
     """The max-min PAV identity must produce a NON-DECREASING curve
     bounded by the observed rate range — the whole point of the
     operator (a violation means the lattice join lost an interval)."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables()
     df = con.execute(ORACLES["isotonic_calibration"]).df()
@@ -286,7 +283,7 @@ def test_shapley_efficiency_axiom():
     """Credits must sum to 24*(v(full) - v(empty)) exactly — Shapley's
     efficiency axiom at the x4! integer scale; share_bp must sum to
     ~10000 (floor slack < n_channels)."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables()
     df = con.execute(ORACLES["shapley_attribution"]).df()
@@ -315,7 +312,7 @@ FROM journeys
 def test_bh_rejects_at_least_bonferroni():
     """Step-up BH dominates Bonferroni at the same alpha — if this
     flips, the ladder literals or the rank join are wrong."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["bh_fdr_control"]).df()
@@ -332,7 +329,7 @@ def test_merkle_walk_finds_planted_divergence():
     exist at sf0.01, and the per-level compare counts must show the
     descend-only-under-diff property (compared children bounded by
     fanout x differing parents; the tree need not be full)."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["merkle_tree_diff"]).df()
@@ -346,7 +343,7 @@ def test_merkle_walk_finds_planted_divergence():
 def test_water_filling_feasible_and_fair():
     """Allocations must fit the capacity (slack >= 0, < n), never
     exceed demand, and uncapped brands get exactly their demand."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["maxmin_fair_allocation"]).df()
@@ -363,7 +360,8 @@ def test_water_filling_feasible_and_fair():
 def test_rmst_equals_mean_truncated_time():
     """RMST with administrative censoring IS E[min(T, H)] — the
     telescoping identity the operator's exactness claim rests on."""
-    from pyprima_spark.plans.round8 import ORACLES, _RMST_HORIZON
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.plans.statistics import _RMST_HORIZON
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["survival_rmst"]).df()
@@ -389,7 +387,8 @@ def test_bradley_terry_scale_and_positivity():
     """Strengths stay positive and mean-normalized (renorm contract);
     the top brand by strength must have a top-3 win count (MM can
     reorder, but not pathologically on near-uniform data)."""
-    from pyprima_spark.plans.round8 import ORACLES, _BT_SCALE
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.plans.statistics import _BT_SCALE
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["bradley_terry_strength"]).df()
@@ -405,7 +404,7 @@ def test_bradley_terry_scale_and_positivity():
 def test_knapsack_lp_bound_dominates_greedy():
     """greedy_value <= lp_upper_bound and the budget is respected —
     the certificate's defining inequalities."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["knapsack_density_bound"]).df()
@@ -418,7 +417,7 @@ def test_knapsack_lp_bound_dominates_greedy():
 def test_assignment_optimum_beats_greedy():
     """Exhaustive optimum <= greedy by construction; the published bp
     ratio must agree with the two costs."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["assignment_exhaustive"]).df()
@@ -436,7 +435,7 @@ def test_assignment_optimum_beats_greedy():
 def test_youden_j_is_argmax_over_curve():
     """The chosen cut's J must dominate a direct scan of every level
     boundary recomputed independently."""
-    from pyprima_spark.plans.round8 import ORACLES
+    from pyprima_spark.plans.oracles import ORACLES
 
     con = _duck_with_tables("/root/testdata/sf0.01")
     df = con.execute(ORACLES["youden_threshold"]).df()
@@ -494,7 +493,7 @@ def test_source_selection_refuses_wide_catalog(spark, tmp_path):
     )
     d = str(tmp_path / "wide")
     docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    from pyprima_spark.plans.round8 import source_selection_greedy
+    from pyprima_spark.plans.curation import source_selection_greedy
 
     with pytest.raises(ValueError, match="60 distinct"):
         source_selection_greedy(spark, d)
@@ -516,7 +515,8 @@ def test_pca_empty_embeddings_publishes_null_rows(spark, tmp_path):
     Rayleigh quotient — the engine must mirror, not int(None)-crash."""
     import os
 
-    from pyprima_spark.plans.round8 import ORACLES, pca_power_iteration
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.plans.retrieval import pca_power_iteration
     from tests.oracle_utils import assert_matches_oracle, contract_table
 
     import pyarrow.parquet as pq
@@ -540,10 +540,8 @@ def test_bradley_terry_zero_strength_pair_drops_term(spark, tmp_path):
     d-sum — the engine must mirror, not ZeroDivisionError."""
     import os
 
-    from pyprima_spark.plans.round8 import (
-        ORACLES,
-        bradley_terry_strength,
-    )
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.plans.statistics import bradley_terry_strength
     from tests.oracle_utils import assert_matches_oracle, contract_table
 
     import pyarrow.parquet as pq
@@ -586,10 +584,8 @@ def test_source_selection_stops_at_exhausted_coverage(spark, tmp_path):
     publish the oracle's empty result, not divide by a zero total."""
     import os
 
-    from pyprima_spark.plans.round8 import (
-        ORACLES,
-        source_selection_greedy,
-    )
+    from pyprima_spark.plans.curation import source_selection_greedy
+    from pyprima_spark.plans.oracles import ORACLES
     from tests.oracle_utils import assert_matches_oracle, contract_table
 
     import pyarrow.parquet as pq

@@ -20,7 +20,7 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     spark.conf.set(
         "spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt")
     )
-    streamed = run_hourly_stats_stream(spark, sf_dir, "t_hourly").toPandas()
+    streamed = run_hourly_stats_stream(spark, sf_dir).toPandas()
     batch = hourly_event_stats(load_table(spark, sf_dir, "events")).toPandas()
     key = ["hour_start", "event_type"]
     s = streamed.sort_values(key).reset_index(drop=True)
@@ -177,7 +177,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     spark.conf.set(
         "spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt_ss")
     )
-    streamed = run_purchase_click_stream(spark, sf_dir, "t_pc").toPandas()
+    streamed = run_purchase_click_stream(spark, sf_dir).toPandas()
     batch = purchase_click_pairs(load_table(spark, sf_dir, "events")).toPandas()
     key = ["purchase_id", "c_ts"]
     s = streamed.sort_values(key).reset_index(drop=True)
@@ -279,9 +279,7 @@ def test_stateful_sessionize_event_time_timeout(spark, tmp_path):
         for f in (src / name).rglob("*"):
             _os.utime(f, (now + i, now + i))
     # availableNow + maxFilesPerTrigger=1 -> one batch per file, in order.
-    got = run_sessions_stream_timeout(
-        spark, f"{src}/*", query_name="t_sessions_timeout"
-    ).collect()
+    got = run_sessions_stream_timeout(spark, f"{src}/*").collect()
     by_user = {r.user_id: r for r in got}
     assert 1 in by_user, f"user 1 session should have timed out: {got}"
     s1 = by_user[1]
@@ -353,7 +351,7 @@ def test_sessions_timeout_out_of_order_across_batches(spark, tmp_path):
             _os.utime(f, (now + i, now + i))
 
     got = run_sessions_stream_timeout(
-        spark, f"{src}/*", watermark="2 hours", query_name="t_sessions_ooo"
+        spark, f"{src}/*", watermark="2 hours"
     ).collect()
     by_user = {r.user_id: r for r in got}
     assert 1 in by_user, f"user 1 session should have timed out: {got}"
@@ -501,7 +499,7 @@ def test_stream_stream_outer_join_matches_batch(spark, sf_dir, tmp_path):
     spark.conf.set(
         "spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt_sso")
     )
-    streamed = run_purchase_click_outer_stream(spark, sf_dir, "t_pco").toPandas()
+    streamed = run_purchase_click_outer_stream(spark, sf_dir).toPandas()
     ev = load_table(spark, sf_dir, "events")
     batch_inner = purchase_click_pairs(ev).toPandas()
     batch_outer = purchase_click_pairs_outer(ev).toPandas()
@@ -571,3 +569,42 @@ def test_fused_roundtrips_match_staged_operators(spark):
         r.doc_id: r for r in jpeg_features_roundtrip(docs, 90).collect()
     }
     assert staged_j == fused_j
+
+
+def test_streaming_keys_build_concurrently(spark, sf_dir):
+    """Two threads building the same streaming key in one session both
+    finish and both match the oracle: every run takes its own query
+    name and checkpoint, so neither collides with the other."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyprima_spark.plans.oracles import ORACLES
+    from pyprima_spark.plans.queries import QUERIES
+    from tests.oracle_utils import assert_matches_oracle
+
+    for key in ("streaming_sliding_counts", "streaming_rate_limit"):
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            built = list(pool.map(lambda _: QUERIES[key](spark, sf_dir), range(2)))
+        for df in built:
+            assert_matches_oracle(df, ORACLES[key], sf_dir)
+
+
+def test_run_to_memory_cleans_up_a_failed_run(spark, tmp_path):
+    """A stream that fails mid-run still leaves neither its sink's view
+    nor its checkpoint directory behind."""
+    from pyprima_spark.streaming.events import run_to_memory
+
+    src = tmp_path / "src"
+    spark.range(3).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src)).select(
+        F.raise_error(F.lit("boom")).alias("x")
+    )
+    base = tmp_path / "scratch"
+    base.mkdir()
+    spark.conf.set("spark.pyprima.scratchDir", str(base))
+    try:
+        with pytest.raises(Exception, match="boom"):
+            run_to_memory(stream, "append")
+    finally:
+        spark.conf.unset("spark.pyprima.scratchDir")
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    assert not list(base.iterdir())

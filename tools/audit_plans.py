@@ -52,7 +52,10 @@ GLOBAL_WINDOW_BOUNDS = {
     # |vocab-bucket| census (31 measured at sf0.1; grows ~log with SF)
     "vocab_coverage": 200,
     "oov_rate_sweep": 200,
-    # top-term census (20 measured)
+    # 3 windows measured; the largest (31 rows at sf0.001, sf0.01 and
+    # sf0.1) ranks EVERY distinct term to pick the top _PMI_VOCAB_K, so
+    # it grows with the corpus vocabulary, not with K. It holds only
+    # because the synthetic corpus has 31 terms (open: ROADMAP).
     "cooccurrence_pmi": 100,
     # top-item-pair census (50 measured)
     "market_basket_pairs": 200,

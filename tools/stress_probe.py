@@ -109,8 +109,8 @@ def probe_orders(spark, j):
     rows-per-bucket target instead of growing linearly) and the
     broadcast percentile-cut decile binning (cut table stays 5×9 at
     any scale)."""
-    from pyprima_spark.plans.round3 import ntile_features_census
-    from pyprima_spark.plans.round8 import interpolation_search_census
+    from pyprima_spark.plans.model_eval import ntile_features_census
+    from pyprima_spark.plans.sketches import interpolation_search_census
 
     timings: dict[str, float] = {}
 
@@ -157,7 +157,7 @@ def probe_embeddings(spark, emb):
         # construction; the deployment contract is a FIXED query set
         # (linear). Recorded so the ratio is a measured, named law
         # rather than an unexplained outlier.
-        from pyprima_spark.plans.round8 import _hamming_recall_over
+        from pyprima_spark.plans.retrieval import _hamming_recall_over
 
         return _hamming_recall_over(emb).count()
 
@@ -216,13 +216,13 @@ def probe(spark, docs):
     )
 
     def ppjoin_shingles():
-        # the bench leg's realistic-vocab shape (plans/round5.py
+        # the bench leg's realistic-vocab shape (plans/similarity.py
         # ppjoin_shingles_bench): hashed 5-gram shingle sets through
         # the prefix-filtered exact-Jaccard core; VERDICT r8 item 3
         # asks for exactly this leg under N× replication
         from pyprima_spark.functions import text as X
         from pyprima_spark.operators.checkpointing import materialize
-        from pyprima_spark.plans.round5 import _ppjoin_over
+        from pyprima_spark.plans.similarity import _ppjoin_over
 
         tk = materialize(
             docs.select(
@@ -254,7 +254,7 @@ def probe(spark, docs):
         # wall grows ~quadratically in the sub-cutoff df range before
         # the NGRAM_DF_MAX cap flattens it. Measured here so the law
         # is named, not inferred.
-        from pyprima_spark.plans.round7 import _band_census_over
+        from pyprima_spark.plans.similarity import _band_census_over
 
         return _band_census_over(docs).count()
 
