@@ -52,7 +52,6 @@ def recode_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             dec_sum("o_totalprice").alias("revenue"),
         )
-        .orderBy("country")
     )
 
 
@@ -125,7 +124,6 @@ def expand_multivalue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_parts"),
             dec_avg("p_size").alias("avg_size"),
         )
-        .orderBy("word")
     )
 
 
@@ -184,7 +182,6 @@ def interval_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             dec_avg("p_retailprice").alias("avg_price"),
         )
-        .orderBy("size_class")
     )
 
 
@@ -216,7 +213,6 @@ def mode_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         filled.groupBy("k_filled")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("k_filled")
     )
 
 
@@ -390,7 +386,6 @@ def flh_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("view_count") / F.col("purchase_value"), 4)
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -490,7 +485,6 @@ def interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").alias("observed_cents"),
             F.sum(filled).alias("filled_cents"),
         )
-        .orderBy("event_type")
     )
 
 

@@ -74,7 +74,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("pred_lang", pred)
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
     )
 
 
@@ -203,7 +202,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_avg("n_tok").alias("avg_tokens"),
             F.sum("n_distinct").alias("total_distinct"),
         )
-        .orderBy("source")
     )
 
 
@@ -304,7 +302,6 @@ def quality_topk_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 10)
         .select("source", "rnk", "doc_id", "score")
-        .orderBy("source", "rnk")
     )
 
 
@@ -354,7 +351,6 @@ def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("rate", rate)
         .filter(gate < F.col("rate"))
         .select("doc_id", "source", "rate")
-        .orderBy("doc_id")
     )
 
 
@@ -375,7 +371,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload via mapInPandas (one output row per frame)."""
 
     docs = _t(spark, sf_dir, "documents")
-    return frame_sample(attach_fake_media(docs)).orderBy("doc_id", "frame_idx")
+    return frame_sample(attach_fake_media(docs))
 
 
 QUERIES["multimodal_frames"] = multimodal_frames
@@ -398,7 +394,7 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature-extraction stub over the binary payload column."""
 
     docs = _t(spark, sf_dir, "documents")
-    return audio_features(attach_fake_media(docs)).orderBy("doc_id")
+    return audio_features(attach_fake_media(docs))
 
 
 QUERIES["multimodal_audio"] = multimodal_audio
@@ -449,7 +445,6 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("entropy"),
         )
-        .orderBy("source")
     )
 
 
@@ -495,7 +490,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "tokens_final"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -639,7 +633,6 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "keep",
             (F.col("dup_3gram_frac") <= 0.2) & (F.col("top_token_frac") <= 0.3),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -699,7 +692,6 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
         )
-        .orderBy("source", "split")
     )
 
 
@@ -762,7 +754,6 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("n_new", F.lit(0)) / F.col("n_fps"), 4
             ).alias("novelty_rate"),
         )
-        .orderBy("batch")
     )
 
 
@@ -846,7 +837,6 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("n_phone") > 0).cast("int")).alias("docs_with_phone"),
             F.sum("n_phone").alias("phone_matches"),
         )
-        .orderBy("source")
     )
 
 
@@ -933,8 +923,9 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale discipline: naive co-occurrence is |doc_vocab|^2 per document.
     The pair space is bounded FIRST by restricting to the top-K global
-    vocabulary (a dim-sized broadcast derived with one map-combined
-    count), so the per-doc fanout is <= K^2/2 regardless of document
+    vocabulary (a dim-sized broadcast: one map-combined count, then a
+    per-partition top-K merged to K rows, so no task ever holds the
+    whole vocabulary), so the per-doc fanout is <= K^2/2 regardless of document
     length — the same candidate-bounding discipline as every LSH band
     join. The (doc, term) incidence table is materialized once before
     its self-join (alias renames below the exchanges defeat reuse,
@@ -953,12 +944,11 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(F.expr(tokens_spark("text"))).alias("term")
         ).distinct()
     )
-    wv = Window.orderBy(F.desc("cnt"), F.asc("term"))
     vocab = (
         tok.groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("r", F.row_number().over(wv))
-        .filter(F.col("r") <= _PMI_VOCAB_K)
+        .orderBy(F.desc("cnt"), F.asc("term"))
+        .limit(_PMI_VOCAB_K)
         .select("term", F.col("cnt").alias("c_term"))
     )
     inc = materialize(tok.join(F.broadcast(vocab), "term"))
@@ -990,7 +980,6 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 20)
         .select("rank", "term_a", "term_b", "n_ab", "pmi")
-        .orderBy("rank")
     )
 
 
@@ -1078,7 +1067,7 @@ def charset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"{name}_ratio")
             for name, _ in _CHARSET_CLASSES
         ],
-    ).orderBy("source")
+    )
 
 
 QUERIES["charset_stats"] = charset_stats
@@ -1134,7 +1123,6 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("hits") > 0).cast("int")).alias("flagged_docs"),
             F.sum("hits").alias("total_hits"),
         )
-        .orderBy("source")
     )
 
 
@@ -1200,7 +1188,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rate_bp",
             F.coalesce("n_sampled", F.lit(0)).alias("n_sampled"),
         )
-        .orderBy("source")
     )
 
 
@@ -1319,7 +1306,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "total_tokens",
         F.expr(f"cast(total_tokens * 10000 div {budget} as int)").alias("fill_bp"),
-    ).orderBy("source", "chunk_id")
+    )
 
 
 QUERIES["sequence_packing"] = sequence_packing
@@ -1416,7 +1403,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "covered_bp"
             ),
         )
-        .orderBy("top_n")
     )
 
 
@@ -1506,7 +1492,6 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pieces_per_doc_bp"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1607,7 +1592,6 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("mean_doc_logprob"),
         )
-        .orderBy("source")
     )
 
 
@@ -1699,7 +1683,6 @@ def boilerplate_position(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(abs(sh * 10000 div nh - st * 10000 div nt) as int)"
             ).alias("asymmetry_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -1775,7 +1758,6 @@ def mixed_language_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_mixed",
             F.expr("cast(n_mixed * 10000 div n_docs as int)").alias("mixed_bp"),
         )
-        .orderBy("source", "lang")
     )
 
 
@@ -1852,7 +1834,6 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" div {_PACK_BUDGET} as int)"
             ).alias("est_chunks"),
         )
-        .orderBy("split", "source")
     )
 
 
@@ -2032,7 +2013,6 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "leak_bp"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -2147,7 +2127,6 @@ def data_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "epochs"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -2221,7 +2200,6 @@ def deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("source").alias("n_sources"),
             F.min(F.when(F.col("pos") == 1, F.col("doc_id"))).alias("first_doc"),
         )
-        .orderBy("shard")
     )
 
 
@@ -2312,7 +2290,6 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chars_removed"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -2380,7 +2357,7 @@ def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused operator performs the identical encode→decode round-trip
     # per doc inside ONE worker; payloads no longer cross Arrow.
     docs = _t(spark, sf_dir, "documents")
-    return png_features_roundtrip(docs).orderBy("doc_id")
+    return png_features_roundtrip(docs)
 
 
 QUERIES["multimodal_image"] = multimodal_image
@@ -2480,7 +2457,7 @@ def multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("n_bytes > 300 AND n_bytes < 400 + 3 * width * height").alias(
             "size_ok"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 QUERIES["multimodal_jpeg"] = multimodal_jpeg
@@ -2557,7 +2534,6 @@ def oov_rate_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(oov_occurrences * 10000 div total_occurrences as int)"
             ).alias("oov_bp"),
         )
-        .orderBy("cutoff_v")
     )
 
 
@@ -2649,7 +2625,6 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("difficulty").alias("diff_min"),
             F.max("difficulty").alias("diff_max"),
         )
-        .orderBy("phase", "source")
     )
 
 
@@ -2733,7 +2708,6 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ws_share_bp"
             ),
         )
-        .orderBy("lang")
     )
 
 
@@ -2815,7 +2789,6 @@ def contamination_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("gh").alias("leaked_grams"),
             F.countDistinct("doc_id").alias("eval_docs_touched"),
         )
-        .orderBy("train_source", "eval_source")
     )
 
 
@@ -2933,7 +2906,6 @@ def padding_waste_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         strategy("b_global", "global1")
         .unionByName(strategy("b_quart", "quartile4"))
         .unionByName(strategy("b_dec", "decile10"))
-        .orderBy("strategy")
     )
 
 
@@ -3054,7 +3026,7 @@ def prefix_cache_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for q in parts[1:]:
         out = out.unionByName(q)
-    return out.orderBy("prefix_len")
+    return out
 
 
 QUERIES["prefix_cache_hits"] = prefix_cache_hits
@@ -3144,7 +3116,7 @@ def hashing_trick_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for q in parts[1:]:
         out = out.unionByName(q)
-    return out.orderBy("width")
+    return out
 
 
 QUERIES["hashing_trick_collisions"] = hashing_trick_collisions
@@ -3288,7 +3260,7 @@ def source_selection_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "step bigint, source string, marginal_grams bigint,"
         " cum_grams bigint, coverage_bp bigint",
-    ).orderBy("step")
+    )
 
 
 QUERIES["source_selection_greedy"] = source_selection_greedy
@@ -3435,7 +3407,6 @@ def coverage_decay_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k",
         )
         .select("k", "source", "marginal_grams", "cum_grams", "coverage_bp")
-        .orderBy("k")
     )
 
 
@@ -3547,7 +3518,6 @@ def tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("aggregate(marks, 0L, (a, x) -> a + x)")
             ).alias("marks_sum"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -3642,7 +3612,6 @@ def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"{X.hash64_spark('record_id')} % {_CK_P}")
             ).alias("id_checksum"),
         )
-        .orderBy("warc_type")
     )
 
 
@@ -3740,7 +3709,6 @@ def corpus_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens"),
             F.sum(F.expr(f"doc_id % {_CK_P}")).alias("id_checksum"),
         )
-        .orderBy("source")
     )
 
 

@@ -109,7 +109,6 @@ def ab_test_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chi2",
             (F.col("chi2") > _AB_CHI2_CRIT).alias("significant"),
         )
-        .orderBy("variant")
     )
 
 
@@ -199,7 +198,6 @@ def attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("first_touch_rev", F.lit(0.0)).alias("first_touch_rev"),
             F.coalesce("last_touch_rev", F.lit(0.0)).alias("last_touch_rev"),
         )
-        .orderBy("click_hour")
     )
 
 
@@ -564,7 +562,6 @@ def jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(floor(sqrt(cast(jk_var as double))) as bigint)"
             ).alias("jk_se_ppb"),
         )
-        .orderBy("stratum_year")
     )
 
 
@@ -687,7 +684,6 @@ def rank_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_gap_matched_cents"
             ),
         )
-        .orderBy("nation")
     )
 
 
@@ -813,7 +809,6 @@ def ips_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " - (10000 * r_true) div n) as bigint)"
             ).alias("err_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -918,7 +913,6 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "did_cents",
             F.expr("(mean_t1 - mean_t0) - (mean_c1 - mean_c0)").cast("bigint"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1066,7 +1060,6 @@ def doubly_robust_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "ips_err_bp", F.expr("cast(abs(ips_bp - true_bp) as bigint)")
         )
-        .orderBy("event_type")
     )
 
 
@@ -1229,7 +1222,6 @@ def qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div (cum_n_t * cum_n_c)) as bigint)"
             ).alias("qini_bp"),
         )
-        .orderBy(F.desc("decile"))
     )
 
 
@@ -1378,7 +1370,6 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "width_cents"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1516,7 +1507,6 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("adj_mean_cents"),
             F.col("theta_bp").cast("bigint").alias("theta_bp"),
         )
-        .orderBy("arm")
     )
 
 
@@ -1631,7 +1621,6 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END as bigint)"
             ).alias("reversed"),
         )
-        .orderBy("segment")
     )
 
 
@@ -1753,7 +1742,6 @@ def aa_test_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END as bigint)"
             ).alias("false_positive"),
         )
-        .orderBy("replicate")
     )
 
 
@@ -1941,7 +1929,6 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END as bigint)"
             ).alias("rejected_bonferroni"),
         )
-        .orderBy("segment", "region")
     )
 
 
@@ -2095,7 +2082,7 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append((name, phis[name], -1 if share is None else share))
     return spark.createDataFrame(
         out, schema="channel string, phi_x24 bigint, share_bp bigint"
-    ).orderBy("channel")
+    )
 
 
 QUERIES["shapley_attribution"] = shapley_attribution
@@ -2221,7 +2208,6 @@ def importance_weight_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * w_bp) * sum(n_src), 0)), -1) as bigint)"
             ).alias("ess_milli"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2359,7 +2345,6 @@ def regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div (dr * dl) as bigint)"
             ).alias("jump_milli"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2490,7 +2475,6 @@ def disparate_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " >= 8000 THEN 1 ELSE 0 END as bigint)"
             ).alias("four_fifths_ok"),
         )
-        .orderBy("segment", "region")
     )
 
 
@@ -2629,7 +2613,7 @@ def ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(CASE WHEN mde = 0 THEN 0"
             " WHEN n_req <= n div 2 THEN 1 ELSE 0 END as bigint)"
         ).alias("feasible_two_arm"),
-    ).orderBy("segment")
+    )
 
 
 QUERIES["ab_power_analysis"] = ab_power_analysis
@@ -2768,7 +2752,6 @@ def iv_wald_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " - cast(sx0 as decimal(38,0)) * n1, 0), 0) as bigint)"
             ).alias("wald_milli_k_per_order"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2896,7 +2879,7 @@ def oaxaca_blinder_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="nation string, n_building bigint, n_rest bigint,"
         " explained_milli bigint, unexplained_milli bigint,"
         " total_gap_milli bigint",
-    ).orderBy("nation")
+    )
 
 
 QUERIES["oaxaca_blinder_decomposition"] = oaxaca_blinder_decomposition
@@ -3033,7 +3016,6 @@ def ratio_metric_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("inflation_bp"),
         )
-        .orderBy("segment")
     )
 
 
@@ -3325,7 +3307,6 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("qte"),
         )
-        .orderBy("decile")
     )
 
 
@@ -3445,7 +3426,6 @@ def positivity_overlap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((10000 * n_trimmed) div nn as bigint)"
             ).alias("trimmed_share_bp"),
         )
-        .orderBy("segment", "decile")
     )
 
 

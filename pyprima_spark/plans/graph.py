@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from pyprima_spark.functions import text as X
 from pyprima_spark.operators.checkpointing import materialize
-from pyprima_spark.operators.edges import canonicalize_edges
 from pyprima_spark.operators.exactmath import bounded_collect, min_label_components
 from pyprima_spark.operators.exactmath import tdiv as _tdiv
 from pyprima_spark.operators.graph import k_core_round
@@ -84,7 +83,7 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return lit.select(
         "nationkey", F.round("rank", 8).alias("rank")
-    ).orderBy("nationkey")
+    )
 
 
 QUERIES["pagerank_nations"] = pagerank_nations
@@ -137,25 +136,6 @@ FROM pr_r3 ORDER BY nationkey
 # graph_degree_triangles — local clustering census of the trade graph
 # ---------------------------------------------------------------------------
 
-def _canonical_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct canonical (a < b) nation-pair edges of the trade graph —
-    the same edge semantics as canonical_edges (util.py:139-155
-    reverse_lines + the grouped line table), weights dropped."""
-
-    pairs = (
-        _trade_lines(spark, sf_dir)
-        .select(
-            F.col("c_nationkey").alias("cn"),
-            F.col("s_nationkey").alias("sn"),
-        )
-    )
-    return (
-        canonicalize_edges(pairs, "cn", "sn")
-        .select("edge_a", "edge_b")
-        .distinct()
-    )
-
-
 def graph_degree_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree + triangle participation per node (SURVEY §2 #96) — the
     local-clustering census that grid-topology QA runs on the line
@@ -170,13 +150,12 @@ def graph_degree_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (it feeds four consumers); at web-graph scale the same plan holds
     with the standard high-degree-vertex split.
     """
-    edges = materialize(_canonical_edge_set(spark, sf_dir))
+    edges = materialize(_edge_aggregate(spark, sf_dir).select("edge_a", "edge_b"))
     return (
         degree_triangle_census(edges)
         .select(
             F.col("node").alias("nationkey"), "degree", "n_triangles"
         )
-        .orderBy("nationkey")
     )
 
 
@@ -283,7 +262,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     as two dim-sized broadcasts; Jaccard = shared / (da + db - shared)
     is one division of exact integers.
     """
-    edges = materialize(_canonical_edge_set(spark, sf_dir))
+    edges = materialize(_edge_aggregate(spark, sf_dir).select("edge_a", "edge_b"))
     # symmetrized adjacency (node, nbr)
     adj = edges.select(
         F.col("edge_a").alias("node"), F.col("edge_b").alias("nbr")
@@ -322,7 +301,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return out.filter(F.col("jaccard") >= 0.5).orderBy("node_a", "node_b")
+    return out.filter(F.col("jaccard") >= 0.5)
 
 
 QUERIES["graph_neighbor_jaccard"] = graph_neighbor_jaccard
@@ -449,7 +428,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "rank",
         )
-        .orderBy("rank")
     )
 
 
@@ -703,7 +681,6 @@ def copurchase_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("deg_b"),
             "rank",
         )
-        .orderBy("cust", "rank")
     )
 
 
@@ -951,7 +928,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = census[0]
     for c in census[1:]:
         out = out.unionByName(c)
-    return out.orderBy("round")
+    return out
 
 
 QUERIES["graph_k_core"] = graph_k_core
@@ -1248,7 +1225,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"n_triangles_sampled * {_TRI_Q * _TRI_Q * _TRI_Q}"
             ).alias("doulion_estimate"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -1551,23 +1527,8 @@ ORDER BY nationkey
 ORACLES["hits_hubs_authorities"] = _hits_oracle()
 
 
-def _nation_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected cross-nation trade edges ``(a, b)``, ``a < b``:
-    every customer-nation/supplier-nation pair that shares a line item.
-    One distributed collapse of the four-way fact join to at most
-    25·24/2 rows, whatever the data size."""
-    return (
-        _trade_lines(spark, sf_dir)
-        .filter(F.expr("s_nationkey != c_nationkey"))
-        .select(
-            F.expr("least(s_nationkey, c_nationkey)").alias("a"),
-            F.expr("greatest(s_nationkey, c_nationkey)").alias("b"),
-        )
-        .distinct()
-    )
-
-
-# The DuckDB form of _nation_pair_census, as the ``edges`` CTE.
+# The DuckDB form of the nation-pair edge set (``_edge_aggregate``'s
+# keys, renamed ``a, b``), as the ``edges`` CTE.
 _NATION_PAIR_CENSUS_CTE = """edges AS MATERIALIZED (
   SELECT DISTINCT least(s_nationkey, c_nationkey) AS a,
          greatest(s_nationkey, c_nationkey) AS b
@@ -1601,7 +1562,11 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg; degrees by a census groupBy broadcast back twice; the moment
     fold is a 1-row aggregate.  Windowless.
     """
-    edges = materialize(_nation_pair_census(spark, sf_dir))
+    edges = materialize(
+        _edge_aggregate(spark, sf_dir).select(
+            F.col("edge_a").alias("a"), F.col("edge_b").alias("b")
+        )
+    )
     deg = (
         edges.select(F.col("a").alias("node"))
         .union(edges.select(F.col("b").alias("node")))
@@ -1715,7 +1680,9 @@ def graph_robustness_attack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # no materialize: the census feeds ONE bounded_collect (an eager
     # checkpoint before a collect is a pure extra job)
-    edges = _nation_pair_census(spark, sf_dir)
+    edges = _edge_aggregate(spark, sf_dir).select(
+        F.col("edge_a").alias("a"), F.col("edge_b").alias("b")
+    )
     e_rows = [
         (r["a"], r["b"])
         for r in bounded_collect(
@@ -1879,7 +1846,9 @@ def spectral_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # no materialize: the census feeds ONE bounded_collect (an eager
     # checkpoint before a collect is a pure extra job)
-    edges = _nation_pair_census(spark, sf_dir)
+    edges = _edge_aggregate(spark, sf_dir).select(
+        F.col("edge_a").alias("a"), F.col("edge_b").alias("b")
+    )
     e_rows = [
         (r["a"], r["b"])
         for r in bounded_collect(

@@ -65,7 +65,7 @@ def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in PRIORITIES:
         alias = "prio_" + p.split("-")[0]
         cols.append(F.round(F.coalesce(F.col(f"`{p}`"), F.lit(0.0)), 2).alias(alias))
-    return piv.select(*cols).orderBy("c_mktsegment")
+    return piv.select(*cols)
 
 
 QUERIES["pivot_wide"] = pivot_wide
@@ -100,7 +100,6 @@ def calendar_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             dec_sum("o_totalprice").alias("revenue"),
         )
-        .orderBy("season", "daytype")
     )
 
 
@@ -206,7 +205,6 @@ def weighted_disaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         alloc.groupBy("c_mktsegment")
         .agg(dec_sum("allocated").alias("alloc_revenue"))
-        .orderBy("c_mktsegment")
     )
 
 
@@ -240,7 +238,7 @@ def canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (generate_intermediate_files.py:463-469), dropping
     intra-regional (loop) edges.
     """
-    return _edge_aggregate(spark, sf_dir).orderBy("edge_a", "edge_b")
+    return _edge_aggregate(spark, sf_dir)
 
 
 QUERIES["canonical_edges"] = canonical_edges
@@ -284,7 +282,6 @@ def neighbor_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "edge_b",
             F.coalesce(F.col("cap"), F.lit(0.0)).alias("cap"),
         )
-        .orderBy("r_name", "edge_a", "edge_b")
     )
 
 
@@ -341,7 +338,7 @@ def transmission_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.lit(INV_COST_LENGTH) * F.col("length_km") + F.lit(INV_COST_FIX), 2
         ).alias("inv_cost"),
-    ).orderBy("edge_a", "edge_b")
+    )
 
 
 QUERIES["transmission_attrs"] = transmission_attrs
@@ -387,7 +384,6 @@ def cohort_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             dec_sum("o_totalprice").alias("revenue"),
         )
-        .orderBy("cohort", "o_orderstatus")
     )
 
 
@@ -422,10 +418,7 @@ def expansion_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sites = nation.select("n_name")
     techs = orders.select("o_orderpriority").distinct()
-    return (
-        grid_op([sites, techs], existing, ["n_name", "o_orderpriority"], {"inst_cap": 0.0})
-        .orderBy("n_name", "o_orderpriority")
-    )
+    return grid_op([sites, techs], existing, ["n_name", "o_orderpriority"], {"inst_cap": 0.0})
 
 
 QUERIES["expansion_grid"] = expansion_grid
@@ -515,7 +508,6 @@ def supply_ts_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "supply"
             ),
         )
-        .orderBy("day", "tech", "n_name")
     )
 
 
@@ -585,7 +577,7 @@ def capped_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w",
         "cap",
         F.round("alloc", 4).alias("alloc"),
-    ).orderBy("c_custkey")
+    )
 
 
 QUERIES["capped_distribution"] = capped_distribution

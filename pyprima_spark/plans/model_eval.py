@@ -152,7 +152,6 @@ def ntile_features_census(j: DataFrame) -> DataFrame:
             F.round(F.max("v"), 2).cast("double").alias("hi"),
             F.round(F.sum("v"), 2).cast("double").alias("total"),
         )
-        .orderBy("c_mktsegment", "decile")
     )
 
 
@@ -174,7 +173,6 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("pr", F.round(F.percent_rank().over(w), 6))
         .filter(F.col("user_id") % 50 == 0)
         .select("event_id", "event_type", "value", "pr")
-        .orderBy("event_id")
     )
 
 
@@ -294,7 +292,6 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("iv_term"),
         )
-        .orderBy("bin")
     )
 
 
@@ -529,7 +526,6 @@ def kendall_tau_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tau_ppm",
             F.expr("(1000000 * (concordant - discordant)) div n_pairs"),
         )
-        .orderBy("lang")
     )
 
 
@@ -652,7 +648,7 @@ def decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "order by decile desc rows between unbounded preceding "
             "and current row)) div (sum(n_responders) over ())"
         ).alias("cum_capture_bp"),
-    ).orderBy(F.desc("decile"))
+    )
 
 
 QUERIES["decile_lift"] = decile_lift
@@ -784,7 +780,6 @@ def roc_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE (10000 * u2) div (2 * n_pos * n_neg) END"
             ),
         )
-        .orderBy("segment")
     )
 
 
@@ -897,7 +892,6 @@ def conformal_interval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_covered"),
         )
         .withColumn("coverage_bp", F.expr("(10000 * n_covered) div n_test"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1001,7 +995,6 @@ def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_bp"),
         )
-        .orderBy("bin")
     )
 
 
@@ -1130,7 +1123,6 @@ def silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * (abs(sum_s2) div n) as bigint)"
             ).alias("mean_s2_bp"),
         )
-        .orderBy("label")
     )
 
 
@@ -1304,7 +1296,6 @@ def nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n"),
             F.expr("cast((10000 * n) div n_true as bigint)").alias("share_bp"),
         )
-        .orderBy("true_label", "assigned_label")
     )
 
 
@@ -1464,7 +1455,6 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast((1000 * pos) div n as bigint)").alias("rate_milli"),
             F.col("iso_milli").cast("bigint").alias("iso_milli"),
         )
-        .orderBy("score_level")
     )
 
 
@@ -1587,7 +1577,6 @@ def average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("prauc_milli"),
         )
-        .orderBy("segment")
     )
 
 
@@ -1745,7 +1734,6 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * (1000000 - ybar_e6)) div 10000 as bigint)"
             ).alias("unc_e8"),
         )
-        .orderBy("segment")
     )
 
 
@@ -1879,7 +1867,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="depth bigint, overlap bigint, agree_milli bigint,"
         " rbo_min_e6 bigint",
-    ).orderBy("depth")
+    )
 
 
 QUERIES["rank_biased_overlap"] = rank_biased_overlap
@@ -2021,7 +2009,7 @@ def youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fp").cast("bigint").alias("fp"),
         F.expr("cast(p - tp as bigint)").alias("fn"),
         F.expr("cast(nneg - fp as bigint)").alias("tn"),
-    ).orderBy("segment")
+    )
 
 
 QUERIES["youden_threshold"] = youden_threshold
@@ -2211,7 +2199,6 @@ def decision_stump_1r(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_right").cast("bigint").alias("n_right"),
             F.col("pos_right").cast("bigint").alias("pos_right"),
         )
-        .orderBy("rank")
     )
 
 
@@ -2392,7 +2379,6 @@ def ransac_consensus_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(CASE WHEN rk = 1 THEN 1 ELSE 0 END as bigint)")
             .alias("is_consensus"),
         )
-        .orderBy("candidate")
     )
 
 

@@ -35,7 +35,6 @@ def unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         long.groupBy("l_returnflag", "metric")
         .agg(dec_sum("val").alias("total"))
-        .orderBy("l_returnflag", "metric")
     )
 
 
@@ -81,7 +80,7 @@ def export_demand_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r.replace(" ", "_")
             )
         )
-    return piv.select(*cols).orderBy("t")
+    return piv.select(*cols)
 
 
 QUERIES["export_demand_matrix"] = export_demand_matrix
@@ -215,20 +214,9 @@ def model_export_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("value"),
     )
 
-    bundle = glob.unionByName(site).unionByName(commodity).unionByName(
+    return glob.unionByName(site).unionByName(commodity).unionByName(
         process
     ).unionByName(demand).unionByName(supim)
-    # Null placement pinned EXPLICITLY on both sides: Spark defaults to
-    # NULLS FIRST ascending, DuckDB to NULLS LAST — an unpinned sort on
-    # the nullable site/item/t keys would hash-diverge under a row-order
-    # sensitive compare.
-    return bundle.orderBy(
-        F.asc("sheet"),
-        F.asc_nulls_first("site"),
-        F.asc_nulls_first("item"),
-        F.asc_nulls_first("t"),
-        F.asc("attr"),
-    )
 
 
 QUERIES["model_export_bundle"] = model_export_bundle
@@ -300,7 +288,6 @@ def ordered_string_export(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sort_array(F.collect_list("s_name")), ";"
             ).alias("supplier_list"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -394,7 +381,6 @@ def model_workbook_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_cents"
             ),
         )
-        .orderBy("sheet")
     )
 
 

@@ -67,7 +67,6 @@ def running_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("bal"), 2).cast("double").alias("peak_balance"),
             F.round(F.min("bal"), 2).cast("double").alias("trough_balance"),
         )
-        .orderBy("l_partkey")
     )
 
 
@@ -136,7 +135,6 @@ def order_cycle_time(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "percentile_disc(0.95) WITHIN GROUP (ORDER BY cycle_days)"
             ).cast("int").alias("p95_days"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -187,9 +185,7 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "salt",
     ).drop("salt")
-    return pareto_skyline(local, "p_retailprice", "p_size", "p_partkey").orderBy(
-        "p_retailprice", "p_partkey"
-    )
+    return pareto_skyline(local, "p_retailprice", "p_size", "p_partkey")
 
 
 QUERIES["skyline_pareto"] = skyline_pareto
@@ -380,7 +376,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div cast(round(tot * 100) as bigint) as int)"
             ).alias("rev_share_bp"),
         )
-        .orderBy("segment")
     )
 
 
@@ -469,7 +464,6 @@ def order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("v"), 2).cast("double").alias("value_at_risk"),
         )
-        .orderBy("o_orderstatus", "age_band")
     )
 
 
@@ -555,7 +549,6 @@ def skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         base.join(F.broadcast(frontier), ["cents", "size"])
         .select("p_partkey", F.col("cents").alias("price_cents"), "size")
-        .orderBy("price_cents", "p_partkey")
     )
 
 
@@ -661,7 +654,6 @@ def newsvendor_stock_level(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q_bp").cast("bigint").alias("fractile_bp"),
             F.col("demand").cast("bigint").alias("stock_level"),
         )
-        .orderBy("brand")
     )
 
 
@@ -794,7 +786,6 @@ def abc_xyz_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((10000 * sum(rev)) div any_value(tot) as bigint)"
             ).alias("revenue_share_bp"),
         )
-        .orderBy("abc", "xyz")
     )
 
 
@@ -940,7 +931,7 @@ def maxmin_fair_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d, brand in ds
     )
-    return spark.createDataFrame(out, schema=schema).orderBy("brand")
+    return spark.createDataFrame(out, schema=schema)
 
 
 QUERIES["maxmin_fair_allocation"] = maxmin_fair_allocation
@@ -1252,7 +1243,6 @@ def drf_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * c_slots) div (1000000 * d_slots) END as bigint)"
             ).alias("alloc_budget_k"),
         )
-        .orderBy("segment")
     )
 
 
@@ -1590,7 +1580,7 @@ def seat_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="segment string, n_orders bigint, hamilton bigint,"
         " dhondt bigint, webster bigint",
-    ).orderBy("segment")
+    )
 
 
 QUERIES["seat_apportionment"] = seat_apportionment
@@ -2009,7 +1999,7 @@ def secretary_stopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="segment string, n_days bigint, learning_phase bigint,"
         " chosen_position bigint, chosen_true_rank bigint,"
         " chosen_vs_best_bp bigint",
-    ).orderBy("segment")
+    )
 
 
 QUERIES["secretary_stopping_replay"] = secretary_stopping_replay
@@ -2145,7 +2135,7 @@ def kelly_fraction_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div ((n_up + n_dn) * cast(up_sum as decimal(38,0)) * n_dn))"
             " div 2 as bigint)"
         ).alias("half_kelly_milli"),
-    ).orderBy("segment")
+    )
 
 
 QUERIES["kelly_fraction_sizing"] = kelly_fraction_sizing
@@ -2299,7 +2289,6 @@ def arc_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + cast(sq2 as decimal(38,0)) * n1), 0), 0) as bigint)"
             ).alias("elasticity_milli"),
         )
-        .orderBy("brand")
     )
 
 
@@ -2548,7 +2537,7 @@ def erlang_b_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "offered_load_deci",
         F.expr("cast(s.m as bigint)").alias("n_servers"),
         F.expr("cast(s.b_milli as bigint)").alias("blocking_milli"),
-    ).orderBy("n_servers")
+    )
 
 
 QUERIES["erlang_b_blocking"] = erlang_b_blocking
@@ -2665,7 +2654,7 @@ def banzhaf_power_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="segment string, weight bigint, weight_share_bp bigint,"
         " n_swings bigint, banzhaf_share_bp bigint",
-    ).orderBy("segment")
+    )
 
 
 QUERIES["banzhaf_power_index"] = banzhaf_power_index
@@ -2810,7 +2799,6 @@ def shapley_shubik_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "shapley_shubik_bp"
             ),
         )
-        .orderBy("segment")
     )
 
 

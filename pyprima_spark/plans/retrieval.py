@@ -46,7 +46,7 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k per query vector (SURVEY §2 #31)."""
 
     emb = _t(spark, sf_dir, "embeddings")
-    return topk_op(emb, ANN_N_QUERIES, ANN_K).orderBy("query_id", "rank")
+    return topk_op(emb, ANN_N_QUERIES, ANN_K)
 
 
 QUERIES["ann_topk"] = ann_topk
@@ -79,7 +79,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate NN per query vector (SURVEY §2 #32)."""
 
     emb = _t(spark, sf_dir, "embeddings")
-    return lsh_op(emb, ANN_N_QUERIES, ANN_K).orderBy("query_id", "rank")
+    return lsh_op(emb, ANN_N_QUERIES, ANN_K)
 
 
 QUERIES["ann_lsh"] = ann_lsh
@@ -120,7 +120,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ANN_K,
         n_probe=IVF_N_PROBE,
         centroid_ids=IVF_CENTROID_IDS,
-    ).orderBy("query_id", "rank")
+    )
 
 
 QUERIES["ann_ivf"] = ann_ivf
@@ -194,7 +194,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(dec_avg("v", 5).alias("centroid"))
-        .orderBy("label", "dim")
     )
 
 
@@ -255,9 +254,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rnk") <= 5)
     )
-    return scored.select("source", "rnk", "term", "tf", "df", "tfidf").orderBy(
-        "source", "rnk"
-    )
+    return scored.select("source", "rnk", "term", "tf", "df", "tfidf")
 
 
 QUERIES["tfidf_top_terms"] = tfidf_top_terms
@@ -362,7 +359,6 @@ def bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_doc.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 20)
         .select("rank", "doc_id", "bm25", "n_terms_hit")
-        .orderBy("rank")
     )
 
 
@@ -454,7 +450,6 @@ def vector_quantize_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("se").cast("double") / F.count(F.lit(1)), 10
             ).alias("mse"),
         )
-        .orderBy("label")
     )
 
 
@@ -581,7 +576,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc.withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= 10)
         .select("query_id", "vec_id", "adc", F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank")
     )
 
 
@@ -690,7 +684,6 @@ def centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _OUTLIER_K)
         .select("label", "vec_id", "cos", "rank")
-        .orderBy("label", "rank")
     )
 
 
@@ -778,7 +771,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hits",
             F.expr(f"cast(n_hits * 10000 div {ANN_K} as int)").alias("recall_bp"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -845,7 +837,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _HN_K)
         .select("anchor_id", "anchor_label", "vec_id", "label", "cos", "rank")
-        .orderBy("anchor_id", "rank")
     )
 
 
@@ -928,7 +919,6 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("nrm").alias("min_norm"),
             F.max("nrm").alias("max_norm"),
         )
-        .orderBy("label")
     )
 
 
@@ -1023,7 +1013,6 @@ def doc_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dup_bp"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1107,7 +1096,7 @@ def champion_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("champions")
         )
     )
-    return stats.join(champs, "term").orderBy("term")
+    return stats.join(champs, "term")
 
 
 QUERIES["champion_postings"] = champion_postings
@@ -1196,7 +1185,6 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "n_occurrences",
         )
-        .orderBy("phrase")
     )
 
 
@@ -1293,7 +1281,6 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("fused_rank", F.row_number().over(w_f))
         .filter(F.col("fused_rank") <= _RRF_TOPN)
         .select("lang", "fused_rank", "doc_id", "rrf_score")
-        .orderBy("lang", "fused_rank")
     )
 
 
@@ -1399,7 +1386,6 @@ def random_projection_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("p").alias("min_p"),
             F.max("p").alias("max_p"),
         )
-        .orderBy("label", "j")
     )
 
 
@@ -1524,7 +1510,6 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "idcg_x",
             F.expr("(1000000 * dcg_x) div idcg_x").alias("ndcg_ppm"),
         )
-        .orderBy("label")
     )
 
 
@@ -1636,7 +1621,6 @@ def mutual_nn_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             (best_a.a_id == best_b.a2) & (best_a.b_id == best_b.b2),
         )
         .select("a_id", "b_id", "dot")
-        .orderBy("a_id")
     )
 
 
@@ -1765,7 +1749,6 @@ def mrl_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(10000 * coalesce(n_hits, 0)) div {_MRL_K}"
             ).alias("recall_bp"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -1883,7 +1866,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             " as cov_q2",
         )
         .drop("n_entries")
-        .orderBy("dim_i", "dim_j")
     )
 
 
@@ -2078,7 +2060,6 @@ def _hamming_recall_over(emb: DataFrame) -> DataFrame:
             F.expr(f"(10000 * n_hits) div {_BHR_K}").alias("recall_bp"),
             F.col("ham_radius").cast("bigint").alias("ham_radius"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -2148,7 +2129,6 @@ def postings_compression_estimate(
                 "cast((10000 * varint_bytes) div (8 * n_postings) as bigint)"
             ).alias("size_vs_raw_bp"),
         )
-        .orderBy("df_log2")
     )
 
 
@@ -2285,7 +2265,6 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_occurrences").cast("bigint").alias("n_occurrences"),
             F.col("score_milli").cast("bigint").alias("score_milli"),
         )
-        .orderBy("source", "rank")
     )
 
 
@@ -2512,7 +2491,7 @@ def mmr_diversification(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="query_id bigint, mmr_rank bigint, cand_id bigint,"
         " rel_ppm bigint, redundancy_ppm bigint",
-    ).orderBy("query_id", "mmr_rank")
+    )
 
 
 QUERIES["mmr_diversification"] = mmr_diversification
@@ -2686,7 +2665,6 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("df_topk").cast("bigint").alias("df_topk"),
             F.col("in_original").cast("bigint").alias("in_original"),
         )
-        .orderBy("rank")
     )
 
 

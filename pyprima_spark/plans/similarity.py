@@ -87,9 +87,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     docs = _t(spark, sf_dir, "documents")
-    return minhash_candidate_pairs(docs, "doc_id", "text").orderBy(
-        "doc_a", "doc_b"
-    )
+    return minhash_candidate_pairs(docs, "doc_id", "text")
 
 
 QUERIES["dedup_minhash_lsh"] = dedup_minhash_lsh
@@ -110,7 +108,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash hamming distances for chunk-sharing pairs (SURVEY §2 #29)."""
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash_pair_hamming(docs, "doc_id", "text").orderBy("doc_a", "doc_b")
+    return simhash_pair_hamming(docs, "doc_id", "text")
 
 
 QUERIES["dedup_simhash"] = dedup_simhash
@@ -195,7 +193,6 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         withsizes.withColumn("jacc", jacc)
         .filter(F.col("jacc") >= NGRAM_JACCARD_TAU)
         .select("doc_a", "doc_b", "jacc")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -243,7 +240,7 @@ def embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine near-dup pairs via banded multi-table LSH (SURVEY §2 #33)."""
 
     emb = _t(spark, sf_dir, "embeddings")
-    return emb_dedup_op(emb, EMB_DEDUP_TAU).orderBy("vec_a", "vec_b")
+    return emb_dedup_op(emb, EMB_DEDUP_TAU)
 
 
 QUERIES["embedding_dedup"] = embedding_dedup
@@ -305,7 +302,7 @@ def incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = fp.filter(F.col("doc_id") % 3 != 0)
     return incoming.join(seen, "fingerprint", "left_anti").select(
         "doc_id", "fingerprint"
-    ).orderBy("doc_id")
+    )
 
 
 QUERIES["incremental_new_docs"] = incremental_new_docs
@@ -364,7 +361,7 @@ def incremental_new_docs_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(seen, "fingerprint", "left_anti")
         .select("doc_id", "fingerprint")
     )
-    return definite_new.unionByName(verified_new).orderBy("doc_id")
+    return definite_new.unionByName(verified_new)
 
 
 QUERIES["incremental_new_docs_bloom"] = incremental_new_docs_bloom
@@ -407,7 +404,6 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -466,7 +462,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         connected_components(pairs, "doc_a", "doc_b")
         .select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
-        .orderBy("doc_id")
     )
 
 
@@ -498,7 +493,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing rolling-hash document fingerprints (SURVEY §2 #27b)."""
 
     docs = _t(spark, sf_dir, "documents")
-    return winnow_op(docs, "doc_id", "text").orderBy("doc_id", "fingerprint")
+    return winnow_op(docs, "doc_id", "text")
 
 
 QUERIES["winnow_fingerprints"] = winnow_fingerprints
@@ -563,7 +558,6 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         withsizes.withColumn("containment", cont)
         .filter(F.col("containment") >= _CONTAIN_TAU)
         .select("doc_a", "doc_b", "containment")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -658,7 +652,7 @@ def golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return merged.select(
         "fingerprint", "survivor_id", "n_members", "n_sources", "max_chars"
-    ).orderBy("fingerprint")
+    )
 
 
 QUERIES["golden_record"] = golden_record
@@ -738,7 +732,6 @@ def incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.sum(F.coalesce("is_neardup", F.lit(0)))
             ).alias("n_clean"),
         )
-        .orderBy("source")
     )
 
 
@@ -831,7 +824,6 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_members",
             rounded.alias("rep_score"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -967,7 +959,6 @@ def holdout_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "contaminated_bp"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1329,7 +1320,7 @@ def _ppjoin_over(toks: DataFrame) -> DataFrame:
         .dropDuplicates(["doc_a", "doc_b"])
     )
     inter = F.size(F.array_intersect("set_a", "set_b"))
-    verified = cands.select(
+    return cands.select(
         "doc_a",
         "doc_b",
         inter.alias("inter"),
@@ -1338,7 +1329,6 @@ def _ppjoin_over(toks: DataFrame) -> DataFrame:
         (F.lit(_PPJ_TAU_NUM) + F.lit(_PPJ_TAU_DEN)) * F.col("inter")
         >= F.lit(_PPJ_TAU_NUM) * (F.col("inter") + F.col("uni"))
     )
-    return verified.orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -1384,7 +1374,6 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((raw_chars - final_chars) * 10000 div raw_chars as int)"
             ).alias("savings_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -1655,7 +1644,6 @@ def chunk_boundary_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("h.source").alias("source_next"),
         )
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("source_prev", "source_next")
     )
 
 
@@ -1727,7 +1715,6 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_clusters"),
             F.sum("size").alias("n_docs"),
         )
-        .orderBy("size")
     )
 
 
@@ -1810,7 +1797,6 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dist",
             F.expr("cnt_a * cnt_b").alias("pair_count"),
         )
-        .orderBy("name_a", "name_b")
     )
 
 
@@ -1904,7 +1890,6 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
             F.coalesce("n_matches", F.lit(0)).alias("n_matches"),
         )
-        .orderBy("block")
     )
 
 
@@ -1996,7 +1981,6 @@ def image_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
         )
         .filter(F.col("n_images") >= 2)
-        .orderBy("hash_hi", "hash_lo")
     )
 
 
@@ -2193,7 +2177,6 @@ def _band_census_over(raw_docs: DataFrame) -> DataFrame:
                 " (partition by source))"
             ).alias("cum_ge_bp"),
         )
-        .orderBy("source", F.desc("band"))
     )
 
 
@@ -2307,7 +2290,6 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_span_words").cast("bigint").alias("max_span_words"),
             F.col("dup_grams").cast("bigint").alias("dup_grams"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 

@@ -37,7 +37,6 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("lo", (F.col("bucket") * 5000).cast("double"))
         .select("bucket", "lo", "n", "sum_price")
-        .orderBy("bucket")
     )
 
 
@@ -118,7 +117,7 @@ def table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 'o_totalprice',    d_price,  ok_price)"
             " AS (column_name, n_distinct, approx_within_10pct)"
         )
-    ).orderBy("column_name")
+    )
 
 
 QUERIES["table_profile_approx"] = table_profile_approx
@@ -178,7 +177,6 @@ def approx_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("event_type")
         .agg(*band(0.5, "p50"), *band(0.9, "p90"))
-        .orderBy("event_type")
     )
 
 
@@ -263,7 +261,6 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(abs(kmv_estimate - n_exact) * 10000 div n_exact as int)"
             ).alias("err_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -355,7 +352,6 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("v"), 2).cast("double").alias("hi"),
             F.round(F.sum("v"), 2).cast("double").alias("total"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -527,7 +523,6 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " - n_inter * 10000 div (n_a + n_b - n_inter)) as int)"
             ).alias("err_bp"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -685,7 +680,6 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cm_estimate",
             (F.col("cm_estimate") - F.col("exact_n")).alias("overcount"),
         )
-        .orderBy("rank")
     )
 
 
@@ -779,7 +773,6 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("alloc"),
             F.expr("cast(w * 10000 div tw as int)").alias("share_bp"),
         )
-        .orderBy("stratum")
     )
 
 
@@ -909,7 +902,6 @@ def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("err_bp"),
             "empty_registers",
         )
-        .orderBy("period")
     )
 
 
@@ -1034,7 +1026,6 @@ def bitmap_flag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.expr("sum(d_en_not_digit)").alias("en_not_digit_direct"),
         )
-        .orderBy("source")
     )
 
 
@@ -1156,7 +1147,7 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="lang string, source string, n bigint, w_ppm bigint,"
         " col_share_before_bp bigint",
-    ).orderBy("lang", "source")
+    )
 
 
 QUERIES["ipf_raking"] = ipf_raking
@@ -1271,7 +1262,6 @@ def ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "f2_est",
             F.expr("(10000 * abs(f2_est - f2_exact)) div f2_exact").alias("err_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1389,7 +1379,6 @@ def pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "docid_checksum"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1498,7 +1487,6 @@ def priority_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div true_chars as bigint)"
             ).alias("err_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -1677,7 +1665,6 @@ def interpolation_search_census(keys: DataFrame) -> DataFrame:
                 "mean_err_milli"
             ),
         )
-        .orderBy("bucket")
     )
 
 
@@ -1776,7 +1763,7 @@ def voptimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="bucket bigint, lo_stripe bigint, hi_stripe bigint,"
         " n_rows bigint, opt_sse bigint, equalwidth_sse bigint",
-    ).orderBy("bucket")
+    )
 
 
 QUERIES["voptimal_histogram"] = voptimal_histogram

@@ -67,7 +67,6 @@ def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_avg("pixval").alias("mean_val"),
             F.max("pixval").alias("max_val"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -139,7 +138,6 @@ def nearest_site(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_assigned"),
             dec_avg("dist").alias("avg_dist_km"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -200,7 +198,6 @@ def grid_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_cells"),
             dec_avg("pixval").alias("mean_val"),
         )
-        .orderBy("block_lat", "block_lon")
     )
 
 
@@ -255,7 +252,6 @@ def point_in_region(spark: SparkSession, sf_dir: str) -> DataFrame:
             # tie here (5739.32375 -> .3238 Spark vs .3237 DuckDB)
             dec_avg_exact("c_acctbal").alias("avg_bal"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -318,7 +314,6 @@ def point_in_region_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_points"),
             dec_avg_exact("c_acctbal").alias("avg_bal"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -416,7 +411,6 @@ def region_overlap_disaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "allocated"
             ),
         )
-        .orderBy("piece")
     )
 
 
@@ -499,7 +493,7 @@ def grid_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("i") * 4 + F.col("a")).alias("row_idx"),
         (F.col("j") * 4 + F.col("b")).alias("col_idx"),
         "val",
-    ).orderBy("row_idx", "col_idx")
+    )
 
 
 QUERIES["grid_upsample"] = grid_upsample
@@ -564,7 +558,6 @@ def region_mask_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_regions"),
             dec_sum(F.col("pop") / F.lit(2880.0), 6).alias("pop_alloc"),
         )
-        .orderBy("latidx", "lonidx")
     )
 
 
@@ -672,7 +665,6 @@ def grid_upsample_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"(20000 * num + {_BI_D}) div (2 * {_BI_D})") / 10000.0
             ).alias("val"),
         )
-        .orderBy("oi", "oj")
     )
 
 
@@ -783,7 +775,6 @@ def landuse_reclass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_cells"),
             F.sum("suit").alias("suit_total"),
         )
-        .orderBy("n_name", "category")
     )
 
 
@@ -887,7 +878,6 @@ def protected_areas_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         burned.groupBy("protection")
         .agg(F.count(F.lit(1)).alias("n_cells"))
-        .orderBy("protection")
     )
 
 
@@ -964,7 +954,6 @@ def knn_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("c_custkey", F.col("rn").cast("int").alias("rn"), "n_name", "dist")
-        .orderBy("c_custkey", "rn")
     )
 
 
@@ -1105,7 +1094,6 @@ def point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("inside").cast("int")).alias("n_in_polygon"),
             F.sum(F.col("inbox").cast("int")).alias("n_in_bbox"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -1239,7 +1227,6 @@ def polygon_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("mean_val"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -1376,7 +1363,6 @@ def raster_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("lonidx").alias("lo_min"),
             F.max("lonidx").alias("lo_max"),
         )
-        .orderBy("tla", "tlo")
     )
 
 
@@ -1648,7 +1634,7 @@ def morans_i_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="region string, n_cells bigint, n_neighbor_pairs bigint,"
         " morans_i_milli bigint, pattern string",
-    ).orderBy("region")
+    )
 
 
 QUERIES["morans_i_autocorrelation"] = morans_i_autocorrelation
@@ -1790,7 +1776,6 @@ def ripley_k_function(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * ((2 * r + 1) * (2 * r + 1) - 1)) as bigint)"
             ).alias("k_ratio_milli"),
         )
-        .orderBy("radius")
     )
 
 
@@ -1933,7 +1918,6 @@ def local_morans_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(global_num div 1000000000 as bigint)"
             ).alias("global_numerator_g"),
         )
-        .orderBy("rank")
     )
 
 

@@ -39,7 +39,6 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(value, 0.75)"), 4).alias("p75"),
             dec_avg("value").alias("mean_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -84,7 +83,6 @@ def outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("m"), 4).alias("median_value"),
             F.round(F.min("mad"), 4).alias("mad"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -167,7 +165,6 @@ def drift_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_b",
             F.expr("cast(tv_num * 10000 div (2 * n_a * n_b) as int)").alias("tv_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -261,7 +258,6 @@ def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_b",
             F.expr("cast(d_num * 10000 div (n_a * n_b) as int)").alias("ks_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -351,7 +347,6 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("weighted_median_price"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -410,7 +405,6 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             dec_avg("v").alias("winsorized_mean"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -497,7 +491,6 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         terms.groupBy("event_type")
         .agg(F.sum("term").cast("double").alias("psi"))
-        .orderBy("event_type")
     )
 
 
@@ -639,7 +632,6 @@ def kaplan_meier_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             F.sum("lh").over(w_surv).cast("double").alias("log_surv"),
         )
-        .orderBy("o_orderpriority", "t_obs")
     )
 
 
@@ -736,7 +728,6 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"cast(abs(n * 10000 div t - ({expect_expr})) as int)"
             ).alias("abs_dev_bp"),
         )
-        .orderBy("digit")
     )
 
 
@@ -821,7 +812,6 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(sum(s_bp * s_bp) div 10000 as int)").alias("hhi"),
             F.max("s_bp").cast("int").alias("top_share_bp"),
         )
-        .orderBy("regionkey")
     )
 
 
@@ -914,7 +904,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "percentile_disc(0.5) WITHIN GROUP (ORDER BY slope)"
             ).alias("slope_cents_per_day"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1003,7 +992,6 @@ def quantile_rollup_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div true_p95_cents"
             ).alias("abs_err_bp"),
         )
-        .orderBy("day", "event_type")
     )
 
 
@@ -1119,7 +1107,6 @@ def wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("w1_cents"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1220,7 +1207,6 @@ def p99_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div ((10000 * n) div tot_n) as bigint)"
             ).alias("over_rep_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1324,7 +1310,6 @@ def heavy_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CASE WHEN f2 > f1 THEN 'grew' ELSE 'shrank' END"
             ).alias("direction"),
         )
-        .orderBy("rank")
     )
 
 
@@ -1470,7 +1455,6 @@ def runs_test_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END as bigint)"
             ),
         )
-        .orderBy("year")
     )
 
 
@@ -1635,7 +1619,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END as bigint)"
             ).alias("significant"),
         )
-        .orderBy("year")
     )
 
 
@@ -1883,7 +1866,7 @@ def james_stein_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * sigma2) div nullif(s_between, 0), 0), 10000)"
             " * (sx div n_g - stot div nn)) div 10000 as bigint)"
         ).alias("shrunk_mean_cents"),
-    ).orderBy("nation")
+    )
 
 
 QUERIES["james_stein_shrinkage"] = james_stein_shrinkage
@@ -2023,7 +2006,6 @@ def empirical_bayes_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + a_milli + b_milli) as bigint)"
             ).alias("posterior_rate_bp"),
         )
-        .orderBy("nation")
     )
 
 
@@ -2143,7 +2125,6 @@ def median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(min(gmean) as bigint)").alias("min_group_mean"),
             F.expr("cast(max(gmean) as bigint)").alias("max_group_mean"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2268,7 +2249,6 @@ def tail_dependence_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "independence_bp"
             ),
         )
-        .orderBy("segment")
     )
 
 
@@ -2383,7 +2363,6 @@ def survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rmst_millidays"),
             F.col("median_days").cast("bigint").alias("median_days"),
         )
-        .orderBy("priority")
     )
 
 
@@ -2818,7 +2797,6 @@ def german_tank_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div true_max as bigint)"
             ).alias("abs_error_bp"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2901,7 +2879,7 @@ def chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "cast(10000 - (10000 * f1) div n_tokens as bigint)"
         ).alias("good_turing_coverage_bp"),
-    ).orderBy("source")
+    )
 
 
 QUERIES["chao1_richness"] = chao1_richness
@@ -3011,7 +2989,6 @@ def running_records_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((1000 * records_hi * 1000) div h_n_milli as bigint)"
             ).alias("hi_vs_expected_milli"),
         )
-        .orderBy("year")
     )
 
 
@@ -3301,7 +3278,6 @@ def mahalanobis_outlier_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div 1000000 > 9210 THEN 1 ELSE 0 END as bigint)"
             ).alias("beyond_chi2_99"),
         )
-        .orderBy("rank")
     )
 
 
@@ -3416,7 +3392,7 @@ def mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div nullif(b + c, 0), -1) > 3841 THEN 1 ELSE 0 END"
             " as bigint)"
         ).alias("rates_changed"),
-    ).orderBy("segment")
+    )
 
 
 QUERIES["mcnemar_test"] = mcnemar_test
@@ -3522,7 +3498,7 @@ def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cast(CASE WHEN coalesce({q}, -1) > 5991 THEN 1 ELSE 0 END"
             " as bigint)"
         ).alias("rates_differ"),
-    ).orderBy("segment")
+    )
 
 
 QUERIES["cochran_q_test"] = cochran_q_test
@@ -3819,7 +3795,6 @@ def indirect_standardization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " -1) as bigint)"
             ).alias("smr_bp"),
         )
-        .orderBy("nation")
     )
 
 
@@ -3936,7 +3911,6 @@ def dissimilarity_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exposure_bp"
             ),
         )
-        .orderBy("nation")
     )
 
 

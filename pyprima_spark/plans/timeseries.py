@@ -78,7 +78,6 @@ def purchase_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("c_ts"),
             F.round("click_value", 2).alias("click_value"),
         )
-        .orderBy("purchase_id", "c_ts")
     )
 
 
@@ -146,7 +145,6 @@ def rolling_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).over(w).alias("n_1h"),
             F.round(F.sum(F.col("value").cast(DEC)).over(w), 2).cast("double").alias("sum_1h"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -185,7 +183,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             (F.unix_micros("ts") - F.unix_micros("ts_asof")) / 1_000_000.0, 3
         ).alias("lag_sec"),
-    ).orderBy("event_id")
+    )
 
 
 QUERIES["asof_join"] = asof_join
@@ -309,7 +307,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.col("t2")).alias("n_clicked"),
             F.count(F.col("t3")).alias("n_purchased"),
         )
-        .orderBy("signup_date")
     )
 
 
@@ -373,7 +370,6 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "offset_days",
         )
         .agg(F.countDistinct("user_id").alias("n_active"))
-        .orderBy("cohort_day", "offset_days")
     )
 
 
@@ -419,7 +415,6 @@ def incident_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
             dec_sum("value").alias("sum_value"),
         )
-        .orderBy("incident_id")
     )
 
 
@@ -474,7 +469,6 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("twa_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -523,7 +517,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "prob",
             F.round(F.col("n") / F.sum("n").over(Window.partitionBy("src")), 4),
         )
-        .orderBy("src", "dst")
     )
 
 
@@ -574,7 +567,6 @@ def sliding_7d_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.countDistinct("user_id").alias("actives_7d"))
         .select(F.date_format("day", "yyyy-MM-dd").alias("day"), "actives_7d")
-        .orderBy("day")
     )
 
 
@@ -641,7 +633,6 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             F.round(F.col("raw") / 100.0, 4).alias("ewma_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -714,7 +705,7 @@ def grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             "intercept"
         ),
         F.round((num * num) / (den * deny), 6).alias("r2"),
-    ).orderBy("event_type")
+    )
 
 
 QUERIES["grouped_regression"] = grouped_regression
@@ -788,7 +779,6 @@ def seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("(200 * sc + n) div (2 * n)") / 10000.0
             ).alias("mean_value"),
         )
-        .orderBy("event_type", "dow", "hod")
     )
 
 
@@ -842,7 +832,6 @@ def daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats.withColumn("z", (F.col("total") - mean) / F.sqrt(var))
         .filter(F.abs(F.col("z")) > 2.0)
         .select("event_type", "day", "total", F.round("z", 4).alias("z"))
-        .orderBy("event_type", "day")
     )
 
 
@@ -895,7 +884,7 @@ def percent_change_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
         "month",
         "total",
         F.round((F.col("total") - prev) / prev * 100.0, 6).alias("pct_change"),
-    ).orderBy("o_orderpriority", "month")
+    )
 
 
 QUERIES["percent_change_mom"] = percent_change_mom
@@ -953,7 +942,6 @@ def event_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 1e6
             ).alias("p95_s"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1030,7 +1018,6 @@ def rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("int")
             ).alias("test_rows"),
         )
-        .orderBy("fold")
     )
 
 
@@ -1102,7 +1089,7 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.unix_micros("ts") - F.unix_micros("ts_asof")) / 1_000_000.0, 3
         ).alias("lag_sec"),
         matched.alias("matched"),
-    ).orderBy("event_id")
+    )
 
 
 QUERIES["asof_tolerance_join"] = asof_tolerance_join
@@ -1170,7 +1157,7 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = paths.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.desc("n"), F.asc("path")))
     )
-    return ranked.filter(F.col("rank") <= _PATHS_TOPK).orderBy("rank")
+    return ranked.filter(F.col("rank") <= _PATHS_TOPK)
 
 
 QUERIES["session_paths"] = session_paths
@@ -1239,7 +1226,6 @@ def rate_limit_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "throttled_bp"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1346,7 +1332,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pk.s_abs").cast("double") / F.col("n_days") / F.col("n_days"),
             2,
         ).alias("peak_stat"),
-    ).orderBy("event_type")
+    )
 
 
 QUERIES["cusum_changepoint"] = cusum_changepoint
@@ -1434,7 +1420,6 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "covered_us",
             F.expr("cast(covered_us div 1000000 as bigint)").alias("covered_sec"),
         )
-        .orderBy("day")
     )
 
 
@@ -1508,7 +1493,6 @@ def late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_lateness_sec"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1594,7 +1578,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             F.round(F.sum("wk_rev").over(wcum), 2).cast("double").alias("cum_revenue"),
         )
-        .orderBy("cohort_week", "week_idx")
     )
 
 
@@ -1688,7 +1671,6 @@ def funnel_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.col("t2")).alias("n_clicked_24h"),
             F.count(F.col("t3")).alias("n_purchased_24h"),
         )
-        .orderBy("signup_date")
     )
 
 
@@ -1784,7 +1766,6 @@ def streaming_hourly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
         WHERE p IS NOT NULL AND n_prev > 0 AND n_cur > 0
         GROUP BY hour_start
-        ORDER BY hour_start
         """,
         hist=run_to_memory(hourly, "complete"),
     )
@@ -1872,7 +1853,6 @@ def debounce_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "debounced_bp"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1952,7 +1932,6 @@ def bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bounce_bp"
             ),
         )
-        .orderBy("day")
     )
 
 
@@ -2023,7 +2002,6 @@ def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         running.groupBy("day")
         .agg(F.max("open_now").alias("peak_open"))
-        .orderBy("day")
     )
 
 
@@ -2109,7 +2087,7 @@ def nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click_value"
         ),
         F.when(pick_b, db).otherwise(df_).alias("gap_us"),
-    ).orderBy("event_id")
+    )
 
 
 QUERIES["nearest_event_join"] = nearest_event_join
@@ -2223,7 +2201,6 @@ def moving_average_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(resid_x7_sum div (7 * n_days) as bigint)"
             ).alias("seasonal_cents"),
         )
-        .orderBy("event_type", "dow")
     )
 
 
@@ -2315,7 +2292,6 @@ def slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bad_bp",
             F.expr("(10000 * cum_bad) div cum_hours").alias("cum_burn_bp"),
         )
-        .orderBy("day")
     )
 
 
@@ -2404,7 +2380,6 @@ def arrival_disorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.expr("max_regress_us div 1000000").alias("max_regress_s"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2505,7 +2480,6 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("r2_signed_bp"),
         )
-        .orderBy("lag")
     )
 
 
@@ -2608,7 +2582,6 @@ def burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE 'poisson_like' END"
             ).alias("dispersion_class"),
         )
-        .orderBy("event_type", "hour")
     )
 
 
@@ -2734,7 +2707,6 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "word",
             F.col("n_occurrences").cast("bigint").alias("n_occurrences"),
         )
-        .orderBy("year", "rank")
     )
 
 
@@ -2870,7 +2842,7 @@ def haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         schema="rank bigint, level bigint, position bigint, coeff bigint,"
         " energy_share_bp bigint",
-    ).orderBy("rank")
+    )
 
 
 QUERIES["haar_wavelet_topk"] = haar_wavelet_topk
@@ -3033,7 +3005,6 @@ def rescaled_range_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " -1) as bigint)"
             ).alias("doubling_ratio_milli"),
         )
-        .orderBy("window_days")
     )
 
 
@@ -3159,7 +3130,6 @@ def allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * tau * tau) as bigint)"
             ).alias("avar_milli"),
         )
-        .orderBy("tau_days")
     )
 
 

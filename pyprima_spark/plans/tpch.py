@@ -58,7 +58,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_avg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -155,7 +154,6 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"))
     )
 
 
@@ -276,7 +274,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(returned, orders.o_orderkey == returned.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -363,7 +360,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -424,7 +420,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -476,7 +471,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy(F.col("n_name").alias("nation"), "o_year")
         .agg(dec_sum(amount).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
     )
 
 
@@ -569,7 +563,6 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
     )
 
 
@@ -608,7 +601,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         counts.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -696,7 +688,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.round("total", 2).cast("double").alias("total_revenue"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -742,7 +733,6 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(bad_supp, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -934,7 +924,6 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"), "left_semi")
         .join(movers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
-        .orderBy("s_name")
     )
 
 
@@ -1054,7 +1043,6 @@ def q22_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             dec_sum("c_acctbal").alias("totacctbal"),
         )
-        .orderBy("cntrycode")
     )
 
 
@@ -1096,7 +1084,6 @@ def q11_important_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         values.join(F.broadcast(total))
         .filter(F.col("val") > F.col("total") * 0.001)
         .select(F.col("l_partkey").alias("p_partkey"), F.round("val", 2).alias("value"))
-        .orderBy(F.desc("value"), "p_partkey")
     )
 
 

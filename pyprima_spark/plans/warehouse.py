@@ -53,7 +53,6 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_avg("value").alias("avg_value"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("k_bucket")
     )
 
 
@@ -89,7 +88,6 @@ def latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max_by("value", ordk), 2).alias("last_value"),
             F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
         )
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -134,7 +132,6 @@ def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("nation", "o_year")
     )
 
 
@@ -172,7 +169,6 @@ def cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("segment", "priority")
     )
 
 
@@ -217,7 +213,6 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             dec_sum("o_totalprice").alias("revenue"),
         )
-        .orderBy("hot_key")
     )
 
 
@@ -261,7 +256,6 @@ def scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.date_format("valid_to", fmt), F.lit("9999-12-31 00:00:00.000000")
             ).alias("valid_to"),
         )
-        .orderBy("user_id", "version")
     )
 
 
@@ -330,7 +324,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     a = _skew_stats(li, "l_suppkey", "lineitem.l_suppkey")
     b = _skew_stats(orders, "o_custkey", "orders.o_custkey")
-    return a.unionByName(b).orderBy("key")
+    return a.unionByName(b)
 
 
 QUERIES["key_skew_profile"] = key_skew_profile
@@ -392,7 +386,6 @@ def churn_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name", "op")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("n_name", "op")
     )
 
 
@@ -468,7 +461,6 @@ def morton_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("lonidx").alias("lon_lo"),
             F.max("lonidx").alias("lon_hi"),
         )
-        .orderBy("tile")
     )
 
 
@@ -553,7 +545,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS (column_name, n_nonnull, n_distinct, min_num, max_num,"
             "     min_str, max_str)"
         )
-    ).orderBy("column_name")
+    )
 
 
 QUERIES["table_profile"] = table_profile
@@ -634,7 +626,6 @@ def range_partition_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_totalprice").alias("lo"),
             F.max("o_totalprice").alias("hi"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -730,7 +721,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("price_delta"),
         )
-        .orderBy("change_type")
     )
 
 
@@ -814,7 +804,6 @@ def partition_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "prunable_bp"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -886,7 +875,6 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "est_over_actual_bp"
             ),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -957,14 +945,13 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(name).alias("relation"), "n_rows", "n_orphans")
         )
 
-    out = (
+    return (
         audit(orders, "o_custkey", cust, "c_custkey", "orders->customer")
         .unionByName(audit(li, "l_orderkey", orders, "o_orderkey",
                            "lineitem->orders"))
         .unionByName(audit(li, "l_partkey", part, "p_partkey",
                            "lineitem->part"))
     )
-    return out.orderBy("relation")
 
 
 QUERIES["fk_orphan_audit"] = fk_orphan_audit
@@ -1028,7 +1015,7 @@ def scd2_temporal_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", fmt).alias("ts"),
         F.col("version_asof").alias("version"),
         F.col("state_asof").alias("state"),
-    ).orderBy("event_id")
+    )
 
 
 QUERIES["scd2_temporal_lookup"] = scd2_temporal_lookup
@@ -1095,7 +1082,6 @@ def time_rollup_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                cast(round(sum(v), 2) as double) AS total
         FROM _ev_grains
         GROUP BY GROUPING SETS ((day), (week), (month))
-        ORDER BY grain, period
         """
     )
 
@@ -1160,7 +1146,6 @@ def key_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         gini_of(ev, "user_id", "events.user_id")
         .unionByName(gini_of(li, "l_partkey", "lineitem.l_partkey"))
-        .orderBy("key_name")
     )
 
 
@@ -1221,7 +1206,6 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_k"),
             F.sum("k").alias("sum_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1276,7 +1260,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = rollup(ev.filter(F.col("ts") < cut))
     delta = rollup(ev.filter(F.col("ts") >= cut))
-    merged = (
+    return (
         base.select("day", "event_type", F.col("n").alias("n_b"),
                     F.col("total").alias("t_b"))
         .join(
@@ -1298,7 +1282,6 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total"),
         )
     )
-    return merged.orderBy("day", "event_type")
 
 
 QUERIES["incremental_agg_maintenance"] = incremental_agg_maintenance
@@ -1351,7 +1334,6 @@ def salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         phase2.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 10)
         .select("rank", "user_id", "n_events", "total_value")
-        .orderBy("rank")
     )
 
 
@@ -1416,7 +1398,6 @@ def contract_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
         )
         .select("rule", "n_violations", "n_rows")
-        .orderBy("rule")
     )
 
 
@@ -1508,7 +1489,6 @@ def nested_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_with_returns"
             ),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1589,7 +1569,6 @@ def price_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.round(F.sum("drift"), 2).cast("double").alias("total_drift"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1651,7 +1630,6 @@ def pk_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                            "lineitem.(o,line)"))
         .unionByName(audit(cust, ["c_custkey"], "customer.c_custkey"))
         .unionByName(audit(docs, ["doc_id"], "documents.doc_id"))
-        .orderBy("relation")
     )
 
 
@@ -1740,7 +1718,6 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rows_per_file"),
             "oversized_docs",
         )
-        .orderBy("source", "lang")
     )
 
 
@@ -1803,7 +1780,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.min("n").alias("min_group_size"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1894,7 +1870,6 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.sum(F.expr("CASE WHEN big THEN 1 ELSE 0 END")).alias("n_big"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1960,7 +1935,6 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.min("l_div").alias("min_diversity"),
         )
-        .orderBy("lang")
     )
 
 
@@ -2065,7 +2039,6 @@ def zorder_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("max(o_custkey) - min(o_custkey)").alias("cust_span"),
             F.expr("max(day) - min(day)").alias("day_span"),
         )
-        .orderBy("file_id")
     )
 
 
@@ -2144,7 +2117,6 @@ def randomized_response_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("reported_cnt") * 8 - F.col("n") - F.col("true_cnt") * 6
             ).alias("err_x6"),
         )
-        .orderBy("source")
     )
 
 
@@ -2244,7 +2216,6 @@ def longest_prefix_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("dest")
     )
 
 
@@ -2353,7 +2324,6 @@ def replica_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("divergent"),
             F.coalesce("n_diff_docs", F.lit(0)).alias("n_diff_docs"),
         )
-        .orderBy("source")
     )
 
 
@@ -2444,7 +2414,7 @@ def erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    rows = (
+    return (
         manifest("orders", orders, hit_orders)
         .unionByName(
             manifest(
@@ -2467,7 +2437,6 @@ def erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return rows.orderBy("table_name")
 
 
 QUERIES["erasure_cascade"] = erasure_cascade
@@ -2559,7 +2528,6 @@ def rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("n_moved"),
         )
-        .orderBy("shard_new")
     )
 
 
@@ -2638,7 +2606,7 @@ def fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         _FWF_SPECS,
         {"nation": "string", "n_orders": "bigint", "sum_cents": "bigint"},
-    ).orderBy("nation")
+    )
 
 
 QUERIES["fixed_width_roundtrip"] = fixed_width_roundtrip
@@ -2730,7 +2698,6 @@ def luhn_check_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "expected_invalid",
             F.expr("(10000 * n_invalid) div n_ids").alias("invalid_bp"),
         )
-        .orderBy("nation")
     )
 
 
@@ -2835,7 +2802,6 @@ def encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ELSE 'PLAIN' END"
             ).alias("recommend"),
         )
-        .orderBy("col_name")
     )
 
 
@@ -2944,7 +2910,6 @@ def majority_vote_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_double_corrupt"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -3057,7 +3022,6 @@ def hybrid_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .withColumn("hot_share_bp", F.expr("(10000 * n_hot_orders) div n_orders"))
-        .orderBy("segment")
     )
 
 
@@ -3152,7 +3116,7 @@ def fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy("fd")
+    return out
 
 
 QUERIES["fd_discovery"] = fd_discovery
@@ -3490,7 +3454,6 @@ def consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ring_gained",
             "mod_gained",
         )
-        .orderBy("node")
     )
 
 
@@ -3681,7 +3644,6 @@ def merkle_tree_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l1_compared").cast("bigint").alias("l1_compared"),
             F.col("l1_diff").cast("bigint").alias("l1_diff"),
         )
-        .orderBy("leaf")
     )
 
 
@@ -3854,7 +3816,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" <= {_TCL_T_MILLI} THEN 1 ELSE 0 END as bigint)"
             ).alias("t_close_ok"),
         )
-        .orderBy("segment", "nation")
     )
 
 
@@ -4003,7 +3964,6 @@ def cell_suppression_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE 0 END)) div total as bigint)"
             ).alias("loss_bp"),
         )
-        .orderBy("segment", "nation")
     )
 
 

@@ -180,5 +180,4 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = run_to_memory(sliding_event_counts(stream_events(spark, sf_dir)), "complete")
-    return out.orderBy("win_start", "event_type")
+    return run_to_memory(sliding_event_counts(stream_events(spark, sf_dir)), "complete")

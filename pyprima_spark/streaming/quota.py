@@ -97,5 +97,4 @@ def run_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "throttled_bp"
             ),
         )
-        .orderBy("event_type")
     )

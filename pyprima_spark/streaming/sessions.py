@@ -44,7 +44,6 @@ def sessionize(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
             "n_events",
             "total_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -116,7 +115,7 @@ def run_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return run_to_memory(out, "update").orderBy("user_id", "session_start")
+    return run_to_memory(out, "update")
 
 
 def _sessionize_group_timeout(
@@ -222,4 +221,4 @@ def run_sessions_stream_timeout(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return run_to_memory(out, "update").orderBy("user_id", "session_start")
+    return run_to_memory(out, "update")

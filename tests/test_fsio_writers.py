@@ -148,14 +148,14 @@ def test_scratch_dir_honours_conf(spark, tmp_path):
 def test_roundtrip_operators_respect_scratch_conf(spark, tmp_path, sf_dir):
     """The two previously-weak keys must place their file hop under the
     configured scratch URI and still match their semantics."""
-    from pyprima_spark.plans import model_export as round7, spatial as round6
+    from pyprima_spark.plans import model_export, spatial
 
     base = "file://" + str(tmp_path / "opscratch")
     fsio.makedirs(base)
     spark.conf.set("spark.pyprima.scratchDir", base)
     try:
-        n_raster = round6.QUERIES["raster_export_manifest"](spark, sf_dir).count()
-        n_book = round7.QUERIES["model_workbook_roundtrip"](spark, sf_dir).count()
+        n_raster = spatial.QUERIES["raster_export_manifest"](spark, sf_dir).count()
+        n_book = model_export.QUERIES["model_workbook_roundtrip"](spark, sf_dir).count()
     finally:
         spark.conf.unset("spark.pyprima.scratchDir")
     assert n_raster > 0 and n_book == 2

@@ -845,9 +845,10 @@ for key in keys:
 print(json.dumps(out))
 """
 
-# Catalog keys that cut lineage in plan code (plans/core, round4,
-# round7) rather than inside an operator, plus the LSH dedup key, whose
-# boundary sits in operators/dedup.
+# Catalog keys that cut lineage in plan code (plans/similarity,
+# curation, graph; curation_flags in plans/core) rather than inside an
+# operator, plus the LSH dedup key, whose boundary sits in
+# operators/dedup.
 _REROUTED_KEYS = (
     "ngram_jaccard",
     "cross_source_overlap",

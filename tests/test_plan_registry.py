@@ -151,3 +151,26 @@ def test_core_registers_no_key():
 def test_plan_modules_are_named_by_domain():
     stale = [f for f in os.listdir(PLANS_DIR) if f.startswith("round")]
     assert not stale, stale
+
+
+def test_no_plan_returns_a_sorted_frame():
+    """Plans return unordered relations: every checker sorts rows, so a
+    terminal global sort costs a range shuffle that no reader uses. A
+    caller that wants an order sorts; top-k keeps ``orderBy().limit()``."""
+    offenders = []
+    for sub in ("plans", "streaming"):
+        pkg = os.path.join(REPO, "pyprima_spark", sub)
+        for fname in sorted(os.listdir(pkg)):
+            if not fname.endswith(".py"):
+                continue
+            with open(os.path.join(pkg, fname)) as fh:
+                tree = ast.parse(fh.read())
+            offenders += [
+                f"{sub}/{fname}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Return)
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr in ("orderBy", "sort")
+            ]
+    assert not offenders, offenders

@@ -1,7 +1,7 @@
-"""Property tests for round-7 expression-level primitives.
+"""Property tests for the warehouse plans' expression-level primitives.
 
 These run WITHOUT a Spark session: each primitive is a dialect-pair of
-expression strings (round7.py), so the DuckDB half can be driven by
+expression strings (plans/warehouse.py), so the DuckDB half can be driven by
 hypothesis directly, and engine parity is already guaranteed by the
 strict oracle gate — what's tested here is that the MATH itself has the
 properties the operators claim (check-digit soundness, rendezvous

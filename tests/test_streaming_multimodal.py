@@ -121,6 +121,24 @@ def test_pipeline_end_to_end(spark, sf_dir, pipeline_run):
     assert csv_rows == len(want) > 0
 
 
+def test_pipeline_csv_rows_are_ordered_by_t(pipeline_run):
+    """Plans return unordered relations; the demand-matrix CSV is the
+    one output whose row order is part of the contract. Read its part
+    files in name order: ``t`` never decreases."""
+    import csv
+    import glob
+
+    _, paths = pipeline_run
+    ts = []
+    for part in sorted(glob.glob(os.path.join(paths["demand_matrix_csv"], "part-*"))):
+        with open(part, newline="") as fh:
+            rows = list(csv.reader(fh, delimiter=";"))
+        if rows:
+            col = rows[0].index("t")
+            ts += [int(row[col]) for row in rows[1:]]
+    assert ts and ts == sorted(ts)
+
+
 def test_pipeline_manifest_lists_every_output(spark, pipeline_run):
     """_manifest.json is committed with the outputs; its footer row
     counts equal the rows read back."""
