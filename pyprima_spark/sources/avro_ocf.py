@@ -14,17 +14,11 @@ pipelines actually move (row files out of Kafka/connect dumps).
 
 Spark-shaped exactly like the other single-file formats:
 
-- READ is distributed per FILE via the binaryFile source; each
-  payload parses inside mapInPandas on the executor holding it
-  (bytes never visit the driver). Block-level splitting WITHIN one
-  file is not attempted — crawl-style layouts shard files anyway
-  (sources/archives.py contract), and a 100 TB Avro drop arrives as
-  many files.
-- WRITE follows the coalesce(1)+mapInPandas single-file contract
-  (shapefile/xlsx/fixed-width precedent) and routes bytes through
-  :mod:`pyprima_spark.sources.fsio`, so targets may be file:///
-  hdfs:///s3:// URIs. The sync marker derives from the schema md5,
-  keeping byte-identical runs byte-identical (repo determinism rule).
+- READ and WRITE go through :mod:`pyprima_spark.sources.files`: files
+  are read per FILE (block-level splitting WITHIN one file is not
+  attempted — a 100 TB Avro drop arrives as many files) and written as
+  one file from one task, to a path or URI. The sync marker derives
+  from the schema md5, keeping byte-identical runs byte-identical.
 
 The reader VERIFIES: magic, codec membership, per-block sync markers,
 and trailing-byte exhaustion — truncated or spliced files raise
@@ -301,84 +295,38 @@ def write_avro_file(
     codec: str = "deflate",
     order_by: "list[str] | None" = None,
 ) -> "DataFrame":
-    """Write ``df`` as ONE Avro OCF from a single executor task
-    (coalesce(1)+mapInPandas, the repo's single-file sink contract);
-    bytes route through fsio, so ``path`` may be a URI. Returns a
-    1-row manifest (path, n_rows, n_bytes)."""
+    """Write ``df`` as ONE Avro OCF through
+    :func:`files.write_single_file`, rows sorted by ``order_by``
+    (default: all columns); ``path`` may be a URI. Returns a 1-row
+    manifest (path, n_rows, n_bytes).
+
+    Float columns: pandas cannot tell a Spark NULL from NaN (both
+    arrive as NaN through Arrow), so nullable float/double fields write
+    Avro null for NaN, and non-nullable ones keep NaN as a real IEEE
+    NaN."""
     import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegralType
+
+    from pyprima_spark.sources import files
 
     schema = _avro_schema_for(df)
     cols = list(df.columns)
-    keys = order_by or cols
-    int_cols = [
+    keep_nan = {
         f.name for f in df.schema.fields
-        if isinstance(f.dataType, IntegralType)
-    ]
-    float_cols = [
-        f.name for f in df.schema.fields
-        if f.dataType.simpleString() in ("float", "double")
-    ]
-    # Nullable integral columns would arrive as float64 through Arrow's
-    # null promotion, silently rounding values above 2^53 (review r7
-    # finding: a 64-bit id corrupted with no error). Ship them across
-    # the Arrow hop as STRINGS — exact at any magnitude — and parse
-    # back to int inside the task.
-    shipped = df.select(
-        *[
-            F.col(c).cast("string").alias(c) if c in int_cols else F.col(c)
-            for c in cols
-        ]
-    )
+        if f.dataType.simpleString() in ("float", "double") and not f.nullable
+    }
 
-    def write_group(it):
-        from pyprima_spark.sources import fsio
-
-        frames = [pdf for pdf in it]
-        pdf = (
-            pd.concat(frames).reset_index(drop=True)
-            if frames
-            else pd.DataFrame(columns=cols)
-        )
-        pdf = pdf.astype(object)
-        # parse the string-shipped ints back BEFORE sorting, so the
-        # deterministic order is numeric, not lexical. Explicit
-        # object-dtype construction: Series.map would re-infer an
-        # int+None result as float64 and round >2^53 values AGAIN.
-        for c in int_cols:
-            pdf[c] = pd.Series(
-                [
-                    None if v is None or v is pd.NA else int(v)
-                    for v in pdf[c]
-                ],
-                dtype=object,
-                index=pdf.index,
-            )
-        if len(pdf):
-            pdf = pdf.sort_values(keys).reset_index(drop=True)
-        # Float columns: pandas cannot distinguish Spark NULL from NaN
-        # (both arrive as NaN through Arrow), so this sink CONFLATES
-        # them — nullable float/double fields write Avro null for NaN;
-        # non-nullable ones keep NaN as a real IEEE NaN rather than
-        # crashing on float(None) (review r7 finding).
-        nullable = {
-            f["name"] for f in schema["fields"] if isinstance(f["type"], list)
-        }
+    def encode(pdf):
         for c in cols:
-            if c in float_cols and c not in nullable:
-                continue  # keep NaN as NaN for non-nullable floats
-            pdf[c] = pdf[c].where(pd.notna(pdf[c]), None)
-        rows = [dict(zip(cols, vals)) for vals in zip(*[pdf[c] for c in cols])] \
-            if len(pdf) else []
+            if c not in keep_nan:
+                pdf[c] = pdf[c].where(pd.notna(pdf[c]), None)
+        rows = [dict(zip(cols, vals)) for vals in zip(*[pdf[c] for c in cols])]
         payload = encode_avro_ocf(rows, schema, codec=codec)
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame(
-            {"path": [path], "n_rows": [len(rows)], "n_bytes": [len(payload)]}
-        )
+        return {path: payload}, [
+            {"path": path, "n_rows": len(rows), "n_bytes": len(payload)}
+        ]
 
-    return shipped.coalesce(1).mapInPandas(
-        write_group, "path string, n_rows long, n_bytes long"
+    return files.write_single_file(
+        df, encode, "path string, n_rows long, n_bytes long", order_by or cols
     )
 
 
@@ -388,38 +336,14 @@ def read_avro(
     schema: str,
     ext_filter: str | None = "*.avro",
 ) -> "DataFrame":
-    """Read Avro OCF files distributed per FILE: binaryFile lists and
-    schedules them, each payload parses inside mapInPandas on an
-    executor, and fields map to the requested Spark ``schema`` DDL by
-    NAME (missing fields → null).
+    """Read Avro OCF files through :func:`files.read_files`: fields map
+    to the requested Spark ``schema`` DDL by NAME (missing fields →
+    null). Pass ``ext_filter=None`` to read every file the glob
+    matches; non-OCF payloads then fail :func:`decode_avro_ocf`'s magic
+    check loudly rather than being dropped."""
+    from pyprima_spark.sources import files
 
-    ``ext_filter`` (default ``"*.avro"``) is applied as a binaryFile
-    pathGlobFilter ON TOP of ``path_glob``; pass ``None`` to read
-    every file the glob matches regardless of extension — non-OCF
-    payloads then fail loudly in :func:`decode_avro_ocf`'s magic
-    check rather than being silently dropped (ADVICE r7)."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    fields = [f.name for f in StructType.fromDDL(schema).fields]
-    reader = spark.read.format("binaryFile")
-    if ext_filter is not None:
-        reader = reader.option("pathGlobFilter", ext_filter)
-    raw = reader.load(path_glob)
-
-    def parse(it):
-        for pdf in it:
-            out: dict[str, list] = {f: [] for f in fields}
-            for payload in pdf["content"]:
-                _, rows = decode_avro_ocf(bytes(payload))
-                for row in rows:
-                    for f in fields:
-                        out[f].append(row.get(f))
-            # object dtype everywhere: pandas would re-infer int+None
-            # columns as float64 and round >2^53 ids before Arrow casts
-            # back to the requested bigint (review r7 finding)
-            yield pd.DataFrame(
-                {f: pd.Series(out[f], dtype=object) for f in fields}
-            )
-
-    return raw.select("content").mapInPandas(parse, schema)
+    return files.read_files(
+        spark, path_glob, ext_filter, schema,
+        lambda payload: decode_avro_ocf(payload)[1],
+    )

@@ -1,200 +1,22 @@
-"""Spark 4 Python DataSource API: the GIS formats as REAL formats.
+"""Spark 4 Python DataSource API: a deterministic streaming source.
 
-`read_point_shapefile` / `read_raster_tiles` (shapefile.py,
-geotiff.py) work, but they are library functions. Spark 4's Python
-DataSource API (pyspark.sql.datasource, SPARK-44076) lets the same
-parsers register as first-class formats — after
-``register_gis_sources(spark)``:
+``register_ticker_stream(spark)`` registers ``ticker_stream``, a Python
+streaming source (``SimpleDataSourceStreamReader``, SPARK-44076) that
+the streaming tests drive end to end:
 
-    spark.read.format("shapefile").load("/path/plants")      # base path
-    spark.read.format("geotiff").load("/path/tiles")          # tile dir
+    spark.readStream.format("ticker_stream").option("rowsPerBatch", "7").load()
 
-which is exactly how a user of the reference (geopandas.read_file /
-gdal.Open) expects formats to appear in a SQL engine, and it composes
-with everything a format gives you for free (schema inspection,
-``CREATE TABLE ... USING shapefile`` via the session catalog, stream
-reuse of the reader partitioning).
-
-Scale shape: `GeoTiffDataSource.reader` emits ONE InputPartition per
-tile file, so the parse parallelizes across executors exactly like the
-mapInPandas path; the shapefile source is single-partition by format
-nature (one file). Both decode with the verifying stdlib parsers —
-no GDAL anywhere.
-
-FILESYSTEM CONTRACT (ADVICE r5): these readers open paths with builtin
-``open()``/``glob`` INSIDE executor partitions — load() paths must be
-readable at the same location from every executor: local disk in
-local[k] (the tested env) or a shared mount (NFS / fuse-mounted object
-store) on a multi-node cluster. Raw HDFS/S3 URLs are not supported;
-the binaryFile-based `read_raster_tiles` covers remote filesystems for
-GeoTIFF ingest (Spark's own source handles the IO there).
+The byte formats have no DataSource here: each is read by one function
+(``read_avro``, ``read_tfrecord``, ``read_warc``, ``read_xlsx_sheet``,
+``read_raster_tiles``, ``read_point_shapefile``), and the per-file ones
+share :func:`pyprima_spark.sources.files.read_files`, whose
+``binaryFile`` scan reaches any filesystem Spark can list.
 """
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-
-class ShapefileDataSource(DataSource):
-    """``spark.read.format("shapefile").load(base)`` — point subset;
-    ``base`` is the path WITHOUT extension (ESRI sidecar convention)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "shapefile"
-
-    def schema(self) -> StructType:
-        return StructType(
-            [
-                StructField("x", DoubleType()),
-                StructField("y", DoubleType()),
-                StructField("name", StringType()),
-                StructField("value", DoubleType()),
-            ]
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _ShapefileReader(self.options["path"])
-
-
-class _ShapefileReader(DataSourceReader):
-    def __init__(self, base: str) -> None:
-        self.base = base
-
-    def read(self, partition):  # noqa: ANN001 - API signature
-        from pyprima_spark.sources.shapefile import decode_point_shapefile
-
-        with open(self.base + ".shp", "rb") as fh:
-            shp = fh.read()
-        with open(self.base + ".dbf", "rb") as fh:
-            dbf = fh.read()
-        pts, names, vals = decode_point_shapefile(shp, dbf)
-        for (x, y), n, v in zip(pts, names, vals):
-            yield (x, y, n, v)
-
-
-class GeoTiffDataSource(DataSource):
-    """``spark.read.format("geotiff").load(tiles_dir)`` — every *.tif
-    in the directory becomes one input partition (executor-parallel
-    parse), rows are the nonzero cells on the global WGS84 grid."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "geotiff"
-
-    def schema(self) -> StructType:
-        return StructType(
-            [
-                StructField("latidx", LongType()),
-                StructField("lonidx", LongType()),
-                StructField("value", DoubleType()),
-            ]
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _GeoTiffReader(self.options["path"])
-
-
-class _TilePartition(InputPartition):
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-
-class _GeoTiffReader(DataSourceReader):
-    def __init__(self, tiles_dir: str) -> None:
-        self.tiles_dir = tiles_dir
-
-    def partitions(self):
-        import glob as _glob
-        import os
-
-        return [
-            _TilePartition(p)
-            for p in sorted(
-                _glob.glob(os.path.join(self.tiles_dir, "*.tif"))
-            )
-        ]
-
-    def read(self, partition: "_TilePartition"):
-        from pyprima_spark.sources.geotiff import decode_geotiff_gray
-
-        with open(partition.path, "rb") as fh:
-            payload = fh.read()
-        arr, west, north, ps = decode_geotiff_gray(payload)
-        la0 = int(round((90.0 - north) / ps))
-        lo0 = int(round((west + 180.0) / ps))
-        ys, xs = arr.nonzero()
-        for y, x in zip(ys.tolist(), xs.tolist()):
-            yield (la0 + y, lo0 + x, float(arr[y, x]))
-
-
-class XlsxDataSource(DataSource):
-    """``spark.read.format("xlsx").schema(ddl).option("sheet", name)
-    .load(dir_or_file)`` — the urbs/evrys model-workbook format as a
-    first-class source. Schema is USER-SUPPLIED (a workbook has no
-    fixed layout); header cells map to schema fields by NAME, so sheet
-    column order does not matter. Every matching workbook is one input
-    partition (executor-parallel parse via the stdlib ZIP/XML
-    decoder)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "xlsx"
-
-    def schema(self) -> StructType:
-        raise NotImplementedError(
-            "xlsx requires an explicit .schema(...) — a workbook has no "
-            "self-describing types"
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _XlsxReader(
-            self.options["path"], self.options.get("sheet", "Sheet1"), schema
-        )
-
-
-class _XlsxReader(DataSourceReader):
-    def __init__(self, path: str, sheet: str, schema: StructType) -> None:
-        self.path = path
-        self.sheet = sheet
-        self.fields = [f.name for f in schema.fields]
-
-    def partitions(self):
-        import glob as _glob
-        import os
-
-        if os.path.isdir(self.path):
-            paths = sorted(_glob.glob(os.path.join(self.path, "*.xlsx")))
-        else:
-            paths = [self.path]
-        return [_TilePartition(p) for p in paths]
-
-    def read(self, partition: "_TilePartition"):
-        from pyprima_spark.sources.xlsx import decode_xlsx
-
-        with open(partition.path, "rb") as fh:
-            book = decode_xlsx(fh.read())
-        if self.sheet not in book:
-            return
-        header, rows = book[self.sheet]
-        idx = {name: i for i, name in enumerate(header)}
-        for row in rows:
-            yield tuple(
-                row[idx[f]] if f in idx and idx[f] < len(row) else None
-                for f in self.fields
-            )
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 class TickerStreamDataSource(DataSource):
@@ -205,8 +27,7 @@ class TickerStreamDataSource(DataSource):
     pure function of seq, and the offset is the replayable cursor —
     so exactly-once delivery is testable end to end (contiguous seqs,
     no gaps, no dups, replay between offsets yields identical rows).
-    The streaming counterpart of the batch formats above; no file, no
-    socket, no external service."""
+    No file, no socket, no external service."""
 
     @classmethod
     def name(cls) -> str:
@@ -247,78 +68,6 @@ class _TickerStreamReader(SimpleDataSourceStreamReader):
         pass
 
 
-class TfrecordDataSource(DataSource):
-    """``spark.read.format("tfrecord").schema(ddl).load(dir_or_file)``
-    — the training-data interchange format as a first-class source
-    over the stdlib codec (sources/tfrecord.py). Schema is
-    USER-SUPPLIED (tf.train.Example features carry no declared types);
-    features map to schema fields by NAME, scalar fields take the
-    feature's first value, array fields the whole list. One input
-    partition per ``*.tfrecord`` file — shard-parallel parse, both
-    record CRCs verified per record."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tfrecord"
-
-    def schema(self) -> StructType:
-        raise NotImplementedError(
-            "tfrecord requires an explicit .schema(...) — Example "
-            "features carry no declared types"
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _TfrecordReader(self.options["path"], schema)
-
-
-class _TfrecordReader(DataSourceReader):
-    def __init__(self, path: str, schema: StructType) -> None:
-        # the sharded sink hands out file:// URIs in its manifest;
-        # accept them here so manifest paths round-trip through the
-        # registered format (other schemes follow the module-header
-        # FILESYSTEM CONTRACT: use read_tfrecord's binaryFile leg)
-        if path.startswith("file://"):
-            path = path.removeprefix("file://")
-        elif "://" in path:
-            raise ValueError(
-                "the tfrecord format reads local/shared-mount paths; "
-                f"use read_tfrecord(...) for {path.split('://')[0]}:// "
-                "targets (binaryFile handles remote filesystems there)"
-            )
-        self.path = path
-        self.fields = [(f.name, f.dataType) for f in schema.fields]
-
-    def partitions(self):
-        import glob as _glob
-        import os
-
-        if os.path.isdir(self.path):
-            paths = sorted(_glob.glob(os.path.join(self.path, "*.tfrecord")))
-        else:
-            paths = [self.path]
-        return [_TilePartition(p) for p in paths]
-
-    def read(self, partition: "_TilePartition"):
-        from pyprima_spark.sources.tfrecord import (
-            _convert_feature,
-            decode_example,
-            decode_tfrecord_file,
-        )
-
-        with open(partition.path, "rb") as fh:
-            records = decode_tfrecord_file(fh.read())
-        for rec in records:
-            feats = decode_example(rec)
-            yield tuple(
-                _convert_feature(name, dt, feats.get(name))
-                for name, dt in self.fields
-            )
-
-
-def register_gis_sources(spark) -> None:
-    """Register the custom formats on the session (idempotent)."""
-    spark.dataSource.register(ShapefileDataSource)
-    spark.dataSource.register(GeoTiffDataSource)
-    spark.dataSource.register(XlsxDataSource)
+def register_ticker_stream(spark) -> None:
+    """Register the ``ticker_stream`` format on the session (idempotent)."""
     spark.dataSource.register(TickerStreamDataSource)
-    spark.dataSource.register(TfrecordDataSource)

@@ -3,10 +3,10 @@ interchange format (pandas' ``read_fwf`` leg; the reference ingests
 agency tabulations through pandas readers, correction_functions.py:36
 lineage). No third-party dependency on either path:
 
-- WRITE follows the repo's single-file-export contract (the shapefile /
-  xlsx precedent): ``coalesce(1)`` + one mapInPandas task renders the
-  ordered lines and returns a manifest row. One file is the format's
-  contract — fixed-width consumers expect a single record stream.
+- WRITE goes through :func:`pyprima_spark.sources.files.write_single_file`:
+  one task renders the ordered lines and returns a manifest row. One
+  file is the format's contract — fixed-width consumers expect a single
+  record stream.
 - READ is fully distributed and JVM-side: ``spark.read.text`` splits
   the file by line ranges, and every column is carved out with built-in
   ``substring`` + ``trim`` + cast — no Python touches the hot path, so
@@ -45,44 +45,27 @@ def write_fixed_width(
     specs: list[Spec],
     order_by: list[str] | None = None,
 ) -> DataFrame:
-    """Render ``df`` as one fixed-width text file at ``path``; returns
-    a 1-row manifest (n_rows, n_bytes). Rows are sorted by ``order_by``
-    (default: the spec columns, left to right) inside the single write
-    task so the file is deterministic."""
+    """Render ``df`` as one fixed-width text file at ``path`` through
+    :func:`files.write_single_file`; returns a 1-row manifest (n_rows,
+    n_bytes). Rows are sorted by ``order_by`` (default: the spec
+    columns, left to right) so the file is deterministic."""
     import pandas as pd
-    from pyspark.sql.types import IntegralType
+
+    from pyprima_spark.sources import files
 
     cols = [name for name, _, _ in specs]
-    keys = order_by or cols
-    int_cols = [
-        f.name
-        for f in df.select(cols).schema.fields
-        if isinstance(f.dataType, IntegralType)
-    ]
 
-    def write_group(it):
-        frames = [pdf for pdf in it]
-        pdf = pd.concat(frames) if frames else pd.DataFrame(columns=cols)
-        if len(pdf):
-            pdf = pdf.sort_values(keys)
-        # Nullable integral columns arrive as float64 (Arrow null
-        # promotion) and would render as '42.0' — restore exact ints,
-        # then normalize every NA to None before rendering.
-        for c in int_cols:
-            pdf[c] = pdf[c].astype("Int64")
-        pdf = pdf.astype(object).where(pd.notna(pdf), None)
+    def encode(pdf):
+        pdf = pdf.where(pd.notna(pdf), None)
         lines = [
             _render_line(list(values), specs)
             for values in zip(*[pdf[c].tolist() for c in cols])
         ]
-        from pyprima_spark.sources import fsio
-
         payload = ("\n".join(lines) + ("\n" if lines else "")).encode("utf-8")
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame({"n_rows": [len(lines)], "n_bytes": [len(payload)]})
+        return {path: payload}, [{"n_rows": len(lines), "n_bytes": len(payload)}]
 
-    return df.select(cols).coalesce(1).mapInPandas(
-        write_group, schema="n_rows bigint, n_bytes bigint"
+    return files.write_single_file(
+        df.select(cols), encode, "n_rows bigint, n_bytes bigint", order_by or cols
     )
 
 

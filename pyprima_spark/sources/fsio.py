@@ -1,14 +1,16 @@
-"""Executor-safe filesystem routing for the single-file format sinks.
+"""Executor-safe filesystem routing for the byte-format files.
 
-VERDICT r6 item 2 / ADVICE r5 medium: the GIS/workbook writers
-(GeoTIFF tiles, shapefile, xlsx, ZIP) previously wrote with builtin
-``open()`` from whichever executor held the rows — correct in
-local[k] (driver and executors share a disk) but broken on a real
-multi-node cluster, where an executor-local ``/tmp`` path is invisible
-to every other node and to the manifest's consumers.
+The byte formats (GeoTIFF tiles, shapefile, xlsx, Avro, TFRecord, WARC,
+fixed-width) write from whichever executor holds the rows. A builtin
+``open()`` there is correct in local[k] (driver and executors share a
+disk) but broken on a real multi-node cluster, where an executor-local
+``/tmp`` path is invisible to every other node and to the manifest's
+consumers. Their one writer, :mod:`pyprima_spark.sources.files`, hands
+every encoded payload to :func:`write_bytes` (the only caller); the
+ZIP export streams through :func:`open_output`.
 
-This module routes those byte payloads through **PyArrow's FileSystem
-API** (``pyarrow.fs``), which is
+This module routes those payloads through **PyArrow's FileSystem API**
+(``pyarrow.fs``), which is
 
 * executor-safe: pure C++/Python, no py4j gateway needed inside a
   Pandas UDF (the JVM-side Hadoop FS handle is driver-only, so the

@@ -14,10 +14,10 @@ DISTRIBUTED tile writer.
 
 Scale design: a 100 TB raster is never one file — production rasters
 are tiled, and each tile is written BY THE EXECUTOR holding its rows
-(`write_raster_tiles`: one applyInPandas group per tile, the file
-write happens inside the UDF, only (tile id, path, bytes, checksum)
-rows come back). No driver-side raster array, no collect; the tile
-grid is the partitioning.
+(`write_raster_tiles`: one group per tile through
+:func:`pyprima_spark.sources.files.write_groups`, only (tile id, path,
+bytes, checksum) rows come back). No driver-side raster array, no
+collect; the tile grid is the partitioning.
 
 Encoded layout (little-endian): header | pixel strip | ModelPixelScale
 | ModelTiepoint | GeoKeyDirectory | IFD. GeoKeys: GTModelType=2
@@ -168,31 +168,22 @@ def write_raster_tiles(
     pixel_size: float = 0.5,
 ) -> "DataFrame":
     """Distributed GeoTIFF export of a (latidx, lonidx, value) long
-    table: one applyInPandas group per tile_size×tile_size tile, the
-    file written from the EXECUTOR holding the group (no driver
-    collect, no global raster array). Missing cells within a tile are
+    table through :func:`files.write_groups`: one group per
+    tile_size×tile_size tile, the file written from the EXECUTOR
+    holding the group (no driver collect, no global raster array;
+    ``out_dir`` may be a path or URI). Missing cells within a tile are
     zero-filled; the tile grid is the shuffle key, so skew is bounded
     by tile population. Returns the manifest (tile ids, path, bytes,
-    checksum) — the census a catalog ingests.
-
-    FILESYSTEM CONTRACT (VERDICT r6 item 2): tiles are written FROM THE
-    EXECUTOR through :mod:`pyprima_spark.sources.fsio` (PyArrow's
-    FileSystem API) — ``out_dir`` may be a bare path (local/shared
-    mount, the tested env) or a ``file://``/``hdfs://``/``s3://`` URI;
-    the filesystem resolves per-URI on the executor, so a multi-node
-    cluster can target HDFS/object storage directly. ``latidx``/
-    ``lonidx`` must be >= 0 (validated below — a negative index would
-    silently wrap into the wrong tile row via numpy's negative
-    indexing)."""
+    checksum) — the census a catalog ingests. ``latidx``/``lonidx``
+    must be >= 0 (validated below — a negative index would silently
+    wrap into the wrong tile row via numpy's negative indexing)."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from pyprima_spark.sources import fsio
+    from pyprima_spark.sources import files, fsio
 
-    fsio.makedirs(out_dir)
     cells = raster.select(
         F.col(lat_col).alias("la"),
         F.col(lon_col).alias("lo"),
@@ -201,71 +192,61 @@ def write_raster_tiles(
         F.expr(f"{lon_col} div {tile_size}").alias("tlo"),
     )
 
-    def write_tile(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def encode(_key, pdf):
         tla = int(pdf["tla"].iloc[0])
         tlo = int(pdf["tlo"].iloc[0])
-        arr = np.zeros((tile_size, tile_size), dtype="<f4")
-        la = pdf["la"].to_numpy() - tla * tile_size
-        lo = pdf["lo"].to_numpy() - tlo * tile_size
         if (pdf["la"] < 0).any() or (pdf["lo"] < 0).any():
             # Negative grid indices would flip sign under `div` and wrap
             # through numpy fancy indexing into the WRONG tile row/col —
-            # corrupt output, not an error. Refuse instead (ADVICE r5).
+            # corrupt output, not an error. Refuse instead.
             raise ValueError(
                 f"negative {lat_col}/{lon_col} in tile ({tla},{tlo}); "
                 "grid indices must be >= 0"
             )
-        arr[la, lo] = pdf["v"].to_numpy().astype("<f4")
+        arr = np.zeros((tile_size, tile_size), dtype="<f4")
+        la = pdf["la"].to_numpy(dtype="int64") - tla * tile_size
+        lo = pdf["lo"].to_numpy(dtype="int64") - tlo * tile_size
+        arr[la, lo] = pdf["v"].to_numpy(dtype="<f4")
         west = origin_west + tlo * tile_size * pixel_size
         north = origin_north - tla * tile_size * pixel_size
         payload = encode_geotiff_gray(arr, west, north, pixel_size)
         path = fsio.join(out_dir, f"tile_{tla}_{tlo}.tif")
-        fsio.write_bytes(path, payload)
-        return pd.DataFrame(
+        return {path: payload}, [
             {
-                "tla": [tla],
-                "tlo": [tlo],
-                "path": [path],
-                "n_bytes": [len(payload)],
-                "md5": [hashlib.md5(payload).hexdigest()],
+                "tla": tla,
+                "tlo": tlo,
+                "path": path,
+                "n_bytes": len(payload),
+                "md5": hashlib.md5(payload).hexdigest(),
             }
-        )
+        ]
 
-    return cells.groupBy("tla", "tlo").applyInPandas(
-        write_tile,
+    fsio.makedirs(out_dir)
+    return files.write_groups(
+        cells, ["tla", "tlo"], encode,
         "tla long, tlo long, path string, n_bytes long, md5 string",
     )
 
 
 def read_raster_tiles(spark, tiles_dir: str) -> "DataFrame":
-    """Distributed GeoTIFF ingest — the inverse of write_raster_tiles:
-    Spark's binaryFile source lists and splits the tile files across
-    executors, each payload is parsed by the verifying stdlib decoder
-    INSIDE mapInPandas (bytes never visit the driver), and nonzero
-    cells come back as the (latidx, lonidx, value) long table keyed by
-    the georeferenced grid. Reference parity: pyPRIMA reads rasters
-    with GDAL ReadAsArray (spatial_functions.py calc_region_stats /
+    """Distributed GeoTIFF ingest — the inverse of write_raster_tiles,
+    through :func:`files.read_files`: every ``*.tif`` is parsed by the
+    verifying stdlib decoder on an executor, and nonzero cells come
+    back as the (latidx, lonidx, value) long table keyed by the
+    georeferenced grid. Reference parity: pyPRIMA reads rasters with
+    GDAL ReadAsArray (spatial_functions.py calc_region_stats /
     input_maps.py); this is the cluster-shaped equivalent."""
-    import numpy as np
-    import pandas as pd
+    from pyprima_spark.sources import files
 
-    raw = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.tif"
-    ).load(tiles_dir)
+    def decode(payload):
+        arr, west, north, ps = decode_geotiff_gray(payload)
+        la0 = int(round((90.0 - north) / ps))
+        lo0 = int(round((west + 180.0) / ps))
+        ys, xs = arr.nonzero()
+        values = arr[ys, xs].astype(float).tolist()
+        for y, x, v in zip(ys.tolist(), xs.tolist(), values):
+            yield {"latidx": la0 + y, "lonidx": lo0 + x, "value": v}
 
-    def parse(it):
-        for pdf in it:
-            out = {"latidx": [], "lonidx": [], "value": []}
-            for payload in pdf["content"]:
-                arr, west, north, ps = decode_geotiff_gray(bytes(payload))
-                la0 = int(round((90.0 - north) / ps))
-                lo0 = int(round((west + 180.0) / ps))
-                ys, xs = arr.nonzero()
-                out["latidx"].extend((la0 + ys).tolist())
-                out["lonidx"].extend((lo0 + xs).tolist())
-                out["value"].extend(arr[ys, xs].astype(float).tolist())
-            yield pd.DataFrame(out)
-
-    return raw.select("content").mapInPandas(
-        parse, "latidx long, lonidx long, value double"
+    return files.read_files(
+        spark, tiles_dir, "*.tif", "latidx long, lonidx long, value double", decode
     )

@@ -8,12 +8,11 @@ file, its .shx index, and a dBase III .dbf attribute table. Same
 "real format via stdlib" path as WAV/PNG/GeoTIFF.
 
 Scale/shape contract: a shapefile is inherently ONE file (the format
-has a 2 GB limit and no parallel layout), so the honest distributed
-form is the same one Spark uses for single-file CSV exports:
-``coalesce(1)`` + a single mapInPandas task that streams the rows and
-writes the three files from the executor — the driver never touches
-feature data, and anything bigger than one file belongs in parquet or
-tiled GeoTIFF instead (write_raster_tiles). Point sets that warrant a
+has a 2 GB limit and no parallel layout), so it is written by
+:func:`pyprima_spark.sources.files.write_single_file` — one task writes
+the three files from the executor, the driver never touches feature
+data, and anything bigger than one file belongs in parquet or tiled
+GeoTIFF instead (write_raster_tiles). Point sets that warrant a
 shapefile are dim-sized (plant fleets, sites), so one task is the
 right plan, not a compromise.
 """
@@ -46,7 +45,8 @@ def encode_point_shapefile(points, names, values):
     values into (.shp bytes, .shx bytes, .dbf bytes)."""
     xs = [p[0] for p in points]
     ys = [p[1] for p in points]
-    bbox = (min(xs), min(ys), max(xs), max(ys))
+    # an empty point set has no extent: the spec's all-zero bbox
+    bbox = (min(xs), min(ys), max(xs), max(ys)) if points else (0.0,) * 4
 
     shp_records = b""
     shx_records = b""
@@ -122,55 +122,47 @@ def write_point_shapefile(
     value_col: str = "value",
 ) -> "DataFrame":
     """Write `df` as `<out_base>.shp/.shx/.dbf` from ONE executor task
-    (coalesce(1) + mapInPandas — the single-file CSV export pattern;
-    the driver never holds the rows). Rows are sorted by (name, x, y)
-    for a deterministic record order. Returns a 1-row manifest.
-
-    FILESYSTEM CONTRACT (VERDICT r6 item 2): the three files are
-    written FROM THE EXECUTOR through
-    :mod:`pyprima_spark.sources.fsio` (PyArrow's FileSystem API) —
-    ``out_base`` may be a bare path (local/shared mount, the tested
-    env) or a ``file://``/``hdfs://``/``s3://`` URI resolved on the
-    executor, so a multi-node cluster can target HDFS/object storage
-    directly."""
+    through :func:`files.write_single_file` (the driver never holds the
+    rows; ``out_base`` may be a path or URI). Rows are sorted by
+    (name, x, y), nulls first, for a deterministic record order; an
+    empty frame writes a 0-record shapefile. Returns a 1-row
+    manifest."""
     import hashlib
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    one = (
-        df.select(
-            F.col(x_col).cast("double").alias("x"),
-            F.col(y_col).cast("double").alias("y"),
-            F.col(name_col).cast("string").alias("name"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("name", "x", "y")
-    )
+    from pyprima_spark.sources import files
 
-    def write(it):
-        rows = pd.concat(list(it), ignore_index=True)
+    def encode(rows):
+        rows = rows.sort_values(["name", "x", "y"], na_position="first")
         shp, shx, dbf = encode_point_shapefile(
             list(zip(rows["x"], rows["y"])),
             list(rows["name"]),
             list(rows["value"]),
         )
-        from pyprima_spark.sources import fsio
-
-        for ext, payload in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
-            fsio.write_bytes(out_base + ext, payload)
-        yield pd.DataFrame(
+        written = {
+            out_base + ".shp": shp,
+            out_base + ".shx": shx,
+            out_base + ".dbf": dbf,
+        }
+        return written, [
             {
-                "n_features": [len(rows)],
-                "shp_bytes": [len(shp)],
-                "dbf_bytes": [len(dbf)],
-                "shp_md5": [hashlib.md5(shp).hexdigest()],
+                "n_features": len(rows),
+                "shp_bytes": len(shp),
+                "dbf_bytes": len(dbf),
+                "shp_md5": hashlib.md5(shp).hexdigest(),
             }
-        )
+        ]
 
-    return one.mapInPandas(
-        write,
+    points = df.select(
+        F.col(x_col).cast("double").alias("x"),
+        F.col(y_col).cast("double").alias("y"),
+        F.col(name_col).cast("string").alias("name"),
+        F.col(value_col).cast("double").alias("value"),
+    )
+    return files.write_single_file(
+        points,
+        encode,
         "n_features long, shp_bytes long, dbf_bytes long, shp_md5 string",
     )
 

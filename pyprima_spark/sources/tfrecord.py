@@ -21,18 +21,17 @@ Both layers are public specs, re-implemented from them:
   skipping them — same verifying-decoder contract as the JPEG/Avro
   legs (operators/jpeg.py, sources/avro_ocf.py).
 
-Spark-shaped exactly like the Avro OCF leg:
+Spark-shaped like every byte format, through
+:mod:`pyprima_spark.sources.files`:
 
-- READ is distributed per FILE via the binaryFile source; each payload
-  parses inside mapInPandas on the executor holding it (bytes never
-  visit the driver).  Record-level splitting WITHIN one file is not
-  attempted — TFRecord shards are many files by construction
-  (``name-00017-of-00256``), which is also the 100 TB layout.
-- WRITE follows the coalesce(1)+mapInPandas single-file sink contract
-  (avro/xlsx/shapefile precedent) and routes bytes through
-  :mod:`pyprima_spark.sources.fsio`, so targets may be file:///
-  hdfs:///s3:// URIs.  Feature names are encoded sorted, so equal
-  inputs produce byte-identical files (repo determinism rule).
+- READ is distributed per FILE.  Record-level splitting WITHIN one
+  file is not attempted — TFRecord shards are many files by
+  construction (``name-00017-of-00256``), which is also the 100 TB
+  layout.
+- WRITE is one file from one task (:func:`write_tfrecord_file`) or one
+  file per hash shard (:func:`write_tfrecord_shards`), to paths or
+  URIs.  Feature names are encoded sorted, so equal inputs produce
+  byte-identical files.
 
 The reader VERIFIES both CRCs of every record and trailing-byte
 exhaustion — truncated, bit-flipped or spliced files raise instead of
@@ -346,9 +345,12 @@ def decode_example(payload: bytes) -> "dict[str, tuple[str, list]]":
 # --- Spark sink -----------------------------------------------------------------
 
 
-def _feature_plan(df: "DataFrame") -> "dict[str, tuple[str, bool]]":
-    """column -> (feature kind, is_list) from the Spark schema; raises
-    on types with no Example representation."""
+def _feature_frame(df: "DataFrame"):
+    """Map ``df``'s columns to Example features. Returns the frame to
+    write — booleans cast to bigint, since an Int64List holds them as
+    0/1 — and column -> (feature kind, is_list). Raises on types with no
+    Example representation."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         ArrayType,
         BinaryType,
@@ -369,41 +371,16 @@ def _feature_plan(df: "DataFrame") -> "dict[str, tuple[str, bool]]":
         raise ValueError(f"unsupported TFRecord feature type: {dt.simpleString()}")
 
     plan: dict[str, tuple[str, bool]] = {}
+    cols = []
     for f in df.schema.fields:
-        if isinstance(f.dataType, ArrayType):
-            plan[f.name] = (kind_of(f.dataType.elementType), True)
-        else:
-            plan[f.name] = (kind_of(f.dataType), False)
-    return plan
-
-
-def _ship_ints(df: "DataFrame", plan, cols):
-    """Project ``df`` for the Arrow hop: int64-kind columns (scalar and
-    array elements) cross as STRINGS — pandas' null promotion would
-    round >2^53 ids through float64 with no error (review r7 finding,
-    avro_ocf.py) — via a ``long`` cast first so booleans ship 0/1.
-    Returns (shipped_df, int_scalar_columns)."""
-    from pyspark.sql import functions as F
-
-    int_scalars = [
-        c for c, (k, is_list) in plan.items() if k == "int64" and not is_list
-    ]
-    int_arrays = [
-        c for c, (k, is_list) in plan.items() if k == "int64" and is_list
-    ]
-    shipped = df.select(
-        *[
-            F.col(c).cast("long").cast("string").alias(c)
-            if c in int_scalars
-            else F.expr(
-                f"transform(`{c}`, x -> cast(cast(x as long) as string))"
-            ).alias(c)
-            if c in int_arrays
-            else F.col(c)
-            for c in cols
-        ]
-    )
-    return shipped, int_scalars
+        is_list = isinstance(f.dataType, ArrayType)
+        dt = f.dataType.elementType if is_list else f.dataType
+        plan[f.name] = (kind_of(dt), is_list)
+        col = F.col(f.name)
+        if isinstance(dt, BooleanType):
+            col = col.cast("array<bigint>" if is_list else "bigint").alias(f.name)
+        cols.append(col)
+    return df.select(*cols), plan
 
 
 def _feature_values(name: str, kind: str, is_list: bool, v):
@@ -421,7 +398,7 @@ def _feature_values(name: str, kind: str, is_list: bool, v):
             "lists cannot hold nulls (drop or impute before writing)"
         )
     if kind == "int64":
-        return [int(x) for x in vals]  # parse the string-shipped ints
+        return [int(x) for x in vals]
     if kind == "float":
         return [float(x) for x in vals]
     return [
@@ -429,22 +406,13 @@ def _feature_values(name: str, kind: str, is_list: bool, v):
     ]
 
 
-def _rows_to_payloads(pdf, cols, plan, keys, int_scalars) -> "list[bytes]":
-    """Sort a shipped pandas frame deterministically and encode each
-    row as a tf.train.Example (shared by both sinks)."""
-    import pandas as pd
-
-    pdf = pdf.astype(object)
-    for c in int_scalars:
-        pdf[c] = pd.Series(
-            [None if v is None or v is pd.NA else int(v) for v in pdf[c]],
-            dtype=object,
-            index=pdf.index,
-        )
-    if len(pdf):
-        pdf = pdf.sort_values(keys).reset_index(drop=True)
+def _encode_examples(pdf, plan) -> "tuple[bytes, int]":
+    """Encode each row of a pandas frame as a tf.train.Example; returns
+    the TFRecord file bytes and the record count (shared by both
+    sinks)."""
+    cols = list(pdf.columns)
     payloads = []
-    for vals in zip(*[pdf[c] for c in cols]) if len(pdf) else []:
+    for vals in zip(*[pdf[c] for c in cols]):
         feats = {}
         for c, v in zip(cols, vals):
             kind, is_list = plan[c]
@@ -452,7 +420,7 @@ def _rows_to_payloads(pdf, cols, plan, keys, int_scalars) -> "list[bytes]":
             if values is not None:
                 feats[c] = (kind, values)
         payloads.append(encode_example(feats))
-    return payloads
+    return encode_tfrecord_file(payloads), len(payloads)
 
 
 def write_tfrecord_file(
@@ -461,9 +429,9 @@ def write_tfrecord_file(
     order_by: "list[str] | None" = None,
 ) -> "DataFrame":
     """Write ``df`` as ONE TFRecord file of tf.train.Example records
-    (coalesce(1)+mapInPandas, the repo's single-file sink contract);
-    bytes route through fsio, so ``path`` may be a URI.  Returns a
-    1-row manifest (path, n_rows, n_bytes).
+    (:func:`files.write_single_file`; ``path`` may be a URI), rows
+    sorted by ``order_by`` (default: all columns).  Returns a 1-row
+    manifest (path, n_rows, n_bytes).
 
     Column mapping: integral/boolean → Int64List, float/double →
     FloatList (IEEE float32 BY SPEC — doubles round-trip at f32
@@ -473,35 +441,17 @@ def write_tfrecord_file(
     feature convention); the reader returns them as null.  Scalar
     float NaN is CONFLATED with null (both arrive as NaN through
     Arrow — same documented limit as the Avro sink)."""
-    import pandas as pd
+    from pyprima_spark.sources import files
 
-    plan = _feature_plan(df)
-    cols = list(df.columns)
-    keys = order_by or cols
-    shipped, int_scalars = _ship_ints(df, plan, cols)
+    frame, plan = _feature_frame(df)
 
-    def write_group(it):
-        from pyprima_spark.sources import fsio
+    def encode(pdf):
+        payload, n = _encode_examples(pdf, plan)
+        return {path: payload}, [{"path": path, "n_rows": n, "n_bytes": len(payload)}]
 
-        frames = [pdf for pdf in it]
-        pdf = (
-            pd.concat(frames).reset_index(drop=True)
-            if frames
-            else pd.DataFrame(columns=cols)
-        )
-        payloads = _rows_to_payloads(pdf, cols, plan, keys, int_scalars)
-        payload = encode_tfrecord_file(payloads)
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame(
-            {
-                "path": [path],
-                "n_rows": [len(payloads)],
-                "n_bytes": [len(payload)],
-            }
-        )
-
-    return shipped.coalesce(1).mapInPandas(
-        write_group, "path string, n_rows long, n_bytes long"
+    return files.write_single_file(
+        frame, encode, "path string, n_rows long, n_bytes long",
+        order_by or list(df.columns),
     )
 
 
@@ -512,87 +462,39 @@ def write_tfrecord_shards(
     shard_by: "list[str] | None" = None,
     order_by: "list[str] | None" = None,
 ) -> "DataFrame":
-    """Write ``df`` as ``n_shards`` TFRecord files — the DISTRIBUTED
-    write path (one file per task, no coalesce(1) bottleneck): this is
-    the layout a 100 TB export actually has, and the one
-    :func:`read_tfrecord` parallelizes over on the way back.
+    """Write ``df`` as ``n_shards`` TFRecord files through
+    :func:`files.write_shards` — the DISTRIBUTED write path (one file
+    per task, no coalesce(1) bottleneck): this is the layout a 100 TB
+    export actually has, and the one :func:`read_tfrecord`
+    parallelizes over on the way back.
 
     Rows hash-partition on ``shard_by`` (default: all columns) and sort
     by ``order_by`` (default: ``shard_by``) WITHIN each shard, so equal
     inputs produce byte-identical shard files regardless of upstream
     partitioning.  Files are named ``part-SSSSS-of-NNNNN.tfrecord``
     under ``out_dir`` (a path or URI; parents created via fsio).
-    Returns the per-shard manifest (path, n_rows, n_bytes) — one row
-    per shard, including empty shards (written as zero-record files so
-    the shard count is always exactly ``n_shards``)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    Returns the per-shard manifest (shard, path, n_rows, n_bytes) — one
+    row per shard, including empty shards (written as zero-record files
+    so the shard count is always exactly ``n_shards``)."""
+    from pyprima_spark.sources import files, fsio
 
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    plan = _feature_plan(df)
-    cols = list(df.columns)
-    shard_cols = shard_by or cols
-    keys = order_by or shard_cols
-    shipped, int_scalars = _ship_ints(df, plan, cols)
-    # Explicit shard id (pmod of a hash), not TaskContext.partitionId:
-    # AQE may coalesce/split physical partitions, but the shard column
-    # is data-derived, so file contents are deterministic by contract.
-    shard_expr = F.pmod(
-        F.xxhash64(*[F.col(c) for c in shard_cols]), F.lit(n_shards)
-    ).alias("__shard")
-    shipped = shipped.select(*cols, shard_expr)
+    frame, plan = _feature_frame(df)
+    shard_cols = shard_by or list(df.columns)
 
-    def write_group(key, pdf):
-        from pyprima_spark.sources import fsio
+    def encode(shard, pdf):
+        path = fsio.join(out_dir, f"part-{shard:05d}-of-{n_shards:05d}.tfrecord")
+        payload, n = _encode_examples(pdf, plan)
+        return {path: payload}, [
+            {"shard": shard, "path": path, "n_rows": n, "n_bytes": len(payload)}
+        ]
 
-        shard = int(key[0])
-        path = fsio.join(
-            out_dir, f"part-{shard:05d}-of-{n_shards:05d}.tfrecord"
-        )
-        # drop the all-shards placeholder rows (marker column, NOT a
-        # nullness heuristic: a real row may be all-null)
-        pdf = pdf[~pdf["__empty"].astype(bool)]
-        pdf = pdf.drop(columns=["__shard", "__empty"])
-        payloads = _rows_to_payloads(pdf, cols, plan, keys, int_scalars)
-        payload = encode_tfrecord_file(payloads)
-        fsio.write_bytes(path, payload)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "path": [path],
-                "n_rows": [len(payloads)],
-                "n_bytes": [len(payload)],
-            }
-        )
-
-    from pyprima_spark.sources import fsio
-
+    manifest = files.write_shards(
+        frame, n_shards, shard_cols, encode,
+        "shard long, path string, n_rows long, n_bytes long",
+        order_by or shard_cols,
+    )
     fsio.makedirs(out_dir)
-    spark = df.sparkSession
-    observed = shipped.select("__shard", *cols).withColumn(
-        "__empty", F.lit(False)
-    )
-    # Union the full shard-id domain as marked placeholder rows so
-    # EMPTY shards still write a zero-record file (reader contract:
-    # every part-k-of-n name exists).
-    domain = spark.range(n_shards).select(
-        F.col("id").cast("long").alias("__shard"),
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in shipped.schema.fields
-            if f.name != "__shard"
-        ],
-        F.lit(True).alias("__empty"),
-    )
-    return (
-        observed.unionByName(domain)
-        .groupBy("__shard")
-        .applyInPandas(
-            write_group, "shard long, path string, n_rows long, n_bytes long"
-        )
-        .orderBy("shard")
-    )
+    return manifest
 
 
 # --- Spark source ----------------------------------------------------------------
@@ -659,10 +561,10 @@ def read_tfrecord(
     schema: str,
     ext_filter: "str | None" = "*.tfrecord",
 ) -> "DataFrame":
-    """Read TFRecord files of tf.train.Example records distributed per
-    FILE: binaryFile lists and schedules them, each payload parses
-    (CRC-verified) inside mapInPandas on an executor, and features map
-    to the requested Spark ``schema`` DDL by NAME.
+    """Read TFRecord files of tf.train.Example records through
+    :func:`files.read_files`: each file parses CRC-verified on an
+    executor, and features map to the requested Spark ``schema`` DDL
+    by NAME.
 
     Scalar fields take the feature's first value (null when the
     feature is absent or empty); array fields take the whole list.
@@ -671,34 +573,18 @@ def read_tfrecord(
     ``ext_filter`` mirrors read_avro: pass ``None`` to read every file
     the glob matches — non-TFRecord payloads then fail the CRC check
     loudly instead of being silently dropped."""
-    import pandas as pd
     from pyspark.sql.types import StructType
 
-    struct_schema = StructType.fromDDL(schema)
-    convert = _convert_feature
+    from pyprima_spark.sources import files
 
-    reader = spark.read.format("binaryFile")
-    if ext_filter is not None:
-        reader = reader.option("pathGlobFilter", ext_filter)
-    raw = reader.load(path_glob)
+    fields = StructType.fromDDL(schema).fields
 
-    def parse(it):
-        for pdf in it:
-            out: dict[str, list] = {f.name: [] for f in struct_schema.fields}
-            for payload in pdf["content"]:
-                for rec in decode_tfrecord_file(bytes(payload)):
-                    feats = decode_example(rec)
-                    for f in struct_schema.fields:
-                        out[f.name].append(
-                            convert(f.name, f.dataType, feats.get(f.name))
-                        )
-            # object dtype everywhere: pandas would re-infer int+None
-            # columns as float64 and round >2^53 ids (avro precedent)
-            yield pd.DataFrame(
-                {
-                    f.name: pd.Series(out[f.name], dtype=object)
-                    for f in struct_schema.fields
-                }
-            )
+    def decode(payload):
+        for rec in decode_tfrecord_file(payload):
+            feats = decode_example(rec)
+            yield {
+                f.name: _convert_feature(f.name, f.dataType, feats.get(f.name))
+                for f in fields
+            }
 
-    return raw.select("content").mapInPandas(parse, schema)
+    return files.read_files(spark, path_glob, ext_filter, schema, decode)

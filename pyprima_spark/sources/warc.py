@@ -20,12 +20,11 @@ record terminator — truncated or mis-framed archives raise instead of
 resyncing silently (same verifying-parser contract as the Avro/
 TFRecord/JPEG legs).
 
-Spark-shaped like the other binary formats: READ is distributed per
-FILE via binaryFile + mapInPandas (payloads parse on executors; crawl
-archives are many files by construction — Common Crawl segments are
-~1 GB each).  WRITE follows the coalesce(1)+fsio single-file sink
-contract; records encode sorted by record id for byte-identical
-reruns.
+Spark-shaped like the other byte formats, through
+:mod:`pyprima_spark.sources.files`: READ is distributed per FILE
+(crawl archives are many files by construction — Common Crawl segments
+are ~1 GB each); WRITE is one file from one task or one file per hash
+shard, records sorted by record id for byte-identical reruns.
 
 ``split_http_response`` separates the HTTP header block from the body
 of ``response`` records (WARC stores the raw HTTP exchange), the first
@@ -160,6 +159,26 @@ _READ_SCHEMA = (
     "record_id string, warc_type string, target_uri string, warc_date string,"
     " content_type string, content binary"
 )
+_COLUMNS = [
+    "record_id",
+    "warc_type",
+    "target_uri",
+    "warc_date",
+    "content_type",
+    "content",
+]
+
+
+def _records(payload: bytes):
+    for headers, content in decode_warc_file(payload):
+        yield {
+            "record_id": headers["WARC-Record-ID"],
+            "warc_type": headers["WARC-Type"],
+            "target_uri": headers.get("WARC-Target-URI"),
+            "warc_date": headers["WARC-Date"],
+            "content_type": headers.get("Content-Type"),
+            "content": content,
+        }
 
 
 def read_warc(
@@ -167,102 +186,29 @@ def read_warc(
     path_glob: str,
     ext_filter: "str | None" = "*.warc*",
 ) -> "DataFrame":
-    """Read WARC archives distributed per FILE (binaryFile lists and
-    schedules; each archive parses verified on an executor). Returns
-    (record_id, warc_type, target_uri, warc_date, content_type,
-    content) — one row per record.  ``ext_filter`` as in read_avro:
-    pass ``None`` to read every file the glob matches; non-WARC
-    payloads then fail the version-marker check loudly."""
-    import pandas as pd
+    """Read WARC archives through :func:`files.read_files` (each
+    archive parses verified on an executor). Returns (record_id,
+    warc_type, target_uri, warc_date, content_type, content) — one row
+    per record.  ``ext_filter`` as in read_avro: pass ``None`` to read
+    every file the glob matches; non-WARC payloads then fail the
+    version-marker check loudly."""
+    from pyprima_spark.sources import files
 
-    reader = spark.read.format("binaryFile")
-    if ext_filter is not None:
-        reader = reader.option("pathGlobFilter", ext_filter)
-    raw = reader.load(path_glob)
-
-    def parse(it):
-        for pdf in it:
-            rows = {
-                "record_id": [],
-                "warc_type": [],
-                "target_uri": [],
-                "warc_date": [],
-                "content_type": [],
-                "content": [],
-            }
-            for payload in pdf["content"]:
-                for headers, content in decode_warc_file(bytes(payload)):
-                    rows["record_id"].append(headers["WARC-Record-ID"])
-                    rows["warc_type"].append(headers["WARC-Type"])
-                    rows["target_uri"].append(headers.get("WARC-Target-URI"))
-                    rows["warc_date"].append(headers["WARC-Date"])
-                    rows["content_type"].append(headers.get("Content-Type"))
-                    rows["content"].append(content)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in rows.items()}
-            )
-
-    return raw.select("content").mapInPandas(parse, _READ_SCHEMA)
+    return files.read_files(spark, path_glob, ext_filter, _READ_SCHEMA, _records)
 
 
-def write_warc_file(
-    df: "DataFrame",
-    path: str,
-    compress: bool = True,
-) -> "DataFrame":
-    """Write ``df`` — columns (record_id, warc_type, target_uri,
-    warc_date, content_type, content) — as ONE .warc(.gz) from a
-    single executor task (the repo's single-file sink contract; bytes
-    route through fsio so ``path`` may be a URI).  With ``compress``
-    each record becomes its own gzip member (mtime pinned to 0 so
-    equal inputs are byte-identical).  Records sort by record_id.
-    Returns a 1-row manifest (path, n_records, n_bytes)."""
-    import pandas as pd
-
-    cols = [
-        "record_id",
-        "warc_type",
-        "target_uri",
-        "warc_date",
-        "content_type",
-        "content",
-    ]
-    missing = [c for c in cols if c not in df.columns]
+def _records_df(df: "DataFrame", sink: str) -> "DataFrame":
+    missing = [c for c in _COLUMNS if c not in df.columns]
     if missing:
-        raise ValueError(f"write_warc_file needs columns {missing}")
-
-    def write_group(it):
-        from pyprima_spark.sources import fsio
-
-        frames = [pdf for pdf in it]
-        pdf = (
-            pd.concat(frames).reset_index(drop=True)
-            if frames
-            else pd.DataFrame(columns=cols)
-        )
-        payload = _pdf_to_warc_bytes(pdf, compress)
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame(
-            {
-                "path": [path],
-                "n_records": [len(pdf)],
-                "n_bytes": [len(payload)],
-            }
-        )
-
-    return df.select(*cols).coalesce(1).mapInPandas(
-        write_group, "path string, n_records long, n_bytes long"
-    )
+        raise ValueError(f"{sink} needs columns {missing}")
+    return df.select(*_COLUMNS)
 
 
-def _pdf_to_warc_bytes(pdf, compress: bool) -> bytes:
+def _encode_records(pdf, compress: bool) -> bytes:
     """Encode a (record_id, warc_type, target_uri, warc_date,
-    content_type, content) pandas frame as WARC bytes — records sorted
-    by record_id for byte-identical reruns, each its own gzip member
-    (mtime 0) when ``compress``. Shared by the single-file and sharded
-    sinks."""
-    if len(pdf):
-        pdf = pdf.sort_values("record_id").reset_index(drop=True)
+    content_type, content) pandas frame as WARC bytes, each record its
+    own gzip member (mtime 0) when ``compress``. Shared by the
+    single-file and sharded sinks."""
     blob = bytearray()
     for _, row in pdf.iterrows():
         headers = {
@@ -285,16 +231,42 @@ def _pdf_to_warc_bytes(pdf, compress: bool) -> bytes:
     return bytes(blob)
 
 
+def write_warc_file(
+    df: "DataFrame",
+    path: str,
+    compress: bool = True,
+) -> "DataFrame":
+    """Write ``df`` — columns (record_id, warc_type, target_uri,
+    warc_date, content_type, content) — as ONE .warc(.gz) from a
+    single executor task (:func:`files.write_single_file`; ``path`` may
+    be a URI).  With ``compress`` each record becomes its own gzip
+    member (mtime pinned to 0 so equal inputs are byte-identical).
+    Records sort by record_id.  Returns a 1-row manifest (path,
+    n_records, n_bytes)."""
+    from pyprima_spark.sources import files
+
+    def encode(pdf):
+        payload = _encode_records(pdf, compress)
+        return {path: payload}, [
+            {"path": path, "n_records": len(pdf), "n_bytes": len(payload)}
+        ]
+
+    return files.write_single_file(
+        _records_df(df, "write_warc_file"), encode,
+        "path string, n_records long, n_bytes long", ["record_id"],
+    )
+
+
 def write_warc_shards(
     df: "DataFrame",
     out_dir: str,
     n_shards: int,
     compress: bool = True,
 ) -> "DataFrame":
-    """Write ``df`` as ``n_shards`` WARC segment files — the
-    DISTRIBUTED crawl layout (Common Crawl ships many ~1 GB segments;
-    one file per task, no coalesce(1) bottleneck), mirroring
-    :func:`tfrecord.write_tfrecord_shards`.
+    """Write ``df`` as ``n_shards`` WARC segment files through
+    :func:`files.write_shards` — the DISTRIBUTED crawl layout (Common
+    Crawl ships many ~1 GB segments; one file per task, no coalesce(1)
+    bottleneck).
 
     Records hash-partition on record_id (data-derived, so file
     contents are byte-identical regardless of upstream partitioning)
@@ -303,69 +275,25 @@ def write_warc_shards(
     write zero-record files so the segment count is always exactly
     ``n_shards``.  Returns the per-segment manifest
     (shard, path, n_records, n_bytes)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from pyprima_spark.sources import files, fsio
 
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    cols = [
-        "record_id",
-        "warc_type",
-        "target_uri",
-        "warc_date",
-        "content_type",
-        "content",
-    ]
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"write_warc_shards needs columns {missing}")
     ext = "warc.gz" if compress else "warc"
 
-    def write_group(key, pdf):
-        from pyprima_spark.sources import fsio
-
-        shard = int(key[0])
-        path = fsio.join(
-            out_dir, f"seg-{shard:05d}-of-{n_shards:05d}.{ext}"
-        )
-        pdf = pdf[~pdf["__empty"].astype(bool)]
-        pdf = pdf.drop(columns=["__shard", "__empty"])
-        payload = _pdf_to_warc_bytes(pdf, compress)
-        fsio.write_bytes(path, payload)
-        return pd.DataFrame(
+    def encode(shard, pdf):
+        path = fsio.join(out_dir, f"seg-{shard:05d}-of-{n_shards:05d}.{ext}")
+        payload = _encode_records(pdf, compress)
+        return {path: payload}, [
             {
-                "shard": [shard],
-                "path": [path],
-                "n_records": [len(pdf)],
-                "n_bytes": [len(payload)],
+                "shard": shard,
+                "path": path,
+                "n_records": len(pdf),
+                "n_bytes": len(payload),
             }
-        )
+        ]
 
-    from pyprima_spark.sources import fsio
-
+    manifest = files.write_shards(
+        _records_df(df, "write_warc_shards"), n_shards, ["record_id"], encode,
+        "shard long, path string, n_records long, n_bytes long", ["record_id"],
+    )
     fsio.makedirs(out_dir)
-    spark = df.sparkSession
-    sel = df.select(*cols)
-    observed = sel.select(
-        F.pmod(F.xxhash64("record_id"), F.lit(n_shards)).alias("__shard"),
-        *cols,
-    ).withColumn("__empty", F.lit(False))
-    # full shard-id domain as marked placeholders: empty shards still
-    # write a zero-record file (the tfrecord sharded-writer contract)
-    domain = spark.range(n_shards).select(
-        F.col("id").cast("long").alias("__shard"),
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in sel.schema.fields
-        ],
-        F.lit(True).alias("__empty"),
-    )
-    return (
-        observed.unionByName(domain)
-        .groupBy("__shard")
-        .applyInPandas(
-            write_group,
-            "shard long, path string, n_records long, n_bytes long",
-        )
-        .orderBy("shard")
-    )
+    return manifest

@@ -14,20 +14,13 @@ openpyxl/pandas-excel dependency (both absent in this environment —
 probed 2026-08-14).
 
 Scale/shape contract: a workbook is inherently ONE file (the format
-is a single ZIP; sheets cannot be written in parallel), so the honest
-distributed form is the shapefile precedent — ``coalesce(1)`` + one
-mapInPandas task that streams the rows and writes the book from the
-executor; the driver never touches cell data. Workbooks that warrant
-.xlsx are dim-sized (model files, assumption tables); corpus-scale
-data belongs in parquet. Reading parallelizes per FILE via Spark's
-binaryFile source — each workbook parses inside mapInPandas on an
-executor, the multi-file analogue of read_raster_tiles.
-
-Same executor-side filesystem contract as the GIS writers (VERDICT r6
-item 2): workbook bytes route through
-:mod:`pyprima_spark.sources.fsio` (PyArrow's FileSystem API), so
-``path`` may be a bare local/shared-mount path or a ``file://``/
-``hdfs://``/``s3://`` URI resolved on the executor.
+is a single ZIP; sheets cannot be written in parallel), so it is
+written by :func:`pyprima_spark.sources.files.write_single_file` — one
+executor task writes the book, to a path or URI; the driver never
+touches cell data. Workbooks that warrant .xlsx are dim-sized (model
+files, assumption tables); corpus-scale data belongs in parquet.
+Reading parallelizes per FILE through
+:func:`pyprima_spark.sources.files.read_files`.
 """
 
 from __future__ import annotations
@@ -231,70 +224,40 @@ def write_xlsx(
     order_by: list[str] | None = None,
 ) -> "DataFrame":
     """Write `df` as a one-sheet workbook from ONE executor task
-    (coalesce(1) + mapInPandas — the shapefile single-file-export
-    pattern; the driver never holds the rows). Rows are sorted by
-    ``order_by`` (default: all columns) for a deterministic book.
-    Returns a 1-row manifest (path, n_rows, n_bytes)."""
-    import pandas as pd
+    (:func:`files.write_single_file`; the driver never holds the rows).
+    Rows are sorted by ``order_by`` (default: all columns) for a
+    deterministic book. Returns a 1-row manifest (path, n_rows,
+    n_bytes)."""
+    from pyprima_spark.sources import files
 
     cols = list(df.columns)
-    keys = order_by or cols
 
-    def write_group(it):
-        frames = [pdf for pdf in it]
-        pdf = (
-            pd.concat(frames).sort_values(keys).reset_index(drop=True)
-            if frames
-            else pd.DataFrame(columns=cols)
-        )
-        from pyprima_spark.sources import fsio
-
+    def encode(pdf):
         rows = zip(*[pdf[c].tolist() for c in cols]) if cols else iter(())
         payload = encode_xlsx({sheet_name: (cols, rows)})
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame(
-            {"path": [path], "n_rows": [len(pdf)], "n_bytes": [len(payload)]}
-        )
+        return {path: payload}, [
+            {"path": path, "n_rows": len(pdf), "n_bytes": len(payload)}
+        ]
 
-    return df.coalesce(1).mapInPandas(
-        write_group, "path string, n_rows long, n_bytes long"
+    return files.write_single_file(
+        df, encode, "path string, n_rows long, n_bytes long", order_by or cols
     )
 
 
 def read_xlsx_sheet(
     spark: "SparkSession", path_glob: str, sheet_name: str, schema: str
 ) -> "DataFrame":
-    """Read one sheet from every matching workbook: Spark's binaryFile
-    source lists/distributes the files, each ZIP parses inside
-    mapInPandas on an executor (bytes never visit the driver), and the
-    header row maps cell columns to the requested ``schema`` fields by
-    NAME — column order in the book does not matter."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
+    """Read one sheet from every matching ``*.xlsx`` workbook through
+    :func:`files.read_files`: the header row maps cell columns to the
+    requested ``schema`` fields by NAME — column order in the book does
+    not matter, and a book without the sheet contributes no rows."""
+    from pyprima_spark.sources import files
 
-    fields = [f.name for f in StructType.fromDDL(schema).fields]
-    raw = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.xlsx"
-    ).load(path_glob)
+    def decode(payload):
+        header, rows = decode_xlsx(payload).get(sheet_name, ([], []))
+        return (dict(zip(header, row)) for row in rows)
 
-    def parse(it):
-        for pdf in it:
-            out: dict[str, list] = {f: [] for f in fields}
-            for payload in pdf["content"]:
-                book = decode_xlsx(bytes(payload))
-                if sheet_name not in book:
-                    continue
-                header, rows = book[sheet_name]
-                idx = {name: i for i, name in enumerate(header)}
-                for row in rows:
-                    for f in fields:
-                        i = idx.get(f)
-                        out[f].append(
-                            row[i] if i is not None and i < len(row) else None
-                        )
-            yield pd.DataFrame(out)
-
-    return raw.select("content").mapInPandas(parse, schema)
+    return files.read_files(spark, path_glob, "*.xlsx", schema, decode)
 
 
 def write_xlsx_book(
@@ -306,42 +269,28 @@ def write_xlsx_book(
     """Write a union-tagged long frame as ONE multi-sheet workbook —
     the urbs/evrys model-file layout (model_export_bundle produces
     exactly this shape): rows fan out to the sheet named by
-    ``sheet_col``, each sheet carries the remaining columns, sheets
-    appear in name order. Same single-task contract as write_xlsx.
-    Returns a manifest row per sheet (sheet, n_rows) plus the book
-    byte count."""
+    ``sheet_col``, each sheet carries the remaining columns with its
+    rows sorted by ``order_by`` (default: all of them), sheets appear
+    in name order. Same single-task contract as write_xlsx. Returns a manifest
+    row per sheet (sheet, n_rows) plus the book byte count."""
     import pandas as pd
 
-    cols = [c for c in df.columns if c != sheet_col]
-    keys = order_by or cols
+    from pyprima_spark.sources import files
 
-    def write_group(it):
-        frames = [pdf for pdf in it]
-        pdf = (
-            pd.concat(frames)
-            if frames
-            else pd.DataFrame(columns=[sheet_col, *cols])
-        )
+    cols = [c for c in df.columns if c != sheet_col]
+
+    def encode(pdf):
+        pdf = pdf.where(pd.notna(pdf), None)
         sheets: dict[str, tuple[list[str], list]] = {}
         for name in sorted(pdf[sheet_col].dropna().unique()):
-            sub = pdf[pdf[sheet_col] == name].sort_values(keys)
-            sub = sub.astype(object).where(pd.notna(sub), None)
-            sheets[str(name)] = (
-                cols,
-                list(zip(*[sub[c].tolist() for c in cols])),
-            )
-        from pyprima_spark.sources import fsio
-
+            sub = pdf[pdf[sheet_col] == name]
+            sheets[str(name)] = (cols, list(zip(*[sub[c].tolist() for c in cols])))
         payload = encode_xlsx(sheets)
-        fsio.write_bytes(path, payload)
-        yield pd.DataFrame(
-            {
-                "sheet": list(sheets),
-                "n_rows": [len(r) for _, r in sheets.values()],
-                "n_bytes": [len(payload)] * len(sheets),
-            }
-        )
+        return {path: payload}, [
+            {"sheet": name, "n_rows": len(rows), "n_bytes": len(payload)}
+            for name, (_, rows) in sheets.items()
+        ]
 
-    return df.coalesce(1).mapInPandas(
-        write_group, "sheet string, n_rows long, n_bytes long"
+    return files.write_single_file(
+        df, encode, "sheet string, n_rows long, n_bytes long", order_by or cols
     )

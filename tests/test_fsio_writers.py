@@ -182,3 +182,23 @@ def test_fsio_never_transparently_compresses(tmp_path):
         with fsio.open_output(uri) as fh:
             fh.write(payload + b"2")
         assert (tmp_path / name).read_bytes() == payload + b"2"
+
+
+def test_only_the_files_module_writes_bytes():
+    """Every byte-format sink writes through sources/files.py: no other
+    module under sources/ calls fsio.write_bytes."""
+    import ast
+    import pathlib
+
+    sources = pathlib.Path(fsio.__file__).parent
+    callers = set()
+    for path in sorted(sources.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "write_bytes"
+            ):
+                callers.add(path.name)
+    assert callers == {"files.py"}

@@ -256,9 +256,9 @@ def test_python_streaming_datasource_exactly_once(spark, tmp_path):
     and values match the pure function of seq."""
     import time
 
-    from pyprima_spark.sources.datasource_api import register_gis_sources
+    from pyprima_spark.sources.datasource_api import register_ticker_stream
 
-    register_gis_sources(spark)
+    register_ticker_stream(spark)
     stream = (
         spark.readStream.format("ticker_stream")
         .option("rowsPerBatch", "7")
@@ -293,9 +293,9 @@ def test_ticker_stream_event_time_windowed_agg(spark, tmp_path):
     windowed agg)."""
     import time
 
-    from pyprima_spark.sources.datasource_api import register_gis_sources
+    from pyprima_spark.sources.datasource_api import register_ticker_stream
 
-    register_gis_sources(spark)
+    register_ticker_stream(spark)
     stream = (
         spark.readStream.format("ticker_stream")
         .option("rowsPerBatch", "9")

@@ -263,43 +263,6 @@ def test_gis_read_back_through_spark(spark, sf_dir, tmp_path):
     assert {(r.name, r.x, r.y, r.value) for r in got} == exp
 
 
-def test_python_datasource_gis_formats(spark, sf_dir, tmp_path):
-    """Spark 4 Python DataSource API: the GIS parsers registered as
-    first-class formats — spark.read.format("shapefile"/"geotiff")
-    returns the same rows as the library readers; geotiff gets one
-    input partition per tile file."""
-    from pyprima_spark.catalog import load_table
-    from pyprima_spark.plans.queries import QUERIES
-    from pyprima_spark.sources.datasource_api import register_gis_sources
-    from pyprima_spark.sources.geotiff import write_raster_tiles
-    from pyprima_spark.sources.shapefile import write_point_shapefile
-
-    register_gis_sources(spark)
-
-    sup = load_table(spark, sf_dir, "supplier").select(
-        (F.col("s_suppkey") % 360 - 180 + 0.5).cast("double").alias("x"),
-        (F.col("s_suppkey") % 180 - 90 + 0.25).cast("double").alias("y"),
-        F.col("s_name").alias("name"),
-        F.col("s_acctbal").cast("double").alias("value"),
-    )
-    base = str(tmp_path / "fleet")
-    n = write_point_shapefile(sup, base).collect()[0].n_features
-    shp_df = spark.read.format("shapefile").load(base)
-    assert shp_df.count() == n
-    assert {f.name for f in shp_df.schema.fields} == {"x", "y", "name", "value"}
-
-    raster = QUERIES["region_mask_raster"](spark, sf_dir).select(
-        "latidx", "lonidx", F.col("pop_alloc").alias("value")
-    )
-    out = str(tmp_path / "fmt_tiles")
-    n_tiles = write_raster_tiles(raster, out, tile_size=64).count()
-    tif_df = spark.read.format("geotiff").load(out)
-    assert tif_df.rdd.getNumPartitions() == n_tiles  # partition per tile
-    back = {(r.latidx, r.lonidx): r.value for r in tif_df.collect()}
-    src = {(r.latidx, r.lonidx): float(r.value) for r in raster.collect()}
-    assert set(back) == set(src)
-
-
 def test_xlsx_roundtrip_through_spark(spark, sf_dir, tmp_path):
     """urbs/evrys model-file format leg (reference writes its model
     outputs as .xlsx workbooks, generate_models.py): write a frame as
@@ -391,33 +354,6 @@ def test_xlsx_multi_sheet_and_shared_strings(tmp_path):
     header, rows = decode_xlsx(buf.read_bytes())["Load"]
     assert header == ["name", "load"]
     assert rows == [["plant one", 7.5], [None, "cached"]]
-
-
-def test_xlsx_datasource_api(spark, sf_dir, tmp_path):
-    """The xlsx format registered through the Spark 4 Python DataSource
-    API: explicit schema, sheet option, name-based column mapping."""
-    from pyspark.sql import functions as F
-
-    from pyprima_spark.catalog import load_table
-    from pyprima_spark.sources.datasource_api import register_gis_sources
-    from pyprima_spark.sources.xlsx import write_xlsx
-
-    reg = load_table(spark, sf_dir, "region").select(
-        "r_regionkey", "r_name", (F.col("r_regionkey") + 0.25).alias("score")
-    )
-    path = str(tmp_path / "regions.xlsx")
-    write_xlsx(reg, path, sheet_name="Regions").collect()
-
-    register_gis_sources(spark)
-    back = (
-        spark.read.format("xlsx")
-        .schema("r_regionkey long, r_name string, score double")
-        .option("sheet", "Regions")
-        .load(path)
-    )
-    b = {r.r_regionkey: (r.r_name, r.score) for r in back.collect()}
-    s = {r.r_regionkey: (r.r_name, float(r.score)) for r in reg.collect()}
-    assert b == s
 
 
 def test_xlsx_edge_cases():
@@ -582,6 +518,49 @@ def test_fixed_width_roundtrip_and_edges(spark, tmp_path):
     empty = df.filter("qty < 0")
     m = write_fixed_width(empty, str(tmp_path / "e.fwf"), specs).collect()
     assert m[0]["n_rows"] == 0 and m[0]["n_bytes"] == 0
+
+
+def test_fixed_width_nullable_bigint_above_2_53_exact(spark, tmp_path):
+    """A nullable bigint crosses the writer's Arrow hop exactly: next to
+    a null, 2^53 + 1 must not round through float64 to 2^53."""
+    from pyprima_spark.sources.fixedwidth import (
+        read_fixed_width,
+        write_fixed_width,
+    )
+
+    specs = [("k", 4, "l"), ("id", 20, "r")]
+    df = spark.createDataFrame(
+        [("big", 2**53 + 1), ("nul", None)], "k string, id bigint"
+    )
+    path = str(tmp_path / "big.fwf")
+    write_fixed_width(df, path, specs).collect()
+    assert open(path).read().splitlines()[0] == "big " + str(2**53 + 1).rjust(20)
+    back = read_fixed_width(spark, path, specs, {"k": "string", "id": "bigint"})
+    assert {r["k"]: r["id"] for r in back.collect()} == {
+        "big": 2**53 + 1,
+        "nul": None,
+    }
+
+
+def test_point_shapefile_empty_point_set(spark, tmp_path):
+    """Zero points write a valid 0-record shapefile (all-zero bbox),
+    like the other sinks write a valid empty file."""
+    from pyprima_spark.sources.shapefile import (
+        decode_point_shapefile,
+        encode_point_shapefile,
+        read_point_shapefile,
+        write_point_shapefile,
+    )
+
+    shp, shx, dbf = encode_point_shapefile([], [], [])
+    assert len(shp) == len(shx) == 100
+    assert decode_point_shapefile(shp, dbf) == ([], [], [])
+
+    empty = spark.createDataFrame([], "x double, y double, name string, value double")
+    base = str(tmp_path / "none")
+    manifest = write_point_shapefile(empty, base).collect()
+    assert [m["n_features"] for m in manifest] == [0]
+    assert read_point_shapefile(spark, base).count() == 0
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path):

@@ -290,8 +290,8 @@ def test_spark_read_kind_mismatch_raises(spark, tmp_path):
 
 def test_sharded_write_roundtrip_and_determinism(spark, tmp_path):
     df = spark.createDataFrame(
-        [(i, f"doc{i}", float(i % 7) / 4) for i in range(50)],
-        "id bigint, name string, score double",
+        [(i, f"doc{i}", float(i % 7) / 4, [i / 2, -2.0]) for i in range(50)],
+        "id bigint, name string, score double, vals array<double>",
     )
     out1 = str(tmp_path / "shards1")
     man = write_tfrecord_shards(
@@ -302,10 +302,13 @@ def test_sharded_write_roundtrip_and_determinism(spark, tmp_path):
     for m in man:
         assert m["path"].endswith(f"part-{m['shard']:05d}-of-00004.tfrecord")
 
-    back = read_tfrecord(spark, out1, "id bigint, name string, score double")
+    back = read_tfrecord(
+        spark, out1, "id bigint, name string, score double, vals array<double>"
+    )
     rows = sorted(back.collect(), key=lambda r: r["id"])
     assert len(rows) == 50
     assert rows[13]["name"] == "doc13" and rows[13]["score"] == 13 % 7 / 4
+    assert rows[13]["vals"] == [6.5, -2.0]
 
     # byte-identical rerun, shard by shard
     out2 = str(tmp_path / "shards2")
@@ -342,26 +345,6 @@ def test_sharded_write_empty_shards_still_exist(spark, tmp_path):
 
     with pytest.raises(ValueError, match="n_shards"):
         write_tfrecord_shards(df, out, n_shards=0)
-
-
-def test_registered_datasource_format(spark, tmp_path):
-    from pyprima_spark.sources.datasource_api import register_gis_sources
-
-    df = spark.createDataFrame(
-        [(1, "a", [0.5]), (2, "b", [1.5, -2.0])],
-        "id bigint, name string, vals array<double>",
-    )
-    out = str(tmp_path / "fmt")
-    write_tfrecord_shards(df, out, n_shards=2, shard_by=["id"]).collect()
-    register_gis_sources(spark)
-    back = (
-        spark.read.format("tfrecord")
-        .schema("id bigint, name string, vals array<double>")
-        .load(out)
-    )
-    rows = {r["id"]: r for r in back.collect()}
-    assert rows[1]["name"] == "a" and rows[1]["vals"] == [0.5]
-    assert rows[2]["vals"] == [1.5, -2.0]
 
 
 def test_spark_read_ext_filter_optional(spark, tmp_path):

@@ -2,6 +2,12 @@
 its normalised optimized logical plan, one JSON line per key in sorted
 key order.
 
+Each key's plan is hashed twice. ``plan`` is the plan as built, where a
+``materialize`` checkpoint is a ``LogicalRDD`` leaf that hides its
+lineage. ``passthrough`` is the plan rebuilt under
+``operators.checkpointing.audit_passthrough``, where ``materialize`` is
+a no-op, so a change below a checkpoint shows too.
+
 Two checkouts that print the same lines build the same plans from the
 same oracles, so a refactor that must move no plan is checked with
 ``diff``. Keys are built in sorted order whatever the module layout,
@@ -43,12 +49,18 @@ def sha256(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()
 
 
+def plan_hash(build, spark, sf_dir: str) -> str:
+    plan = build(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+    return sha256(normalise(plan.toString()))
+
+
 def main(argv: list[str]) -> int:
     if len(argv) != 1:
         print(__doc__, file=sys.stderr)
         return 2
     (sf_dir,) = argv
 
+    from pyprima_spark.operators.checkpointing import audit_passthrough
     from pyprima_spark.plans.oracles import ORACLES
     from pyprima_spark.plans.queries import QUERIES
     from pyprima_spark.session import build_session
@@ -58,8 +70,9 @@ def main(argv: list[str]) -> int:
     for key in sorted(QUERIES):
         row = {"key": key, "oracle": sha256(ORACLES[key])}
         try:
-            plan = QUERIES[key](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
-            row["plan"] = sha256(normalise(plan.toString()))
+            row["plan"] = plan_hash(QUERIES[key], spark, sf_dir)
+            with audit_passthrough():
+                row["passthrough"] = plan_hash(QUERIES[key], spark, sf_dir)
         except Exception as exc:  # noqa: BLE001 - report and go on
             failed += 1
             row["error"] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
